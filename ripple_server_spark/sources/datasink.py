@@ -21,9 +21,9 @@ Execution model — EVERY write task is an independent producer client:
 - each task buffers its Arrow batches, routes rows to buckets
   (``pmod(key, n_buckets)``, NULL -> 0, same as ``TopicStore.produce``),
   sorts by (bucket, ts, event_id), and appends through the SAME
-  optimistic manifest protocol produce uses (O_EXCL commit of version
-  v+1, seq-race detection + rebase) — all executor-side, rows never
-  pass through the driver;
+  optimistic manifest protocol produce uses (sources/manifest.py:
+  atomic claim of version v+1, seq-race detection + rebase) — all
+  executor-side, rows never pass through the driver;
 - seqs stay contiguous per bucket: a task claims ``[maxima+1, +n)``
   atomically with its manifest commit; on a lost race the task shifts
   its seqs by the per-bucket delta (pure Arrow add-constant), restages,
@@ -73,7 +73,6 @@ is the per-micro-batch/streaming tier where tasks-per-commit is small.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import uuid
@@ -87,16 +86,8 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ripple_server_spark.config import APPLIED_IDS_KEEP, N_BUCKETS
+from ripple_server_spark.sources import manifest
 
-# Optimistic-retry caps. Each lost round means ANOTHER producer's
-# commit landed (the scheme is livelock-free), so a task writing
-# alongside T siblings can legitimately lose up to T-1 rounds — the
-# cap must comfortably exceed any plausible tasks-per-job, not be a
-# small constant (a 32-task write under a 20-round cap can fail
-# spuriously under adversarial scheduling). Retries are cheap: a read
-# + JSON parse, plus an Arrow re-stage only when a claimed bucket
-# actually moved.
-_RETRIES = 200
 _APPLIED_IDS_KEEP = APPLIED_IDS_KEEP  # shared with TopicStore.produce
 
 
@@ -118,108 +109,6 @@ class _AlreadyApplied(Exception):
 class _SeqRace(Exception):
     """A concurrent task advanced a bucket we also append to: our staged
     seqs were computed from a stale base — restage shifted and retry."""
-
-
-# -- Spark-free manifest protocol (executor-side) --------------------------
-# Mirrors TopicStore._commit / _latest_version / latest_manifest
-# (sources/topics.py:123-166) without the SparkSession-holding class:
-# write tasks run in executor Python workers where no session exists.
-
-
-def _manifest_path(root: str, topic: str, version: int) -> str:
-    return os.path.join(root, "topics", topic, "_log", f"{version:020d}.json")
-
-
-def _latest_version(root: str, topic: str) -> int:
-    log = os.path.join(root, "topics", topic, "_log")
-    try:
-        names = [n for n in os.listdir(log) if n.endswith(".json")]
-    except FileNotFoundError:
-        names = []
-    if not names:
-        raise FileNotFoundError(
-            f"topic {topic!r} has no manifest — create_topic() first, or "
-            "pass option('create_topic', 'true')"
-        )
-    return max(int(n[:-5]) for n in names)
-
-
-def _load_manifest(root: str, topic: str, version: int) -> dict:
-    """Parse one committed manifest. A JSONDecodeError is retried
-    briefly: impossible on the os.link commit path (bytes precede the
-    name), but the linkless-filesystem fallback claims the name before
-    copying content in, leaving a microscopic torn-read window."""
-    import time
-
-    path = _manifest_path(root, topic, version)
-    for attempt in range(5):
-        try:
-            with open(path) as f:
-                return json.load(f)
-        except json.JSONDecodeError:
-            if attempt == 4:
-                raise
-            time.sleep(0.02 * (attempt + 1))
-    raise AssertionError("unreachable")
-
-
-def _claim_version_slot(path: str, manifest: dict) -> bool:
-    """Atomically publish ``manifest`` at ``path`` iff the slot is free.
-
-    Content is written to a sibling tmp file first, then the slot is
-    claimed with ``os.link`` — link creation is atomic and fails if the
-    name exists, AND the bytes are complete before the name appears, so
-    a concurrent reader can never see a torn/empty manifest (the
-    O_EXCL-then-write form left a window where the name existed with
-    zero bytes — harmless under one driver-side producer, a hot race
-    once every executor TASK is a producer).
-
-    On filesystems without hard-link support (some FUSE/object-store
-    mounts), falls back to the O_CREAT|O_EXCL claim — equally atomic on
-    the NAME, but content lands after it appears, so readers keep a
-    torn-read retry (:func:`_load_manifest`) as the belt for that path.
-    """
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    try:
-        os.link(tmp, path)
-        return True
-    except FileExistsError:
-        return False
-    except OSError:
-        # no hard links here: claim the slot with O_EXCL and copy the
-        # staged bytes in (review r08 — the link-only form regressed
-        # every commit on linkless mounts)
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return False
-        with os.fdopen(fd, "w") as f, open(tmp) as src:
-            f.write(src.read())
-        return True
-    finally:
-        os.unlink(tmp)
-
-
-def _commit_manifest(root: str, topic: str, base_version: int, apply) -> dict:
-    """Optimistic commit of version+1 (TopicStore._commit's loop, with
-    the torn-read-safe slot claim). ``apply`` must be a self-contained
-    rebase; it may raise :class:`_AlreadyApplied` / :class:`_SeqRace`
-    to abort upward."""
-    v = base_version
-    for _ in range(_RETRIES):
-        try:
-            base = _load_manifest(root, topic, v)
-        except FileNotFoundError:
-            v = _latest_version(root, topic)
-            base = _load_manifest(root, topic, v)
-        new = apply(dict(base))
-        new["version"] = v + 1
-        if _claim_version_slot(_manifest_path(root, topic, v + 1), new):
-            return new
-        v = _latest_version(root, topic)
-    raise RuntimeError(f"manifest commit contention on topic {topic!r}")
 
 
 _TOPIC_NAME_RE = re.compile(r"^[A-Za-z0-9._-]{1,249}$")
@@ -257,46 +146,14 @@ def validate_topic_name(topic: str) -> None:
 
 
 def _ensure_topic(root: str, topic: str, n_buckets: int) -> None:
-    """Race-safe auto-create (opt-in): O_EXCL on manifest version 1 —
-    concurrent tasks all attempt it, exactly one wins, the rest proceed
-    onto the committed log (TopicStore.create_topic's contract)."""
+    """Race-safe auto-create (opt-in): concurrent tasks all attempt the
+    version-1 claim, exactly one wins, the rest proceed onto the
+    committed log (TopicStore.create_topic's contract)."""
     validate_topic_name(topic)
-    log = os.path.join(root, "topics", topic, "_log")
-    os.makedirs(os.path.join(root, "topics", topic, "data"), exist_ok=True)
-    os.makedirs(log, exist_ok=True)
-    if any(n.endswith(".json") for n in os.listdir(log)):
-        return
-    m = {
-        "version": 1,
-        "topic": topic,
-        "n_buckets": n_buckets,
-        "files": [],
-        "applied_batches": [],
-        "maxima": {},
-        "floors": {},
-    }
-    _claim_version_slot(_manifest_path(root, topic, 1), m)
+    manifest.create(root, topic, n_buckets)
 
 
 # -- task append kernel -----------------------------------------------------
-
-
-def _merge_schema(m: dict, fields: list[str]) -> None:
-    """Manifest-tracked schema evolution, byte-identical policy to
-    produce (topics.py): first writer establishes, new columns append
-    and set the evolved flag."""
-    prev = m.get("schema")
-    if prev is None:
-        m["schema"] = fields
-    elif set(prev) != set(fields):
-        # Any set difference marks evolution — including a strict-SUBSET
-        # write (add list empty): the topic then holds parquet files with
-        # heterogeneous footers and readers must mergeSchema, exactly as
-        # produce (topics.py) flags it. Flagging only on appends would let
-        # read_topic adopt a narrow file's schema and re-materialize the
-        # dropped columns as NULL.
-        m["schema"] = list(prev) + [f for f in fields if f not in prev]
-        m["schema_evolved"] = True
 
 
 def _task_append(
@@ -363,8 +220,7 @@ def _task_append(
                 "+ the (ts, event_id) FIFO order key — produce parity)"
             )
 
-    v = _latest_version(root, topic)
-    meta = _load_manifest(root, topic, v)
+    meta = manifest.latest(root, topic)[1]
     _check_epoch(meta)  # fail fast before staging anything
     if applied_id in meta.get("applied_batches", []):
         return TaskCommit(0, None)  # retried task: already landed
@@ -392,14 +248,13 @@ def _task_append(
     }
     data_dir = os.path.join(root, "topics", topic, "data")
 
-    for _ in range(_RETRIES):
-        v = _latest_version(root, topic)
-        m = _load_manifest(root, topic, v)
+    for _ in range(manifest.RETRIES):
+        v, m = manifest.latest(root, topic)
         if applied_id in m.get("applied_batches", []):
             return TaskCommit(0, None)
         base = {bb: int(m.get("maxima", {}).get(str(bb), -1)) for bb in parts}
         tag = uuid.uuid4().hex[:12]
-        rel_files: list[str] = []
+        ranges: dict[str, list[int]] = {}
         for bb, sub in parts.items():
             seq = pa.array(np.arange(sub.num_rows, dtype=np.int64) + base[bb] + 1)
             out = sub.append_column("seq", seq)
@@ -413,7 +268,7 @@ def _task_append(
             # columns carry min/max statistics so time seeks/retention
             # prune row groups (readers handle mixed-era topics)
             fsio.DATA_FS.write_table(out, os.path.join(data_dir, rel))
-            rel_files.append(rel)
+            ranges[rel] = [base[bb] + 1, base[bb] + sub.num_rows]
         counts = {bb: parts[bb].num_rows for bb in parts}
 
         def apply(man: dict) -> dict:
@@ -427,12 +282,13 @@ def _task_append(
             cur = {bb: int(man.get("maxima", {}).get(str(bb), -1)) for bb in parts}
             if any(cur[bb] != base[bb] for bb in parts):
                 raise _SeqRace()
-            man["files"] = list(man["files"]) + rel_files
+            man["files"] = list(man["files"]) + list(ranges)
+            manifest.add_ranges(man, ranges)
             mx = dict(man.get("maxima", {}))
             for bb, c in counts.items():
                 mx[str(bb)] = base[bb] + c
             man["maxima"] = mx
-            _merge_schema(man, fields)
+            manifest.merge_schema(man, fields)
             # retention sizes the idempotency WINDOW: a retried task
             # is recognized only while its id is among the newest
             # _APPLIED_IDS_KEEP commits. 4096 covers thousands of
@@ -445,14 +301,14 @@ def _task_append(
             return man
 
         try:
-            committed = _commit_manifest(root, topic, v, apply)
+            committed = manifest.commit(root, topic, v, apply)
             return TaskCommit(tbl.num_rows, int(committed["version"]))
         except _AlreadyApplied:
             return TaskCommit(0, None)  # staged files -> vacuum orphans
         except _SeqRace:
             continue  # restage against the new maxima (files orphaned)
     raise RuntimeError(
-        f"seq-claim contention on topic {topic!r} after {_RETRIES} attempts"
+        f"seq-claim contention on topic {topic!r} after {manifest.RETRIES} attempts"
     )
 
 

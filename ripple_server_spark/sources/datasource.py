@@ -74,6 +74,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from ripple_server_spark.sources import manifest
+
 TOPIC_SCHEMA_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string, seq long, bucket int"
@@ -106,26 +108,13 @@ class BucketPartition(InputPartition):
         self.topic = topic
 
 
-def _latest_version(root: str, topic: str) -> int | None:
+def _manifest_version(root: str, topic: str) -> int | None:
     """Latest committed manifest version, or None for manifest-less
-    legacy layouts — the ONE place manifest names are listed/parsed
-    (mirrors TopicStore._latest_version)."""
-    log_dir = os.path.join(root, "topics", topic, "_log")
-    manifests = (
-        sorted(n for n in os.listdir(log_dir) if n.endswith(".json"))
-        if os.path.isdir(log_dir)
-        else []
-    )
-    return int(manifests[-1][:-5]) if manifests else None
-
-
-def _load_manifest(root: str, topic: str, version: int) -> dict:
-    # ONE hardened loader for the whole engine (torn-read retry for the
-    # linkless-filesystem commit fallback) — lives with the commit
-    # protocol in datasink.py; readers delegate instead of re-parsing
-    from ripple_server_spark.sources.datasink import _load_manifest as _lm
-
-    return _lm(root, topic, version)
+    legacy layouts."""
+    try:
+        return manifest.latest_version(root, topic)
+    except FileNotFoundError:
+        return None
 
 
 def _bucket_files(
@@ -141,18 +130,9 @@ def _bucket_files(
     data_dir = os.path.join(root, "topics", topic, "data")
     by_bucket: dict[int, list[str]] = {}
     if version is None:
-        version = _latest_version(root, topic)
-    elif version != _latest_version(root, topic):
-        # pinned: verify it exists for a precise error (the latest
-        # version trivially exists)
-        try:
-            _load_manifest(root, topic, version)
-        except FileNotFoundError:
-            raise ValueError(
-                f"topic {topic!r} has no committed manifest version {version}"
-            ) from None
+        version = _manifest_version(root, topic)
     if version is not None:
-        return _files_from_manifest(root, topic, _load_manifest(root, topic, version))
+        return _files_from_manifest(root, topic, _load_pinned(root, topic, version))
     else:
         for e in sorted(os.listdir(data_dir)):
             if e.startswith("bucket="):
@@ -166,6 +146,17 @@ def _bucket_files(
     return sorted((b, sorted(fs)) for b, fs in by_bucket.items())
 
 
+def _load_pinned(root: str, topic: str, version: int) -> dict:
+    """One committed manifest version; ValueError when it does not
+    exist (never committed, or vacuumed away)."""
+    try:
+        return manifest.load(root, topic, version)
+    except FileNotFoundError:
+        raise ValueError(
+            f"topic {topic!r} has no committed manifest version {version}"
+        ) from None
+
+
 def _files_from_manifest(
     root: str, topic: str, m: dict
 ) -> list[tuple[int, list[str]]]:
@@ -173,8 +164,9 @@ def _files_from_manifest(
     data_dir = os.path.join(root, "topics", topic, "data")
     by_bucket: dict[int, list[str]] = {}
     for rel in m["files"]:
-        b = int(rel.split("/", 1)[0].split("=", 1)[1])
-        by_bucket.setdefault(b, []).append(os.path.join(data_dir, rel))
+        by_bucket.setdefault(manifest.bucket_of(rel), []).append(
+            os.path.join(data_dir, rel)
+        )
     return sorted((b, sorted(fs)) for b, fs in by_bucket.items())
 
 
@@ -284,9 +276,9 @@ def _log_bounds(
     log scans. Manifest-less legacy layouts fall back to a footer scan
     of the seq column (compat shim; real topics always have manifests).
     """
-    version = _latest_version(root, topic)
+    version = _manifest_version(root, topic)
     if version is not None:
-        m = _load_manifest(root, topic, version)
+        m = manifest.load(root, topic, version)
         maxima = {str(b): int(x) for b, x in m.get("maxima", {}).items()}
         floors = {str(b): int(x) for b, x in m.get("floors", {}).items()}
         return version, maxima, floors
@@ -464,7 +456,7 @@ def _topic_ready(root: str, topic: str) -> bool:
     missing pieces; skipping it (query-start resolution) or waiting
     one trigger (discovery) is the correct race outcome (review r09)."""
     try:
-        if _latest_version(root, topic) is not None:
+        if _manifest_version(root, topic) is not None:
             return True  # committed manifest: layout complete
     except OSError:
         pass
@@ -657,7 +649,7 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
         # snapshot; the version rides in the end offset so crash
         # recovery can replay the exact file set this batch saw (see
         # readBetweenOffsets).
-        version = _latest_version(self.root, self.topic)
+        version = _manifest_version(self.root, self.topic)
         for b, files in _bucket_files(self.root, self.topic, version):
             off = int(cursors.get(str(b), 0))
             got = self._tail_slice(version, b, files, off, max_rows)
@@ -734,7 +726,8 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
       retention holes below a bucket's floor are skipped in one step
       instead of crawled through in empty batches.
     - ``partitions`` (driver) resolves the END offset's pinned manifest
-      version to per-bucket file lists: one task per bucket, and
+      version and gives each task only the files of its bucket whose
+      recorded seq range overlaps its chunk: one task per bucket, and
       catch-up ranges wider than ``batch_size`` seqs split into chunks
       so a backlog drain parallelizes WITHIN a bucket too (the chunk
       bounds push into the parquet scan as seq row-group filters).
@@ -795,63 +788,36 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
         # uncapped first offer IS correctness-required (see class
         # docstring).
         self._capped_first_offer = False
-        # Per-version manifest caches: a steady-state tail triggers
+        # Per-version manifest cache: a steady-state tail triggers
         # every few seconds and would otherwise re-parse the FULL
-        # manifest (file list included) twice per trigger
-        # (latestOffset + partitions). Version-stamped, so a commit
-        # invalidates naturally; the files cache keeps the last few
-        # versions because crash replay pins an older one. Legacy
-        # manifest-less layouts (version None) are never cached — the
-        # directory can change without a version bump.
-        self._bounds_cache: tuple[int, dict[str, int], dict[str, int]] | None = None
-        self._files_cache: dict[int, list[tuple[int, list[str]]]] = {}
+        # manifest twice per trigger (latestOffset + partitions).
+        # Version-stamped, so a commit invalidates naturally; it keeps
+        # the last few versions because crash replay pins an older one.
+        # Legacy manifest-less layouts (version None) are never cached
+        # — the directory can change without a version bump.
+        self._manifests: dict[int, dict] = {}
+
+    def _manifest(self, version: int) -> dict:
+        """Parsed manifest of a committed version (ValueError when it
+        does not exist)."""
+        m = self._manifests.get(version)
+        if m is None:
+            m = _load_pinned(self.root, self.topic, version)
+            self._manifests[version] = m
+            while len(self._manifests) > 4:
+                self._manifests.pop(next(iter(self._manifests)))
+        return m
 
     def _cached_log_bounds(self):
-        version = _latest_version(self.root, self.topic)
+        version = _manifest_version(self.root, self.topic)
         if version is None:
             return _log_bounds(self.root, self.topic)  # legacy: never cache
-        if self._bounds_cache is not None and self._bounds_cache[0] == version:
-            return self._bounds_cache
-        # ONE manifest parse primes both caches (bounds for admission,
-        # file lists for the partitions() call of the same trigger)
-        m = _load_manifest(self.root, self.topic, version)
-        self._bounds_cache = (
+        m = self._manifest(version)
+        return (
             version,
             {str(b): int(x) for b, x in m.get("maxima", {}).items()},
             {str(b): int(x) for b, x in m.get("floors", {}).items()},
         )
-        self._files_cache[version] = _files_from_manifest(self.root, self.topic, m)
-        self._trim_files_cache()
-        return self._bounds_cache
-
-    def _cached_bucket_files(self, version: int | None):
-        if version is None:
-            return _bucket_files(self.root, self.topic)
-        hit = self._files_cache.get(version)
-        if hit is not None:
-            return hit
-        files = _bucket_files(self.root, self.topic, version)
-        self._files_cache[version] = files
-        self._trim_files_cache()
-        return files
-
-    def _version_floors(self, version: int | None) -> dict[str, int]:
-        """Per-bucket retained floors of a pinned manifest version (the
-        snapshot partitions() plans against), used to clamp catch-up
-        chunking — {} for legacy manifest-less layouts."""
-        if version is None:
-            return {}
-        if self._bounds_cache is not None and self._bounds_cache[0] == version:
-            return self._bounds_cache[2]
-        try:
-            m = _load_manifest(self.root, self.topic, version)
-        except FileNotFoundError:
-            return {}
-        return {str(b): int(x) for b, x in m.get("floors", {}).items()}
-
-    def _trim_files_cache(self) -> None:
-        while len(self._files_cache) > 4:  # replay keeps a pinned version warm
-            self._files_cache.pop(next(iter(self._files_cache)))
 
     def _pack(self, cursors: dict[str, int], version: int | None) -> dict:
         # "topic" rides in the offset so consumers of the checkpoint
@@ -910,16 +876,33 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> list[BucketPartition]:
         s = json.loads(start.get("cursors", "{}"))
         e = json.loads(end.get("cursors", "{}"))
-        version = int(end["version"]) if "version" in end else None
-        try:
-            buckets = self._cached_bucket_files(version)
-        except ValueError:
-            # pinned snapshot vacuumed away (keep vacuum grace above
-            # checkpoint-recovery lag); serve from the latest manifest
-            buckets = _bucket_files(self.root, self.topic)
-        floors = self._version_floors(version)
+        m = None
+        if "version" in end:
+            try:
+                m = self._manifest(int(end["version"]))
+            except ValueError:
+                # pinned snapshot vacuumed away (keep vacuum grace above
+                # checkpoint-recovery lag); serve from the latest manifest
+                latest = _manifest_version(self.root, self.topic)
+                m = None if latest is None else self._manifest(latest)
+        data_dir = os.path.join(self.root, "topics", self.topic, "data")
+        if m is None:  # no pinned version: every retained file, no floors
+            legacy = dict(_bucket_files(self.root, self.topic))
+            buckets, floors = sorted(legacy), {}
+        else:
+            buckets = sorted({manifest.bucket_of(r) for r in m["files"]})
+            floors = {str(b): int(x) for b, x in m.get("floors", {}).items()}
+
+        def files(b: int, lo: int, hi: int) -> list[str]:
+            # the manifest read planner: only files whose recorded seq
+            # range overlaps [lo, hi)
+            if m is None:
+                return legacy.get(b, [])
+            rels = manifest.files_for(m, b, lo, hi)
+            return [os.path.join(data_dir, r) for r in rels]
+
         parts: list[BucketPartition] = []
-        for b, files in buckets:
+        for b in buckets:
             off = int(s.get(str(b), 0))
             upto = int(e.get(str(b), 0))
             # clamp the chunk start at the snapshot's retained floor: a
@@ -929,7 +912,8 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
             # retention hole in one step, like latestOffset's admission
             off = max(off, min(upto, floors.get(str(b), 0)))
             span = upto - off
-            if span <= 0:
+            span_files = files(b, off, upto) if span > 0 else []
+            if not span_files:
                 continue
             # Catch-up chunking (span > batch_size happens only on the
             # uncapped first offer / replay): a seq-range chunk can only
@@ -939,9 +923,9 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
             # measured r13: an 8-bucket single-file-per-bucket drain
             # split 5 chunks/bucket decoded every bucket 5x. Bound the
             # chunk count by the pruning granularity the driver can see
-            # without opening footers: at least one chunk per FILE
-            # (every file is >= 1 row group) plus one per
-            # catch_up_chunk_bytes of bucket bytes (row groups inside a
+            # without opening footers: at least one chunk per FILE in
+            # the span (every file is >= 1 row group) plus one per
+            # catch_up_chunk_bytes of span bytes (row groups inside a
             # large compacted file are far smaller than that, so decode
             # overlap per chunk stays bounded while a one-file backlog
             # still fans out). Steady-state triggers (span <=
@@ -949,17 +933,19 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
             want = -(-span // self.batch_size)
             if want > 1:
                 try:
-                    nbytes = sum(os.path.getsize(f) for f in files)
+                    nbytes = sum(os.path.getsize(f) for f in span_files)
                 except OSError:
                     nbytes = 0
                 cap = max(
-                    len(files), -(-nbytes // self._chunk_target_bytes), 1
+                    len(span_files), -(-nbytes // self._chunk_target_bytes), 1
                 )
                 want = min(want, cap)
             width = -(-span // want)
             while off < upto:
                 hi = min(upto, off + width)
-                parts.append(BucketPartition(files, b, off, None, upto=hi))
+                chunk = files(b, off, hi)
+                if chunk:
+                    parts.append(BucketPartition(chunk, b, off, None, upto=hi))
                 off = hi
         # replay after a crash lands here without a commit() first, and
         # a post-restart batch may start from a checkpointed cursor this

@@ -19,7 +19,7 @@ class the reference implementation.
 
 Scope is deliberately the DATA plane only. The manifest COMMIT
 protocol (atomic ``os.link`` / ``O_CREAT|O_EXCL`` slot claims,
-datasink._claim_version_slot) is a different contract — it needs an
+manifest.claim) is a different contract — it needs an
 atomic create-if-absent primitive, which object stores express
 differently (e.g. S3 conditional PUT) — and stays where it lives;
 SCALE.md documents both contracts side by side.

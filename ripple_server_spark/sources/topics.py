@@ -22,15 +22,16 @@ Reference semantics reproduced (SURVEY.md §2 Table A, §3):
   deliberately NOT reproduced: we commit exactly what was delivered.
 
 Scale design: at 100 TB a topic is the same layout with more buckets —
-``bucket=`` directory partitioning means a consumer of one bucket prunes
-all others at the scan; ``seq >= offset`` prunes row groups by min/max
-stats, so tail reads touch only tail files. Sequence assignment shuffles
+the manifest records each file's bucket and seq range, so a consume
+plans only the files of its bucket that overlap its seq range and tail
+reads touch only tail files. Sequence assignment shuffles
 only the *new* batch (window over batch rows) and reads only the
 per-bucket maxima of existing data (column-pruned parquet footer scan).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -46,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ripple_server_spark.config import APPLIED_IDS_KEEP, N_BUCKETS
 from ripple_server_spark.operators.relational import bucket_of
+from ripple_server_spark.sources import manifest
 
 
 def normalize_offsets_doc(doc: dict) -> dict:
@@ -214,15 +216,17 @@ def _produce_stage_kernel(
     Arrow batch. Files land straight in the live bucket dirs under
     collision-free names (invisible until the manifest commit, the
     native sink's ``_task_append`` protocol). Returns one
-    (bucket, n, rel) row per file; the caller's collect is bounded by
-    the bucket count.
+    (bucket, n, rel, lo, hi) row per file — ``[lo, hi]`` is the file's
+    seq range, recorded in the manifest's ``seq_ranges`` by the commit
+    that adds the file; the caller's collect is bounded by the bucket
+    count.
 
     Why not ``df.write.partitionBy("bucket")``: the Hadoop commit
     protocol serializes driver-side renames + existence checks per
     partition directory and per file (~0.3-0.5 s per produce at bench
     scale, measured r12 — the same overhead wave 1 removed from the
     rollup refresh), and the staged files then paid a second
-    driver-side rename in ``_move_staged``. pyarrow writes the SAME
+    driver-side rename into the live bucket dirs. pyarrow writes the SAME
     physical layout (TIMESTAMP_MICROS with min/max statistics — the
     ``_micros_ts_writes`` contract; snappy; one row group per file at
     produce batch sizes) with zero committer involvement. A failed or
@@ -248,6 +252,7 @@ def _produce_stage_kernel(
     def stage(batches):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         from ripple_server_spark.sources import fsio
 
@@ -256,12 +261,14 @@ def _produce_stage_kernel(
             "bucket": None,
             "rel": None,
             "n": 0,  # rows written+buffered for the current bucket
+            "lo": None,  # seq range of the current bucket's file
+            "hi": None,
             "next_seq": 0,
             "buf": [],  # buffered tables for the current bucket
             "buf_rows": 0,
             "buf_bytes": 0,
         }
-        out: list[tuple[int, int, str]] = []
+        out: list[tuple[int, int, str, int, int]] = []
 
         def flush_row_group():
             if state["buf_rows"]:
@@ -272,11 +279,14 @@ def _produce_stage_kernel(
             if state["writer"] is not None:
                 flush_row_group()
                 state["writer"].close()
-                out.append((state["bucket"], state["n"], state["rel"]))
+                out.append(
+                    (state["bucket"], state["n"], state["rel"], state["lo"], state["hi"])
+                )
             state["writer"] = None
             state["bucket"] = None
             state["rel"] = None
             state["n"] = 0
+            state["lo"] = state["hi"] = None
 
         for batch in batches:
             if not batch.num_rows:
@@ -308,6 +318,10 @@ def _produce_stage_kernel(
                     )
                     state["next_seq"] += sub.num_rows
                 sub = sub.select(file_cols)
+                mm = pc.min_max(sub.column("seq"))
+                lo, hi = mm["min"].as_py(), mm["max"].as_py()
+                state["lo"] = lo if state["lo"] is None else min(state["lo"], lo)
+                state["hi"] = hi if state["hi"] is None else max(state["hi"], hi)
                 if state["writer"] is None:
                     state["writer"] = fsio.DATA_FS.parquet_writer(
                         os.path.join(data_dir, state["rel"]), sub.schema
@@ -325,11 +339,19 @@ def _produce_stage_kernel(
                     pa.array([o[0] for o in out], pa.int32()),
                     pa.array([o[1] for o in out], pa.int64()),
                     pa.array([o[2] for o in out], pa.string()),
+                    pa.array([o[3] for o in out], pa.int64()),
+                    pa.array([o[4] for o in out], pa.int64()),
                 ],
-                names=["bucket", "n", "rel"],
+                names=["bucket", "n", "rel", "lo", "hi"],
             )
 
     return stage
+
+
+def _staged_ranges(staged: list) -> dict[str, list[int]]:
+    """``{rel: [lo, hi]}`` of staging-kernel rows — the ``seq_ranges``
+    entries the commit adding these files records."""
+    return {r["rel"]: [int(r["lo"]), int(r["hi"])] for r in staged}
 
 
 def _stage_by_bucket(
@@ -345,7 +367,7 @@ def _stage_by_bucket(
     streaming Arrow staging kernel. Sort key is the produce FIFO order
     (bucket, ts, event_id) when assigning seqs, or (bucket, seq) when
     preserving them (compaction). Returns the kernel's bounded
-    (bucket, n, rel) rows."""
+    (bucket, n, rel, lo, hi) rows."""
     order = (
         [
             F.col("bucket").asc_nulls_first(),
@@ -361,9 +383,21 @@ def _stage_by_bucket(
     return (
         df.repartition("bucket")
         .sortWithinPartitions(*order)
-        .mapInArrow(kernel, "bucket int, n long, rel string")
+        .mapInArrow(kernel, "bucket int, n long, rel string, lo long, hi long")
         .collect()
     )
+
+
+def _message_ddl(m: dict) -> str | None:
+    """DDL of a manifest's recorded message schema plus the ``bucket``
+    partition column: what a read returns without opening a footer.
+    None when no schema is recorded, or when it records one column
+    under two types — only footer merging can type that read."""
+    fields = [f.split(":", 1) for f in m.get("schema") or []]
+    names = [n for n, _t in fields]
+    if not fields or len(set(names)) != len(names):
+        return None
+    return ", ".join(f"`{n}` {t}" for n, t in fields) + ", `bucket` int"
 
 
 class TopicStore:
@@ -377,14 +411,18 @@ class TopicStore:
           topics/<topic>/data/bucket=<n>/      # parquet event log (append-only)
           offsets/<consumer_id>--<topic>.json  # committed per-bucket offsets
 
-    Commit protocol (Delta-/Iceberg-style, sized for a filesystem):
-    every mutation (produce / compact / truncate) stages its parquet
-    files under unique names, then writes manifest version v+1 with
-    ``O_CREAT|O_EXCL`` — the atomic rename-free commit point. A
-    manifest is a FULL snapshot: the live file list plus the state that
-    must commit atomically with it (``applied_batches`` for idempotent
-    produce, per-bucket ``maxima``/``floors`` so cold opens never scan
-    the log). Consequences:
+    Commit protocol (Delta-/Iceberg-style, sized for a filesystem;
+    implemented once, in ``sources/manifest.py``, for this class and the
+    native sink's write tasks alike): every mutation (produce / compact
+    / truncate) stages its parquet files under unique names, then
+    atomically claims manifest version v+1 — the rename-free commit
+    point. A manifest is a FULL snapshot: the live file list plus the
+    state that must commit atomically with it (``applied_batches`` for
+    idempotent produce, per-bucket ``maxima``/``floors`` so cold opens
+    never scan the log, and ``seq_ranges`` — the ``[lo, hi]`` seq range
+    of every live file, recorded by the commit that adds the file, so
+    :meth:`consume` and retention plan from the manifest without opening
+    a footer). Consequences:
 
     - **exactly-once produce**: a crash between the data write and the
       commit leaves orphan files that no manifest references — invisible
@@ -432,86 +470,13 @@ class TopicStore:
     def data_dir(self, topic: str) -> str:
         return os.path.join(self.topic_dir(topic), "data")
 
-    def _log_dir(self, topic: str) -> str:
-        return os.path.join(self.topic_dir(topic), "_log")
-
     def _offsets_path(self, consumer_id: str, topic: str) -> str:
         return os.path.join(self.root, "offsets", f"{consumer_id}--{topic}.json")
 
-    # -- manifest log ------------------------------------------------------
-    def _manifest_path(self, topic: str, version: int) -> str:
-        return os.path.join(self._log_dir(topic), f"{version:020d}.json")
-
-    def _latest_version(self, topic: str) -> int:
-        """Newest committed manifest version — one directory listing,
-        no file reads (the cheap cache-freshness probe)."""
-        log = self._log_dir(topic)
-        names = [n for n in os.listdir(log) if n.endswith(".json")]
-        if not names:
-            raise FileNotFoundError(f"topic {topic!r} has no manifest")
-        return max(int(n[:-5]) for n in names)
-
+    # -- manifest log (sources/manifest.py) -------------------------------
     def latest_manifest(self, topic: str) -> tuple[int, dict]:
-        """(version, manifest) of the newest committed manifest (shared
-        torn-read-hardened loader, datasink._load_manifest)."""
-        from ripple_server_spark.sources.datasink import _load_manifest
-
-        v = self._latest_version(topic)
-        return v, _load_manifest(self.root, topic, v)
-
-    def _commit(self, topic: str, base_version: int, apply, retries: int = 200) -> dict:
-        """Optimistic-concurrency commit: ``apply(manifest) -> manifest``
-        transforms the base snapshot; an atomic claim of the version+1
-        slot is the commit point. On collision the edit is re-applied to
-        the newer base and retried (apply must be a self-contained
-        rebase: add these files / drop those files / swap this subset).
-
-        The slot claim writes content to a tmp file and publishes it
-        with ``os.link`` (datasink._claim_version_slot) — atomic like
-        O_CREAT|O_EXCL, but the bytes are complete before the name
-        appears, so a concurrent reader (e.g. a native-sink write TASK,
-        which is its own producer) can never torn-read a manifest."""
-        from ripple_server_spark.sources.datasink import _claim_version_slot
-
-        v = base_version
-        for _ in range(retries):
-            try:
-                with open(self._manifest_path(topic, v)) as f:
-                    base = json.load(f)
-            except FileNotFoundError:
-                # base manifest vacuumed away mid-commit: a newer
-                # version exists by definition, so rebase onto latest
-                # (apply is a self-contained edit).
-                v, base = self.latest_manifest(topic)
-            new = apply(dict(base))
-            new["version"] = v + 1
-            if _claim_version_slot(self._manifest_path(topic, v + 1), new):
-                return new
-            v = self._latest_version(topic)
-        raise RuntimeError(f"manifest commit contention on topic {topic!r}")
-
-    def _move_staged(self, topic: str, staging: str) -> list[str]:
-        """Move staged parquet out of a Spark output dir into the live
-        bucket dirs under collision-free names. The files are INVISIBLE
-        until a manifest referencing them commits."""
-        data = self.data_dir(topic)
-        tag = uuid.uuid4().hex[:12]
-        rel: list[str] = []
-        for bdir in sorted(os.listdir(staging)):
-            if not bdir.startswith("bucket="):
-                continue
-            os.makedirs(os.path.join(data, bdir), exist_ok=True)
-            for fn in sorted(os.listdir(os.path.join(staging, bdir))):
-                if not fn.endswith(".parquet"):
-                    continue
-                unique = f"{tag}-{fn}"
-                os.rename(
-                    os.path.join(staging, bdir, fn),
-                    os.path.join(data, bdir, unique),
-                )
-                rel.append(f"{bdir}/{unique}")
-        shutil.rmtree(staging, ignore_errors=True)
-        return rel
+        """(version, manifest) of the newest committed manifest."""
+        return manifest.latest(self.root, topic)
 
     def _live_files(self, topic: str) -> list[str]:
         return self.latest_manifest(topic)[1]["files"]
@@ -565,8 +530,8 @@ class TopicStore:
                 ):
                     os.remove(p)
                     removed += 1
-        for n in os.listdir(self._log_dir(topic)):
-            p = os.path.join(self._log_dir(topic), n)
+        for n in os.listdir(manifest.log_dir(self.root, topic)):
+            p = os.path.join(manifest.log_dir(self.root, topic), n)
             # grace applies to manifests too: an in-flight commit may
             # still re-read its base version, and a pinned snapshot
             # reader its pinned version
@@ -610,22 +575,7 @@ class TopicStore:
         from ripple_server_spark.sources.datasink import validate_topic_name
 
         validate_topic_name(topic)
-        os.makedirs(self.data_dir(topic), exist_ok=True)
-        os.makedirs(self._log_dir(topic), exist_ok=True)
-        if not os.listdir(self._log_dir(topic)):
-            self._write_json(
-                self._manifest_path(topic, 1),
-                {
-                    "version": 1,
-                    "topic": topic,
-                    "n_buckets": n_buckets,
-                    "files": [],
-                    "applied_batches": [],
-                    "maxima": {},
-                    "floors": {},
-                    "config": dict(config or {}),
-                },
-            )
+        manifest.create(self.root, topic, n_buckets, config)
 
     def topic_config(self, topic: str) -> dict:
         """The topic's config map (Kafka ``describe --topic`` configs);
@@ -653,7 +603,9 @@ class TopicStore:
             merged.update(cfg)
             return m
 
-        self._commit(topic, self._latest_version(topic), apply)
+        manifest.commit(
+            self.root, topic, manifest.latest_version(self.root, topic), apply
+        )
         return dict(merged)
 
     def expand_buckets(self, topic: str, new_n_buckets: int) -> int:
@@ -725,7 +677,7 @@ class TopicStore:
                 }
             return m
 
-        committed = self._commit(topic, base_v, apply)
+        committed = manifest.commit(self.root, topic, base_v, apply)
         self._maxima.pop(topic, None)
         self._floors.pop(topic, None)
         return int(committed["version"])
@@ -755,7 +707,9 @@ class TopicStore:
             out["epoch"] = m["producer_epoch"]
             return m
 
-        self._commit(topic, self._latest_version(topic), apply)
+        manifest.commit(
+            self.root, topic, manifest.latest_version(self.root, topic), apply
+        )
         return int(out["epoch"])
 
     def topic_meta(self, topic: str) -> dict:
@@ -801,7 +755,7 @@ class TopicStore:
         tdir = self.topic_dir(topic)
         if not os.path.isdir(tdir):
             raise FileNotFoundError(f"topic {topic!r} does not exist")
-        shutil.rmtree(self._log_dir(topic), ignore_errors=True)
+        shutil.rmtree(manifest.log_dir(self.root, topic), ignore_errors=True)
         shutil.rmtree(tdir, ignore_errors=True)
         self._maxima.pop(topic, None)
         self._floors.pop(topic, None)
@@ -951,7 +905,7 @@ class TopicStore:
         # JVM sort, then the streaming Arrow kernel assigns contiguous
         # per-bucket seqs from the driver-read maxima and stages parquet
         # straight into the bucket dirs — no Hadoop committer, no
-        # per-partition driver renames, no _move_staged second rename,
+        # per-partition driver renames, no second rename of staged files,
         # and the per-bucket counts ride back on the same job (no
         # Observation). The maxima base is re-validated inside the
         # manifest commit (_SeqRace), exactly as before.
@@ -1002,7 +956,7 @@ class TopicStore:
                         m["schema_evolved"] = True
                     return m
 
-                self._commit(topic, base_v, apply_schema)
+                manifest.commit(self.root, topic, base_v, apply_schema)
             return 0
         new_files = sorted(r["rel"] for r in staged)
         maxima = {
@@ -1010,7 +964,12 @@ class TopicStore:
         }
 
         touched = [b for b in range(n_buckets) if counts.get(b, 0) > 0]
-        state = {"files": new_files, "existing": existing, "maxima": maxima}
+        state = {
+            "files": new_files,
+            "ranges": _staged_ranges(staged),
+            "existing": existing,
+            "maxima": maxima,
+        }
 
         class _SeqRace(Exception):
             """A concurrent produce advanced a bucket we also appended
@@ -1041,6 +1000,7 @@ class TopicStore:
             ):
                 raise _SeqRace(cur)
             m["files"] = list(m["files"]) + state["files"]
+            manifest.add_ranges(m, state["ranges"])
             # merge per TOUCHED bucket only — blanket overwrite would
             # clobber a concurrent producer's counts on other buckets
             mx = dict(m.get("maxima", {}))
@@ -1050,11 +1010,9 @@ class TopicStore:
             # the empty-batch early return above guarantees staged files
             # exist here, so the batch schema always lands on disk.
             # ONE schema-merge policy for both producers of this
-            # manifest (the sink's helper): a drift between the two
+            # manifest (manifest.merge_schema): a drift between the two
             # paths silently de-synchronizes the evolution flag
-            from ripple_server_spark.sources.datasink import _merge_schema
-
-            _merge_schema(m, fields)
+            manifest.merge_schema(m, fields)
             if batch_id is not None:
                 # retention MUST match the native sink's window
                 # (config.APPLIED_IDS_KEEP): a shorter truncation here
@@ -1073,7 +1031,7 @@ class TopicStore:
             # (ADVICE r12). One utime per staged file, O(buckets).
             self._touch_staged(topic, state["files"])
             try:
-                committed = self._commit(topic, base_v, apply)
+                committed = manifest.commit(self.root, topic, base_v, apply)
                 break
             except _AlreadyApplied:
                 return 0
@@ -1106,6 +1064,7 @@ class TopicStore:
                         "repartition(bucket) invariant violated"
                     )
                 state["files"] = sorted(r["rel"] for r in staged2)
+                state["ranges"] = _staged_ranges(staged2)
                 state["existing"] = new_existing
                 state["maxima"] = {
                     b: new_existing.get(b, -1) + counts.get(b, 0)
@@ -1122,7 +1081,7 @@ class TopicStore:
         """Current max seq per bucket: warm from the version-stamped
         cache (freshness = one log-dir listing), cold from the manifest
         — never a log scan (the manifest is the metadata table)."""
-        v = self._latest_version(topic)
+        v = manifest.latest_version(self.root, topic)
         cached = self._maxima.get(topic)
         if cached is not None and cached[0] == v:
             return cached[1]
@@ -1133,7 +1092,7 @@ class TopicStore:
         return maxima
 
     def _bucket_floors(self, topic: str) -> dict[int, int]:
-        v = self._latest_version(topic)
+        v = manifest.latest_version(self.root, topic)
         cached = self._floors.get(topic)
         if cached is not None and cached[0] == v:
             return cached[1]
@@ -1152,8 +1111,7 @@ class TopicStore:
         if version is None:
             _v, m = self.latest_manifest(topic)
         else:
-            with open(self._manifest_path(topic, version)) as f:
-                m = json.load(f)
+            m = manifest.load(self.root, topic, version)
         if not m["files"]:
             # An empty topic is a legitimate broker state (a consumer
             # may subscribe before any producer publishes; retention
@@ -1162,13 +1120,9 @@ class TopicStore:
             # schema when a produce (or a truncate of everything) has
             # established one, else the minimal structural columns the
             # log itself guarantees.
-            recorded = m.get("schema")
-            if recorded:
-                ddl = ", ".join(s.replace(":", " ", 1) for s in recorded)
-                ddl += ", bucket int"
-            else:
-                ddl = "seq bigint, bucket int"
-            return self.spark.createDataFrame([], ddl)
+            return self.spark.createDataFrame(
+                [], _message_ddl(m) or "seq bigint, bucket int"
+            )
         paths = [os.path.join(data, rel) for rel in m["files"]]
         # mergeSchema only when the manifest recorded an actual schema
         # evolution: without it the read silently adopts one file's
@@ -1223,8 +1177,7 @@ class TopicStore:
             base_v, base = self.latest_manifest(topic)
         else:
             base_v = base_version
-            with open(self._manifest_path(topic, base_v)) as f:
-                base = json.load(f)
+            base = manifest.load(self.root, topic, base_v)
 
         class _InputSuperseded(Exception):
             """A concurrent commit removed one of this compaction's
@@ -1238,9 +1191,9 @@ class TopicStore:
             # streaming Arrow kernel writing one file per (task, bucket)
             # directly into the live bucket dirs — no Hadoop committer
             # (its per-partition-dir driver renames were ~0.4-0.5 s of
-            # every compaction at bench scale), no _move_staged second
-            # rename, no engine-session rebind (pyarrow writes
-            # TIMESTAMP_MICROS with statistics natively). seq/content
+            # every compaction at bench scale), no second rename, no
+            # engine-session rebind (pyarrow writes TIMESTAMP_MICROS
+            # with statistics natively). seq/content
             # are preserved verbatim (assign_seq=False); files stay
             # invisible until the manifest swap commits.
             src = self.read_topic(topic, version=base_v)
@@ -1255,15 +1208,20 @@ class TopicStore:
                 assign_seq=False,
             )
             new_files = sorted(r["rel"] for r in staged)
+            ranges = _staged_ranges(staged)
 
             def apply(
-                m: dict, compacted_input=compacted_input, new_files=new_files
+                m: dict,
+                compacted_input=compacted_input,
+                new_files=new_files,
+                ranges=ranges,
             ) -> dict:
                 if compacted_input - set(m["files"]):
                     raise _InputSuperseded()
                 # keep files committed concurrently (not part of our input)
                 kept = [f for f in m["files"] if f not in compacted_input]
                 m["files"] = new_files + kept
+                manifest.add_ranges(m, ranges)
                 # compacted files share one (merged) schema; only files a
                 # concurrent producer landed mid-compact can still diverge
                 if not kept:
@@ -1274,7 +1232,7 @@ class TopicStore:
                 # staged at task time; refresh mtimes at the commit point
                 # so a concurrent vacuum's grace window measures from now
                 self._touch_staged(topic, new_files)
-                self._commit(topic, base_v, apply)
+                manifest.commit(self.root, topic, base_v, apply)
                 return
             except _InputSuperseded:
                 base_v, base = self.latest_manifest(topic)
@@ -1418,13 +1376,11 @@ class TopicStore:
         changed — that IS the change); repeat passes over the same
         clean set burn nothing.
         """
-        n_buckets = self.topic_meta(topic)["n_buckets"]
         if base_version is None:
             base_v, base = self.latest_manifest(topic)
         else:
             base_v = base_version
-            with open(self._manifest_path(topic, base_v)) as f:
-                base = json.load(f)
+            base = manifest.load(self.root, topic, base_v)
 
         class _InputSuperseded(Exception):
             pass
@@ -1461,9 +1417,7 @@ class TopicStore:
                     f"the message schema (columns: {src.columns})"
                 )
             cols = src.columns
-            staging = os.path.join(
-                self.topic_dir(topic), f".staging-{uuid.uuid4().hex[:12]}"
-            )
+            data_dir = self.data_dir(topic)
             obs_in, obs_out = Observation(), Observation()
             # Build the whole plan on the ENGINE session (rebind the
             # scan, then aggregate there): both observations then hang
@@ -1524,9 +1478,6 @@ class TopicStore:
                         | F.col(tombstone_col).isNotNull()
                         | keep_tombstone
                     )
-                plan = survivors.repartition(
-                    n_buckets, F.col("bucket")
-                ).sortWithinPartitions("seq")
                 out_metrics = [F.count(F.lit(1)).alias("n")]
                 # retained within-window tombstones (delete.retention.ms
                 # analog): counted so the cleaner checkpoint below can
@@ -1545,11 +1496,16 @@ class TopicStore:
                     if tombstone_col is not None and tombstone_retention_ms > 0
                     else F.lit(0).alias("t")
                 )
-                (
-                    plan.observe(obs_out, *out_metrics)
-                    .write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(staging)
+                # the bucket rewrite stages through compact()'s kernel:
+                # one file per bucket, seq order preserved, invisible
+                # until the manifest swap commits
+                staged = _stage_by_bucket(
+                    survivors.observe(obs_out, *out_metrics),
+                    data_dir,
+                    {},
+                    [c for c in cols if c != "bucket"],
+                    prefix="cmp",
+                    assign_seq=False,
                 )
             retained_tombstones = int(obs_out.get["t"])
             dropped = int(obs_in.get["n"]) - int(obs_out.get["n"])
@@ -1560,7 +1516,8 @@ class TopicStore:
                 # (metadata-only commit) unless it already covers them —
                 # otherwise the dirty-ratio gate would send the cleaner
                 # back over the same bytes every interval.
-                shutil.rmtree(staging, ignore_errors=True)
+                for r in staged:
+                    os.remove(os.path.join(data_dir, r["rel"]))
                 if retained_tombstones == 0:
                     if not compacted_input <= set(base.get("cleaned_files", [])):
 
@@ -1571,7 +1528,7 @@ class TopicStore:
                             )
                             return m
 
-                        self._commit(topic, base_v, apply_clean)
+                        manifest.commit(self.root, topic, base_v, apply_clean)
                 elif base.get("cleaned_files"):
                     # a no-drop pass that RETAINED tombstones must not
                     # leave a mostly-clean checkpoint standing: a lone
@@ -1586,17 +1543,22 @@ class TopicStore:
                         m["cleaned_files"] = []
                         return m
 
-                    self._commit(topic, base_v, apply_unclean)
+                    manifest.commit(self.root, topic, base_v, apply_unclean)
                 return 0
-            new_files = self._move_staged(topic, staging)
+            new_files = sorted(r["rel"] for r in staged)
+            ranges = _staged_ranges(staged)
 
             def apply(
-                m: dict, compacted_input=compacted_input, new_files=new_files
+                m: dict,
+                compacted_input=compacted_input,
+                new_files=new_files,
+                ranges=ranges,
             ) -> dict:
                 if compacted_input - set(m["files"]):
                     raise _InputSuperseded()
                 kept = [f for f in m["files"] if f not in compacted_input]
                 m["files"] = new_files + kept
+                manifest.add_ranges(m, ranges)
                 # cleaner checkpoint: exactly this pass's output is
                 # clean; `kept` files landed concurrently and stay
                 # dirty. Output holding retained within-window
@@ -1610,7 +1572,8 @@ class TopicStore:
                 return m
 
             try:
-                self._commit(topic, base_v, apply)
+                self._touch_staged(topic, new_files)
+                manifest.commit(self.root, topic, base_v, apply)
                 return dropped
             except _InputSuperseded:
                 base_v, base = self.latest_manifest(topic)
@@ -1625,16 +1588,16 @@ class TopicStore:
         concurrent_list.go`; a durable log needs an age-out).
 
         File-granularity by design: a file ages out only when its max
-        seq < before_seq (parquet footer stats — no data is read or
-        rewritten), so the retained floor is <= before_seq and reads
-        stay consistent: a consumer whose offset predates retention
-        simply resumes at the retained floor, the same contract as
-        Kafka's earliest-offset reset. The drop is a manifest commit
-        (with per-bucket floors recomputed from the surviving files'
-        min-seq stats); physical deletion is vacuum's job, so pinned
-        snapshot readers are unaffected. Compact first for tight floors
-        (one file per bucket => exact truncation). Returns files
-        dropped."""
+        seq < before_seq (the manifest's recorded seq range — no data
+        or footer is read, nothing is rewritten), so the retained floor
+        is <= before_seq and reads stay consistent: a consumer whose
+        offset predates retention simply resumes at the retained floor,
+        the same contract as Kafka's earliest-offset reset. The drop is
+        a manifest commit (with per-bucket floors recomputed from the
+        surviving files' min seqs); physical deletion is vacuum's job,
+        so pinned snapshot readers are unaffected. Compact first for
+        tight floors (one file per bucket => exact truncation). Returns
+        files dropped."""
         return self._truncate_bounds(topic, lambda _b: before_seq)
 
     def truncate_before_timestamp(self, topic: str, epoch_ms: int) -> int:
@@ -1644,7 +1607,7 @@ class TopicStore:
         maps T to each bucket's first at/after-T offset (one Spark job;
         the ts predicate pushes to the scan), then the seq-granularity
         file drop reuses :meth:`truncate`'s machinery with that
-        PER-BUCKET bound (seq footer stats are the droppable unit —
+        PER-BUCKET bound (per-file seq ranges are the droppable unit —
         exact for any file layout; ts stats, which round-9+ files also
         carry, only prune the offsets_for_times scan). A file ages out
         only when every row in it
@@ -1663,24 +1626,32 @@ class TopicStore:
 
     def _truncate_bounds(self, topic: str, bound_for_bucket) -> int:
         """Shared retention kernel: drop files whose max seq falls
-        below ``bound_for_bucket(bucket)`` (footer stats only), commit
-        risen floors. See :meth:`truncate` for the full contract."""
+        below ``bound_for_bucket(bucket)``, commit risen floors. A
+        file's seq range comes from the manifest's ``seq_ranges``; only
+        files without an entry open their parquet footer. See
+        :meth:`truncate` for the full contract."""
         import pyarrow.parquet as pq
 
         data = self.data_dir(topic)
         base_v, base = self.latest_manifest(topic)
+        ranges = base.get("seq_ranges", {})
         drop: set[str] = set()
         floors: dict[str, int] = {}
         dropped_end: dict[str, int] = {}  # max seq aged out per bucket
         for rel in base["files"]:
-            bdir = rel.split("/", 1)[0]
-            b = bdir.split("=", 1)[1]
+            b = str(manifest.bucket_of(rel))
             before_seq = int(bound_for_bucket(b))
-            md = pq.read_metadata(os.path.join(data, rel))
-            idx = md.schema.to_arrow_schema().get_field_index("seq")
-            stats = [md.row_group(i).column(idx).statistics for i in range(md.num_row_groups)]
-            mx = max(s.max for s in stats)
-            mn = min(s.min for s in stats)
+            if rel in ranges:
+                mn, mx = ranges[rel]
+            else:
+                md = pq.read_metadata(os.path.join(data, rel))
+                idx = md.schema.to_arrow_schema().get_field_index("seq")
+                stats = [
+                    md.row_group(i).column(idx).statistics
+                    for i in range(md.num_row_groups)
+                ]
+                mx = max(s.max for s in stats)
+                mn = min(s.min for s in stats)
             if mx < before_seq:
                 drop.add(rel)
                 dropped_end[b] = max(dropped_end.get(b, -1), mx)
@@ -1718,7 +1689,7 @@ class TopicStore:
             m["floors"] = _merge_floors(m.get("floors", {}))
             return m
 
-        self._commit(topic, base_v, apply)
+        manifest.commit(self.root, topic, base_v, apply)
         self._floors.pop(topic, None)
         return len(drop)
 
@@ -1755,32 +1726,61 @@ class TopicStore:
         does not move the offset — call :meth:`commit` after processing
         (at-least-once).
 
-        Returns (batch_df, next_offset). Partition pruning (bucket=) +
-        rowgroup skipping (seq >= offset) make this a tail read.
+        Returns (batch_df, next_offset). The batch is exactly seq ∈
+        [offset, offset+delivered) — the reference's clamped
+        SubArray(offset, offset+Count) (queue.go:59-61) — and its cost
+        does not grow with the log: ONE manifest version serves the
+        retention floor, the high-water mark and the file list, and
+        the manifest's per-file ``seq_ranges`` plan only the files of
+        this bucket that overlap the range (:func:`manifest.files_for`).
+        The scan takes its schema from the manifest's recorded message
+        schema (evolved columns read back as typed nulls), so Spark runs
+        no listing or inference job, and the ≤count rows are ordered by
+        a single-partition sort: materializing the batch is one job.
         """
         offset = self.committed_offsets(consumer_id, topic).get(bucket, 0)
+        _v, m = self.latest_manifest(topic)
         # Retention clamp: offsets below the retained floor resume at
         # the floor (Kafka earliest-offset reset; see truncate()).
-        offset = max(offset, self._bucket_floors(topic).get(bucket, 0))
+        offset = max(offset, int(m["floors"].get(str(bucket), 0)))
         # seq is contiguous per bucket above the floor (produce
-        # invariant), so delivered = min(count, max_seq - offset + 1)
-        # from the maxima cache — sizing launches no job on the warm path.
-        mx = self._bucket_maxima(topic).get(bucket, -1)
-        delivered = max(0, min(count, mx - offset + 1))
-        # The batch is exactly seq ∈ [offset, offset+delivered) — the
-        # reference's SubArray(offset, offset+Count) (queue.go:59-61) as
-        # a closed range filter. Both bounds push to parquet row-group
-        # stats; no sort-limit plan (sort only orders the ≤count rows).
-        batch = (
-            self.read_topic(topic)
-            .filter(
-                (F.col("bucket") == bucket)
-                & (F.col("seq") >= offset)
-                & (F.col("seq") < offset + delivered)
+        # invariant), so delivered = min(count, max_seq - offset + 1).
+        mx = int(m["maxima"].get(str(bucket), -1))
+        end = offset + max(0, min(count, mx - offset + 1))
+        rels = manifest.files_for(m, bucket, offset, end) if end > offset else []
+        ddl = _message_ddl(m)
+        if not rels:
+            return self.spark.createDataFrame(
+                [], ddl or "seq bigint, bucket int"
+            ), end
+        data = self.data_dir(topic)
+        reader = self.spark.read.option("basePath", data)
+        if ddl is not None:
+            reader = reader.schema(ddl)
+        elif m.get("schema_evolved"):
+            reader = reader.option("mergeSchema", "true")
+        # Above this many paths per scan Spark lists files with a Spark
+        # job; a lagging consumer's poll can span more files than that,
+        # so it scans them in groups that the driver lists itself.
+        group = int(
+            self.spark.conf.get(
+                "spark.sql.sources.parallelPartitionDiscovery.threshold"
             )
-            .orderBy("seq")
         )
-        return batch, offset + delivered
+        paths = [os.path.join(data, r) for r in rels]
+        scans = [
+            reader.parquet(*paths[i : i + group])
+            for i in range(0, len(paths), group)
+        ]
+        batch = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), scans
+        )
+        batch = (
+            batch.filter((F.col("seq") >= offset) & (F.col("seq") < end))
+            .coalesce(1)
+            .sortWithinPartitions("seq")
+        )
+        return batch, end
 
     def offsets_for_times(self, topic: str, epoch_ms: int) -> dict[int, int]:
         """Kafka ``offsetsForTimes``: per-bucket offset of the FIRST
@@ -2099,7 +2099,7 @@ class TopicStore:
                 return mm
 
             try:
-                self._commit(topic, v, apply)
+                manifest.commit(self.root, topic, v, apply)
                 out = result["assignment"]
             except _AlreadyCurrent:
                 # adopt the winner's committed state — but only if the
@@ -2403,13 +2403,11 @@ class TopicStore:
         stats, so an incremental consumer pays for the tail, not the
         log.
         """
-        with open(self._manifest_path(topic, since_version)) as f:
-            base = json.load(f)
+        base = manifest.load(self.root, topic, since_version)
         if version is None:
             version, target = self.latest_manifest(topic)
         else:
-            with open(self._manifest_path(topic, version)) as f:
-                target = json.load(f)
+            target = manifest.load(self.root, topic, version)
         if base.get("restored_from") != target.get("restored_from"):
             raise ValueError(
                 f"topic {topic!r} was restored between versions "
@@ -2455,8 +2453,7 @@ class TopicStore:
         offsets past the restored tail clamp at end-of-log on the next
         consume.
         """
-        with open(self._manifest_path(topic, version)) as f:
-            target = json.load(f)
+        target = manifest.load(self.root, topic, version)
         data = self.data_dir(topic)
         missing = [
             rel
@@ -2478,6 +2475,7 @@ class TopicStore:
                 "applied_batches",
                 "schema",
                 "schema_evolved",
+                "seq_ranges",
             ):
                 if key in target:
                     m[key] = target[key]
@@ -2492,7 +2490,7 @@ class TopicStore:
             m["restored_from"] = {"version": version, "token": uuid.uuid4().hex}
             return m
 
-        committed = self._commit(topic, latest_v, apply)
+        committed = manifest.commit(self.root, topic, latest_v, apply)
         # the rollback invalidates both warm caches
         self._maxima.pop(topic, None)
         self._floors.pop(topic, None)
@@ -2529,15 +2527,14 @@ class TopicStore:
         (bounded log), so history covers the RETAINED tail; after a
         prune the earliest surviving version reports
         ``retained-snapshot`` (its predecessor diff is gone)."""
-        log = self._log_dir(topic)
+        log = manifest.log_dir(self.root, topic)
         out: list[dict] = []
         prev_files: set[str] = set()
         prev_floors: dict[int, int] = {}
         prev_restore = None
         for name in sorted(n for n in os.listdir(log) if n.endswith(".json")):
             path = os.path.join(log, name)
-            with open(path) as f:
-                m = json.load(f)
+            m = manifest.load(self.root, topic, int(name[:-5]))
             files = set(m["files"])
             floors = {int(k): v for k, v in m.get("floors", {}).items()}
             restore_mark = m.get("restored_from")

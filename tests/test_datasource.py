@@ -694,6 +694,43 @@ def test_partitioned_catchup_chunks_split_within_bucket(spark, sf_dir, tmp_path)
             assert hi1 == lo2, "chunks not contiguous/disjoint"
 
 
+def test_partitioned_chunks_open_only_overlapping_files(spark, sf_dir, tmp_path):
+    """A planned chunk opens only the files whose manifest seq range
+    overlaps its [offset, upto), and the chunks still serve every row
+    of the catch-up exactly once."""
+    import json as _json
+
+    from ripple_server_spark.sources import manifest
+
+    st = TopicStore(spark, str(tmp_path / "prune_topics"))
+    st.create_topic("pl", n_buckets=2)
+    ev = load_table(spark, sf_dir, "events")
+    for lo in range(0, 500, 100):
+        st.produce(_wave(ev, lo, lo + 100), "pl")
+    r = _planner(st, batch_size=10)
+    end = r.latestOffset()  # a fresh reader's first offer: the whole log
+    parts = r.partitions({"cursors": "{}"}, end)
+    m = st.latest_manifest("pl")[1]
+    assert int(end["version"]) == st.latest_manifest("pl")[0]
+    for p in parts:
+        want = {
+            rel
+            for rel, (lo, hi) in m["seq_ranges"].items()
+            if manifest.bucket_of(rel) == p.bucket and hi >= p.offset and lo < p.upto
+        }
+        got = {os.path.relpath(f, st.data_dir("pl")) for f in p.files}
+        assert got == want
+    assert any(len(p.files) < 5 for p in parts)
+    served: dict[int, list[int]] = {}
+    for p in parts:
+        for batch in r.read(p):
+            served.setdefault(p.bucket, []).extend(batch.column("seq").to_pylist())
+    hwm = _json.loads(end["cursors"])
+    assert {b: sorted(v) for b, v in served.items()} == {
+        int(b): list(range(c)) for b, c in hwm.items()
+    }
+
+
 def test_partitioned_read_yields_sorted_arrow_batches(spark, planner_store):
     """read() ships Arrow RecordBatches (no per-row driver funnel) with
     the declared schema order and rows seq-sorted within the task."""
@@ -753,19 +790,19 @@ def test_partitioned_manifest_parse_cached_per_version(spark, planner_store, mon
     """Steady-state tailing must not re-parse the full manifest every
     trigger: bounds and file lists are cached per committed version,
     and a new commit (version bump) invalidates naturally."""
-    import ripple_server_spark.sources.datasource as dsmod
+    from ripple_server_spark.sources import manifest
 
     r = _planner(planner_store, batch_size=50)
     r.initialOffset()
 
     calls = {"n": 0}
-    real_load = dsmod._load_manifest
+    real_load = manifest.load
 
     def counting_load(root, topic, version):
         calls["n"] += 1
         return real_load(root, topic, version)
 
-    monkeypatch.setattr(dsmod, "_load_manifest", counting_load)
+    monkeypatch.setattr(manifest, "load", counting_load)
     start = r.latestOffset()
     first = calls["n"]
     assert first >= 1

@@ -122,11 +122,11 @@ def test_no_drop_pass_advances_cleaner_checkpoint_once(spark, tmp_path):
     # distinct keys per wave -> nothing ever supersedes anything
     st.produce(_wave(spark, 0, n=10, keys=10), "t")
     assert st.compact_by_key("t", key_col="event_id") == 0
-    v = st._latest_version("t")
+    v = st.latest_manifest("t")[0]
     assert st.key_compaction_dirty_ratio("t") == 0.0
     # repeat pass: checkpoint already covers the set, burns no version
     assert st.compact_by_key("t", key_col="event_id") == 0
-    assert st._latest_version("t") == v
+    assert st.latest_manifest("t")[0] == v
 
 
 def test_dirty_ratio_config_reaches_maintenance(spark, tmp_path):
@@ -337,11 +337,11 @@ def test_producer_epoch_fences_produce(spark, tmp_path):
     e1 = st.fence_producers("t")
     assert e1 == 1 and st.producer_epoch("t") == 1
     before = st.read_topic("t").count()
-    v = st._latest_version("t")
+    v = st.latest_manifest("t")[0]
     with pytest.raises(StaleProducerEpochError, match="fenced"):
         st.produce(_wave(spark, 1), "t", producer_epoch=0)
     # atomic: no manifest landed, no rows visible
-    assert st._latest_version("t") == v
+    assert st.latest_manifest("t")[0] == v
     assert st.read_topic("t").count() == before
     # the new epoch writes; unfenced producers stay unaffected (opt-in)
     assert st.produce(_wave(spark, 1), "t", producer_epoch=e1) == 20
@@ -359,20 +359,22 @@ def test_producer_fence_landing_mid_produce_is_atomic(
     st.produce(_wave(spark, 0), "t", producer_epoch=0)
     before = st.read_topic("t").count()
 
-    # Hook the manifest-commit seam: by the first _commit call the
-    # produce has already staged its files (the mapInArrow kernel wrote
-    # them during the collect), so fencing here lands between stage and
-    # commit — the window the test has always exercised.
-    orig = st._commit
+    # Hook the manifest-commit seam: by the first manifest.commit call
+    # the produce has already staged its files (the mapInArrow kernel
+    # wrote them during the collect), so fencing here lands between
+    # stage and commit — the window the test has always exercised.
+    from ripple_server_spark.sources import manifest
+
+    orig = manifest.commit
     fired = {"done": False}
 
-    def fence_then_commit(topic, base_version, apply):
+    def fence_then_commit(root, topic, base_version, apply):
         if not fired["done"]:
             fired["done"] = True
             st.fence_producers(topic)  # lands between stage and commit
-        return orig(topic, base_version, apply)
+        return orig(root, topic, base_version, apply)
 
-    monkeypatch.setattr(st, "_commit", fence_then_commit)
+    monkeypatch.setattr(manifest, "commit", fence_then_commit)
     with pytest.raises(StaleProducerEpochError):
         st.produce(_wave(spark, 1), "t", producer_epoch=0)
     monkeypatch.undo()

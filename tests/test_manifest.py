@@ -15,6 +15,7 @@ import os
 from pyspark.sql import functions as F
 
 from ripple_server_spark.catalog import load_table
+from ripple_server_spark.sources import manifest
 from ripple_server_spark.sources.topics import TopicStore
 
 
@@ -250,3 +251,190 @@ def test_history_classifies_operations(spark, sf_dir, tmp_path):
     assert len(pruned) < len(hist)
     assert pruned[0]["operation"] == "retained-snapshot"
     assert pruned[-1]["version"] == hist[-1]["version"]
+
+
+# -- manifest module: torn reads, seq ranges --------------------------------
+
+
+def test_commit_retries_a_torn_manifest_read(spark, tmp_path, monkeypatch):
+    """On the linkless-filesystem fallback a reader can open a manifest
+    whose name exists before its bytes do. Every manifest read goes
+    through manifest.load, which retries the JSONDecodeError: a commit
+    whose base read is served truncated once still lands."""
+    import builtins
+    import io
+
+    store = TopicStore(spark, str(tmp_path / "store"))
+    store.create_topic("torn", n_buckets=2)
+    v, _m = store.latest_manifest("torn")
+    target = manifest.path(store.root, "torn", v)
+    real_open = builtins.open
+    served = []
+
+    def torn_open(p, mode="r", *a, **k):
+        if p == target and mode == "r" and not served:
+            with real_open(p) as f:
+                text = f.read()
+            served.append(p)
+            return io.StringIO(text[: len(text) // 2])
+        return real_open(p, mode, *a, **k)
+
+    monkeypatch.setattr(manifest, "open", torn_open, raising=False)
+    assert store.fence_producers("torn") == 1
+    assert served == [target]
+    monkeypatch.undo()
+    v2, m2 = store.latest_manifest("torn")
+    assert v2 == v + 1 and m2["producer_epoch"] == 1
+
+
+def _footer_range(path: str) -> list[int]:
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    idx = md.schema.to_arrow_schema().get_field_index("seq")
+    stats = [md.row_group(i).column(idx).statistics for i in range(md.num_row_groups)]
+    return [min(s.min for s in stats), max(s.max for s in stats)]
+
+
+def _assert_ranges_match_footers(store, topic: str) -> dict:
+    """Every live file has a seq_ranges entry equal to its footer seq
+    min/max, and no entry names a file outside ``files``."""
+    _v, m = store.latest_manifest(topic)
+    ranges = m.get("seq_ranges", {})
+    assert set(ranges) <= set(m["files"]), "range entry for a dead file"
+    data = store.data_dir(topic)
+    for rel in m["files"]:
+        assert ranges.get(rel) == _footer_range(os.path.join(data, rel)), rel
+    return m
+
+
+def test_seq_ranges_match_footers_through_every_writer(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The manifest's per-file seq ranges are written by the commit that
+    adds each file and pruned by the one commit function: after
+    produce, a native-sink write, a forced _SeqRace rebase, compact,
+    compact_by_key, truncate and restore, every live file's range equals
+    its footer and no entry outlives its file."""
+    from ripple_server_spark.sources import topics as topics_mod
+    from ripple_server_spark.sources.datasource import RippleTopicDataSource
+
+    spark.dataSource.register(RippleTopicDataSource)
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+
+    def part(lo, hi):
+        return ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi))
+
+    root = str(tmp_path / "store")
+    s1 = TopicStore(spark, root)
+    s1.create_topic("rg", n_buckets=4)
+    s1.produce(part(0, 100), "rg")
+    _assert_ranges_match_footers(s1, "rg")
+
+    (
+        part(100, 200)
+        .write.format("ripple_topic")
+        .mode("append")
+        .option("root", root)
+        .option("topic", "rg")
+        .save()
+    )
+    _assert_ranges_match_footers(s1, "rg")
+
+    # forced seq race: s1 stages from maxima that s2's produce outdates
+    stale = dict(s1._bucket_maxima("rg"))
+    TopicStore(spark, root).produce(part(200, 300), "rg")
+    stages = []
+    real_stage = topics_mod._stage_by_bucket
+
+    def counting_stage(*a, **k):
+        stages.append(1)
+        return real_stage(*a, **k)
+
+    monkeypatch.setattr(topics_mod, "_stage_by_bucket", counting_stage)
+    monkeypatch.setattr(s1, "_bucket_maxima", lambda _t: stale)
+    s1.produce(part(300, 400), "rg")
+    monkeypatch.undo()
+    assert len(stages) == 2, "the produce did not restage after a seq race"
+    _assert_ranges_match_footers(s1, "rg")
+
+    s1.compact("rg")
+    _assert_ranges_match_footers(s1, "rg")
+
+    assert s1.compact_by_key("rg") > 0
+    m = _assert_ranges_match_footers(s1, "rg")
+    v_keyed = s1.latest_manifest("rg")[0]
+
+    s1.produce(part(400, 500), "rg")
+    keyed_max = max(r[1] for f, r in m["seq_ranges"].items())
+    assert s1.truncate("rg", before_seq=keyed_max + 1) >= 1
+    m = _assert_ranges_match_footers(s1, "rg")
+    assert len(m["seq_ranges"]) == len(m["files"])
+
+    s1.restore("rg", v_keyed)
+    m = _assert_ranges_match_footers(s1, "rg")
+    target = manifest.load(root, "rg", v_keyed)
+    assert (m["files"], m["seq_ranges"]) == (target["files"], target["seq_ranges"])
+
+
+def test_manifest_without_seq_ranges_still_reads(spark, sf_dir, tmp_path):
+    """Upgrade path: a manifest written before ranges were recorded
+    plans every file of the bucket, so consume returns the same rows
+    and retention falls back to the parquet footers."""
+    import json
+
+    store, _ev = _mk(spark, sf_dir, tmp_path, n=300)
+    first = store._bucket_maxima("m1")
+    late = load_table(spark, sf_dir, "events").filter(
+        (F.col("event_id") >= 300) & (F.col("event_id") < 500)
+    )
+    store.produce(late, "m1")
+
+    def polls(consumer):
+        store.register_consumer(consumer, "m1")
+        out = {}
+        for b in range(4):
+            df, nxt = store.consume(consumer, "m1", b, 10_000)
+            out[b] = ([r.asDict() for r in df.collect()], nxt)
+        return out
+
+    before = polls("c_before")
+    v, m = store.latest_manifest("m1")
+    assert m["seq_ranges"]
+    del m["seq_ranges"]
+    with open(manifest.path(store.root, "m1", v), "w") as f:
+        json.dump(m, f)
+    assert polls("c_after") == before
+
+    # retention falls back to the footers of range-less files
+    assert store.truncate("m1", before_seq=max(first.values()) + 1) >= 1
+    assert "seq_ranges" not in store.latest_manifest("m1")[1]
+
+
+def test_truncate_reads_seq_ranges_not_footers(spark, sf_dir, tmp_path, monkeypatch):
+    """Retention plans from the manifest: on a topic whose files all
+    carry seq ranges, truncate opens no parquet footer."""
+    import pyarrow.parquet as pq
+
+    store, _ev = _mk(spark, sf_dir, tmp_path, n=300)
+    store.produce(
+        load_table(spark, sf_dir, "events").filter(
+            (F.col("event_id") >= 300) & (F.col("event_id") < 600)
+        ),
+        "m1",
+    )
+    m = store.latest_manifest("m1")[1]
+    assert set(m["seq_ranges"]) == set(m["files"])
+
+    def no_footers(*_a, **_k):
+        raise AssertionError("truncate opened a parquet footer")
+
+    monkeypatch.setattr(pq, "read_metadata", no_footers)
+    first_hi = {}
+    for rel, (_lo, hi) in m["seq_ranges"].items():
+        b = int(rel.split("/", 1)[0].split("=", 1)[1])
+        first_hi[b] = min(first_hi.get(b, hi), hi)
+    dropped = store.truncate("m1", before_seq=max(first_hi.values()) + 1)
+    assert dropped >= 1
+    after = store.latest_manifest("m1")[1]
+    assert len(after["files"]) == len(m["files"]) - dropped

@@ -227,9 +227,9 @@ def test_compact_by_key_latest_wins_and_gap_tolerant_consume(spark, tmp_path):
         assert len(got) == live.filter(F.col("bucket") == b).count()
         assert nxt == maxima[b] + 1
     # idempotent: second pass drops nothing and burns no version
-    v = st._latest_version("kc")
+    v = st.latest_manifest("kc")[0]
     assert st.compact_by_key("kc") == 0
-    assert st._latest_version("kc") == v
+    assert st.latest_manifest("kc")[0] == v
 
 
 def test_compact_by_key_preserves_concurrent_produce(spark, tmp_path):
@@ -243,7 +243,7 @@ def test_compact_by_key_preserves_concurrent_produce(spark, tmp_path):
     wave = _mk_versions(spark)
     for w in range(2):
         st.produce(wave(w), "kr")
-    base_v = st._latest_version("kr")
+    base_v = st.latest_manifest("kr")[0]
     # compact against the pinned base while a wave-2 produce lands
     # "mid-pass" (committed after the base snapshot was taken)
     st.produce(wave(2), "kr")
@@ -267,7 +267,7 @@ def test_compact_by_key_snapshot_pinned_reader_unaffected(spark, tmp_path):
     wave = _mk_versions(spark)
     for w in range(2):
         st.produce(wave(w), "ks")
-    v_pin = st._latest_version("ks")
+    v_pin = st.latest_manifest("ks")[0]
     pinned = st.read_topic("ks", version=v_pin)
     st.compact_by_key("ks", key_col="user_id")
     # the pinned snapshot still reads the full pre-compaction log

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ripple_server_spark.catalog import load_table
+from ripple_server_spark.sources import manifest
 from ripple_server_spark.sources.rollup import HOUR_FMT, HourlyRollup
 from ripple_server_spark.sources.topics import TopicStore
 from tests.conftest import SF_SMOKE
@@ -163,7 +164,7 @@ def test_refresh_hwm_is_pinned_to_folded_snapshot(spark, sf_dir, tmp_path):
     roll = HourlyRollup(spark, store, "t", str(tmp_path / "roll"))
     real = store.latest_manifest
     store.latest_manifest = lambda topic: (
-        (v1, json.load(open(store._manifest_path(topic, v1))))
+        (v1, json.load(open(manifest.path(store.root, topic, v1))))
         if topic == "t"
         else real(topic)
     )

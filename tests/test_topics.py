@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ripple_server_spark.catalog import load_table
+from ripple_server_spark.sources import manifest
 from ripple_server_spark.sources.topics import TopicStore
 
 N_BUCKETS = 4
@@ -420,7 +421,7 @@ def test_restore_past_vacuum_horizon_fails(spark, sf_dir, tmp_path):
 
     # branch 1: target manifest retained but its data files deleted
     # (simulates a vacuum that ran between the two versions)
-    with open(st._manifest_path("v", v_target)) as f:
+    with open(manifest.path(st.root, "v", v_target)) as f:
         target_files = set(json.load(f)["files"])
     live = set(st._live_files("v"))
     for rel in target_files - live:
@@ -430,7 +431,7 @@ def test_restore_past_vacuum_horizon_fails(spark, sf_dir, tmp_path):
 
     # branch 2: the target MANIFEST itself pruned by vacuum
     st.vacuum("v", grace_s=0.0)
-    assert not os.path.exists(st._manifest_path("v", v_target))
+    assert not os.path.exists(manifest.path(st.root, "v", v_target))
     with pytest.raises(FileNotFoundError):
         st.restore("v", v_target)
     # the failed restores committed nothing
@@ -501,9 +502,9 @@ def test_truncate_preserves_floor_of_fully_aged_bucket(spark, sf_dir, tmp_path):
     floors_a = dict(st._bucket_floors("f"))
     assert all(v > 0 for v in floors_a.values())
     # truncate B on the now-empty topic: must be a no-op commit-wise
-    v_before = st._latest_version("f")
+    v_before = st.latest_manifest("f")[0]
     assert st.truncate("f", before_seq=hi + 1) == 0
-    assert st._latest_version("f") == v_before  # no version burned
+    assert st.latest_manifest("f")[0] == v_before  # no version burned
     assert dict(st._bucket_floors("f")) == floors_a  # floors survive
     # produce after retention: seq continues above the floor and a
     # fresh consumer clamps to the floor, not offset 0
@@ -738,7 +739,7 @@ def test_time_positioning_on_ts_less_topic_raises_named_error(spark, tmp_path):
         m["schema"] = ["seq:bigint", "k:bigint", "payload:bigint"]
         return m
 
-    st._commit("nt", st._latest_version("nt"), apply)
+    manifest.commit(st.root, "nt", st.latest_manifest("nt")[0], apply)
 
     with pytest.raises(ValueError, match="no 'ts' column"):
         st.offsets_for_times("nt", 1_700_000_000_000)
@@ -1136,3 +1137,100 @@ def test_executor_direct_writes_route_through_fsio_seam(tmp_path):
     )
     rel = out[0].to_pylist()[0]["rel"]
     assert _os.path.exists(_os.path.join(data_dir, rel))
+
+
+@pytest.fixture(scope="module")
+def polled(spark, sf_dir, tmp_path_factory):
+    """40 produces into 8 buckets: a log of 300+ small files."""
+    st = TopicStore(spark, str(tmp_path_factory.mktemp("poll_plan")))
+    st.create_topic("pp", n_buckets=8)
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    for i in range(40):
+        st.produce(ev.filter(F.col("event_id") % 40 == i), "pp")
+    return st
+
+
+def test_caught_up_consume_plans_only_overlapping_files(polled):
+    """Range pruning: a poll near the tail plans exactly the files of
+    its bucket whose manifest seq range overlaps [offset, next)."""
+    import os
+
+    st = polled
+    m = st.latest_manifest("pp")[1]
+    b = 3
+    mx = int(m["maxima"][str(b)])
+    st.register_consumer("tail", "pp")
+    st.commit("tail", "pp", b, mx - 4)
+    df, nxt = st.consume("tail", "pp", b, 100)
+    assert nxt == mx + 1
+    want = {
+        rel
+        for rel, (lo, hi) in m["seq_ranges"].items()
+        if manifest.bucket_of(rel) == b and hi >= mx - 4 and lo <= mx
+    }
+    got = {
+        os.path.relpath(f.removeprefix("file://"), st.data_dir("pp"))
+        for f in df.inputFiles()
+    }
+    assert got == want
+    in_bucket = [r for r in m["files"] if manifest.bucket_of(r) == b]
+    assert len(got) < len(in_bucket) / 4
+    assert [r["seq"] for r in df.collect()] == list(range(mx - 4, mx + 1))
+
+
+def test_consume_materializes_in_one_job_in_seq_order(polled):
+    """A poll whose range spans many files — more than Spark lists
+    without a job — is one Spark job (no listing, inference or
+    global-sort jobs) and returns its rows seq-ordered."""
+    st = polled
+    sc = st.spark.sparkContext
+    st.register_consumer("one_job", "pp")
+    m = st.latest_manifest("pp")[1]
+    for b in (0, 5):
+        group = f"consume-jobs-{b}"
+        sc.setJobGroup(group, group)
+        try:
+            df, nxt = st.consume("one_job", "pp", b, 10_000)
+            tbl = df.toArrow()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        n_files = sum(1 for r in m["files"] if manifest.bucket_of(r) == b)
+        assert n_files > 32
+        assert tbl["seq"].to_pylist() == list(range(nxt))
+        assert set(tbl["bucket"].to_pylist()) == {b}
+
+
+def test_consume_schema_matches_read_topic_on_evolved_topic(spark, sf_dir, tmp_path):
+    """consume types its scan from the manifest's recorded schema: on an
+    evolved topic it returns the same columns, types and typed nulls as
+    read_topic() filtered to the same range — including a column
+    declared by a metadata-only (empty) produce that no file holds."""
+    st = TopicStore(spark, str(tmp_path / "evo_poll"))
+    st.create_topic("ep", n_buckets=2)
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    st.produce(ev.filter(F.col("event_id") < 100), "ep")
+    st.produce(
+        ev.filter((F.col("event_id") >= 100) & (F.col("event_id") < 200)).withColumn(
+            "tag", F.concat(F.lit("t"), F.col("event_id").cast("string"))
+        ),
+        "ep",
+    )
+    st.produce(ev.limit(0).withColumn("score", F.lit(1.5)), "ep")
+    assert st.latest_manifest("ep")[1]["schema_evolved"]
+    st.register_consumer("evo", "ep")
+    for b in range(2):
+        df, nxt = st.consume("evo", "ep", b, 10_000)
+        ref = (
+            st.read_topic("ep")
+            .filter((F.col("bucket") == b) & (F.col("seq") < nxt))
+            .orderBy("seq")
+        )
+        assert dict((f.name, f.dataType) for f in df.schema.fields) == dict(
+            (f.name, f.dataType) for f in ref.schema.fields
+        )
+        cols = sorted(df.columns)
+        got = [r.asDict() for r in df.select(*cols).collect()]
+        assert got == [r.asDict() for r in ref.select(*cols).collect()]
+        assert any(r["tag"] is None for r in got) and any(r["tag"] for r in got)
+        assert all(r["score"] is None for r in got)
