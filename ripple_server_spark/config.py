@@ -47,14 +47,12 @@ def default_sf_dir() -> str:
 def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# Idempotency window shared by BOTH producers of a topic manifest —
-# TopicStore.produce (driver, one commit per batch) and the native
-# ripple_topic sink (one commit per task). A single constant matters:
-# if either path truncated applied_batches shorter than the other, one
-# interleaved produce() on a topic also written by the streaming sink
-# would silently shrink the sink's exactly-once replay window, and a
-# late micro-batch replay could double-append despite the documented
-# bound. 4096 commits ≈ hundreds of micro-batches at typical task
+# Idempotency window of a topic's applied-id ledger. Both producers of
+# a topic manifest — TopicStore.produce (driver, one commit per batch)
+# and the native ripple_topic sink (one commit per task) — append
+# through manifest.append, the one place that trims the ledger to this
+# many ids, so neither path can shrink the other's exactly-once replay
+# window. 4096 commits ≈ hundreds of micro-batches at typical task
 # parallelism; size it >= max expected (concurrent writers x tasks per
 # trigger x triggers a replay can lag by).
 APPLIED_IDS_KEEP = 4096

@@ -21,14 +21,13 @@ Execution model — EVERY write task is an independent producer client:
 - each task buffers its Arrow batches, routes rows to buckets
   (``pmod(key, n_buckets)``, NULL -> 0, same as ``TopicStore.produce``),
   sorts by (bucket, ts, event_id), and appends through the SAME
-  optimistic manifest protocol produce uses (sources/manifest.py:
-  atomic claim of version v+1, seq-race detection + rebase) — all
+  transaction produce uses (``manifest.append``: epoch check, applied-id
+  idempotence, atomic claim of version v+1, seq-race restage) — all
   executor-side, rows never pass through the driver;
 - seqs stay contiguous per bucket: a task claims ``[maxima+1, +n)``
-  atomically with its manifest commit; on a lost race the task shifts
-  its seqs by the per-bucket delta (pure Arrow add-constant), restages,
-  and retries — exactly produce's ``_SeqRace`` rebase, scoped to one
-  task's rows;
+  atomically with its manifest commit; on a lost race it rewrites its
+  rows with seqs from the new base (pure Arrow add-constant) and
+  retries, scoped to one task's rows;
 - FIFO within a bucket = task commit order, each task's rows internally
   ordered by (ts, event_id) — the arrival-order contract of the
   reference's per-bucket queue under concurrent producers.
@@ -37,14 +36,13 @@ Delivery semantics (documented, test-pinned):
 
 - **task-atomic, idempotent task retry**: a task's rows commit in one
   manifest version or not at all; retried/speculative attempts no-op on
-  the per-partition applied id (checked at entry AND inside the commit,
-  like produce's ``_AlreadyApplied``).
+  the per-partition applied id (checked at entry AND inside the commit).
 - **batch writes**: with ``option("batch_id", ...)`` a re-run of the
   whole job is idempotent per partition (Kafka-sink parity plus ids);
   without it, a failed job leaves the committed prefix of tasks visible
   — exactly the Kafka sink's at-least-once contract. The whole-batch
-  transactional form remains :meth:`TopicStore.produce` (one commit for
-  the entire batch).
+  transactional form is :meth:`TopicStore.produce` (one commit for the
+  entire batch).
 - **streaming writes**: the per-task applied id is
   ``dsw/<producer_id>#b<batchId>/p<partition>`` (batch id from the
   ``streaming.sql.batchId`` task property, producer id from the
@@ -58,9 +56,7 @@ Delivery semantics (documented, test-pinned):
   newest 4096 commits (manifests are full snapshots, so retention is a
   size/exactness tradeoff) — a replay arriving after more than 4096
   interleaved commits re-appends; size tasks-per-trigger well below
-  that, or use the foreachBatch form (one id per batch). The
-  whole-batch-atomic multi-sink form remains
-  :func:`streaming.api.write_stream_to_topic` (foreachBatch).
+  that.
 
 Scale notes: commit throughput is bounded by the manifest log — the
 same single-leader-log bound the reference's one-broker produce path
@@ -74,7 +70,6 @@ is the per-micro-batch/streaming tier where tasks-per-commit is small.
 from __future__ import annotations
 
 import os
-import re
 import uuid
 from collections.abc import Iterator
 
@@ -85,10 +80,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ripple_server_spark.config import APPLIED_IDS_KEEP, N_BUCKETS
+from ripple_server_spark.config import N_BUCKETS
 from ripple_server_spark.sources import manifest
-
-_APPLIED_IDS_KEEP = APPLIED_IDS_KEEP  # shared with TopicStore.produce
 
 
 class TaskCommit(WriterCommitMessage):
@@ -98,59 +91,6 @@ class TaskCommit(WriterCommitMessage):
     def __init__(self, rows: int, version: int | None):
         self.rows = rows
         self.version = version
-
-
-class _AlreadyApplied(Exception):
-    """This task's applied id is already in the manifest — a retried or
-    speculative attempt whose twin won: landing again would double-
-    append. Staged files become vacuum-reclaimed orphans."""
-
-
-class _SeqRace(Exception):
-    """A concurrent task advanced a bucket we also append to: our staged
-    seqs were computed from a stale base — restage shifted and retry."""
-
-
-_TOPIC_NAME_RE = re.compile(r"^[A-Za-z0-9._-]{1,249}$")
-
-
-def validate_topic_name(topic: str) -> None:
-    """Reject topic names that would break the storage layout (shared
-    by TopicStore.create_topic and the sink's auto-create). Kafka's
-    character set and length cap ([A-Za-z0-9._-], <= 249), no bare
-    ``.``/``..`` (path traversal through topic_dir), and no ``--`` —
-    that token is the consumer-offsets filename separator
-    (``<consumer>--<topic>.json``), and a topic name containing it
-    would make delete_topic's suffix match ambiguous against another
-    topic's offsets (review r11)."""
-    if topic in (".", ".."):
-        raise ValueError(f"invalid topic name {topic!r}")
-    if not _TOPIC_NAME_RE.fullmatch(topic):
-        raise ValueError(
-            f"invalid topic name {topic!r}: use 1-249 chars from "
-            "[A-Za-z0-9._-]"
-        )
-    if "--" in topic:
-        raise ValueError(
-            f"invalid topic name {topic!r}: '--' is reserved as the "
-            "offsets-file separator"
-        )
-    if topic.startswith("-"):
-        # a consumer id ending in '-' before the '--' separator would
-        # make '<c->--<-b>.json' end with '--b.json' and alias topic
-        # 'b' in delete_topic's offsets sweep (ADVICE r11)
-        raise ValueError(
-            f"invalid topic name {topic!r}: a leading '-' makes the "
-            "offsets-file suffix ambiguous"
-        )
-
-
-def _ensure_topic(root: str, topic: str, n_buckets: int) -> None:
-    """Race-safe auto-create (opt-in): concurrent tasks all attempt the
-    version-1 claim, exactly one wins, the rest proceed onto the
-    committed log (TopicStore.create_topic's contract)."""
-    validate_topic_name(topic)
-    manifest.create(root, topic, n_buckets)
 
 
 # -- task append kernel -----------------------------------------------------
@@ -168,37 +108,15 @@ def _task_append(
     """Append one task's Arrow batches as a producer transaction.
 
     Runs entirely executor-side: route -> sort -> stage parquet directly
-    into the bucket dirs (invisible until the manifest commit) -> claim
-    contiguous seqs with an optimistic manifest commit; on a seq race,
-    restage with shifted seqs and retry. Raced/leftover staged files are
+    into the bucket dirs (invisible until the manifest commit), with
+    ``manifest.append`` claiming the contiguous seqs; a lost seq race
+    restages with shifted seqs. Raced/leftover staged files are
     crash-orphan-equivalent (vacuum reclaims them).
 
     ``producer_epoch`` (``option("producer_epoch", N)``) opts this
-    transaction into topic-level producer fencing: the epoch is checked
-    at entry AND inside the commit's apply, so a
-    ``TopicStore.fence_producers`` landing mid-write fences the task
-    atomically — staged files become vacuum orphans, no partial rows
-    visible (VERDICT r10 item 6; mirrors produce()).
+    transaction into topic-level producer fencing, checked at entry AND
+    inside the commit (VERDICT r10 item 6; mirrors produce()).
     """
-
-    def _check_epoch(man: dict) -> None:
-        if producer_epoch is None:
-            return
-        cur = int(man.get("producer_epoch", 0))
-        if int(producer_epoch) != cur:
-            # canonical error type lives with the store API (lazy to
-            # keep this executor-side module import-light); surfaces
-            # to the driver inside Spark's task-failure wrapper with
-            # the message intact
-            from ripple_server_spark.sources.topics import (
-                StaleProducerEpochError,
-            )
-
-            raise StaleProducerEpochError(
-                f"sink write to topic {topic!r} carries producer epoch "
-                f"{int(producer_epoch)}, but the topic is at epoch {cur}"
-                " — the producer was fenced (fence_producers)"
-            )
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -219,97 +137,56 @@ def _task_append(
                 f"ripple_topic sink requires column {req!r} (routing key "
                 "+ the (ts, event_id) FIFO order key — produce parity)"
             )
-
-    meta = manifest.latest(root, topic)[1]
-    _check_epoch(meta)  # fail fast before staging anything
-    if applied_id in meta.get("applied_batches", []):
-        return TaskCommit(0, None)  # retried task: already landed
-    n_buckets = int(meta["n_buckets"])
-
-    # bucket = pmod(key, n) with NULL -> 0 (operators/relational.bucket_of
-    # + produce's coalesce), as int32 partition values
-    key = pc.fill_null(pc.cast(tbl[key_col], pa.int64()), 0)
-    k = key.to_numpy(zero_copy_only=False)
-    b = (k % n_buckets).astype(np.int32)  # numpy % is non-negative for n>0
-    tbl = tbl.append_column("__b", pa.array(b))
-    # NULLS FIRST to match produce's (ts, event_id) FIFO order key
-    # exactly (the old Spark window's ascending default, kept by the
-    # produce staging kernel): pyarrow's sort default is nulls-at-END,
-    # which gave NULL-ts rows the HIGHEST seqs via the sink but the
-    # lowest via produce() on the same topic (ADVICE r12 drift fix;
-    # test-pinned in test_datasink).
-    tbl = tbl.sort_by(
-        [("__b", "ascending"), ("ts", "ascending"), ("event_id", "ascending")],
-        null_placement="at_start",
-    )
-    parts = {
-        int(x): tbl.filter(pc.equal(tbl["__b"], int(x))).drop_columns("__b")
-        for x in np.unique(b)
-    }
     data_dir = os.path.join(root, "topics", topic, "data")
+    parts: dict[int, pa.Table] = {}
 
-    for _ in range(manifest.RETRIES):
-        v, m = manifest.latest(root, topic)
-        if applied_id in m.get("applied_batches", []):
-            return TaskCommit(0, None)
-        base = {bb: int(m.get("maxima", {}).get(str(bb), -1)) for bb in parts}
+    def stage(m: dict) -> dict[str, list[int]]:
+        if not parts:
+            # bucket = pmod(key, n) with NULL -> 0
+            # (operators/relational.bucket_of + produce's coalesce),
+            # routed once by the bucket count of the first base
+            key = pc.fill_null(pc.cast(tbl[key_col], pa.int64()), 0)
+            k = key.to_numpy(zero_copy_only=False)
+            b = (k % int(m["n_buckets"])).astype(np.int32)  # non-negative for n>0
+            routed = tbl.append_column("__b", pa.array(b))
+            # NULLS FIRST to match produce's (ts, event_id) FIFO order
+            # key exactly (the staging kernel's JVM sort): pyarrow's
+            # default is nulls-at-END, which gave NULL-ts rows the
+            # HIGHEST seqs via the sink but the lowest via produce() on
+            # the same topic (ADVICE r12 drift fix; test-pinned in
+            # test_datasink).
+            routed = routed.sort_by(
+                [("__b", "ascending"), ("ts", "ascending"), ("event_id", "ascending")],
+                null_placement="at_start",
+            )
+            for x in np.unique(b):
+                parts[int(x)] = routed.filter(
+                    pc.equal(routed["__b"], int(x))
+                ).drop_columns("__b")
         tag = uuid.uuid4().hex[:12]
         ranges: dict[str, list[int]] = {}
         for bb, sub in parts.items():
-            seq = pa.array(np.arange(sub.num_rows, dtype=np.int64) + base[bb] + 1)
-            out = sub.append_column("seq", seq)
-            bdir = f"bucket={bb}"
-            fsio.DATA_FS.makedirs(os.path.join(data_dir, bdir))
-            rel = f"{bdir}/dsw-{tag}.parquet"
-            # TIMESTAMP(MICROS) matches produce's Spark writer (the
-            # write-scoped _micros_ts_writes conf window, topics.py) —
-            # one physical ts type across a topic's round-9+ files, and
+            lo = int(m.get("maxima", {}).get(str(bb), -1)) + 1
+            seq = pa.array(np.arange(sub.num_rows, dtype=np.int64) + lo)
+            fsio.DATA_FS.makedirs(os.path.join(data_dir, f"bucket={bb}"))
+            rel = f"bucket={bb}/dsw-{tag}.parquet"
+            # TIMESTAMP(MICROS) matches produce's staging kernel — one
+            # physical ts type across a topic's round-9+ files, and
             # unlike the INT96 both writers used before round 9, micros
             # columns carry min/max statistics so time seeks/retention
             # prune row groups (readers handle mixed-era topics)
-            fsio.DATA_FS.write_table(out, os.path.join(data_dir, rel))
-            ranges[rel] = [base[bb] + 1, base[bb] + sub.num_rows]
-        counts = {bb: parts[bb].num_rows for bb in parts}
+            fsio.DATA_FS.write_table(
+                sub.append_column("seq", seq), os.path.join(data_dir, rel)
+            )
+            ranges[rel] = [lo, lo + sub.num_rows - 1]
+        return ranges
 
-        def apply(man: dict) -> dict:
-            # all three re-checks INSIDE the commit, like produce: a
-            # racing twin attempt, concurrent task, or mid-write
-            # producer fence must be caught at the atomic point, not
-            # just at entry
-            _check_epoch(man)
-            if applied_id in man.get("applied_batches", []):
-                raise _AlreadyApplied()
-            cur = {bb: int(man.get("maxima", {}).get(str(bb), -1)) for bb in parts}
-            if any(cur[bb] != base[bb] for bb in parts):
-                raise _SeqRace()
-            man["files"] = list(man["files"]) + list(ranges)
-            manifest.add_ranges(man, ranges)
-            mx = dict(man.get("maxima", {}))
-            for bb, c in counts.items():
-                mx[str(bb)] = base[bb] + c
-            man["maxima"] = mx
-            manifest.merge_schema(man, fields)
-            # retention sizes the idempotency WINDOW: a retried task
-            # is recognized only while its id is among the newest
-            # _APPLIED_IDS_KEEP commits. 4096 covers thousands of
-            # interleaved task commits between a failure and its
-            # replay; jobs with MORE concurrent tasks than that should
-            # batch through TopicStore.produce (one id per batch).
-            man["applied_batches"] = (
-                list(man.get("applied_batches", [])) + [applied_id]
-            )[-_APPLIED_IDS_KEEP:]
-            return man
-
-        try:
-            committed = manifest.commit(root, topic, v, apply)
-            return TaskCommit(tbl.num_rows, int(committed["version"]))
-        except _AlreadyApplied:
-            return TaskCommit(0, None)  # staged files -> vacuum orphans
-        except _SeqRace:
-            continue  # restage against the new maxima (files orphaned)
-    raise RuntimeError(
-        f"seq-claim contention on topic {topic!r} after {manifest.RETRIES} attempts"
+    committed = manifest.append(
+        root, topic, stage, fields, applied_id=applied_id, producer_epoch=producer_epoch
     )
+    if committed is None:
+        return TaskCommit(0, None)  # retried task: its twin already landed
+    return TaskCommit(tbl.num_rows, int(committed["version"]))
 
 
 # -- writer classes ---------------------------------------------------------
@@ -374,7 +251,7 @@ class RippleTopicBatchWriter(DataSourceArrowWriter):
 
         pid = TaskContext.get().partitionId()
         if self.create:
-            _ensure_topic(self.root, self.topic, self.n_buckets)
+            manifest.create(self.root, self.topic, self.n_buckets)
         return _task_append(
             self.root,
             self.topic,
@@ -411,8 +288,8 @@ class RippleTopicStreamWriter(DataSourceStreamArrowWriter):
         ) = _writer_common(options, schema, overwrite)
         producer = options.get("producer_id")
         if producer is None:
-            # same normalization as write_stream_to_topic's ckpt_id:
-            # 'ckpt' and 'ckpt/' must yield the same idempotency ids
+            # normalized: 'ckpt' and 'ckpt/' name the same checkpoint
+            # and must yield the same idempotency ids
             ckpt = options.get("checkpointlocation") or options.get(
                 "checkpointLocation"
             )
@@ -436,7 +313,7 @@ class RippleTopicStreamWriter(DataSourceStreamArrowWriter):
                 "build a replay-stable idempotency id"
             )
         if self.create:
-            _ensure_topic(self.root, self.topic, self.n_buckets)
+            manifest.create(self.root, self.topic, self.n_buckets)
         return _task_append(
             self.root,
             self.topic,

@@ -3,9 +3,12 @@ VERDICT r12 item 7).
 
 Three hot paths bypass Spark's committer and write parquet straight to
 final locations from executor workers — produce/compaction staging
-(``topics._produce_stage_kernel``), the native sink's task append
-(``datasink._task_append``), and the rollup's per-hour partition write
-(``rollup._write_hours``). Through round 12 they called ``os.*`` /
+(``topics._produce_stage_kernel``), the native sink's task staging (the
+``stage`` callback ``datasink._task_append`` hands to
+``manifest.append``), and the rollup's per-hour partition write
+(``rollup._write_hours``). The staged files' mtime refresh before an
+append or compaction commit (``manifest.touch``) goes through the same
+seam. Through round 12 they called ``os.*`` /
 ``pyarrow.parquet`` directly, which silently assumed a POSIX shared
 filesystem on the engine's two hottest write paths. This module is the
 ONE swap point: every executor-direct data write goes through

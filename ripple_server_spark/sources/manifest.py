@@ -1,6 +1,7 @@
 """The manifest log of one topic: the single implementation of its path
-layout, version listing, torn-read-hardened load, atomic version-slot
-claim, optimistic commit loop and seq-range read planner.
+layout, topic-name validation, version listing, torn-read-hardened load,
+atomic version-slot claim, optimistic commit loop, the append
+transaction both producers share, and the seq-range read planner.
 
 Layout: ``<root>/topics/<topic>/_log/<version:020d>.json``. Every
 version is a FULL snapshot of the topic's state (live ``files``,
@@ -25,8 +26,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
+
+from ripple_server_spark.config import APPLIED_IDS_KEEP
 
 # Optimistic-retry cap. Each lost round means ANOTHER writer's commit
 # landed (the scheme is livelock-free), so a task writing alongside T
@@ -34,6 +38,57 @@ import uuid
 # comfortably exceed any plausible tasks-per-job, not be a small
 # constant. Retries are cheap: a listing + JSON parse.
 RETRIES = 200
+
+
+class StaleGenerationError(RuntimeError):
+    """A group-scoped commit was fenced: the member's generation is
+    older than the group's current epoch, or the bucket is outside the
+    member's range under the current assignment (Kafka
+    ILLEGAL_GENERATION / FENCED_INSTANCE_ID analog)."""
+
+
+class StaleProducerEpochError(StaleGenerationError):
+    """A produce transaction was fenced: the writer's producer epoch is
+    older than the topic's current epoch (Kafka
+    INVALID_PRODUCER_EPOCH — the producer-side mirror of consumer
+    generation fencing). The rejection is atomic: the epoch is
+    re-checked inside the manifest commit, so a fenced produce leaves
+    only unreferenced staged files (vacuum reclaims them) and no
+    partial rows are ever visible."""
+
+
+_TOPIC_NAME_RE = re.compile(r"^[A-Za-z0-9._-]{1,249}$")
+
+
+def validate_topic_name(topic: str) -> None:
+    """Reject topic names that would break the storage layout (checked
+    by :func:`create` and ``TopicStore.delete_topic``). Kafka's
+    character set and length cap ([A-Za-z0-9._-], <= 249), no bare
+    ``.``/``..`` (path traversal through topic_dir), and no ``--`` —
+    that token is the consumer-offsets filename separator
+    (``<consumer>--<topic>.json``), and a topic name containing it
+    would make delete_topic's suffix match ambiguous against another
+    topic's offsets (review r11)."""
+    if topic in (".", ".."):
+        raise ValueError(f"invalid topic name {topic!r}")
+    if not _TOPIC_NAME_RE.fullmatch(topic):
+        raise ValueError(
+            f"invalid topic name {topic!r}: use 1-249 chars from "
+            "[A-Za-z0-9._-]"
+        )
+    if "--" in topic:
+        raise ValueError(
+            f"invalid topic name {topic!r}: '--' is reserved as the "
+            "offsets-file separator"
+        )
+    if topic.startswith("-"):
+        # a consumer id ending in '-' before the '--' separator would
+        # make '<c->--<-b>.json' end with '--b.json' and alias topic
+        # 'b' in delete_topic's offsets sweep (ADVICE r11)
+        raise ValueError(
+            f"invalid topic name {topic!r}: a leading '-' makes the "
+            "offsets-file suffix ambiguous"
+        )
 
 
 def log_dir(root: str, topic: str) -> str:
@@ -118,9 +173,12 @@ def claim(slot: str, manifest: dict) -> bool:
 
 
 def create(root: str, topic: str, n_buckets: int, config: dict | None = None) -> None:
-    """Create the topic layout and claim manifest version 1. Race-safe
-    and idempotent: concurrent creators all attempt the claim, one
-    wins, and a topic that already has a manifest is left untouched."""
+    """Validate the name, create the topic layout and claim manifest
+    version 1 — the one create path (``TopicStore.create_topic`` and the
+    sink's opt-in auto-create). Race-safe and idempotent: concurrent
+    creators all attempt the claim, one wins, and a topic that already
+    has a manifest is left untouched."""
+    validate_topic_name(topic)
     os.makedirs(os.path.join(root, "topics", topic, "data"), exist_ok=True)
     os.makedirs(log_dir(root, topic), exist_ok=True)
     if any(n.endswith(".json") for n in os.listdir(log_dir(root, topic))):
@@ -188,6 +246,141 @@ def merge_schema(m: dict, fields: list[str]) -> None:
 def add_ranges(m: dict, ranges: dict[str, list[int]]) -> None:
     """Record the ``[lo, hi]`` seq range of files this edit adds."""
     m["seq_ranges"] = {**m.get("seq_ranges", {}), **ranges}
+
+
+def touch(root: str, topic: str, rels) -> None:
+    """Refresh the mtimes of staged-but-uncommitted data files so a
+    concurrent scheduled vacuum (which spares only files younger than
+    its grace window) cannot reclaim them between the staging write and
+    the manifest commit that makes them live (ADVICE r12). Missing
+    files are left to the commit path to surface."""
+    from ripple_server_spark.sources import fsio
+
+    data = os.path.join(root, "topics", topic, "data")
+    for rel in rels:
+        try:
+            fsio.DATA_FS.utime(os.path.join(data, rel))
+        except OSError:
+            pass
+
+
+class _SeqRace(Exception):
+    """A concurrent writer advanced a bucket this append also touches:
+    the staged seqs were computed from a stale base — restage and retry."""
+
+
+class _AlreadyApplied(Exception):
+    """The applied id landed after the entry check (a replay racing its
+    twin): committing again would double-append."""
+
+
+def _check_epoch(m: dict, topic: str, producer_epoch: int | None) -> None:
+    if producer_epoch is None:
+        return
+    cur = int(m.get("producer_epoch", 0))
+    if int(producer_epoch) != cur:
+        raise StaleProducerEpochError(
+            f"write to topic {topic!r} carries producer epoch "
+            f"{int(producer_epoch)}, but the topic is at epoch {cur} — the "
+            "producer was fenced (fence_producers); acquire the new epoch "
+            "before writing"
+        )
+
+
+def _new_maxima(topic: str, m: dict, ranges: dict[str, list[int]]) -> dict[int, int]:
+    """Per touched bucket, the max seq after this append. Each bucket's
+    staged ranges must tile ``[base+1, new_max]`` exactly — two staging
+    tasks holding one bucket, or a stage run against another base,
+    would publish overlapping or gapped seqs and must never commit."""
+    spans: dict[int, list] = {}
+    for rel, (lo, hi) in ranges.items():
+        spans.setdefault(bucket_of(rel), []).append((int(lo), int(hi)))
+    out = {}
+    for b, rs in spans.items():
+        nxt = int(m.get("maxima", {}).get(str(b), -1)) + 1
+        for lo, hi in sorted(rs):
+            if lo != nxt or hi < lo:
+                raise RuntimeError(
+                    f"staged seq ranges {sorted(rs)} of bucket {b} on topic "
+                    f"{topic!r} do not tile the seqs after {nxt - 1}"
+                )
+            nxt = hi + 1
+        out[b] = nxt - 1
+    return out
+
+
+def append(
+    root: str,
+    topic: str,
+    stage,
+    fields: list[str],
+    applied_id: str | None = None,
+    producer_epoch: int | None = None,
+) -> dict | None:
+    """The append transaction, shared by ``TopicStore.produce`` and the
+    native sink's write tasks. Returns the committed manifest, or None
+    when nothing was committed (``applied_id`` already landed, or an
+    empty stage that declares no new schema).
+
+    ``stage(manifest) -> {rel: [lo, hi]}`` writes the batch's files for
+    that base — seqs continuing each bucket's ``maxima`` — and returns
+    their seq ranges; touched buckets, counts and new maxima all derive
+    from them. Each attempt loads the latest version, checks the
+    producer epoch and the applied id, stages, checks that the ranges
+    tile each touched bucket, refreshes the staged files' mtimes and
+    commits; the epoch, applied-id and maxima checks re-run inside the
+    commit, so a fence, a twin replay or a concurrent append landing
+    mid-stage is caught at the atomic point. A lost seq race restages
+    against the newer base, at most ``RETRIES`` times; superseded staged
+    files are crash-orphan-equivalent (vacuum reclaims them).
+
+    With zero staged files the batch's schema is still a declaration:
+    establishing or widening the topic's schema is a metadata-only
+    commit, anything else commits nothing (no version burn)."""
+    for _ in range(RETRIES):
+        v, m = latest(root, topic)
+        _check_epoch(m, topic, producer_epoch)
+        if applied_id is not None and applied_id in m.get("applied_batches", []):
+            return None
+        ranges = stage(m)
+        new_max = _new_maxima(topic, m, ranges)
+        prev = m.get("schema")
+        if not ranges and prev is not None and set(fields) <= set(prev):
+            return None
+        touch(root, topic, ranges)
+        base = {b: int(m.get("maxima", {}).get(str(b), -1)) for b in new_max}
+
+        def apply(man: dict) -> dict:
+            _check_epoch(man, topic, producer_epoch)
+            if applied_id is not None and applied_id in man.get(
+                "applied_batches", []
+            ):
+                raise _AlreadyApplied()
+            mx = dict(man.get("maxima", {}))
+            if any(int(mx.get(str(b), -1)) != x for b, x in base.items()):
+                raise _SeqRace()
+            mx.update({str(b): x for b, x in new_max.items()})
+            man["maxima"] = mx
+            man["files"] = list(man["files"]) + sorted(ranges)
+            add_ranges(man, ranges)
+            merge_schema(man, fields)
+            if applied_id is not None:
+                # the one ledger trim: the idempotency window of every
+                # writer of this topic (config.APPLIED_IDS_KEEP)
+                man["applied_batches"] = (
+                    list(man.get("applied_batches", [])) + [applied_id]
+                )[-APPLIED_IDS_KEEP:]
+            return man
+
+        try:
+            return commit(root, topic, v, apply)
+        except _AlreadyApplied:
+            return None
+        except _SeqRace:
+            continue
+    raise RuntimeError(
+        f"seq-claim contention on topic {topic!r} after {RETRIES} attempts"
+    )
 
 
 def bucket_of(rel: str) -> int:

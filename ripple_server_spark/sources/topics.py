@@ -45,9 +45,13 @@ from contextlib import contextmanager as _contextmanager
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ripple_server_spark.config import APPLIED_IDS_KEEP, N_BUCKETS
+from ripple_server_spark.config import N_BUCKETS
 from ripple_server_spark.operators.relational import bucket_of
 from ripple_server_spark.sources import manifest
+from ripple_server_spark.sources.manifest import (  # noqa: F401  (re-exported)
+    StaleGenerationError,
+    StaleProducerEpochError,
+)
 
 
 def normalize_offsets_doc(doc: dict) -> dict:
@@ -64,22 +68,6 @@ def normalize_offsets_doc(doc: dict) -> dict:
         }
     return {"offsets": dict(doc), "generations": {}}
 
-
-class StaleGenerationError(RuntimeError):
-    """A group-scoped commit was fenced: the member's generation is
-    older than the group's current epoch, or the bucket is outside the
-    member's range under the current assignment (Kafka
-    ILLEGAL_GENERATION / FENCED_INSTANCE_ID analog)."""
-
-
-class StaleProducerEpochError(StaleGenerationError):
-    """A produce transaction was fenced: the writer's producer epoch is
-    older than the topic's current epoch (Kafka
-    INVALID_PRODUCER_EPOCH — the producer-side mirror of consumer
-    generation fencing). The rejection is atomic: the epoch is
-    re-checked inside the manifest commit, so a fenced produce leaves
-    only unreferenced staged files (vacuum reclaims them) and no
-    partial rows are ever visible."""
 
 # One cloned engine session per user session (SparkContext shared).
 # Engine topic writes execute there with outputTimestampType pinned to
@@ -412,17 +400,20 @@ class TopicStore:
           offsets/<consumer_id>--<topic>.json  # committed per-bucket offsets
 
     Commit protocol (Delta-/Iceberg-style, sized for a filesystem;
-    implemented once, in ``sources/manifest.py``, for this class and the
-    native sink's write tasks alike): every mutation (produce / compact
-    / truncate) stages its parquet files under unique names, then
-    atomically claims manifest version v+1 — the rename-free commit
-    point. A manifest is a FULL snapshot: the live file list plus the
-    state that must commit atomically with it (``applied_batches`` for
-    idempotent produce, per-bucket ``maxima``/``floors`` so cold opens
-    never scan the log, and ``seq_ranges`` — the ``[lo, hi]`` seq range
-    of every live file, recorded by the commit that adds the file, so
-    :meth:`consume` and retention plan from the manifest without opening
-    a footer). Consequences:
+    implemented once, in ``sources/manifest.py``): every mutation
+    (produce / compact / truncate) stages its parquet files under unique
+    names, then atomically claims manifest version v+1 — the rename-free
+    commit point. Appends have one transaction, ``manifest.append``,
+    shared by :meth:`produce` and the native sink's write tasks: epoch
+    fencing, applied-id idempotence, seq-race restaging and the schema
+    merge are written once. A manifest is a FULL snapshot: the live file
+    list plus the state that must commit atomically with it
+    (``applied_batches`` for idempotent produce, per-bucket
+    ``maxima``/``floors`` so cold opens never scan the log, and
+    ``seq_ranges`` — the ``[lo, hi]`` seq range of every live file,
+    recorded by the commit that adds the file, so :meth:`consume` and
+    retention plan from the manifest without opening a footer).
+    Consequences:
 
     - **exactly-once produce**: a crash between the data write and the
       commit leaves orphan files that no manifest references — invisible
@@ -435,8 +426,11 @@ class TopicStore:
     - **writer-conflict detection**: O_EXCL on v+1 makes a lost-update
       race a visible failure; the losing writer rebases (re-applies its
       file edits to the new base) and retries — optimistic concurrency
-      instead of silent corruption. Per-bucket seq assignment still
-      assumes one producer per topic (the reference's model).
+      instead of silent corruption. Concurrent producers are safe: an
+      append whose buckets advanced under it restages its seqs against
+      the new base (at most ``manifest.RETRIES`` times), so per-bucket
+      seqs stay contiguous with any number of ``produce`` callers and
+      sink tasks writing one topic at once.
 
     The directory-tailing streaming source (``streaming/api.py
     stream_topic``) watches ``data/`` itself and is therefore
@@ -480,23 +474,6 @@ class TopicStore:
 
     def _live_files(self, topic: str) -> list[str]:
         return self.latest_manifest(topic)[1]["files"]
-
-    def _touch_staged(self, topic: str, rels: list[str]) -> None:
-        """Refresh mtimes of staged-but-uncommitted data files so a
-        concurrent scheduled :meth:`vacuum` (which spares only files
-        younger than its grace window) cannot reclaim them between the
-        staging write and the manifest commit that makes them live
-        (ADVICE r12: kernel staging widened that window from ~ms to the
-        whole produce job + any rebase retries). Missing files are left
-        to the commit path to surface."""
-        from ripple_server_spark.sources import fsio
-
-        data = self.data_dir(topic)
-        for rel in rels:
-            try:
-                fsio.DATA_FS.utime(os.path.join(data, rel))
-            except OSError:
-                pass
 
     def vacuum(self, topic: str, grace_s: float = 0.0) -> int:
         """Delete data files no manifest-latest references (compacted-
@@ -572,9 +549,6 @@ class TopicStore:
         n_buckets: int = N_BUCKETS,
         config: dict | None = None,
     ) -> None:
-        from ripple_server_spark.sources.datasink import validate_topic_name
-
-        validate_topic_name(topic)
         manifest.create(self.root, topic, n_buckets, config)
 
     def topic_config(self, topic: str) -> dict:
@@ -749,9 +723,7 @@ class TopicStore:
         r11): without it, ``delete_topic("..")`` resolved topic_dir to
         the topics ROOT and rmtree'd the entire store, and path-segment
         names like ``a/b`` escaped the layout."""
-        from ripple_server_spark.sources.datasink import validate_topic_name
-
-        validate_topic_name(topic)
+        manifest.validate_topic_name(topic)
         tdir = self.topic_dir(topic)
         if not os.path.isdir(tdir):
             raise FileNotFoundError(f"topic {topic!r} does not exist")
@@ -834,10 +806,11 @@ class TopicStore:
         the applied-batch id become visible in the SAME manifest
         commit, so a crash anywhere before the commit leaves only
         orphan files no reader sees (vacuum reclaims them) and the
-        retry re-appends cleanly. Applied ids are bounded (the last
-        ``config.APPLIED_IDS_KEEP`` = 4096 — the SAME window the native
-        sink keeps, so neither commit path can shrink the other's
-        exactly-once replay horizon).
+        retry re-appends cleanly. The transaction is
+        :func:`manifest.append`, the same one the native sink's tasks
+        commit through, so both keep one applied-id window (the newest
+        4096 ids) and neither can shrink the other's exactly-once replay
+        horizon.
 
         NULL routing keys land in bucket 0 (the deterministic analog of
         Kafka's null-key routing): pmod(NULL) is NULL, which would
@@ -856,30 +829,6 @@ class TopicStore:
         vacuum-reclaimed orphans and no partial rows are visible).
         ``None`` keeps the reference's unfenced single-producer model.
         """
-        base_v, meta = self.latest_manifest(topic)
-        if batch_id is not None:
-            if batch_id in meta.get("applied_batches", []):
-                return 0
-
-        def _check_epoch(m: dict) -> None:
-            if producer_epoch is not None:
-                cur = int(m.get("producer_epoch", 0))
-                if int(producer_epoch) != cur:
-                    raise StaleProducerEpochError(
-                        f"produce to topic {topic!r} carries producer "
-                        f"epoch {int(producer_epoch)}, but the topic is "
-                        f"at epoch {cur} — the producer was fenced "
-                        "(fence_producers); acquire the new epoch before "
-                        "writing"
-                    )
-
-        _check_epoch(meta)
-        n_buckets = meta["n_buckets"]
-
-        existing = self._bucket_maxima(topic)
-        routed = df.withColumn(
-            "bucket", F.coalesce(bucket_of(F.col(key_col), n_buckets), F.lit(0))
-        )
         in_names = [f.name for f in df.schema.fields]
         for req in ("ts", "event_id"):
             if req not in in_names:
@@ -900,182 +849,51 @@ class TopicStore:
         if "seq" not in file_cols:
             file_cols.append("seq")
         fields = [f"{n}:{types[n]}" for n in file_cols]
-        # One exchange (hash on bucket — a bucket's rows land in exactly
-        # one task, the old window plan's partitioning) + a spillable
-        # JVM sort, then the streaming Arrow kernel assigns contiguous
-        # per-bucket seqs from the driver-read maxima and stages parquet
-        # straight into the bucket dirs — no Hadoop committer, no
-        # per-partition driver renames, no second rename of staged files,
-        # and the per-bucket counts ride back on the same job (no
-        # Observation). The maxima base is re-validated inside the
-        # manifest commit (_SeqRace), exactly as before.
         data_dir = self.data_dir(topic)
         os.makedirs(data_dir, exist_ok=True)
-        staged = _stage_by_bucket(
-            routed,
-            data_dir,
-            {int(b): int(m) for b, m in existing.items()},
-            file_cols,
+        staged: list = []  # kernel rows of the latest staging
+
+        def stage(m: dict) -> dict[str, list[int]]:
+            # One exchange (hash on bucket — a bucket's rows land in
+            # exactly one task) + a spillable JVM sort, then the
+            # streaming Arrow kernel assigns contiguous per-bucket seqs
+            # from this base's maxima and stages parquet straight into
+            # the bucket dirs; the per-bucket counts and seq ranges ride
+            # back on the same job. A later attempt (a lost seq race)
+            # restages from the previous attempt's files through the
+            # same sort + kernel: identical (ts, event_id) order, so
+            # identical seqs shifted by the per-bucket delta, and one
+            # extra pass over the BATCH (never the topic).
+            if staged:
+                src = self.spark.read.option("basePath", data_dir).parquet(
+                    *[os.path.join(data_dir, r["rel"]) for r in staged]
+                )
+            else:
+                src = df.withColumn(
+                    "bucket",
+                    F.coalesce(
+                        bucket_of(F.col(key_col), int(m["n_buckets"])), F.lit(0)
+                    ),
+                )
+            maxima = {int(b): int(x) for b, x in m.get("maxima", {}).items()}
+            staged[:] = _stage_by_bucket(src, data_dir, maxima, file_cols)
+            return _staged_ranges(staged)
+
+        committed = manifest.append(
+            self.root,
+            topic,
+            stage,
+            fields,
+            applied_id=batch_id,
+            producer_epoch=producer_epoch,
         )
-        counts: dict[int, int] = {}
-        for r in staged:
-            if int(r["bucket"]) in counts:
-                # would mean two tasks held the same bucket and assigned
-                # overlapping seqs — must never commit
-                raise RuntimeError(
-                    f"produce staged bucket {int(r['bucket'])} from two "
-                    "tasks; repartition(bucket) invariant violated"
-                )
-            counts[int(r["bucket"])] = int(r["n"])
-        n_total = sum(counts.values())
-        if n_total == 0:
-            # Empty batch: nothing to append — do NOT burn a manifest
-            # version for a no-op (high-frequency producers would churn
-            # the log and break "version == change"). But the batch's
-            # SCHEMA is still a declaration: when it ESTABLISHES the
-            # topic's message schema or EVOLVES it with new columns,
-            # commit a metadata-only manifest (the Delta "empty write
-            # still commits the schema change" shape) so a later read
-            # serves the typed columns instead of losing them.
-            prev_schema = meta.get("schema")
-            new_fields = [
-                f for f in fields if f not in (prev_schema or [])
-            ]
-            if prev_schema is None or new_fields:
-
-                def apply_schema(m: dict) -> dict:
-                    _check_epoch(m)  # a schema declaration is still a write
-                    p = m.get("schema")
-                    if p is None:
-                        m["schema"] = fields
-                    else:
-                        add = [f for f in fields if f not in p]
-                        if not add:
-                            return m
-                        m["schema"] = list(p) + add
-                        m["schema_evolved"] = True
-                    return m
-
-                manifest.commit(self.root, topic, base_v, apply_schema)
+        if committed is None:
             return 0
-        new_files = sorted(r["rel"] for r in staged)
-        maxima = {
-            b: existing.get(b, -1) + counts.get(b, 0) for b in range(n_buckets)
-        }
-
-        touched = [b for b in range(n_buckets) if counts.get(b, 0) > 0]
-        state = {
-            "files": new_files,
-            "ranges": _staged_ranges(staged),
-            "existing": existing,
-            "maxima": maxima,
-        }
-
-        class _SeqRace(Exception):
-            """A concurrent produce advanced a bucket we also appended
-            to: our staged seqs were computed from a stale base and
-            would overlap — the commit must NOT land as-is."""
-
-            def __init__(self, latest_maxima: dict[int, int]):
-                self.latest_maxima = latest_maxima
-
-        class _AlreadyApplied(Exception):
-            """A concurrent producer committed this batch_id after our
-            entry check: landing again would double-append. The staged
-            files become vacuum-reclaimed orphans."""
-
-        def apply(m: dict) -> dict:
-            # epoch + idempotence must be re-checked INSIDE the commit,
-            # not just at entry — a fence_producers (or a replayed
-            # produce racing its twin) landing after the entry check
-            # would otherwise slip through
-            _check_epoch(m)
-            if batch_id is not None and batch_id in m.get(
-                "applied_batches", []
-            ):
-                raise _AlreadyApplied()
-            cur = {int(b): x for b, x in m.get("maxima", {}).items()}
-            if any(
-                cur.get(b, -1) != state["existing"].get(b, -1) for b in touched
-            ):
-                raise _SeqRace(cur)
-            m["files"] = list(m["files"]) + state["files"]
-            manifest.add_ranges(m, state["ranges"])
-            # merge per TOUCHED bucket only — blanket overwrite would
-            # clobber a concurrent producer's counts on other buckets
-            mx = dict(m.get("maxima", {}))
-            for b in touched:
-                mx[str(b)] = state["maxima"][b]
-            m["maxima"] = mx
-            # the empty-batch early return above guarantees staged files
-            # exist here, so the batch schema always lands on disk.
-            # ONE schema-merge policy for both producers of this
-            # manifest (manifest.merge_schema): a drift between the two
-            # paths silently de-synchronizes the evolution flag
-            manifest.merge_schema(m, fields)
-            if batch_id is not None:
-                # retention MUST match the native sink's window
-                # (config.APPLIED_IDS_KEEP): a shorter truncation here
-                # would shrink the sink's exactly-once replay window on
-                # any topic written by both paths
-                m["applied_batches"] = (
-                    list(m.get("applied_batches", [])) + [batch_id]
-                )[-APPLIED_IDS_KEEP:]
-            return m
-
-        while True:
-            # Refresh staged-file mtimes at the commit point: the kernel
-            # wrote them at TASK time, and a long collect (or a rebase
-            # retry) could age them past a concurrent scheduled vacuum's
-            # grace window before the manifest referencing them lands
-            # (ADVICE r12). One utime per staged file, O(buckets).
-            self._touch_staged(topic, state["files"])
-            try:
-                committed = manifest.commit(self.root, topic, base_v, apply)
-                break
-            except _AlreadyApplied:
-                return 0
-            except _SeqRace as race:
-                # Seq rebase: recompute seqs from the NEW maxima and
-                # restage — the same sort + streaming-kernel pipeline as
-                # the first staging, run over the staged batch files
-                # (identical (ts, event_id) order => identical seqs
-                # shifted by the per-bucket delta; same row-group
-                # statistics/micros layout as every other staged file).
-                # The superseded staged files were never committed —
-                # crash-orphan-equivalent, vacuum reclaims them. One
-                # extra pass over the BATCH (never the topic), only on
-                # an actual write race.
-                new_existing = race.latest_maxima
-                data = self.data_dir(topic)
-                old_paths = [os.path.join(data, f) for f in state["files"]]
-                restaged_src = self.spark.read.option("basePath", data).parquet(
-                    *old_paths
-                )
-                staged2 = _stage_by_bucket(
-                    restaged_src,
-                    data,
-                    {int(b): int(m) for b, m in new_existing.items()},
-                    file_cols,
-                )
-                if len({int(r["bucket"]) for r in staged2}) != len(staged2):
-                    raise RuntimeError(
-                        "produce rebase staged a bucket from two tasks; "
-                        "repartition(bucket) invariant violated"
-                    )
-                state["files"] = sorted(r["rel"] for r in staged2)
-                state["ranges"] = _staged_ranges(staged2)
-                state["existing"] = new_existing
-                state["maxima"] = {
-                    b: new_existing.get(b, -1) + counts.get(b, 0)
-                    for b in touched
-                }
-                base_v, _ = self.latest_manifest(topic)
         self._maxima[topic] = (
             committed["version"],
             {int(b): x for b, x in committed["maxima"].items()},
         )
-        return n_total
+        return sum(int(r["n"]) for r in staged)
 
     def _bucket_maxima(self, topic: str) -> dict[int, int]:
         """Current max seq per bucket: warm from the version-stamped
@@ -1231,7 +1049,7 @@ class TopicStore:
             try:
                 # staged at task time; refresh mtimes at the commit point
                 # so a concurrent vacuum's grace window measures from now
-                self._touch_staged(topic, new_files)
+                manifest.touch(self.root, topic, new_files)
                 manifest.commit(self.root, topic, base_v, apply)
                 return
             except _InputSuperseded:
@@ -1572,7 +1390,7 @@ class TopicStore:
                 return m
 
             try:
-                self._touch_staged(topic, new_files)
+                manifest.touch(self.root, topic, new_files)
                 manifest.commit(self.root, topic, base_v, apply)
                 return dropped
             except _InputSuperseded:

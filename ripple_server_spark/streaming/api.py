@@ -11,10 +11,10 @@ This is the live half of the reference's pub/sub surface:
   by construction: Spark's commit log records exactly what each batch
   read. Exactly-once per micro-batch — strictly stronger than the
   reference's at-least-once.
-- **sink** (:func:`write_stream_to_topic`): foreachBatch →
-  ``TopicStore.produce`` with batch-derived idempotency ids — the
-  produce path (A5), exactly-once end to end because the rows commit
-  through the manifest protocol.
+- **sink**: ``writeStream.format("ripple_topic")`` — the native sink
+  (sources/datasink.py), whose write tasks append through the same
+  manifest transaction as ``TopicStore.produce``, exactly-once per
+  (producer, micro-batch, partition) via replay-stable applied ids.
 - **fan-out** (:func:`fanout_write`): foreachBatch writing N copies —
   the *semantic* analog of leader->follower gossip replication
   (internal/broker/producer/server/core.go:68-103 + ack handling
@@ -79,50 +79,6 @@ def stream_topic(
         store.spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(store.data_dir(topic))
-    )
-
-
-def write_stream_to_topic(
-    df: DataFrame,
-    store: TopicStore,
-    topic: str,
-    checkpoint: str,
-    key_col: str = "user_id",
-) -> DataStreamWriter:
-    """Producer sink (A5): every micro-batch is appended through
-    :meth:`TopicStore.produce` under a batch-derived idempotency id, so
-    the whole path is EXACTLY-ONCE — a replayed batch (crash between
-    sink write and checkpoint commit) is a manifest-level no-op, and
-    the rows land under the manifest commit protocol: visible to
-    ``read_topic``/``consume``, safe under ``vacuum``.
-
-    (A raw parquet file-sink into ``data/`` — this function's previous
-    form — writes files no manifest references: invisible to every
-    manifest reader and reclaimed as orphans by vacuum, while its
-    ``_spark_metadata`` directory flips the directory-tailing source
-    into sink-log mode and hides produce()-written files. foreachBatch
-    + produce is the correct composition.)
-
-    This is the WHOLE-BATCH-ATOMIC form (one manifest commit per
-    micro-batch) and the right shape for multi-sink foreachBatch
-    bodies; the engine-import-free equivalent is the native
-    ``writeStream.format("ripple_topic")`` sink (sources/datasink.py),
-    which commits per task.
-    """
-
-    # Normalize the checkpoint path inside the idempotency id: Spark
-    # replays batch N for the RESOLVED checkpoint dir, so 'ckpt' and
-    # 'ckpt/' (same dir, different spelling) must produce the same id —
-    # a spelling-sensitive id would let a replayed batch double-append.
-    ckpt_id = os.path.abspath(checkpoint)
-
-    def _produce(batch: DataFrame, batch_id: int) -> None:
-        store.produce(
-            batch, topic, key_col=key_col, batch_id=f"{topic}/{ckpt_id}#{batch_id}"
-        )
-
-    return df.writeStream.foreachBatch(_produce).option(
-        "checkpointLocation", checkpoint
     )
 
 

@@ -426,9 +426,7 @@ def test_applied_id_retention_window_shared(spark, store, sf_dir):
     import os as _os
 
     from ripple_server_spark.config import APPLIED_IDS_KEEP
-    from ripple_server_spark.sources import datasink
 
-    assert datasink._APPLIED_IDS_KEEP == APPLIED_IDS_KEEP
     store.create_topic("w_keep", n_buckets=2)
     df = _events(spark, sf_dir, n=20)
     _write(df, store, "w_keep", batch_id="sink-era-0")

@@ -12,6 +12,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ripple_server_spark.catalog import load_table
@@ -132,16 +133,18 @@ def test_cold_store_instance_never_scans_for_maxima(spark, sf_dir, tmp_path):
     assert len(after_jobs) == len(before_jobs), "cold maxima launched a Spark job"
 
 
-def test_concurrent_produce_seq_race_is_rebased(spark, sf_dir, tmp_path):
+def test_concurrent_produce_seq_race_is_rebased(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """Two producers appending from the same observed base must not
     assign overlapping seqs: the second commit detects the advanced
-    maxima, shifts its staged rows, and lands contiguously.
+    maxima, restages its rows with shifted seqs, and lands contiguously.
 
-    The race is forced deterministically: store1 warms its maxima
-    cache, store2 (a second instance on the same root) produces, then
-    store1 produces from its now-stale cache."""
+    The race is forced at the append seam: s1 has staged b3 when s2's
+    produce of b2 lands, hooked into s1's first manifest commit."""
     from ripple_server_spark.catalog import load_table
     from ripple_server_spark.sources.topics import TopicStore
+    from tests.conftest import count_stagings, land_before_next_commit
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     b1 = ev.filter(F.col("event_id") < 100)
@@ -150,10 +153,13 @@ def test_concurrent_produce_seq_race_is_rebased(spark, sf_dir, tmp_path):
 
     s1 = TopicStore(spark, str(tmp_path))
     s1.create_topic("race", n_buckets=2)
-    s1.produce(b1, "race")  # warms s1's maxima cache
+    s1.produce(b1, "race")
     s2 = TopicStore(spark, str(tmp_path))
-    s2.produce(b2, "race")  # advances maxima behind s1's back
-    s1.produce(b3, "race")  # stale base -> must rebase, not overlap
+    stagings = count_stagings(monkeypatch)
+    land_before_next_commit(monkeypatch, lambda: s2.produce(b2, "race"))
+    s1.produce(b3, "race")  # stale base -> must restage, not overlap
+    monkeypatch.undo()
+    assert len(stagings) == 3, "s1 stages, s2 produces, s1 must restage"
 
     df = s1.read_topic("race")
     assert df.count() == 300
@@ -176,12 +182,15 @@ def test_concurrent_produce_seq_race_is_rebased(spark, sf_dir, tmp_path):
         assert maxima[r["bucket"]] == r["hi"]
 
 
-def test_replayed_batch_id_race_cannot_double_append(spark, sf_dir, tmp_path):
+def test_replayed_batch_id_race_cannot_double_append(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The batch_id idempotence check re-runs inside the commit: a
     replayed produce whose twin landed after its entry check (forced
     via a second store instance) must append nothing."""
     from ripple_server_spark.catalog import load_table
     from ripple_server_spark.sources.topics import TopicStore
+    from tests.conftest import count_stagings
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     batch = ev.filter(F.col("event_id") < 100)
@@ -195,20 +204,29 @@ def test_replayed_batch_id_race_cannot_double_append(spark, sf_dir, tmp_path):
     s2 = TopicStore(spark, str(tmp_path))
     assert s2.produce(batch, "idem", batch_id="B1") == 0
 
+    # force the in-commit path on a third instance: its entry check
+    # (the append's first manifest read) is shown a manifest without B1
     s3 = TopicStore(spark, str(tmp_path))
-    real = s3.latest_manifest
+    v_before = s3.latest_manifest("idem")[0]
+    real = manifest.latest
     calls = {"n": 0}
 
-    def stale_once(topic):
-        v, m = real(topic)
+    def stale_once(root, topic):
+        v, m = real(root, topic)
         calls["n"] += 1
         if calls["n"] == 1:  # entry check sees a manifest without B1
             m = dict(m)
             m["applied_batches"] = []
         return v, m
 
-    s3.latest_manifest = stale_once
+    stagings = count_stagings(monkeypatch)
+    monkeypatch.setattr(manifest, "latest", stale_once)
     assert s3.produce(batch, "idem", batch_id="B1") == 0
+    monkeypatch.undo()
+    # the batch got past the entry check and staged; only the in-commit
+    # applied-id check can have refused it
+    assert len(stagings) == 1, "the entry check was not defeated"
+    assert s3.latest_manifest("idem")[0] == v_before
 
     df = s1.read_topic("idem")
     assert df.count() == 100  # appended exactly once across all replays
@@ -316,8 +334,8 @@ def test_seq_ranges_match_footers_through_every_writer(
     produce, a native-sink write, a forced _SeqRace rebase, compact,
     compact_by_key, truncate and restore, every live file's range equals
     its footer and no entry outlives its file."""
-    from ripple_server_spark.sources import topics as topics_mod
     from ripple_server_spark.sources.datasource import RippleTopicDataSource
+    from tests.conftest import count_stagings, land_before_next_commit
 
     spark.dataSource.register(RippleTopicDataSource)
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
@@ -341,21 +359,15 @@ def test_seq_ranges_match_footers_through_every_writer(
     )
     _assert_ranges_match_footers(s1, "rg")
 
-    # forced seq race: s1 stages from maxima that s2's produce outdates
-    stale = dict(s1._bucket_maxima("rg"))
-    TopicStore(spark, root).produce(part(200, 300), "rg")
-    stages = []
-    real_stage = topics_mod._stage_by_bucket
-
-    def counting_stage(*a, **k):
-        stages.append(1)
-        return real_stage(*a, **k)
-
-    monkeypatch.setattr(topics_mod, "_stage_by_bucket", counting_stage)
-    monkeypatch.setattr(s1, "_bucket_maxima", lambda _t: stale)
+    # forced seq race: a second store's produce lands between s1's
+    # staging and s1's commit
+    stagings = count_stagings(monkeypatch)
+    land_before_next_commit(
+        monkeypatch, lambda: TopicStore(spark, root).produce(part(200, 300), "rg")
+    )
     s1.produce(part(300, 400), "rg")
     monkeypatch.undo()
-    assert len(stages) == 2, "the produce did not restage after a seq race"
+    assert len(stagings) == 3, "s1 stages, the sibling produces, s1 must restage"
     _assert_ranges_match_footers(s1, "rg")
 
     s1.compact("rg")
@@ -438,3 +450,157 @@ def test_truncate_reads_seq_ranges_not_footers(spark, sf_dir, tmp_path, monkeypa
     assert dropped >= 1
     after = store.latest_manifest("m1")[1]
     assert len(after["files"]) == len(m["files"]) - dropped
+
+
+def _lose_every_seq_race(monkeypatch, n_buckets):
+    """Wrap manifest.commit so every append attempt loses its seq race:
+    before each commit, a sibling metadata commit advances every
+    bucket's maxima. Returns the list of hooked commit calls."""
+    real = manifest.commit
+    calls: list = []
+
+    def bump(m):
+        mx = dict(m.get("maxima", {}))
+        for b in range(n_buckets):
+            mx[str(b)] = int(mx.get(str(b), -1)) + 1
+        m["maxima"] = mx
+        return m
+
+    def always_raced(root, topic, base_version, apply):
+        calls.append(1)
+        real(root, topic, manifest.latest_version(root, topic), bump)
+        return real(root, topic, base_version, apply)
+
+    monkeypatch.setattr(manifest, "RETRIES", 3)
+    monkeypatch.setattr(manifest, "commit", always_raced)
+    return calls
+
+
+def test_produce_seq_race_retries_are_bounded(spark, sf_dir, tmp_path, monkeypatch):
+    """A produce that loses every seq race gives up after
+    ``manifest.RETRIES`` restages with a RuntimeError, and none of its
+    rows become visible."""
+    from tests.conftest import count_stagings
+
+    store, _ev = _mk(spark, sf_dir, tmp_path, n=100, buckets=2)
+    before = store.read_topic("m1").count()
+    late = load_table(spark, sf_dir, "events").filter(
+        (F.col("event_id") >= 100) & (F.col("event_id") < 200)
+    )
+    stagings = count_stagings(monkeypatch)
+    calls = _lose_every_seq_race(monkeypatch, n_buckets=2)
+    with pytest.raises(RuntimeError, match="seq-claim contention"):
+        store.produce(late, "m1")
+    monkeypatch.undo()
+    assert len(calls) == len(stagings) == 3
+    assert store.read_topic("m1").count() == before
+
+
+def test_sink_seq_race_retries_are_bounded(spark, sf_dir, tmp_path, monkeypatch):
+    """A native-sink task that loses every seq race gives up after
+    ``manifest.RETRIES`` attempts with a RuntimeError (the write task
+    run in-process, so the hooks apply), and none of its rows become
+    visible."""
+    from ripple_server_spark.sources import datasink
+
+    store, _ev = _mk(spark, sf_dir, tmp_path, n=100, buckets=2)
+    before = store.read_topic("m1").count()
+    tbl = (
+        load_table(spark, sf_dir, "events")
+        .filter((F.col("event_id") >= 100) & (F.col("event_id") < 200))
+        .select("event_id", "user_id", "ts")
+        .toArrow()
+    )
+    fields = ["event_id:bigint", "user_id:bigint", "ts:timestamp", "seq:bigint"]
+    calls = _lose_every_seq_race(monkeypatch, n_buckets=2)
+    with pytest.raises(RuntimeError, match="seq-claim contention"):
+        datasink._task_append(
+            store.root,
+            "m1",
+            "user_id",
+            "dsw/bounded/p0",
+            iter(tbl.to_batches()),
+            fields,
+        )
+    monkeypatch.undo()
+    assert len(calls) == 3
+    assert store.read_topic("m1").count() == before
+
+
+def test_concurrent_produces_and_sink_write_keep_seqs_contiguous(
+    spark, sf_dir, tmp_path
+):
+    """Two produce threads and one native-sink batch write append to one
+    4-bucket topic at once: every row lands exactly once, each bucket's
+    seqs are gap-free from 0, and the manifest maxima equal the data."""
+    import threading
+
+    from ripple_server_spark.sources.datasource import RippleTopicDataSource
+
+    spark.dataSource.register(RippleTopicDataSource)
+    root = str(tmp_path / "store")
+    store = TopicStore(spark, root)
+    store.create_topic("cw", n_buckets=4)
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+
+    def part(lo, hi):
+        return ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi))
+
+    def sink_write():
+        # Python data sources resolve through the JVM thread's ACTIVE
+        # session, which a fresh thread does not have
+        spark._jvm.org.apache.spark.sql.SparkSession.setActiveSession(
+            spark._jsparkSession
+        )
+        (
+            part(300, 450)
+            .repartition(2)
+            .write.format("ripple_topic")
+            .mode("append")
+            .option("root", root)
+            .option("topic", "cw")
+            .save()
+        )
+
+    writers = [
+        lambda: store.produce(part(0, 150), "cw"),
+        lambda: TopicStore(spark, root).produce(part(150, 300), "cw"),
+        sink_write,
+    ]
+    start = threading.Barrier(len(writers))
+    errors: list = []
+
+    def run(w):
+        try:
+            start.wait(timeout=60)
+            w()
+        except Exception as e:  # surfaced below, not swallowed
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(w,)) for w in writers]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads), "a writer did not finish"
+    assert not errors, errors
+
+    df = store.read_topic("cw")
+    assert df.count() == 450
+    assert df.select("event_id").distinct().count() == 450
+    per_bucket = (
+        df.groupBy("bucket")
+        .agg(
+            F.count("*").alias("n"),
+            F.countDistinct("seq").alias("nd"),
+            F.min("seq").alias("lo"),
+            F.max("seq").alias("hi"),
+        )
+        .collect()
+    )
+    maxima = {int(b): x for b, x in store.latest_manifest("cw")[1]["maxima"].items()}
+    assert set(maxima) == {r["bucket"] for r in per_bucket}
+    for r in per_bucket:
+        assert r["nd"] == r["n"], "overlapping seqs"
+        assert (r["lo"], r["hi"]) == (0, r["n"] - 1), "non-contiguous seqs"
+        assert maxima[r["bucket"]] == r["hi"]

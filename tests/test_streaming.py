@@ -405,34 +405,40 @@ def test_late_rows_beyond_watermark_are_dropped(spark, sf_dir, tmp_path):
     assert rows[60] == 2, rows  # both on-time rows of [60,65) counted
 
 
-def test_write_stream_to_topic_commits_through_manifest(spark, sf_dir, tmp_path):
-    """The producer sink must land rows under the manifest commit
-    protocol: visible to read_topic/consume, safe under vacuum, and
-    exactly-once via batch-derived idempotency ids (the previous raw
-    file-sink wrote manifest-invisible files that vacuum destroyed)."""
-    from ripple_server_spark.catalog import load_table
-    from ripple_server_spark.sources.topics import TopicStore
-    from ripple_server_spark.streaming import api
+def test_native_stream_sink_commits_through_manifest(spark, sf_dir, tmp_path):
+    """The streaming producer sink, ``writeStream.format("ripple_topic")``,
+    must land rows under the manifest commit protocol: visible to
+    read_topic, safe under vacuum, per-bucket seqs contiguous from 0,
+    and exactly-once across a restart from the same checkpoint."""
+    from ripple_server_spark.sources.datasource import RippleTopicDataSource
 
+    spark.dataSource.register(RippleTopicDataSource)
     st = TopicStore(spark, str(tmp_path / "sink_topics"))
     st.create_topic("out", n_buckets=2)
-
-    # source: a rate-limited memory-ish stream — reuse a topic tail
     src_store = TopicStore(spark, str(tmp_path / "src_topics"))
     src_store.create_topic("in", n_buckets=2)
     src_store.produce(load_table(spark, sf_dir, "events").limit(80), "in")
-    src = api.stream_topic(src_store, "in").drop("seq", "bucket")
 
-    writer = api.write_stream_to_topic(
-        src, st, "out", str(tmp_path / "ck_sink")
-    )
-    api.run_available_now(writer)
+    def writer():
+        return (
+            spark.readStream.format("ripple_topic")
+            .option("root", src_store.root)
+            .option("topic", "in")
+            .load()
+            .drop("seq", "bucket")
+            .writeStream.format("ripple_topic")
+            .option("root", st.root)
+            .option("topic", "out")
+            .option("checkpointLocation", str(tmp_path / "ck_sink"))
+        )
+
+    api.run_available_now(writer())
 
     # rows are manifest-visible and survive vacuum
     assert st.read_topic("out").count() == 80
     st.vacuum("out", grace_s=0.0)
     assert st.read_topic("out").count() == 80
-    # per-bucket seqs assigned contiguously by produce
+    # per-bucket seqs assigned contiguously from 0
     for r in (
         st.read_topic("out")
         .groupBy("bucket")
@@ -441,12 +447,7 @@ def test_write_stream_to_topic_commits_through_manifest(spark, sf_dir, tmp_path)
     ):
         assert r["lo"] == 0 and r["hi"] == r["n"] - 1
     # restart from the same checkpoint: nothing new -> no duplicates
-    api.run_available_now(
-        api.write_stream_to_topic(
-            api.stream_topic(src_store, "in").drop("seq", "bucket"),
-            st, "out", str(tmp_path / "ck_sink"),
-        )
-    )
+    api.run_available_now(writer())
     assert st.read_topic("out").count() == 80
 
 

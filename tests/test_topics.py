@@ -1010,7 +1010,9 @@ def test_produce_stage_kernel_streams_bounded_row_groups(tmp_path):
     assert str(got.schema.field("ts").type).startswith("timestamp[us")
 
 
-def test_seq_race_rebase_keeps_kernel_file_layout(spark, sf_dir, tmp_path):
+def test_seq_race_rebase_keeps_kernel_file_layout(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """ADVICE r12: a raced produce's REWRITTEN files must carry the
     same physical guarantees as first-staging files (micros timestamps
     with min/max statistics, prd- kernel naming) — the rebase now runs
@@ -1021,18 +1023,27 @@ def test_seq_race_rebase_keeps_kernel_file_layout(spark, sf_dir, tmp_path):
 
     import pyarrow.parquet as pq
 
+    from tests.conftest import count_stagings, land_before_next_commit
+
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     s1 = TopicStore(spark, str(tmp_path))
     s1.create_topic("rb", n_buckets=2)
-    s1.produce(ev.filter(F.col("event_id") < 50), "rb")  # warms s1's cache
+    s1.produce(ev.filter(F.col("event_id") < 50), "rb")
     s2 = TopicStore(spark, str(tmp_path))
-    s2.produce(
-        ev.filter((F.col("event_id") >= 50) & (F.col("event_id") < 100)), "rb"
+    # s2's produce lands between s1's staging and s1's commit ->
+    # seq race -> kernel restage
+    stagings = count_stagings(monkeypatch)
+    land_before_next_commit(
+        monkeypatch,
+        lambda: s2.produce(
+            ev.filter((F.col("event_id") >= 50) & (F.col("event_id") < 100)), "rb"
+        ),
     )
-    # stale base -> _SeqRace -> kernel rebase
     s1.produce(
         ev.filter((F.col("event_id") >= 100) & (F.col("event_id") < 150)), "rb"
     )
+    monkeypatch.undo()
+    assert len(stagings) == 3, "s1 stages, s2 produces, s1 must restage"
     live = set(s1.latest_manifest("rb")[1]["files"])
     assert all("/prd-" in f or f.startswith("bucket=") for f in live)
     data = s1.data_dir("rb")
@@ -1076,7 +1087,7 @@ def test_touch_staged_refreshes_mtime_for_vacuum_grace(spark, sf_dir, tmp_path):
     data = st.data_dir("tg")
     for rel in rels:
         os.utime(os.path.join(data, rel), (old, old))
-    st._touch_staged("tg", rels)
+    manifest.touch(st.root, "tg", rels)
     for rel in rels:
         assert os.path.getmtime(os.path.join(data, rel)) > old + 3000
     # a vacuum with an hour's grace now spares them even if they were
