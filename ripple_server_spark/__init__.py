@@ -63,6 +63,56 @@ def __getattr__(name: str):
     return value
 
 
+def _install_zipimport_guard() -> None:
+    """Make ``zipimporter.invalidate_caches`` skip unchanged archives.
+
+    Every Spark Python task starts in
+    ``pyspark.worker_util.setup_spark_files``, which calls
+    ``importlib.invalidate_caches()``. Before CPython 3.12 each cached
+    ``zipimporter`` then re-parses its archive's whole central
+    directory (python/cpython#103200 made that lazy in 3.12). Workers
+    import pyspark from ``pyspark.zip`` (~1.3k entries, 16-17 cached
+    importers), so a reused worker spent ~300 ms re-reading an
+    unchanged archive before each 3-20 ms task. The guard re-reads only
+    when the archive's ``(st_mtime_ns, st_size, st_ino)`` differs from
+    the one recorded at that importer's last re-read: a rewritten or
+    replaced archive changes the key, and a stat failure or an importer
+    with nothing on record re-reads exactly as 3.11 does. Installed once
+    per process (idempotent on re-import); not needed on 3.12+. Every
+    worker that unpickles an engine kernel, reader or writer imports
+    this package, so the guard reaches every task after its worker's
+    first.
+    """
+    import sys
+
+    if sys.version_info >= (3, 12):
+        return
+    import os
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "_ripple_stat_guard", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            key = None
+        if key is not None and key == getattr(self, "_ripple_dir_stat", None):
+            return
+        # stat BEFORE the read: a rewrite racing the read leaves the
+        # older key on record, so the next call re-reads again
+        reread(self)
+        self._ripple_dir_stat = key
+
+    invalidate_caches._ripple_stat_guard = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_install_zipimport_guard()
+
 __all__ = [
     "get_spark",
     "TABLES",

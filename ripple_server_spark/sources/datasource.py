@@ -86,6 +86,7 @@ _SCHEMA_FIELD_ORDER = (
     "event_id", "ts", "user_id", "event_type", "value", "props", "seq"
 )
 _SEQ_IDX = _SCHEMA_FIELD_ORDER.index("seq")
+_SEQ_END = 2**63 - 1  # exclusive upper bound of an open-ended seq range
 
 
 class BucketPartition(InputPartition):
@@ -118,7 +119,7 @@ def _manifest_version(root: str, topic: str) -> int | None:
 
 
 def _bucket_files(
-    root: str, topic: str, version: int | None = None
+    root: str, topic: str, version: int | None = None, span=None
 ) -> list[tuple[int, list[str]]]:
     """Per-bucket COMMITTED file lists from the topic's manifest —
     latest by default, or a pinned ``version`` (VERSION AS OF: the
@@ -126,13 +127,18 @@ def _bucket_files(
     can replay exactly the snapshot a past consumer saw, across later
     compactions/retention). Snapshot-consistent either way:
     crashed-produce orphans and mid-compaction files are invisible.
-    Falls back to directory listing for manifest-less legacy layouts."""
+    ``span(bucket) -> (lo, hi)`` plans each bucket through
+    :func:`manifest.files_for` — only files whose seq range overlaps
+    ``[lo, hi)``, and buckets left with none are dropped.
+    Falls back to directory listing (every file, ``span`` ignored) for
+    manifest-less legacy layouts."""
     data_dir = os.path.join(root, "topics", topic, "data")
     by_bucket: dict[int, list[str]] = {}
     if version is None:
         version = _manifest_version(root, topic)
     if version is not None:
-        return _files_from_manifest(root, topic, _load_pinned(root, topic, version))
+        m = _load_pinned(root, topic, version)
+        return _files_from_manifest(root, topic, m, span)
     else:
         for e in sorted(os.listdir(data_dir)):
             if e.startswith("bucket="):
@@ -158,16 +164,21 @@ def _load_pinned(root: str, topic: str, version: int) -> dict:
 
 
 def _files_from_manifest(
-    root: str, topic: str, m: dict
+    root: str, topic: str, m: dict, span=None
 ) -> list[tuple[int, list[str]]]:
-    """Per-bucket absolute file paths from one parsed manifest dict."""
+    """Per-bucket absolute file paths from one parsed manifest dict,
+    optionally planned by ``span`` (see :func:`_bucket_files`)."""
     data_dir = os.path.join(root, "topics", topic, "data")
     by_bucket: dict[int, list[str]] = {}
     for rel in m["files"]:
-        by_bucket.setdefault(manifest.bucket_of(rel), []).append(
-            os.path.join(data_dir, rel)
-        )
-    return sorted((b, sorted(fs)) for b, fs in by_bucket.items())
+        by_bucket.setdefault(manifest.bucket_of(rel), []).append(rel)
+    if span is not None:
+        by_bucket = {b: manifest.files_for(m, b, *span(b)) for b in by_bucket}
+    return sorted(
+        (b, sorted(os.path.join(data_dir, r) for r in rels))
+        for b, rels in by_bucket.items()
+        if rels
+    )
 
 
 def _read_bucket(part: BucketPartition):
@@ -548,7 +559,9 @@ class RippleTopicReader(DataSourceReader):
                 topic=t if self.multi else None,
             )
             for t in self.topics
-            for b, files in _bucket_files(self.root, t, self.version)
+            for b, files in _bucket_files(
+                self.root, t, self.version, lambda b: (self.offset, _SEQ_END)
+            )
         ]
 
     def read(self, partition: BucketPartition) -> Iterator:
@@ -693,10 +706,14 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
         s = json.loads(start.get("cursors", "{}"))
         e = json.loads(end.get("cursors", "{}"))
         version = int(end["version"]) if "version" in end else None
+
+        def span(b: int) -> tuple[int, int]:
+            return int(s.get(str(b), 0)), int(e.get(str(b), 0))
+
         try:
-            buckets = _bucket_files(self.root, self.topic, version)
+            buckets = _bucket_files(self.root, self.topic, version, span)
         except ValueError:
-            buckets = _bucket_files(self.root, self.topic)
+            buckets = _bucket_files(self.root, self.topic, None, span)
         for b, files in buckets:
             off = int(s.get(str(b), 0))
             upto = int(e.get(str(b), 0))

@@ -731,6 +731,90 @@ def test_partitioned_chunks_open_only_overlapping_files(spark, sf_dir, tmp_path)
     }
 
 
+def test_batch_reader_and_replay_plan_only_overlapping_files(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The batch reader plans ``[offset, end)`` and the simple tier's
+    replay plans ``[start, end)`` per bucket through the manifest: each
+    opens exactly the files whose seq range overlaps its request, and
+    serves the same rows as a read over every file of the bucket."""
+    import json
+
+    import pyarrow.dataset as ds
+
+    from ripple_server_spark.sources import datasource, manifest
+
+    spark.dataSource.register(RippleTopicDataSource)
+    st = TopicStore(spark, str(tmp_path / "plan_topics"))
+    st.create_topic("pl", n_buckets=2)
+    ev = load_table(spark, sf_dir, "events")
+    for lo in range(0, 500, 100):
+        st.produce(_wave(ev, lo, lo + 100), "pl")
+    m = st.latest_manifest("pl")[1]
+    data_dir = st.data_dir("pl")
+    every = dict(datasource._bucket_files(st.root, "pl"))
+
+    def overlapping(b, lo, hi):
+        return {
+            rel
+            for rel, (a, z) in m["seq_ranges"].items()
+            if manifest.bucket_of(rel) == b and z >= lo and a < hi
+        }
+
+    def rels(files):
+        return {os.path.relpath(f, data_dir) for f in files}
+
+    def seqs(files, lo, hi):
+        tbl = ds.dataset(files, format="parquet").to_table(
+            filter=(ds.field("seq") >= lo) & (ds.field("seq") < hi)
+        )
+        return sorted(tbl.column("seq").to_pylist())
+
+    # batch reader: option("offset") plans [offset, end)
+    offset = 150
+    parts = datasource.RippleTopicReader(
+        {"root": st.root, "topic": "pl", "offset": str(offset)}
+    ).partitions()
+    assert parts and any(len(p.files) < len(every[p.bucket]) for p in parts)
+    for p in parts:
+        assert rels(p.files) == overlapping(p.bucket, offset, datasource._SEQ_END)
+    got = (
+        spark.read.format("ripple_topic")
+        .option("root", st.root)
+        .option("topic", "pl")
+        .option("offset", offset)
+        .load()
+    )
+    by_bucket = {
+        b: sorted(r["seq"] for r in got.where(F.col("bucket") == b).collect())
+        for b in every
+    }
+    assert by_bucket == {b: seqs(fs, offset, datasource._SEQ_END) for b, fs in every.items()}
+
+    # simple-tier replay: readBetweenOffsets plans [start, end) per bucket
+    planned: list = []
+    real = datasource._read_bucket
+
+    def recording(part):
+        planned.append(part)
+        return real(part)
+
+    monkeypatch.setattr(datasource, "_read_bucket", recording)
+    start = {"cursors": json.dumps({"0": 40, "1": 120})}
+    end = {
+        "cursors": json.dumps({"0": 170, "1": 190}),
+        "version": str(st.latest_manifest("pl")[0]),
+    }
+    reader = datasource.RippleTopicStreamReader({"root": st.root, "topic": "pl"})
+    rows = list(reader.readBetweenOffsets(start, end))
+    assert {p.bucket for p in planned} == {0, 1}
+    for p in planned:
+        assert rels(p.files) == overlapping(p.bucket, p.offset, p.upto)
+        assert len(p.files) < len(every[p.bucket])
+    served = {b: sorted(r[datasource._SEQ_IDX] for r in rows if r[-1] == b) for b in every}
+    assert served == {0: seqs(every[0], 40, 170), 1: seqs(every[1], 120, 190)}
+
+
 def test_partitioned_read_yields_sorted_arrow_batches(spark, planner_store):
     """read() ships Arrow RecordBatches (no per-row driver funnel) with
     the declared schema order and rows seq-sorted within the task."""
