@@ -56,6 +56,14 @@ File lists come from the topic's MANIFEST (latest committed version),
 so both batch and streaming reads are snapshot-consistent with
 TopicStore's commit protocol: crashed-produce orphans and
 mid-compaction files are never served.
+
+The schema comes from the manifest too: each subscribed topic's
+recorded message schema (the columns its producers wrote, ``seq``
+included) plus ``bucket``, resolved once at query start
+(:func:`_source_ddl`). A topic nothing was produced to yet reads as
+:data:`TOPIC_SCHEMA_DDL`, the events layout. Every reader scans its
+files with that schema, so a column an older file lacks comes back as
+typed nulls, the same contract as ``TopicStore.read_topic``.
 """
 
 from __future__ import annotations
@@ -72,20 +80,18 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ripple_server_spark.sources import manifest
 
+# The schema of a topic with no recorded message schema yet (nothing
+# produced): the events layout, so a tail started before the first
+# produce (perfbench's stream_tail does) still types its rows.
 TOPIC_SCHEMA_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string, seq long, bucket int"
 )
-
-# Tuple layout every reader yields (bucket appended from the partition).
-_SCHEMA_FIELD_ORDER = (
-    "event_id", "ts", "user_id", "event_type", "value", "props", "seq"
-)
-_SEQ_IDX = _SCHEMA_FIELD_ORDER.index("seq")
 _SEQ_END = 2**63 - 1  # exclusive upper bound of an open-ended seq range
 
 
@@ -109,15 +115,6 @@ class BucketPartition(InputPartition):
         self.topic = topic
 
 
-def _manifest_version(root: str, topic: str) -> int | None:
-    """Latest committed manifest version, or None for manifest-less
-    legacy layouts."""
-    try:
-        return manifest.latest_version(root, topic)
-    except FileNotFoundError:
-        return None
-
-
 def _bucket_files(
     root: str, topic: str, version: int | None = None, span=None
 ) -> list[tuple[int, list[str]]]:
@@ -129,45 +126,10 @@ def _bucket_files(
     crashed-produce orphans and mid-compaction files are invisible.
     ``span(bucket) -> (lo, hi)`` plans each bucket through
     :func:`manifest.files_for` — only files whose seq range overlaps
-    ``[lo, hi)``, and buckets left with none are dropped.
-    Falls back to directory listing (every file, ``span`` ignored) for
-    manifest-less legacy layouts."""
-    data_dir = os.path.join(root, "topics", topic, "data")
-    by_bucket: dict[int, list[str]] = {}
+    ``[lo, hi)``, and buckets left with none are dropped."""
     if version is None:
-        version = _manifest_version(root, topic)
-    if version is not None:
-        m = _load_pinned(root, topic, version)
-        return _files_from_manifest(root, topic, m, span)
-    else:
-        for e in sorted(os.listdir(data_dir)):
-            if e.startswith("bucket="):
-                b = int(e.split("=", 1)[1])
-                bdir = os.path.join(data_dir, e)
-                by_bucket[b] = [
-                    os.path.join(bdir, fn)
-                    for fn in sorted(os.listdir(bdir))
-                    if fn.endswith(".parquet")
-                ]
-    return sorted((b, sorted(fs)) for b, fs in by_bucket.items())
-
-
-def _load_pinned(root: str, topic: str, version: int) -> dict:
-    """One committed manifest version; ValueError when it does not
-    exist (never committed, or vacuumed away)."""
-    try:
-        return manifest.load(root, topic, version)
-    except FileNotFoundError:
-        raise ValueError(
-            f"topic {topic!r} has no committed manifest version {version}"
-        ) from None
-
-
-def _files_from_manifest(
-    root: str, topic: str, m: dict, span=None
-) -> list[tuple[int, list[str]]]:
-    """Per-bucket absolute file paths from one parsed manifest dict,
-    optionally planned by ``span`` (see :func:`_bucket_files`)."""
+        version = manifest.latest_version(root, topic)
+    m = _load_pinned(root, topic, version)
     data_dir = os.path.join(root, "topics", topic, "data")
     by_bucket: dict[int, list[str]] = {}
     for rel in m["files"]:
@@ -181,127 +143,89 @@ def _files_from_manifest(
     )
 
 
-def _read_bucket(part: BucketPartition):
-    """Executor-side: read one bucket's parquet files, seq-ordered,
-    from the requested offset. Row-group pruning via pyarrow filters."""
-    import datetime as _dt
+def _load_pinned(root: str, topic: str, version: int) -> dict:
+    """One committed manifest version; ValueError when it does not
+    exist (never committed, or vacuumed away)."""
+    try:
+        return manifest.load(root, topic, version)
+    except FileNotFoundError:
+        raise ValueError(
+            f"topic {topic!r} has no committed manifest version {version}"
+        ) from None
 
+
+def _scan(files: list[str], target, fill: dict, flt):
+    """Seq-sorted table of ``target``'s file columns (every column not
+    in ``fill``) over ``files``. The explicit dataset schema is the
+    point: without it pyarrow takes the columns of the first file only,
+    losing an evolved column that file lacks; with it a missing column
+    reads as typed nulls and a pre-round-9 INT96 ``ts`` (naive
+    nanoseconds, UTC by the session pin in session.py) casts to the
+    target's ``timestamp[us, tz=UTC]`` like any MICROS file."""
+    import pyarrow as pa
     import pyarrow.dataset as ds
 
-    dataset = ds.dataset(part.files, format="parquet")
-    flt = ds.field("seq") >= part.offset
-    if part.upto is not None:
-        # crash-recovery replay bound: pushing seq < upto into the scan
-        # keeps the replay proportional to the batch, not to the whole
-        # retained tail above the cursor (row groups past the bound are
-        # pruned by their seq stats)
-        flt = flt & (ds.field("seq") < part.upto)
-    tbl = dataset.to_table(filter=flt)
-    tbl = tbl.sort_by("seq")
-    if part.limit is not None:
-        tbl = tbl.slice(0, part.limit)
-    import pyarrow as pa
-
-    utc = _dt.timezone.utc
-    # Bind values BY SCHEMA NAME, not physical column order: Spark maps
-    # yielded tuples positionally onto TOPIC_SCHEMA_DDL, and a topic
-    # written by a different producer may order columns differently.
-    # Materialization is COLUMN-wise (to_pylist + one zip) instead of a
-    # per-row/per-cell dict-index loop — ~2x faster on the driver, and
-    # this kernel feeds the simple stream tier's driver-side prefetch
-    # where row materialization IS the drain bottleneck (guide §4: the
-    # Python boundary cost is per-object; create each object once, in
-    # bulk). Timestamp handling moves to the column level: pre-round-9
-    # INT96 files decode as naive-UTC datetimes (Spark's TimestampType
-    # converter requires tz-aware values) — detected once from the
-    # Arrow type, not per cell; round-9+ MICROS columns are tz-aware
-    # already and pass through untouched.
-    cols = []
-    for name in _SCHEMA_FIELD_ORDER:
-        col = tbl.column(name)
-        vals = col.to_pylist()
-        if pa.types.is_timestamp(col.type) and col.type.tz is None:
-            vals = [v.replace(tzinfo=utc) if v is not None else None for v in vals]
-        cols.append(vals)
-    cols.append([part.bucket] * tbl.num_rows)
-    yield from zip(*cols)
-
-
-def _topic_arrow_batches(tbl, bucket: int, topic: str | None = None):
-    """Normalize one bucket's seq-ordered Arrow table to the exact Arrow
-    schema Spark derives from TOPIC_SCHEMA_DDL and return its record
-    batches (timestamps: round-9+ files are tz-aware MICROS already;
-    pre-round-9 INT96 files decode naive-UTC and the engine session is
-    pinned to UTC, session.py, so attaching tz=UTC is a
-    reinterpretation, not a shift). Shared by the executor Arrow kernel
-    and the simple tier's driver prefetch."""
-    import pyarrow as pa
-
-    target = pa.schema(
-        [
-            ("event_id", pa.int64()),
-            ("ts", pa.timestamp("us", tz="UTC")),
-            ("user_id", pa.int64()),
-            ("event_type", pa.string()),
-            ("value", pa.float64()),
-            ("props", pa.string()),
-            ("seq", pa.int64()),
-            ("bucket", pa.int32()),
-        ]
+    schema = pa.schema([f for f in target if f.name not in fill])
+    return (
+        ds.dataset(files, format="parquet", schema=schema)
+        .to_table(filter=flt)
+        .sort_by("seq")
     )
-    cols = [tbl.column(name) for name in _SCHEMA_FIELD_ORDER]
-    cols.append(pa.repeat(pa.scalar(bucket, pa.int32()), tbl.num_rows))
-    if topic is not None:
-        # multi-topic subscription: rows stay attributable post-union
-        target = target.append(pa.field("topic", pa.string()))
-        cols.append(pa.repeat(pa.scalar(topic, pa.string()), tbl.num_rows))
-    out = pa.table(cols, names=[f.name for f in target]).cast(target)
-    return out.to_batches()
 
 
-def _read_bucket_arrow(part: BucketPartition):
-    """Executor-side Arrow path: same scan/pushdown/order contract as
-    :func:`_read_bucket`, but yields ``pyarrow.RecordBatch`` directly —
-    no per-row Python tuple materialization, so the worker hands the
-    batches straight to the JVM Arrow stream.
-    """
+def _topic_arrow_batches(tbl, target, fill: dict):
+    """Record batches of exactly ``target``: the scanned file columns
+    plus the partition-constant ``fill`` columns (``bucket``, and
+    ``topic`` on multi-topic subscriptions). Shared by the executor
+    kernel and the simple tier's driver prefetch."""
+    import pyarrow as pa
+
+    cols = [
+        pa.repeat(pa.scalar(fill[f.name], f.type), tbl.num_rows)
+        if f.name in fill
+        else tbl.column(f.name)
+        for f in target
+    ]
+    return pa.Table.from_arrays(cols, schema=target).to_batches()
+
+
+def _read_bucket_arrow(part: BucketPartition, target):
+    """Executor-side read of one partition: the bucket's rows with
+    ``offset <= seq < upto``, seq-ordered, cut at ``limit`` rows, as
+    ``pyarrow.RecordBatch`` of the reader's Arrow schema ``target`` —
+    no per-row Python objects, the worker hands the batches straight to
+    the JVM Arrow stream."""
     import pyarrow.dataset as ds
 
-    dataset = ds.dataset(part.files, format="parquet")
     flt = ds.field("seq") >= part.offset
     if part.upto is not None:
+        # pushing seq < upto into the scan keeps a chunk or a replay
+        # proportional to its range, not to the whole retained tail
+        # (row groups past the bound are pruned by their seq stats)
         flt = flt & (ds.field("seq") < part.upto)
-    tbl = dataset.to_table(filter=flt)
-    tbl = tbl.sort_by("seq")
+    fill = {"bucket": part.bucket}
+    if part.topic is not None:
+        fill["topic"] = part.topic  # multi-topic: attributable post-union
+    tbl = _scan(part.files, target, fill, flt)
     if part.limit is not None:
         tbl = tbl.slice(0, part.limit)
-    yield from _topic_arrow_batches(tbl, part.bucket, part.topic)
+    yield from _topic_arrow_batches(tbl, target, fill)
 
 
-def _log_bounds(
-    root: str, topic: str
-) -> tuple[int | None, dict[str, int], dict[str, int]]:
-    """(version, {bucket: max seq}, {bucket: first retained seq}) from
-    the latest committed manifest — O(manifest bytes), never a data
-    scan, exactly the metadata TopicStore's cold path keeps to avoid
-    log scans. Manifest-less legacy layouts fall back to a footer scan
-    of the seq column (compat shim; real topics always have manifests).
-    """
-    version = _manifest_version(root, topic)
-    if version is not None:
-        m = manifest.load(root, topic, version)
-        maxima = {str(b): int(x) for b, x in m.get("maxima", {}).items()}
-        floors = {str(b): int(x) for b, x in m.get("floors", {}).items()}
-        return version, maxima, floors
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
+def _bounds(m: dict) -> tuple[dict[str, int], dict[str, int]]:
+    """({bucket: max seq}, {bucket: first retained seq}) of a manifest."""
+    return (
+        {str(b): int(x) for b, x in m.get("maxima", {}).items()},
+        {str(b): int(x) for b, x in m.get("floors", {}).items()},
+    )
 
-    maxima: dict[str, int] = {}
-    for b, files in _bucket_files(root, topic):
-        tbl = ds.dataset(files, format="parquet").to_table(columns=["seq"])
-        if tbl.num_rows:
-            maxima[str(b)] = pc.max(tbl.column("seq")).as_py()
-    return None, maxima, {}
+
+def _log_bounds(root: str, topic: str) -> tuple[int, dict[str, int], dict[str, int]]:
+    """(version, maxima, floors) of the latest committed manifest —
+    O(manifest bytes), never a data scan, exactly the metadata
+    TopicStore's cold path keeps to avoid log scans."""
+    version, m = manifest.latest(root, topic)
+    return (version, *_bounds(m))
 
 
 def _latest_cursors(root: str, topic: str) -> dict[str, int]:
@@ -459,19 +383,17 @@ def _check_start_at(start_at: str) -> str:
 
 
 def _topic_ready(root: str, topic: str) -> bool:
-    """A topic is admissible once its on-disk layout is complete: a
-    committed manifest, or (legacy manifest-less) a data dir.
+    """A topic is admissible once it has a committed manifest.
     create_topic makes the topic dir, data/ and manifest v1 in
     separate syscalls, so a concurrent directory listing can see the
     bare directory mid-create — admitting it then would crash on the
     missing pieces; skipping it (query-start resolution) or waiting
     one trigger (discovery) is the correct race outcome (review r09)."""
     try:
-        if _manifest_version(root, topic) is not None:
-            return True  # committed manifest: layout complete
+        manifest.latest_version(root, topic)
     except OSError:
-        pass
-    return os.path.isdir(os.path.join(root, "topics", topic, "data"))
+        return False
+    return True
 
 
 def _topics_list(options: dict) -> list[str]:
@@ -537,10 +459,39 @@ def _subscription(options: dict) -> tuple[list[str], bool]:
     return topics, len(topics) > 1
 
 
+def _source_ddl(root: str, topics: list[str], multi: bool) -> str:
+    """The subscription's schema, resolved once at query start: the
+    topics' recorded message schemas merged in subscription order by
+    :func:`manifest.merge_schema`'s union rule, plus ``bucket`` (and
+    ``topic`` for multi-topic subscriptions). :data:`TOPIC_SCHEMA_DDL`
+    when no subscribed topic has recorded one yet. A column recorded
+    under two types has no one Arrow type to scan it with: ValueError
+    naming it."""
+    from ripple_server_spark.sources.topics import _message_ddl
+
+    merged: dict = {}
+    for t in topics:
+        recorded = manifest.latest(root, t)[1].get("schema")
+        if recorded:
+            manifest.merge_schema(merged, recorded)
+    seen: dict[str, str] = {}
+    for field in merged.get("schema", []):
+        name, typ = field.split(":", 1)
+        if seen.setdefault(name, typ) != typ:
+            raise ValueError(
+                f"ripple_topic: column {name!r} is recorded as both "
+                f"{seen[name]} and {typ} across topics {', '.join(topics)}"
+            )
+    ddl = _message_ddl(merged) or TOPIC_SCHEMA_DDL
+    return ddl + ", topic string" if multi else ddl
+
+
 class RippleTopicReader(DataSourceReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, schema: StructType):
         self.root = _required_opt(options, "root")
         self.topics, self.multi = _subscription(options)
+        self.schema = schema
+        self._target = to_arrow_schema(schema)
         self.offset = int(options.get("offset", 0))
         self.limit = int(options["limit"]) if "limit" in options else None
         # VERSION AS OF: pin the read to a committed manifest version
@@ -572,11 +523,7 @@ class RippleTopicReader(DataSourceReader):
             # broker state, serve zero rows (same contract as
             # TopicStore.read_topic), not an AttributeError
             return
-        # Arrow RecordBatch transfer, same kernel as the partitioned
-        # stream tier — no per-row Python tuples on the batch path
-        # either (the tuple kernel _read_bucket remains for the simple
-        # stream tier's driver-side prefetch, which slices row lists).
-        yield from _read_bucket_arrow(partition)
+        yield from _read_bucket_arrow(partition, self._target)
 
 
 class RippleTopicStreamReader(SimpleDataSourceStreamReader):
@@ -590,17 +537,17 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
     Restarts always resume from the checkpoint, never re-evaluate this.
     """
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, schema: StructType):
         self.root = _required_opt(options, "root")
         self.topic = _required_opt(options, "topic")
         self.batch_size = int(options.get("batch_size", 10_000))
         self.start_at = _check_start_at(options.get("start_at", "earliest"))
+        self.schema = schema
+        self._target = to_arrow_schema(schema)
         # decoded-tail cache for the driver prefetch, see _tail_slice
         self._tail_cache: dict[int, tuple] = {}
 
-    def _tail_slice(
-        self, version: int | None, bucket: int, files, off: int, max_rows
-    ):
+    def _tail_slice(self, version: int, bucket: int, files, off: int, max_rows):
         """Seq-sorted Arrow slice [off, off + max_rows-by-count) of one
         bucket, from a per-(bucket, manifest-version) DECODED tail
         cache; ``None`` when the bucket is drained past ``off``.
@@ -627,11 +574,7 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
         if cached is None or cached[0] != version or off < cached[2]:
             import pyarrow.dataset as ds
 
-            tbl = (
-                ds.dataset(files, format="parquet")
-                .to_table(filter=ds.field("seq") >= off)
-                .sort_by("seq")
-            )
+            tbl = _scan(files, self._target, {"bucket": bucket}, ds.field("seq") >= off)
             seqs = tbl.column("seq").to_pylist()
             self._tail_cache[bucket] = cached = (version, tbl, off, seqs)
         _, tbl, _, seqs = cached
@@ -662,7 +605,7 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
         # snapshot; the version rides in the end offset so crash
         # recovery can replay the exact file set this batch saw (see
         # readBetweenOffsets).
-        version = _manifest_version(self.root, self.topic)
+        version = manifest.latest_version(self.root, self.topic)
         for b, files in _bucket_files(self.root, self.topic, version):
             off = int(cursors.get(str(b), 0))
             got = self._tail_slice(version, b, files, off, max_rows)
@@ -674,9 +617,11 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
                 # and a count-based cursor would lag and re-deliver the
                 # tail forever. The slice is seq-sorted, so max = last.
                 new_cursors[str(b)] = got.column("seq")[-1].as_py() + 1
-        end = {"cursors": json.dumps(new_cursors), "topic": self.topic}
-        if version is not None:
-            end["version"] = str(version)
+        end = {
+            "cursors": json.dumps(new_cursors),
+            "topic": self.topic,
+            "version": str(version),
+        }
         return slices, end
 
     def read(self, start: dict):
@@ -691,10 +636,10 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
         slices, end = self._read_range(start, self.batch_size)
         batches: list = []
         for b, tbl in slices:
-            batches.extend(_topic_arrow_batches(tbl, b))
+            batches.extend(_topic_arrow_batches(tbl, self._target, {"bucket": b}))
         return iter(batches), end
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
         # Deterministic replay for recovery: serve exactly [start, end)
         # from the SAME manifest version the original batch read — a
         # truncate committed between the batch and the crash must not
@@ -723,7 +668,7 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
                 # past upto — and the bound is pushed into the scan so
                 # replay cost follows the batch, not the retained tail
                 part = BucketPartition(files, b, off, None, upto=upto)
-                yield from _read_bucket(part)
+                yield from _read_bucket_arrow(part, self._target)
 
     def commit(self, end: dict) -> None:
         pass  # Spark's checkpoint owns committed offsets
@@ -778,11 +723,13 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
     readBetweenOffsets).
     """
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, schema: StructType):
         self.root = _required_opt(options, "root")
         self.topic = _required_opt(options, "topic")
         self.batch_size = int(options.get("batch_size", 10_000))
         self.start_at = _check_start_at(options.get("start_at", "earliest"))
+        self.schema = schema
+        self._target = to_arrow_schema(schema)
         # Catch-up chunk sizing target (bytes of bucket data per chunk
         # task) — see partitions(); an option so a deployment can trade
         # task granularity against decode overlap without code changes.
@@ -810,8 +757,6 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
         # manifest twice per trigger (latestOffset + partitions).
         # Version-stamped, so a commit invalidates naturally; it keeps
         # the last few versions because crash replay pins an older one.
-        # Legacy manifest-less layouts (version None) are never cached
-        # — the directory can change without a version bump.
         self._manifests: dict[int, dict] = {}
 
     def _manifest(self, version: int) -> dict:
@@ -826,15 +771,8 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
         return m
 
     def _cached_log_bounds(self):
-        version = _manifest_version(self.root, self.topic)
-        if version is None:
-            return _log_bounds(self.root, self.topic)  # legacy: never cache
-        m = self._manifest(version)
-        return (
-            version,
-            {str(b): int(x) for b, x in m.get("maxima", {}).items()},
-            {str(b): int(x) for b, x in m.get("floors", {}).items()},
-        )
+        version = manifest.latest_version(self.root, self.topic)
+        return (version, *_bounds(self._manifest(version)))
 
     def _pack(self, cursors: dict[str, int], version: int | None) -> dict:
         # "topic" rides in the offset so consumers of the checkpoint
@@ -900,21 +838,22 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
             except ValueError:
                 # pinned snapshot vacuumed away (keep vacuum grace above
                 # checkpoint-recovery lag); serve from the latest manifest
-                latest = _manifest_version(self.root, self.topic)
-                m = None if latest is None else self._manifest(latest)
+                m = self._manifest(manifest.latest_version(self.root, self.topic))
         data_dir = os.path.join(self.root, "topics", self.topic, "data")
-        if m is None:  # no pinned version: every retained file, no floors
-            legacy = dict(_bucket_files(self.root, self.topic))
-            buckets, floors = sorted(legacy), {}
+        if m is None:
+            # version-less end offset: every file of the latest
+            # manifest, unpruned, no floors
+            unpruned = dict(_bucket_files(self.root, self.topic))
+            buckets, floors = sorted(unpruned), {}
         else:
             buckets = sorted({manifest.bucket_of(r) for r in m["files"]})
-            floors = {str(b): int(x) for b, x in m.get("floors", {}).items()}
+            floors = _bounds(m)[1]
 
         def files(b: int, lo: int, hi: int) -> list[str]:
             # the manifest read planner: only files whose recorded seq
             # range overlaps [lo, hi)
             if m is None:
-                return legacy.get(b, [])
+                return unpruned.get(b, [])
             rels = manifest.files_for(m, b, lo, hi)
             return [os.path.join(data_dir, r) for r in rels]
 
@@ -975,7 +914,7 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
     def read(self, partition: BucketPartition | None) -> Iterator:
         if partition is None:
             return iter(())
-        return _read_bucket_arrow(partition)
+        return _read_bucket_arrow(partition, self._target)
 
     def commit(self, end: dict) -> None:
         self._note({b: int(c) for b, c in json.loads(end.get("cursors", "{}")).items()})
@@ -1016,9 +955,11 @@ class RippleTopicMultiStreamReader(DataSourceStreamReader):
       re-running discovery first.
     """
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, schema: StructType):
         self.topics, _multi = _subscription(options)
         self._root = _required_opt(options, "root")
+        self.schema = schema
+        self._target = to_arrow_schema(schema)
         self._pattern = options.get("subscribepattern") or options.get(
             "subscribePattern"
         )
@@ -1041,7 +982,7 @@ class RippleTopicMultiStreamReader(DataSourceStreamReader):
 
     def _make_sub(self, topic: str) -> RippleTopicPartitionedStreamReader:
         return RippleTopicPartitionedStreamReader(
-            {**self._sub_opts, "topic": topic}
+            {**self._sub_opts, "topic": topic}, self.schema
         )
 
     def _sub(self, topic: str) -> RippleTopicPartitionedStreamReader:
@@ -1119,7 +1060,7 @@ class RippleTopicMultiStreamReader(DataSourceStreamReader):
     def read(self, partition: BucketPartition | None) -> Iterator:
         if partition is None:
             return iter(())
-        return _read_bucket_arrow(partition)
+        return _read_bucket_arrow(partition, self._target)
 
     def commit(self, end: dict) -> None:
         for t in self._offset_topics(end):
@@ -1135,13 +1076,11 @@ class RippleTopicDataSource(DataSource):
         return "ripple_topic"
 
     def schema(self) -> str:
-        _topics, multi = _subscription(self.options)
-        if multi:
-            return TOPIC_SCHEMA_DDL + ", topic string"
-        return TOPIC_SCHEMA_DDL
+        topics, multi = _subscription(self.options)
+        return _source_ddl(_required_opt(self.options, "root"), topics, multi)
 
     def reader(self, schema: StructType) -> RippleTopicReader:
-        return RippleTopicReader(self.options)
+        return RippleTopicReader(self.options, schema)
 
     def writer(self, schema: StructType, overwrite: bool):
         # A5 produce at format() tier — per-task producer transactions
@@ -1166,8 +1105,8 @@ class RippleTopicDataSource(DataSource):
             )
         _topics, multi = _subscription(self.options)
         if multi:
-            return RippleTopicMultiStreamReader(self.options)
-        return RippleTopicPartitionedStreamReader(self.options)
+            return RippleTopicMultiStreamReader(self.options, schema)
+        return RippleTopicPartitionedStreamReader(self.options, schema)
 
     def simpleStreamReader(self, schema: StructType) -> RippleTopicStreamReader:
         _topics, multi = _subscription(self.options)
@@ -1176,4 +1115,4 @@ class RippleTopicDataSource(DataSource):
                 "multi-topic subscriptions require the partitioned tier "
                 "(reader_tier=partitioned, the default)"
             )
-        return RippleTopicStreamReader(self.options)
+        return RippleTopicStreamReader(self.options, schema)

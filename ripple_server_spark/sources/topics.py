@@ -431,14 +431,6 @@ class TopicStore:
       the new base (at most ``manifest.RETRIES`` times), so per-bucket
       seqs stay contiguous with any number of ``produce`` callers and
       sink tasks writing one topic at once.
-
-    The directory-tailing streaming source (``streaming/api.py
-    stream_topic``) watches ``data/`` itself and is therefore
-    at-least-once with respect to ANY file no manifest references: it
-    may deliver crashed-produce orphans, and a compact() under a live
-    tail re-delivers every message through the rewritten segments. The
-    batch/manifest path — and the ``ripple_topic`` DataSource, which
-    streams pinned manifest snapshots — are the consistent ones.
     """
 
     def __init__(self, spark: SparkSession, root: str):

@@ -2,15 +2,15 @@
 
 This is the live half of the reference's pub/sub surface:
 
-- **source** (:func:`stream_topic`): ``readStream`` over the topic's
-  parquet log with ``maxFilesPerTrigger`` bounding each micro-batch —
-  the AskQuery{Count} batching analog (internal/broker/consumer/server/
-  core.go:16-19,52). Offsets live in the checkpoint and commit
-  atomically per micro-batch, which *fixes* the reference's offset race
-  (core.go:61-62 persists offset+Count while advancing by len(batch))
-  by construction: Spark's commit log records exactly what each batch
-  read. Exactly-once per micro-batch — strictly stronger than the
-  reference's at-least-once.
+- **source**: ``readStream.format("ripple_topic")`` — the manifest-
+  pinned source (sources/datasource.py). Each micro-batch serves at
+  most ``batch_size`` seqs per bucket — the AskQuery{Count} batching
+  analog (internal/broker/consumer/server/core.go:16-19,52) — and its
+  offsets live in the checkpoint and commit atomically per micro-batch,
+  which *fixes* the reference's offset race (core.go:61-62 persists
+  offset+Count while advancing by len(batch)) by construction: Spark's
+  commit log records exactly what each batch read. Exactly-once per
+  micro-batch — strictly stronger than the reference's at-least-once.
 - **sink**: ``writeStream.format("ripple_topic")`` — the native sink
   (sources/datasink.py), whose write tasks append through the same
   manifest transaction as ``TopicStore.produce``, exactly-once per
@@ -39,47 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ripple_server_spark.sources.topics import TopicStore
-
-
-def stream_topic(
-    store: TopicStore,
-    topic: str,
-    max_files_per_trigger: int = 4,
-) -> DataFrame:
-    """Open a topic as a streaming source (consume path, A6).
-
-    ``maxFilesPerTrigger`` is the AskQuery Count analog: bounds work per
-    micro-batch so one giant backlog cannot stall a trigger. Schema is
-    taken from the batch view of the same log (cheap footer read).
-
-    CONTRACT: this is the DIRECTORY-TAILING source — it lists data/
-    itself, so it is at-least-once with respect to files no manifest
-    references: a crashed produce's orphans may be delivered, and a
-    ``compact()`` during the stream re-delivers every message through
-    the rewritten segments (the compacted files are new names beside
-    the old ones). Do not run log maintenance under a live tail; the
-    manifest-consistent streaming source is the ``ripple_topic``
-    DataSource (sources/datasource.py), which reads pinned manifest
-    snapshots and is compaction/retention-safe.
-
-    Refuses a topic with no recorded schema yet (nothing produced):
-    locking the minimal empty-topic DDL into a running query would
-    silently drop every payload column of rows produced later.
-    """
-    if not store.topic_meta(topic).get("schema"):
-        raise ValueError(
-            f"topic {topic!r} has no recorded schema yet (nothing "
-            "produced): a stream started now would lock in the minimal "
-            "structural schema and silently drop payload columns of "
-            "future rows — produce first, or use the ripple_topic "
-            "DataSource"
-        )
-    schema = store.read_topic(topic).schema
-    return (
-        store.spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(store.data_dir(topic))
-    )
 
 
 def windowed_counts(

@@ -77,6 +77,7 @@ def delivery_cursor(stream: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 DEDUP_STATE_SCHEMA = "seen byte"
+DEDUP_OUTPUT_SCHEMA = "event_id long, ts timestamp, user_id long, value double"
 
 
 def ttl_dedup_fn(ttl_ms: int | None):
@@ -114,11 +115,11 @@ def dedup_stream_ttl_groupstate(
 ) -> DataFrame:
     """First-occurrence filter with TTL-bounded state on the
     ``applyInPandasWithState`` API: one 'seen' bit per event_id, aged
-    out by a processing-time timeout after ``ttl_ms`` — so state size
-    follows the TTL horizon, not the stream length. Semantics match
-    :func:`dedup_stream_ttl` (the transformWithState form below, which
-    needs the protobuf package); this form runs on any Spark ≥3.4 with
-    zero extra deps.
+    out by a processing-time timeout after ``ttl_ms`` of silence (every
+    duplicate re-arms the clock) — so state size follows the TTL
+    horizon, not the stream length, and does not depend on event time.
+    :func:`~ripple_server_spark.streaming.api.dedup_stream` is the
+    event-time form: it forgets a key once the ``ts`` watermark passes.
 
     ``ttl_ms=None`` disables the timeout (state grows with distinct
     keys — fine for bounded drains). Note for finite test drains: with
@@ -141,69 +142,6 @@ def dedup_stream_ttl_groupstate(
             stateStructType=DEDUP_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=timeout,
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# transformWithState (Spark 4 arbitrary-state API): TTL'd streaming dedup
-# --------------------------------------------------------------------------
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-DEDUP_OUTPUT_SCHEMA = "event_id long, ts timestamp, user_id long, value double"
-
-
-class TTLDedupProcessor(StatefulProcessor):
-    """First-occurrence filter with TTL-bounded state: converts an
-    at-least-once stream to exactly-once *processing* like
-    dropDuplicates, but with explicit state lifetime control — the key
-    at 100 TB, where "seen" state must age out by policy (TTL) rather
-    than grow with the stream. One ValueState bit per key, dropped by
-    the state store after ``ttl_ms`` regardless of watermark motion.
-
-    NOTE: transformWithStateInPandas requires the ``protobuf`` package
-    (absent in this container — the pytest importorskips); the operator
-    is complete and runs on any standard Spark 4 deployment.
-    """
-
-    def __init__(self, ttl_ms: int = 3_600_000):
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._seen = handle.getValueState("seen", "seen byte", ttlDurationMs=self._ttl_ms)
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self._seen.exists():
-            # re-arm: updating the value resets its TTL clock, matching
-            # the GroupState form's re-arm-on-every-touch (sliding
-            # window) — a key is re-emitted only after ttl_ms of
-            # SILENCE, not ttl_ms after first sight while duplicates
-            # are still arriving
-            self._seen.update((1,))
-            return
-        self._seen.update((1,))
-        for pdf in rows:
-            yield pdf.head(1)
-            return
-
-    def close(self) -> None:
-        pass
-
-
-def dedup_stream_ttl(events: DataFrame, ttl_ms: int = 3_600_000) -> DataFrame:
-    """Streaming dedup on event_id via transformWithStateInPandas."""
-    return (
-        events.select("event_id", "ts", "user_id", "value")
-        .groupBy("event_id")
-        .transformWithStateInPandas(
-            TTLDedupProcessor(ttl_ms),
-            outputStructType=DEDUP_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="processingTime",
         )
     )
 

@@ -52,3 +52,27 @@ def count_stagings(monkeypatch) -> list:
 
     monkeypatch.setattr(topics, "_stage_by_bucket", counting)
     return runs
+
+
+def topic_stream(store, topic: str, **options):
+    """``readStream.format("ripple_topic")`` over one of ``store``'s
+    topics, with extra reader options."""
+    from ripple_server_spark.sources.datasource import RippleTopicDataSource
+
+    store.spark.dataSource.register(RippleTopicDataSource)
+    reader = (
+        store.spark.readStream.format("ripple_topic")
+        .option("root", store.root)
+        .option("topic", topic)
+    )
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    return reader.load()
+
+
+def batches_with_rows(query) -> int:
+    """How many of ``query``'s micro-batches read at least one row. A
+    test that needs state to carry across batches produces one wave per
+    ``processAllAvailable()`` and checks this is at least 2: the
+    ripple_topic source's first trigger takes the whole backlog."""
+    return sum(1 for p in query.recentProgress if p.numInputRows > 0)

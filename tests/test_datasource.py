@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from ripple_server_spark.catalog import load_table
 from ripple_server_spark.sources.datasource import RippleTopicDataSource
 from ripple_server_spark.sources.topics import TopicStore
+from tests.conftest import topic_stream
 
 
 @pytest.fixture(scope="module")
@@ -20,6 +21,15 @@ def store(spark, sf_dir, tmp_path_factory):
     st.create_topic("d1", n_buckets=4)
     st.produce(load_table(spark, sf_dir, "events").limit(300), "d1")
     return st
+
+
+def _events_schema(multi=False):
+    """The StructType Spark hands the readers of an events topic."""
+    from pyspark.sql.types import StructType
+
+    from ripple_server_spark.sources.datasource import TOPIC_SCHEMA_DDL
+
+    return StructType.fromDDL(TOPIC_SCHEMA_DDL + (", topic string" if multi else ""))
 
 
 def _read(spark, store, **opts):
@@ -69,17 +79,19 @@ def test_read_bucket_pushes_upto_bound_into_scan(spark, store):
     """Crash-recovery replay pushes the exclusive seq bound into the
     pyarrow dataset filter (BucketPartition.upto), so the replay reads
     the batch's range, not the whole retained tail above the cursor."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from ripple_server_spark.sources.datasource import (
         BucketPartition,
         _bucket_files,
-        _read_bucket,
-        _SEQ_IDX,
+        _read_bucket_arrow,
     )
 
     buckets = dict(_bucket_files(store.root, "d1"))
     files = buckets[0]
-    rows = list(_read_bucket(BucketPartition(files, 0, 3, None, upto=9)))
-    seqs = sorted(r[_SEQ_IDX] for r in rows)
+    part = BucketPartition(files, 0, 3, None, upto=9)
+    batches = list(_read_bucket_arrow(part, to_arrow_schema(_events_schema())))
+    seqs = sorted(s for rb in batches for s in rb.column("seq").to_pylist())
     assert seqs == list(range(3, 9))
 
 
@@ -587,7 +599,8 @@ def _planner(st, topic="pl", **opts):
     )
 
     return RippleTopicPartitionedStreamReader(
-        {"root": st.root, "topic": topic, **{k: str(v) for k, v in opts.items()}}
+        {"root": st.root, "topic": topic, **{k: str(v) for k, v in opts.items()}},
+        _events_schema(),
     )
 
 
@@ -773,7 +786,7 @@ def test_batch_reader_and_replay_plan_only_overlapping_files(
     # batch reader: option("offset") plans [offset, end)
     offset = 150
     parts = datasource.RippleTopicReader(
-        {"root": st.root, "topic": "pl", "offset": str(offset)}
+        {"root": st.root, "topic": "pl", "offset": str(offset)}, _events_schema()
     ).partitions()
     assert parts and any(len(p.files) < len(every[p.bucket]) for p in parts)
     for p in parts:
@@ -793,25 +806,29 @@ def test_batch_reader_and_replay_plan_only_overlapping_files(
 
     # simple-tier replay: readBetweenOffsets plans [start, end) per bucket
     planned: list = []
-    real = datasource._read_bucket
+    real = datasource._read_bucket_arrow
 
-    def recording(part):
+    def recording(part, target):
         planned.append(part)
-        return real(part)
+        return real(part, target)
 
-    monkeypatch.setattr(datasource, "_read_bucket", recording)
+    monkeypatch.setattr(datasource, "_read_bucket_arrow", recording)
     start = {"cursors": json.dumps({"0": 40, "1": 120})}
     end = {
         "cursors": json.dumps({"0": 170, "1": 190}),
         "version": str(st.latest_manifest("pl")[0]),
     }
-    reader = datasource.RippleTopicStreamReader({"root": st.root, "topic": "pl"})
-    rows = list(reader.readBetweenOffsets(start, end))
+    reader = datasource.RippleTopicStreamReader(
+        {"root": st.root, "topic": "pl"}, _events_schema()
+    )
+    rows = [
+        r for rb in reader.readBetweenOffsets(start, end) for r in rb.to_pylist()
+    ]
     assert {p.bucket for p in planned} == {0, 1}
     for p in planned:
         assert rels(p.files) == overlapping(p.bucket, p.offset, p.upto)
         assert len(p.files) < len(every[p.bucket])
-    served = {b: sorted(r[datasource._SEQ_IDX] for r in rows if r[-1] == b) for b in every}
+    served = {b: sorted(r["seq"] for r in rows if r["bucket"] == b) for b in every}
     assert served == {0: seqs(every[0], 40, 170), 1: seqs(every[1], 120, 190)}
 
 
@@ -1013,22 +1030,24 @@ def test_stream_start_at_consumer_resumes_from_committed_offsets(
     # both tiers derive identical initial cursors from the commits
     opts = {"root": st.root, "topic": "cs", "start_at": "consumer:grp1"}
     for reader in (
-        RippleTopicPartitionedStreamReader(dict(opts)),
-        RippleTopicStreamReader(dict(opts)),
+        RippleTopicPartitionedStreamReader(dict(opts), _events_schema()),
+        RippleTopicStreamReader(dict(opts), _events_schema()),
     ):
         cur = _json.loads(reader.initialOffset()["cursors"])
         assert cur == {str(b): off for b, off in committed.items()}
 
     # an unknown consumer starts at earliest (register_consumer contract)
     fresh = RippleTopicPartitionedStreamReader(
-        {"root": st.root, "topic": "cs", "start_at": "consumer:nobody"}
+        {"root": st.root, "topic": "cs", "start_at": "consumer:nobody"},
+        _events_schema(),
     )
     assert _json.loads(fresh.initialOffset()["cursors"]) == {}
 
     # malformed start_at is an explicit error
     with pytest.raises(ValueError, match="start_at"):
         RippleTopicPartitionedStreamReader(
-            {"root": st.root, "topic": "cs", "start_at": "consumer:"}
+            {"root": st.root, "topic": "cs", "start_at": "consumer:"},
+            _events_schema(),
         )
 
     # end-to-end: the stream delivers exactly the rows the consumer
@@ -1167,7 +1186,8 @@ def test_multi_topic_consumer_start_at_is_per_topic(spark, sf_dir, tmp_path):
     # no commits on mc_b: it must start at earliest
 
     r = RippleTopicMultiStreamReader(
-        {"root": st.root, "topic": "mc_a,mc_b", "start_at": "consumer:g"}
+        {"root": st.root, "topic": "mc_a,mc_b", "start_at": "consumer:g"},
+        _events_schema(multi=True),
     )
     off = r.initialOffset()
     assert set(off) == {"mc_a", "mc_b"}
@@ -1404,9 +1424,9 @@ def test_missing_required_options_fail_actionably(spark):
         RippleTopicStreamReader,
     ):
         with pytest.raises(ValueError, match="option 'root' is required"):
-            cls({"topic": "t"})
+            cls({"topic": "t"}, _events_schema())
     with pytest.raises(ValueError, match="'topic' or 'subscribePattern'"):
-        RippleTopicReader({"root": "/tmp/x"})
+        RippleTopicReader({"root": "/tmp/x"}, _events_schema())
 
 
 def test_stream_picks_up_expanded_buckets(spark, sf_dir, tmp_path):
@@ -1771,7 +1791,8 @@ def test_stream_starts_at_timestamp(spark, sf_dir, tmp_path, tier):
         )
 
         RippleTopicPartitionedStreamReader(
-            {"root": st.root, "topic": "ts1", "start_at": "timestamp:tomorrow"}
+            {"root": st.root, "topic": "ts1", "start_at": "timestamp:tomorrow"},
+            _events_schema(),
         )
 
 
@@ -2172,3 +2193,161 @@ def test_stream_drains_key_compacted_topic_with_seq_gaps(spark, sf_dir, tmp_path
         q.stop()
     assert len(seen) == survivors + 40
     assert len(set(seen)) == len(seen)
+
+
+# -- the schema comes from the topics' recorded message schemas ---------
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _streamed(spark, st, topic, name, **opts):
+    """Everything one streaming query over ``topic`` delivers."""
+    q = topic_stream(st, topic, **opts).writeStream.format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.table(name)
+
+
+def test_non_events_topic_reads_its_recorded_schema(spark, tmp_path):
+    """A membership topic (no user_id, no value) is served with exactly
+    its recorded columns plus ``bucket`` by the batch reader and both
+    stream tiers, row for row what read_topic serves."""
+    import datetime as dt
+
+    spark.dataSource.register(RippleTopicDataSource)
+    st = TopicStore(spark, str(tmp_path / "member_topics"))
+    st.create_topic("members", n_buckets=2)
+    t0 = dt.datetime(2026, 1, 1)
+    rows = [(i, t0 + dt.timedelta(seconds=i), i % 3, 10 + i, i % 4 != 0) for i in range(12)]
+    ddl = "event_id long, ts timestamp, group long, member long, alive boolean"
+    st.produce(spark.createDataFrame(rows, ddl), "members", key_col="group")
+    want = st.read_topic("members")
+    cols = ["event_id", "ts", "group", "member", "alive", "seq", "bucket"]
+    assert want.columns == cols
+    got = {
+        "batch": spark.read.format("ripple_topic")
+        .option("root", st.root)
+        .option("topic", "members")
+        .load(),
+        "partitioned": _streamed(spark, st, "members", "m_members_p"),
+        "simple": _streamed(spark, st, "members", "m_members_s", reader_tier="simple"),
+    }
+    for reader, df in got.items():
+        assert df.columns == cols, reader
+        assert _rows(df) == _rows(want), reader
+
+
+def test_evolved_column_missing_from_first_file_reads_as_typed_nulls(
+    spark, sf_dir, tmp_path
+):
+    """An evolved column that a bucket's FIRST file lacks is still
+    served — typed nulls for the older rows — equal to read_topic at the
+    same version, by the batch reader and the stream."""
+    import pyarrow.parquet as pq
+
+    from ripple_server_spark.sources.datasource import _bucket_files
+
+    spark.dataSource.register(RippleTopicDataSource)
+    st = TopicStore(spark, str(tmp_path / "evo_topics"))
+    st.create_topic("evo", n_buckets=2)
+    ev = load_table(spark, sf_dir, "events")
+    # the first wave goes through the native sink: its dsw-* files sort
+    # before produce's prd-* files, so every bucket's first file is one
+    # without the `lang` column the second wave adds
+    (
+        _wave(ev, 0, 50)
+        .write.format("ripple_topic")
+        .mode("append")
+        .option("root", st.root)
+        .option("topic", "evo")
+        .save()
+    )
+    st.produce(_wave(ev, 50, 100).withColumn("lang", F.lit("en")), "evo")
+    for _b, files in _bucket_files(st.root, "evo"):
+        assert "lang" not in pq.read_schema(files[0]).names
+    version = st.latest_manifest("evo")[0]
+    want = st.read_topic("evo", version=version)
+    batch = (
+        spark.read.format("ripple_topic")
+        .option("root", st.root)
+        .option("topic", "evo")
+        .option("version", version)
+        .load()
+    )
+    for df in (batch, _streamed(spark, st, "evo", "m_evo")):
+        assert sorted(df.columns) == sorted(want.columns)
+        assert dict(df.dtypes)["lang"] == "string"
+        assert _rows(df.select(*want.columns)) == _rows(want)
+        langs = [r["lang"] for r in df.select("lang").collect()]
+        assert langs.count(None) == 50 and langs.count("en") == 50
+
+
+def test_schemaless_topic_reads_as_events_layout(spark, sf_dir, tmp_path):
+    """Nothing produced yet: both read paths type the topic with
+    TOPIC_SCHEMA_DDL, and a stream started then serves the events
+    produced afterwards (the stream_tail benchmark starts this way)."""
+    from pyspark.sql.types import StructType
+
+    from ripple_server_spark.sources.datasource import TOPIC_SCHEMA_DDL
+
+    spark.dataSource.register(RippleTopicDataSource)
+    st = TopicStore(spark, str(tmp_path / "bare_topics"))
+    st.create_topic("bare", n_buckets=2)
+    events = StructType.fromDDL(TOPIC_SCHEMA_DDL)
+    batch = spark.read.format("ripple_topic").option("root", st.root).option("topic", "bare").load()
+    assert batch.schema == events
+    src = topic_stream(st, "bare")
+    assert src.schema == events
+    q = src.writeStream.format("memory").queryName("m_bare").start()
+    try:
+        q.processAllAvailable()
+        st.produce(_wave(load_table(spark, sf_dir, "events"), 0, 40), "bare")
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert _rows(spark.table("m_bare")) == _rows(st.read_topic("bare"))
+
+
+def test_multi_topic_schemas_union_and_type_conflicts_fail(spark, tmp_path):
+    """A multi-topic subscription reads the union of the topics'
+    recorded columns in subscription order (absent ones as nulls); a
+    column recorded under two types fails at query start, named."""
+    import datetime as dt
+
+    spark.dataSource.register(RippleTopicDataSource)
+    st = TopicStore(spark, str(tmp_path / "union_topics"))
+    t0 = dt.datetime(2026, 1, 1)
+    for topic, extra, value in (
+        ("u_score", "score int", 5),
+        ("u_lang", "lang string", "en"),
+        ("u_clash", "score string", "high"),
+    ):
+        st.create_topic(topic, n_buckets=2)
+        df = spark.createDataFrame(
+            [(1, t0, 7, value)], f"event_id long, ts timestamp, user_id long, {extra}"
+        )
+        st.produce(df, topic)
+
+    def load(topics):
+        return (
+            spark.read.format("ripple_topic")
+            .option("root", st.root)
+            .option("topic", topics)
+            .load()
+        )
+
+    both = load("u_score,u_lang")
+    assert both.columns == [
+        "event_id", "ts", "user_id", "score", "seq", "lang", "bucket", "topic"
+    ]
+    got = {r["topic"]: (r["score"], r["lang"]) for r in both.collect()}
+    assert got == {"u_score": (5, None), "u_lang": (None, "en")}
+
+    with pytest.raises(ValueError, match="column 'score'"):
+        RippleTopicDataSource({"root": st.root, "topic": "u_score,u_clash"}).schema()
+    with pytest.raises(Exception, match="column 'score'"):
+        topic_stream(st, "u_score,u_clash")

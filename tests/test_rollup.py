@@ -14,7 +14,7 @@ from ripple_server_spark.catalog import load_table
 from ripple_server_spark.sources import manifest
 from ripple_server_spark.sources.rollup import HOUR_FMT, HourlyRollup
 from ripple_server_spark.sources.topics import TopicStore
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, topic_stream
 
 
 @pytest.fixture()
@@ -115,8 +115,6 @@ def test_rollup_driven_by_stream(spark, tmp_root):
     over the topic triggers rollup refreshes via foreachBatch — the
     continuous-aggregate pipeline. availableNow stands in for the cron
     trigger; each micro-batch folds the tail into the rollup."""
-    from ripple_server_spark.streaming import api
-
     ev = load_table(spark, SF_SMOKE, "events")
     store = TopicStore(spark, tmp_root)
     store.create_topic("t", n_buckets=4)
@@ -131,7 +129,7 @@ def test_rollup_driven_by_stream(spark, tmp_root):
         refreshes.append(rollup.refresh())
 
     q = (
-        api.stream_topic(store, "t")
+        topic_stream(store, "t")
         .writeStream.foreachBatch(fold)
         .option("checkpointLocation", os.path.join(tmp_root, "ckpt"))
         .trigger(availableNow=True)

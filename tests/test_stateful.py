@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 
 from ripple_server_spark.catalog import load_table
 from ripple_server_spark.sources.topics import TopicStore
-from ripple_server_spark.streaming import api
 from ripple_server_spark.streaming.stateful import delivery_cursor
+from tests.conftest import batches_with_rows, topic_stream
 
 
 @pytest.fixture()
@@ -20,20 +20,24 @@ def store(spark, sf_dir, tmp_path):
     return st
 
 
-def test_cursor_tracks_full_log_without_gaps(spark, store, tmp_path):
-    # maxFilesPerTrigger=1 forces multiple micro-batches -> state must
-    # carry across them.
-    src = api.stream_topic(store, "st1", max_files_per_trigger=1)
+def test_cursor_tracks_full_log_without_gaps(spark, store, sf_dir, tmp_path):
+    # a second produce wave after the first is processed forces a second
+    # micro-batch -> state must carry across them.
     q = (
-        delivery_cursor(src)
+        delivery_cursor(topic_stream(store, "st1"))
         .writeStream.format("memory")
         .queryName("m_cursor")
         .outputMode("update")
         .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.processAllAvailable()
+        store.produce(load_table(spark, sf_dir, "events").limit(100), "st1")
+        q.processAllAvailable()
+        assert batches_with_rows(q) >= 2
+    finally:
+        q.stop()
     # last update per bucket = final cursor
     final = spark.sql(
         """
@@ -56,7 +60,7 @@ def test_cursor_tracks_full_log_without_gaps(spark, store, tmp_path):
 
 def test_cursor_detects_gaps(spark, store, tmp_path):
     # stream a filtered view that drops some sequences -> gaps > 0
-    src = api.stream_topic(store, "st1").filter(F.col("seq") % 3 != 1)
+    src = topic_stream(store, "st1").filter(F.col("seq") % 3 != 1)
     q = (
         delivery_cursor(src)
         .writeStream.format("memory")
@@ -71,43 +75,12 @@ def test_cursor_detects_gaps(spark, store, tmp_path):
     assert rows[0]["g"] > 0
 
 
-def test_ttl_dedup_first_occurrence_only(spark, store, tmp_path):
-    """transformWithState TTL dedup: replaying the same log twice must
-    emit each event_id exactly once.
-
-    transformWithStateInPandas speaks protobuf to the JVM state server;
-    the container has no google.protobuf, so this skips here and runs
-    in any normal Spark deployment (pip install protobuf)."""
-    pytest.importorskip("google.protobuf")
-    from ripple_server_spark.streaming import api
-    from ripple_server_spark.streaming.stateful import dedup_stream_ttl
-
-    src = api.stream_topic(store, "st1")
-    doubled = src.unionByName(src)  # two deliveries of every row
-    q = (
-        dedup_stream_ttl(doubled)
-        .writeStream.format("memory")
-        .queryName("m_ttl_dedup")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ttl"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.sql("SELECT * FROM m_ttl_dedup")
-    log = store.read_topic("st1")
-    assert out.count() == log.count()
-    assert out.select("event_id").distinct().count() == out.count()
-
-
 def test_ttl_dedup_groupstate_first_occurrence_only(spark, store, tmp_path):
-    """GroupState TTL dedup (no protobuf needed): replaying the same
-    log twice must emit each event_id exactly once — the same contract
-    as the transformWithState form, exercised in-container."""
-    from ripple_server_spark.streaming import api
+    """GroupState TTL dedup: replaying the same log twice must emit each
+    event_id exactly once."""
     from ripple_server_spark.streaming.stateful import dedup_stream_ttl_groupstate
 
-    src = api.stream_topic(store, "st1")
+    src = topic_stream(store, "st1")
     doubled = src.unionByName(src)  # two deliveries of every row
     # ttl_ms=None: finite drain (armed TTL timers would keep the query
     # busy forever under availableNow — see the operator docstring; the
@@ -251,9 +224,11 @@ def test_leader_watch_reelects_after_leader_removal(spark, tmp_path):
     """End-to-end A12: membership deltas flow through a topic; the
     watch elects the lowest-seq member, then a later micro-batch
     carrying the leader's departure triggers re-election (the
-    election.go:85-108 watch path). maxFilesPerTrigger=1 forces the
-    removal into its own micro-batch, so the state must carry the
-    roster across batches."""
+    election.go:85-108 watch path). The removal is produced after the
+    registrations were processed, so it lands in its own micro-batch
+    and the state must carry the roster across batches. The query
+    starts after the first produce, so it reads the topic's recorded
+    membership schema."""
     from ripple_server_spark.streaming.stateful import leader_watch
 
     st = TopicStore(spark, str(tmp_path / "topics"))
@@ -279,23 +254,25 @@ def test_leader_watch_reelects_after_leader_removal(spark, tmp_path):
         "elect",
         key_col="group",
     )
-    # epoch 2: both leaders (lowest-seq members: *0) crash/leave
-    st.produce(
-        mk([(100, ts(100), 0, 10, False), (101, ts(101), 1, 20, False)]),
-        "elect",
-        key_col="group",
-    )
-
-    src = api.stream_topic(st, "elect", max_files_per_trigger=1)
     q = (
-        leader_watch(src)
+        leader_watch(topic_stream(st, "elect"))
         .writeStream.format("memory")
         .queryName("m_leader")
         .option("checkpointLocation", str(tmp_path / "ckpt_leader"))
-        .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.processAllAvailable()
+        # epoch 2: both leaders (lowest-seq members: *0) crash/leave
+        st.produce(
+            mk([(100, ts(100), 0, 10, False), (101, ts(101), 1, 20, False)]),
+            "elect",
+            key_col="group",
+        )
+        q.processAllAvailable()
+        assert batches_with_rows(q) >= 2
+    finally:
+        q.stop()
     rows = {
         (r["group"], r["epoch"]): r
         for r in spark.sql("SELECT * FROM m_leader").collect()
@@ -360,12 +337,11 @@ def test_rate_limit_fn_transitions():
 def test_rate_limit_stream_marks_bursts(spark, tmp_path):
     """End-to-end: a keyed burst beyond the bucket is marked deferred;
     a slow key stays fully allowed. State carries across micro-batches
-    (each produce is its own file -> own batch)."""
+    (each produce is processed as its own batch)."""
     import datetime as dt
 
     from pyspark.sql import types as T
 
-    from ripple_server_spark.streaming import api
     from ripple_server_spark.streaming.stateful import rate_limit_stream
 
     st = TopicStore(spark, str(tmp_path / "rl_topics"))
@@ -391,25 +367,27 @@ def test_rate_limit_stream_marks_bursts(spark, tmp_path):
     # user 1: 6 events in one second (bucket=3 -> 3 deferred);
     # user 2: 3 events spread over minutes (all allowed)
     st.produce(mk([(i, 0, 1) for i in range(6)]), "rl", key_col="user_id")
-    # second batch, 10 s later: user 1 refilled 3 tokens at 1/s (cap 3)
-    st.produce(
-        mk([(10, 10, 1), (11, 10, 1), (12, 10, 1), (13, 10, 1)]
-           + [(20, 0, 2), (21, 60, 2), (22, 120, 2)]),
-        "rl",
-        key_col="user_id",
-    )
-
-    src = api.stream_topic(st, "rl", max_files_per_trigger=1)
     q = (
-        rate_limit_stream(src, capacity=3, refill_per_sec=1)
+        rate_limit_stream(topic_stream(st, "rl"), capacity=3, refill_per_sec=1)
         .writeStream.format("memory")
         .queryName("m_rate")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ck_rate"))
-        .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.processAllAvailable()
+        # second batch, 10 s later: user 1 refilled 3 tokens at 1/s (cap 3)
+        st.produce(
+            mk([(10, 10, 1), (11, 10, 1), (12, 10, 1), (13, 10, 1)]
+               + [(20, 0, 2), (21, 60, 2), (22, 120, 2)]),
+            "rl",
+            key_col="user_id",
+        )
+        q.processAllAvailable()
+        assert batches_with_rows(q) >= 2
+    finally:
+        q.stop()
     rows = {
         r["event_id"]: r["allowed"]
         for r in spark.sql("SELECT event_id, allowed FROM m_rate").collect()

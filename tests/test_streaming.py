@@ -1,5 +1,5 @@
-"""Structured Streaming semantics tests: source batching, FIFO per
-bucket, offset resume across restarts, windowed aggregation with
+"""Structured Streaming semantics tests over the ``ripple_topic``
+source: offset resume across restarts, windowed aggregation with
 watermarks, streaming dedup, and replication fan-out.
 """
 
@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from ripple_server_spark.catalog import load_table
 from ripple_server_spark.sources.topics import TopicStore
 from ripple_server_spark.streaming import api
+from tests.conftest import batches_with_rows, topic_stream
 
 
 @pytest.fixture()
@@ -33,16 +34,6 @@ def _drain_to_memory(spark, df, name):
     return spark.sql(f"SELECT * FROM {name}")
 
 
-def test_stream_source_delivers_full_log_in_order(spark, store):
-    out = _drain_to_memory(spark, api.stream_topic(store, "s1"), "m_full")
-    batch = store.read_topic("s1")
-    assert out.count() == batch.count()
-    # per-bucket FIFO: streamed rows, keyed by seq, match the log
-    streamed = {(r["bucket"], r["seq"]) for r in out.select("bucket", "seq").collect()}
-    logged = {(r["bucket"], r["seq"]) for r in batch.select("bucket", "seq").collect()}
-    assert streamed == logged
-
-
 def test_stream_resumes_from_checkpoint(spark, store, tmp_path, sf_dir):
     """Offset resume: a restarted query with the same checkpoint only
     reads data produced after the first drain (exactly-once source)."""
@@ -51,7 +42,7 @@ def test_stream_resumes_from_checkpoint(spark, store, tmp_path, sf_dir):
 
     def drain():
         q = (
-            api.stream_topic(store, "s1")
+            topic_stream(store, "s1")
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -74,7 +65,7 @@ def test_windowed_counts_match_batch(spark, store):
     # complete mode: emit every window, not just watermark-closed ones
     # (append mode would hold back windows within 10 min of max ts).
     q = (
-        api.windowed_counts(api.stream_topic(store, "s1"), "1 hour")
+        api.windowed_counts(topic_stream(store, "s1"), "1 hour")
         .writeStream.format("memory")
         .queryName("m_win")
         .outputMode("complete")
@@ -97,33 +88,48 @@ def test_windowed_counts_match_batch(spark, store):
 def test_streaming_dedup_drops_replayed_rows(spark, sf_dir, tmp_path):
     """At-least-once -> exactly-once-processing, through a REAL streaming
     query: the same 200 rows are produced twice (distinct batch_ids, so
-    the log genuinely holds 400), then api.dedup_stream runs over the
-    topic stream with a small maxFilesPerTrigger so the redelivered
-    copies arrive in LATER micro-batches — only cross-batch state-store
-    dedup can drop them, a batch dropDuplicates could not regress-test
-    this. Wide watermark: the file source doesn't batch in ts order, so
-    a tight horizon would GC state mid-drain and drop originals."""
+    the log genuinely holds 400) and api.dedup_stream runs over the
+    topic stream. The redelivered copies are produced only after the
+    first wave was processed, so they arrive in a LATER micro-batch —
+    only cross-batch state-store dedup can drop them, a batch
+    dropDuplicates could not regress-test this. Wide watermark: a tight
+    horizon would GC state between the waves and drop originals."""
     st = TopicStore(spark, str(tmp_path / "topics_dup"))
     st.create_topic("sdup", n_buckets=4)
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 200)
     st.produce(ev, "sdup", batch_id="b-orig")
-    st.produce(ev, "sdup", batch_id="b-redelivery")
-    assert st.read_topic("sdup").count() == 400  # duplicates really landed
-    deduped = api.dedup_stream(
-        api.stream_topic(st, "sdup", max_files_per_trigger=2),
-        watermark="3650 days",
-    )
-    out = _drain_to_memory(spark, deduped, "m_dedup")
-    got = out.select("event_id").collect()
+    deduped = api.dedup_stream(topic_stream(st, "sdup"), watermark="3650 days")
+    q = deduped.writeStream.format("memory").queryName("m_dedup").start()
+    try:
+        q.processAllAvailable()
+        st.produce(ev, "sdup", batch_id="b-redelivery")
+        assert st.read_topic("sdup").count() == 400  # duplicates really landed
+        q.processAllAvailable()
+        assert batches_with_rows(q) >= 2
+    finally:
+        q.stop()
+    got = spark.sql("SELECT event_id FROM m_dedup").collect()
     assert len(got) == 200, f"streaming dedup emitted {len(got)} rows"
     assert len({r["event_id"] for r in got}) == 200
 
 
 def test_session_window_plan_builds(spark, store):
-    out = _drain_to_memory(
-        spark, api.sessionized(api.stream_topic(store, "s1"), gap="30 minutes"), "m_sess"
+    """Sessions close in append mode once the watermark passes them:
+    the no-data micro-batch that moves the watermark after the drain
+    must run, which a long-lived query's processAllAvailable() waits
+    for (an availableNow run over this source stops before it)."""
+    q = (
+        api.sessionized(topic_stream(store, "s1"), gap="30 minutes")
+        .writeStream.format("memory")
+        .queryName("m_sess")
+        .outputMode("append")
+        .start()
     )
-    assert out.count() > 0
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert spark.table("m_sess").count() > 0
 
 
 def test_fanout_write_replicates(spark, store, tmp_path):
@@ -133,7 +139,7 @@ def test_fanout_write_replicates(spark, store, tmp_path):
     leader->follower replication."""
     replicas = [str(tmp_path / f"rep{i}") for i in range(3)]
     q = api.fanout_write(
-        api.stream_topic(store, "s1"), replicas, str(tmp_path / "ckpt_fan")
+        topic_stream(store, "s1"), replicas, str(tmp_path / "ckpt_fan")
     )
     q.processAllAvailable()
     q.stop()
@@ -157,7 +163,7 @@ def test_replica_read_load_balances_and_matches_leader(spark, store, tmp_path):
 
     replicas = [str(tmp_path / f"rep{i}") for i in range(3)]
     q = api.fanout_write(
-        api.stream_topic(store, "s1"), replicas, str(tmp_path / "ckpt_lb")
+        topic_stream(store, "s1"), replicas, str(tmp_path / "ckpt_lb")
     )
     q.processAllAvailable()
     q.stop()
@@ -179,7 +185,7 @@ def test_replica_read_load_balances_and_matches_leader(spark, store, tmp_path):
 def test_interval_join_matches_batch(spark, store):
     """Stream-stream interval join (clicks ⋈ purchases within 1h by
     user) must produce exactly the batch join's pairs."""
-    src = api.stream_topic(store, "s1")
+    src = topic_stream(store, "s1")
     clicks = src.filter(F.col("event_type") == "click")
     purchases = src.filter(F.col("event_type") == "purchase")
     out = _drain_to_memory(
@@ -211,7 +217,7 @@ def test_fanout_write_replay_is_idempotent(spark, store, tmp_path):
 
     replicas = [str(tmp_path / f"irep{i}") for i in range(2)]
     ckpt = str(tmp_path / "ckpt_ifan")
-    q = fanout_write(api.stream_topic(store, "s1"), replicas, ckpt)
+    q = fanout_write(topic_stream(store, "s1"), replicas, ckpt)
     q.processAllAvailable()
     q.stop()
     n = store.read_topic("s1").count()
@@ -230,7 +236,7 @@ def test_fanout_write_replay_is_idempotent(spark, store, tmp_path):
     if os.path.exists(crc):
         os.remove(crc)
 
-    q2 = fanout_write(api.stream_topic(store, "s1"), replicas, ckpt)
+    q2 = fanout_write(topic_stream(store, "s1"), replicas, ckpt)
     q2.processAllAvailable()
     q2.stop()
     after = [
@@ -333,78 +339,6 @@ def test_streaming_gate_reattaches_after_close(spark, tmp_path):
     assert len(gate.batches) > n_first
 
 
-def test_late_rows_beyond_watermark_are_dropped(spark, sf_dir, tmp_path):
-    """The watermark contract end-to-end: a row arriving AFTER the
-    watermark has passed its window's end must be dropped from the
-    windowed aggregate (append mode), while an in-watermark late row
-    still counts. Micro-batch boundaries come from one produce per
-    file (max_files_per_trigger=1), so watermark motion between
-    batches is deterministic."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from ripple_server_spark.sources.topics import TopicStore
-    from ripple_server_spark.streaming import api
-
-    st = TopicStore(spark, str(tmp_path / "late_topics"))
-    st.create_topic("lt", n_buckets=1)
-    base = dt.datetime(2024, 6, 1, 0, 0, 0)
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-    def mk(rows):
-        return spark.createDataFrame(
-            [(i, base + dt.timedelta(minutes=m), 1, "click", 1.0, "{}") for i, m in rows],
-            schema,
-        )
-
-    # drain-per-produce with ONE checkpoint: the watermark persists in
-    # the checkpoint commit log, so batch boundaries (and watermark
-    # motion between them) are deterministic regardless of file-listing
-    # order inside a single run.
-    def drain():
-        q = (
-            api.windowed_counts(
-                api.stream_topic(st, "lt"), window="5 minutes", watermark="10 minutes"
-            )
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / "out_late"))
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ck_late"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # run 1: two rows in window [0,5) and one at t=60min -> watermark
-    # advances to 50min, far past [0,5)'s end; [0,5) emits and evicts
-    st.produce(mk([(0, 1), (1, 2), (2, 60)]), "lt", key_col="user_id")
-    drain()
-    # run 2: a too-late row for [0,5) (must be dropped) and one at
-    # t=61min (on time, counts toward [60,65))
-    st.produce(mk([(3, 3), (4, 61)]), "lt", key_col="user_id")
-    drain()
-    # run 3: push the watermark past [60,65) so its window emits
-    st.produce(mk([(5, 120)]), "lt", key_col="user_id")
-    drain()
-
-    rows = {
-        r["ws"].minute + r["ws"].hour * 60: r["n"]
-        for r in spark.read.parquet(str(tmp_path / "out_late")).collect()
-    }
-    assert rows[0] == 2, rows  # the too-late event_id=3 was dropped
-    assert rows[60] == 2, rows  # both on-time rows of [60,65) counted
-
-
 def test_native_stream_sink_commits_through_manifest(spark, sf_dir, tmp_path):
     """The streaming producer sink, ``writeStream.format("ripple_topic")``,
     must land rows under the manifest commit protocol: visible to
@@ -449,18 +383,3 @@ def test_native_stream_sink_commits_through_manifest(spark, sf_dir, tmp_path):
     # restart from the same checkpoint: nothing new -> no duplicates
     api.run_available_now(writer())
     assert st.read_topic("out").count() == 80
-
-
-def test_stream_topic_refuses_schemaless_topic(spark, tmp_path):
-    """Opening a tail on a topic nothing was ever produced to must fail
-    loudly: locking the minimal empty-topic schema into a running query
-    would silently drop every payload column of later rows."""
-    import pytest as _pytest
-
-    from ripple_server_spark.sources.topics import TopicStore
-    from ripple_server_spark.streaming import api
-
-    st = TopicStore(spark, str(tmp_path / "empty_topics"))
-    st.create_topic("never_produced", n_buckets=2)
-    with _pytest.raises(ValueError, match="no recorded schema"):
-        api.stream_topic(st, "never_produced")
