@@ -212,8 +212,8 @@ def _writer_common(options: dict, schema: StructType, overwrite: bool):
     # input columns minus bucket (a partition dir, not a file column)
     # plus the seq the writer assigns — byte-identical to what
     # TopicStore.produce records, so a sink-established topic's
-    # empty-frame DDL carries seq (consume() filters on it) and the
-    # first produce() after a sink write does NOT flag a spurious
+    # empty-frame DDL carries seq (poll() orders on it) and the
+    # first produce() after a sink write does NOT record a spurious
     # schema evolution (review r08 finding)
     fields = [
         f"{f.name}:{f.dataType.simpleString()}"

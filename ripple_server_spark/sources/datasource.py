@@ -43,9 +43,12 @@ selected by ``reader_tier`` (default ``partitioned``):
   chunks), yielded as Arrow RecordBatches. This is the scale tier: the
   reader parallelism IS the bucket layout, same as the reference's
   one-queue-per-bucket broker (internal/broker/server/server.go:25).
-- ``simple`` — the SimpleDataSourceStreamReader tier (driver-side
-  prefetch), the right shape for control-plane-small topics where a
-  task round-trip per bucket costs more than the rows.
+- ``simple`` — the SimpleDataSourceStreamReader tier: it plans each
+  trigger like the partitioned tier (same admission rule, from the
+  manifest) but reads the rows on the driver, with the same
+  manifest-planned scan ``TopicStore.poll`` uses — the right shape
+  for control-plane-small topics where a task round-trip per bucket
+  costs more than the rows.
 
 The ``topic`` option accepts a comma-separated list (Kafka
 ``subscribe`` parity): multi-topic reads add a ``topic`` column and,
@@ -63,7 +66,8 @@ included) plus ``bucket``, resolved once at query start
 (:func:`_source_ddl`). A topic nothing was produced to yet reads as
 :data:`TOPIC_SCHEMA_DDL`, the events layout. Every reader scans its
 files with that schema, so a column an older file lacks comes back as
-typed nulls, the same contract as ``TopicStore.read_topic``.
+typed nulls, the same contract as ``TopicStore.read_topic`` and
+``TopicStore.poll``.
 """
 
 from __future__ import annotations
@@ -173,28 +177,14 @@ def _scan(files: list[str], target, fill: dict, flt):
     )
 
 
-def _topic_arrow_batches(tbl, target, fill: dict):
-    """Record batches of exactly ``target``: the scanned file columns
-    plus the partition-constant ``fill`` columns (``bucket``, and
-    ``topic`` on multi-topic subscriptions). Shared by the executor
-    kernel and the simple tier's driver prefetch."""
+def _bucket_table(part: BucketPartition, target):
+    """The rows of one partition: the bucket's rows with ``offset <=
+    seq < upto``, seq-ordered, cut at ``limit`` rows, as a
+    ``pyarrow.Table`` of exactly ``target`` — the scanned file columns
+    plus the partition-constant ``bucket`` (and ``topic`` on
+    multi-topic subscriptions). The one range read: executor tasks,
+    the simple tier's driver read and ``TopicStore.poll`` all call it."""
     import pyarrow as pa
-
-    cols = [
-        pa.repeat(pa.scalar(fill[f.name], f.type), tbl.num_rows)
-        if f.name in fill
-        else tbl.column(f.name)
-        for f in target
-    ]
-    return pa.Table.from_arrays(cols, schema=target).to_batches()
-
-
-def _read_bucket_arrow(part: BucketPartition, target):
-    """Executor-side read of one partition: the bucket's rows with
-    ``offset <= seq < upto``, seq-ordered, cut at ``limit`` rows, as
-    ``pyarrow.RecordBatch`` of the reader's Arrow schema ``target`` —
-    no per-row Python objects, the worker hands the batches straight to
-    the JVM Arrow stream."""
     import pyarrow.dataset as ds
 
     flt = ds.field("seq") >= part.offset
@@ -209,7 +199,26 @@ def _read_bucket_arrow(part: BucketPartition, target):
     tbl = _scan(part.files, target, fill, flt)
     if part.limit is not None:
         tbl = tbl.slice(0, part.limit)
-    yield from _topic_arrow_batches(tbl, target, fill)
+    cols = [
+        pa.repeat(pa.scalar(fill[f.name], f.type), tbl.num_rows)
+        if f.name in fill
+        else tbl.column(f.name)
+        for f in target
+    ]
+    return pa.Table.from_arrays(cols, schema=target)
+
+
+def _read_bucket_arrow(part: BucketPartition, target):
+    """:func:`_bucket_table` as Arrow record batches — no per-row
+    Python objects, the worker hands the batches straight to the JVM
+    Arrow stream."""
+    yield from _bucket_table(part, target).to_batches()
+
+
+def _admit(cursor: int, floor: int, hwm: int, cap: int) -> int:
+    """A bucket's end cursor for one trigger: skip the retention hole
+    below ``floor``, admit at most ``cap`` seqs, never move back."""
+    return max(cursor, min(hwm, max(cursor, floor) + cap))
 
 
 def _bounds(m: dict) -> tuple[dict[str, int], dict[str, int]]:
@@ -462,26 +471,18 @@ def _subscription(options: dict) -> tuple[list[str], bool]:
 def _source_ddl(root: str, topics: list[str], multi: bool) -> str:
     """The subscription's schema, resolved once at query start: the
     topics' recorded message schemas merged in subscription order by
-    :func:`manifest.merge_schema`'s union rule, plus ``bucket`` (and
-    ``topic`` for multi-topic subscriptions). :data:`TOPIC_SCHEMA_DDL`
-    when no subscribed topic has recorded one yet. A column recorded
-    under two types has no one Arrow type to scan it with: ValueError
-    naming it."""
+    :func:`manifest.merge_schema`'s union rule, typed by
+    ``topics._message_ddl`` (plus ``topic`` for multi-topic
+    subscriptions). :data:`TOPIC_SCHEMA_DDL` when no subscribed topic
+    has recorded one yet. A column recorded under two types:
+    ValueError naming it."""
     from ripple_server_spark.sources.topics import _message_ddl
 
-    merged: dict = {}
+    merged: dict = {"topic": ",".join(topics)}
     for t in topics:
         recorded = manifest.latest(root, t)[1].get("schema")
         if recorded:
             manifest.merge_schema(merged, recorded)
-    seen: dict[str, str] = {}
-    for field in merged.get("schema", []):
-        name, typ = field.split(":", 1)
-        if seen.setdefault(name, typ) != typ:
-            raise ValueError(
-                f"ripple_topic: column {name!r} is recorded as both "
-                f"{seen[name]} and {typ} across topics {', '.join(topics)}"
-            )
     ddl = _message_ddl(merged) or TOPIC_SCHEMA_DDL
     return ddl + ", topic string" if multi else ddl
 
@@ -527,8 +528,18 @@ class RippleTopicReader(DataSourceReader):
 
 
 class RippleTopicStreamReader(SimpleDataSourceStreamReader):
-    """Micro-batch source: offset = {bucket: next_seq}. Each batch
-    serves at most ``batch_size`` rows per bucket (AskQuery.Count).
+    """Driver-side micro-batch source: offset = {bucket: next_seq} plus
+    the manifest version the batch was planned against.
+
+    Plans like the partitioned tier: each trigger reads the latest
+    manifest and advances every bucket's cursor by the rule of
+    :meth:`RippleTopicPartitionedStreamReader.latestOffset` — clamp to
+    the retained floor, then admit at most ``batch_size`` seqs
+    (AskQuery.Count). It then reads ``[start, end)`` on the driver
+    through :meth:`readBetweenOffsets`, the same manifest-planned scan
+    crash replay uses, so a trigger decodes only the files overlapping
+    its range. Seq gaps left by retention or key compaction just make
+    a batch carry fewer rows.
 
     ``start_at`` (default ``earliest``) controls the FIRST checkpoint
     only — the Kafka ``auto.offset.reset`` analog: ``earliest`` replays
@@ -544,46 +555,6 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
         self.start_at = _check_start_at(options.get("start_at", "earliest"))
         self.schema = schema
         self._target = to_arrow_schema(schema)
-        # decoded-tail cache for the driver prefetch, see _tail_slice
-        self._tail_cache: dict[int, tuple] = {}
-
-    def _tail_slice(self, version: int, bucket: int, files, off: int, max_rows):
-        """Seq-sorted Arrow slice [off, off + max_rows-by-count) of one
-        bucket, from a per-(bucket, manifest-version) DECODED tail
-        cache; ``None`` when the bucket is drained past ``off``.
-
-        This tier funnels every row through driver-side prefetch by
-        design (control-plane topics). The fixture files hold one row
-        group per produce, so the seq filter cannot prune inside a
-        trigger: without a cache every trigger re-decoded the whole
-        remaining tail and sliced ``max_rows`` off it — an n-row drain
-        at batch size c decoded O(n^2/c) cells. Caching the
-        seq-sorted Arrow table keyed by manifest version makes it one
-        decode per (bucket, version): a produce/compaction/truncate
-        commits a NEW version, which drops the stale entry, so the
-        cache can never serve rows the live manifest no longer has.
-        Memory is bounded by the retained tail of one control-plane
-        topic — the same rows the stream is about to serve anyway —
-        and the entry is freed as soon as the bucket is fully drained
-        (or superseded by a new version). Replay (readBetweenOffsets)
-        keeps scanning files directly.
-        """
-        import bisect
-
-        cached = self._tail_cache.get(bucket)
-        if cached is None or cached[0] != version or off < cached[2]:
-            import pyarrow.dataset as ds
-
-            tbl = _scan(files, self._target, {"bucket": bucket}, ds.field("seq") >= off)
-            seqs = tbl.column("seq").to_pylist()
-            self._tail_cache[bucket] = cached = (version, tbl, off, seqs)
-        _, tbl, _, seqs = cached
-        lo = bisect.bisect_left(seqs, off)
-        if lo >= len(seqs):
-            self._tail_cache.pop(bucket, None)  # fully drained: free it
-            return None
-        hi = len(seqs) if max_rows is None else min(len(seqs), lo + max_rows)
-        return tbl.slice(lo, hi - lo)
 
     def initialOffset(self) -> dict:
         # 'latest' reads the manifest's high-water marks (O(1) in topic
@@ -597,51 +568,27 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
             "topic": self.topic,  # checkpoint→topic pairing proof
         }
 
-    def _read_range(self, start: dict, max_rows: int | None):
-        cursors = json.loads(start.get("cursors", "{}"))
-        slices: list = []  # (bucket, seq-sorted Arrow table)
-        new_cursors = dict(cursors)
-        # Resolve the manifest version FIRST and read that pinned
-        # snapshot; the version rides in the end offset so crash
-        # recovery can replay the exact file set this batch saw (see
-        # readBetweenOffsets).
-        version = manifest.latest_version(self.root, self.topic)
-        for b, files in _bucket_files(self.root, self.topic, version):
-            off = int(cursors.get(str(b), 0))
-            got = self._tail_slice(version, b, files, off, max_rows)
-            if got is not None and got.num_rows:
-                slices.append((b, got))
-                # Advance the cursor from the DATA (max served seq + 1),
-                # not off + row count: after retention raises a bucket's
-                # floor, seq is no longer contiguous from the cursor,
-                # and a count-based cursor would lag and re-deliver the
-                # tail forever. The slice is seq-sorted, so max = last.
-                new_cursors[str(b)] = got.column("seq")[-1].as_py() + 1
+    def read(self, start: dict):
+        # The version rides in the end offset so crash recovery replays
+        # the exact file set this batch saw (see readBetweenOffsets).
+        version, maxima, floors = _log_bounds(self.root, self.topic)
+        s = json.loads(start.get("cursors", "{}"))
+        e = dict(s)
+        for b, mx in maxima.items():
+            e[b] = _admit(int(s.get(b, 0)), floors.get(b, 0), mx + 1, self.batch_size)
         end = {
-            "cursors": json.dumps(new_cursors),
+            "cursors": json.dumps(e, sort_keys=True),
             "topic": self.topic,
             "version": str(version),
         }
-        return slices, end
-
-    def read(self, start: dict):
-        # Serve the prefetch as Arrow record batches, not Python
-        # tuples: Spark's source runner passes pyarrow.RecordBatch
-        # through to the JVM Arrow stream verbatim
-        # (records_to_arrow_batches), so the per-row to_pylist +
-        # tuple-zip materialization AND the runner's per-cell
-        # tuple→Arrow reconversion both disappear from the per-trigger
-        # cost (guide §4.2: keep whole batches in Arrow across the
-        # boundary).
-        slices, end = self._read_range(start, self.batch_size)
-        batches: list = []
-        for b, tbl in slices:
-            batches.extend(_topic_arrow_batches(tbl, self._target, {"bucket": b}))
-        return iter(batches), end
+        # Arrow record batches pass to the JVM Arrow stream verbatim;
+        # a list, because Spark's prefetch cache copies the iterator
+        return iter(list(self.readBetweenOffsets(start, end))), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
-        # Deterministic replay for recovery: serve exactly [start, end)
-        # from the SAME manifest version the original batch read — a
+        # Serve exactly [start, end) from the manifest version the end
+        # offset pins — read() plans each trigger through here, and
+        # crash recovery replays the same range deterministically: a
         # truncate committed between the batch and the crash must not
         # shrink the replayed batch (the sink would see a different
         # batch N than the offset log recorded). Falls back to the
@@ -814,17 +761,14 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
                     # mid-stream discovered topic: no checkpointed
                     # cursor exists to regress below, so admit from the
                     # retained floor at the ordinary batch_size cap
-                    eff = floors.get(b, 0)
-                    cursors[b] = min(hwm, eff + self.batch_size)
+                    cursors[b] = _admit(0, floors.get(b, 0), hwm, self.batch_size)
                     continue
                 # post-restart catch-up: the checkpointed start cursor
                 # is invisible here, so offer everything retained; the
                 # batch stays executor-parallel via chunked partitions
                 cursors[b] = max(hwm, cursors.get(b, 0))
                 continue
-            lb = last.get(b, 0)
-            eff = max(lb, floors.get(b, 0))  # skip the retention hole
-            cursors[b] = max(lb, min(hwm, eff + self.batch_size))
+            cursors[b] = _admit(last.get(b, 0), floors.get(b, 0), hwm, self.batch_size)
         self._note(cursors)
         return self._pack(cursors, version)
 

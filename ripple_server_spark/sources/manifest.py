@@ -231,16 +231,12 @@ def commit(
 
 def merge_schema(m: dict, fields: list[str]) -> None:
     """Manifest-tracked schema evolution, the one policy of both
-    producers (``TopicStore.produce`` and the native sink): the first
-    writer establishes the message schema; any set difference marks
-    evolution — including a strict-SUBSET write, which leaves parquet
-    files with heterogeneous footers that readers must merge."""
-    prev = m.get("schema")
-    if prev is None:
-        m["schema"] = fields
-    elif set(prev) != set(fields):
-        m["schema"] = list(prev) + [f for f in fields if f not in prev]
-        m["schema_evolved"] = True
+    producers (``TopicStore.produce`` and the native sink): the recorded
+    schema is the ordered union of every write's ``name:type`` fields,
+    so it types every read — older files' missing columns read as
+    typed nulls, and a narrower write never drops a recorded column."""
+    prev = list(m.get("schema") or [])
+    m["schema"] = prev + [f for f in fields if f not in prev]
 
 
 def add_ranges(m: dict, ranges: dict[str, list[int]]) -> None:

@@ -44,10 +44,12 @@ from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ripple_server_spark.config import N_BUCKETS
 from ripple_server_spark.operators.relational import bucket_of
-from ripple_server_spark.sources import manifest
+from ripple_server_spark.sources import datasource, manifest
 from ripple_server_spark.sources.manifest import (  # noqa: F401  (re-exported)
     StaleGenerationError,
     StaleProducerEpochError,
@@ -378,14 +380,27 @@ def _stage_by_bucket(
 
 def _message_ddl(m: dict) -> str | None:
     """DDL of a manifest's recorded message schema plus the ``bucket``
-    partition column: what a read returns without opening a footer.
-    None when no schema is recorded, or when it records one column
-    under two types — only footer merging can type that read."""
-    fields = [f.split(":", 1) for f in m.get("schema") or []]
-    names = [n for n, _t in fields]
-    if not fields or len(set(names)) != len(names):
+    partition column: the type of every read of the topic, known
+    without opening a footer. None when no schema is recorded. A column
+    recorded under two types has no one type to read it with:
+    ValueError naming it."""
+    types: dict[str, str] = {}
+    for field in m.get("schema") or []:
+        name, typ = field.split(":", 1)
+        if types.setdefault(name, typ) != typ:
+            raise ValueError(
+                f"topic {m.get('topic')!r}: column {name!r} is recorded as "
+                f"both {types[name]} and {typ}"
+            )
+    if not types:
         return None
-    return ", ".join(f"`{n}` {t}" for n, t in fields) + ", `bucket` int"
+    return ", ".join(f"`{n}` {t}" for n, t in types.items()) + ", `bucket` int"
+
+
+@functools.lru_cache(maxsize=64)
+def _arrow_schema(ddl: str) -> "pa.Schema":
+    """Arrow form of a read's DDL, parsed once per DDL."""
+    return to_arrow_schema(StructType.fromDDL(ddl))
 
 
 class TopicStore:
@@ -411,9 +426,9 @@ class TopicStore:
     (``applied_batches`` for idempotent produce, per-bucket
     ``maxima``/``floors`` so cold opens never scan the log, and
     ``seq_ranges`` — the ``[lo, hi]`` seq range of every live file,
-    recorded by the commit that adds the file, so :meth:`consume` and
-    retention plan from the manifest without opening a footer).
-    Consequences:
+    recorded by the commit that adds the file, so :meth:`poll` and
+    retention plan from the manifest without opening a footer — and the
+    recorded message ``schema`` that types every read). Consequences:
 
     - **exactly-once produce**: a crash between the data write and the
       commit leaves orphan files that no manifest references — invisible
@@ -829,9 +844,9 @@ class TopicStore:
                     "FIFO order key — native-sink parity)"
                 )
         # Message schema of the staged files (bucket is a partition dir,
-        # not a file column): tracked in the manifest so reads only pay
-        # footer-merging (mergeSchema) after a producer actually evolved
-        # the schema — the Delta/Iceberg metadata-tracked-evolution shape.
+        # not a file column): recorded in the manifest, which types every
+        # read without opening a footer — the Delta/Iceberg
+        # metadata-tracked-evolution shape.
         # Derived driver-side BEFORE the write; seq lands at its original
         # position when the batch carries one (consume->produce round
         # trip), appended otherwise — the old withColumn-overwrite order.
@@ -916,48 +931,29 @@ class TopicStore:
         """Snapshot read: exactly the files of the latest (or a pinned)
         manifest version — concurrent compaction/retention cannot pull
         files out from under the scan. ``basePath`` keeps ``bucket``
-        a partition column, so bucket pruning works as before."""
-        data = self.data_dir(topic)
+        a partition column, so bucket pruning works as before.
+
+        The manifest owns the schema, not the footers (Delta/Iceberg
+        semantics): the scan is typed by the recorded message schema, so
+        a column an older file lacks — or that no file holds yet, after
+        an evolution declared by an empty produce — reads as typed
+        nulls, and no footer is merged. An empty topic (subscribed
+        before any produce, or aged out by retention) is an empty frame
+        of that schema, or of the structural columns the log guarantees
+        when nothing was ever produced."""
         if version is None:
             _v, m = self.latest_manifest(topic)
         else:
             m = manifest.load(self.root, topic, version)
+        ddl = _message_ddl(m) or "seq bigint, bucket int"
         if not m["files"]:
-            # An empty topic is a legitimate broker state (a consumer
-            # may subscribe before any producer publishes; retention
-            # may age out every file): serve an empty frame, not an
-            # inference error. Schema = the manifest-recorded message
-            # schema when a produce (or a truncate of everything) has
-            # established one, else the minimal structural columns the
-            # log itself guarantees.
-            return self.spark.createDataFrame(
-                [], _message_ddl(m) or "seq bigint, bucket int"
-            )
-        paths = [os.path.join(data, rel) for rel in m["files"]]
-        # mergeSchema only when the manifest recorded an actual schema
-        # evolution: without it the read silently adopts one file's
-        # schema and DROPS evolved columns; with it unconditionally,
-        # every read pays driver-side footer merging. Union semantics
-        # (old rows null out new columns) match Delta/Iceberg evolution;
-        # compaction rewrites to one uniform schema and clears the flag.
-        reader = self.spark.read.option("basePath", data)
-        if m.get("schema_evolved"):
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*paths)
-        # The manifest owns the schema, not the footers (Delta/Iceberg
-        # semantics): a column recorded by an evolution that appended no
-        # data yet (metadata-only commit above) exists in NO file, so
-        # footer merging cannot surface it — materialize it as typed
-        # nulls, exactly what pre-evolution rows get for evolved
-        # columns that DO have files.
-        recorded = m.get("schema")
-        if recorded:
-            have = set(df.columns)
-            for s in recorded:
-                name, typ = s.split(":", 1)
-                if name not in have:
-                    df = df.withColumn(name, F.lit(None).cast(typ))
-        return df
+            return self.spark.createDataFrame([], ddl)
+        data = self.data_dir(topic)
+        return (
+            self.spark.read.option("basePath", data)
+            .schema(ddl)
+            .parquet(*[os.path.join(data, rel) for rel in m["files"]])
+        )
 
     # -- maintenance -------------------------------------------------------
     def compact(self, topic: str, base_version: int | None = None) -> None:
@@ -1032,10 +1028,6 @@ class TopicStore:
                 kept = [f for f in m["files"] if f not in compacted_input]
                 m["files"] = new_files + kept
                 manifest.add_ranges(m, ranges)
-                # compacted files share one (merged) schema; only files a
-                # concurrent producer landed mid-compact can still diverge
-                if not kept:
-                    m["schema_evolved"] = False
                 return m
 
             try:
@@ -1377,8 +1369,6 @@ class TopicStore:
                 m["cleaned_files"] = (
                     sorted(new_files) if retained_tombstones == 0 else []
                 )
-                if not kept:
-                    m["schema_evolved"] = False
                 return m
 
             try:
@@ -1528,26 +1518,30 @@ class TopicStore:
             for k, v in self._read_offsets_doc(consumer_id, topic)["offsets"].items()
         }
 
-    def consume(
+    def poll(
         self, consumer_id: str, topic: str, bucket: int, count: int
-    ) -> tuple[DataFrame, int]:
+    ) -> tuple["pa.Table", int]:
         """AskQuery{Count}: next ``count`` messages of one bucket from
-        the committed offset, in seq order. Non-destructive; the read
-        does not move the offset — call :meth:`commit` after processing
-        (at-least-once).
+        the committed offset, in seq order, read on the driver with no
+        Spark job. Non-destructive; the read does not move the offset —
+        call :meth:`commit` after processing (at-least-once).
 
-        Returns (batch_df, next_offset). The batch is exactly seq ∈
-        [offset, offset+delivered) — the reference's clamped
-        SubArray(offset, offset+Count) (queue.go:59-61) — and its cost
-        does not grow with the log: ONE manifest version serves the
-        retention floor, the high-water mark and the file list, and
-        the manifest's per-file ``seq_ranges`` plan only the files of
-        this bucket that overlap the range (:func:`manifest.files_for`).
-        The scan takes its schema from the manifest's recorded message
-        schema (evolved columns read back as typed nulls), so Spark runs
-        no listing or inference job, and the ≤count rows are ordered by
-        a single-partition sort: materializing the batch is one job.
-        """
+        Returns (table, next_offset). The table is exactly seq ∈
+        [offset, next_offset) — the reference's clamped
+        SubArray(offset, offset+Count) (queue.go:59-61) — as a
+        ``pyarrow.Table`` of the manifest's recorded message schema plus
+        ``bucket`` (evolved columns as typed nulls). ONE manifest version
+        serves the retention floor, the high-water mark, the schema and
+        the file list, and its per-file ``seq_ranges`` plan only the
+        files of this bucket that overlap the range
+        (:func:`manifest.files_for`), so the cost does not grow with the
+        log. ``count`` bounds the rows held on the driver, like Kafka's
+        ``max.poll.records``."""
+        _ddl, tbl, end = self._poll(consumer_id, topic, bucket, count)
+        return tbl, end
+
+    def _poll(self, consumer_id: str, topic: str, bucket: int, count: int):
+        """:meth:`poll` plus the DDL of its table."""
         offset = self.committed_offsets(consumer_id, topic).get(bucket, 0)
         _v, m = self.latest_manifest(topic)
         # Retention clamp: offsets below the retained floor resume at
@@ -1557,40 +1551,26 @@ class TopicStore:
         # invariant), so delivered = min(count, max_seq - offset + 1).
         mx = int(m["maxima"].get(str(bucket), -1))
         end = offset + max(0, min(count, mx - offset + 1))
+        ddl = _message_ddl(m) or "seq bigint, bucket int"
         rels = manifest.files_for(m, bucket, offset, end) if end > offset else []
-        ddl = _message_ddl(m)
-        if not rels:
-            return self.spark.createDataFrame(
-                [], ddl or "seq bigint, bucket int"
-            ), end
         data = self.data_dir(topic)
-        reader = self.spark.read.option("basePath", data)
-        if ddl is not None:
-            reader = reader.schema(ddl)
-        elif m.get("schema_evolved"):
-            reader = reader.option("mergeSchema", "true")
-        # Above this many paths per scan Spark lists files with a Spark
-        # job; a lagging consumer's poll can span more files than that,
-        # so it scans them in groups that the driver lists itself.
-        group = int(
-            self.spark.conf.get(
-                "spark.sql.sources.parallelPartitionDiscovery.threshold"
-            )
+        part = datasource.BucketPartition(
+            [os.path.join(data, r) for r in rels], bucket, offset, None, upto=end
         )
-        paths = [os.path.join(data, r) for r in rels]
-        scans = [
-            reader.parquet(*paths[i : i + group])
-            for i in range(0, len(paths), group)
-        ]
-        batch = functools.reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), scans
-        )
-        batch = (
-            batch.filter((F.col("seq") >= offset) & (F.col("seq") < end))
-            .coalesce(1)
-            .sortWithinPartitions("seq")
-        )
-        return batch, end
+        return ddl, datasource._bucket_table(part, _arrow_schema(ddl)), end
+
+    def consume(
+        self, consumer_id: str, topic: str, bucket: int, count: int
+    ) -> tuple[DataFrame, int]:
+        """:meth:`poll` as a DataFrame: the same rows, schema and
+        next_offset, for callers that keep processing in Spark.
+        Returns (batch_df, next_offset). The batch is the polled Arrow
+        table handed to Spark, so at most ``count`` rows are
+        materialized on the driver (Kafka's ``max.poll.records``), and
+        consuming it is one Spark job. It is one partition, so even
+        per-partition processing sees the rows in seq order."""
+        ddl, tbl, end = self._poll(consumer_id, topic, bucket, count)
+        return self.spark.createDataFrame(tbl, schema=ddl).coalesce(1), end
 
     def offsets_for_times(self, topic: str, epoch_ms: int) -> dict[int, int]:
         """Kafka ``offsetsForTimes``: per-bucket offset of the FIRST
@@ -2284,7 +2264,6 @@ class TopicStore:
                 "floors",
                 "applied_batches",
                 "schema",
-                "schema_evolved",
                 "seq_ranges",
             ):
                 if key in target:
@@ -2331,7 +2310,7 @@ class TopicStore:
           checked first — a restore usually also looks like a
           truncate/compact delta)
         - no file change                    -> metadata (e.g. an
-          applied-batch or schema-flag-only commit)
+          applied-batch or schema-only commit)
 
         ``vacuum`` never commits a manifest, but it PRUNES old versions
         (bounded log), so history covers the RETAINED tail; after a

@@ -199,8 +199,11 @@ def test_schema_evolution_through_sink(spark, store, sf_dir):
     ).withColumn("event_id", F.col("event_id") + 1000)
     _write(evolved, store, "w_evo")
     meta = store.topic_meta("w_evo")
-    assert meta.get("schema_evolved") is True
     assert any(f.startswith("lang:") for f in meta["schema"])
+    got = store.read_topic("w_evo")
+    assert dict(got.dtypes)["lang"] == "string"
+    langs = [r["lang"] for r in got.select("lang").collect()]
+    assert langs.count(None) == 50 and langs.count("en") == 50
 
 
 def test_raced_staged_files_are_vacuum_orphans(spark, store, sf_dir):
@@ -370,16 +373,18 @@ def test_sink_established_topic_records_seq_in_schema(spark, store, sf_dir):
     """Review r08: the sink must record the same message schema produce
     does (columns + the assigned seq). A sink-established topic whose
     files all age out must still serve the seq column from the
-    recorded-schema empty frame, and a later produce() must not flag a
-    spurious schema evolution."""
+    recorded-schema empty frame, and a later produce() must not record
+    a spurious schema evolution."""
     store.create_topic("w_schema", n_buckets=2)
     df = _events(spark, sf_dir, n=60)
     _write(df, store, "w_schema")
     meta = store.topic_meta("w_schema")
     assert "seq:bigint" in meta["schema"]
     store.produce(df.withColumn("event_id", F.col("event_id") + 5000), "w_schema")
-    meta2 = store.topic_meta("w_schema")
-    assert meta2.get("schema_evolved") is not True, meta2["schema"]
+    assert store.topic_meta("w_schema")["schema"] == meta["schema"]
+    got = store.read_topic("w_schema")
+    assert got.columns == [*df.columns, "seq", "bucket"]
+    assert got.count() == 120
     # age out everything: the empty frame still carries seq for consume()
     maxima = store._bucket_maxima("w_schema")
     store.truncate("w_schema", before_seq=max(maxima.values()) + 1)
@@ -388,13 +393,11 @@ def test_sink_established_topic_records_seq_in_schema(spark, store, sf_dir):
 
 
 def test_sink_subset_schema_write_flags_evolution(spark, store, sf_dir):
-    """ADVICE r08 (datasink._merge_schema): a sink task writing a strict
-    SUBSET of the recorded schema leaves heterogeneous parquet footers
-    in the topic, so the manifest must flag schema_evolved (forcing
-    mergeSchema on read) exactly as produce() does on any set
-    difference — otherwise read_topic adopts an arbitrary file's narrow
-    schema and re-materializes the committed wide columns as all-NULL,
-    nondeterministically by listing order."""
+    """ADVICE r08: a sink task writing a strict SUBSET of the recorded
+    schema leaves heterogeneous parquet footers in the topic; reads are
+    typed by the recorded (wide) schema, never by one file's narrow
+    footer, so the committed wide columns are never re-materialized as
+    all-NULL, whatever the listing order."""
     store.create_topic("w_subset", n_buckets=2)
     wide = _events(spark, sf_dir, n=40).withColumn("lang", F.lit("en"))
     _write(wide, store, "w_subset")
@@ -402,8 +405,10 @@ def test_sink_subset_schema_write_flags_evolution(spark, store, sf_dir):
         "event_id", F.col("event_id") + 1000
     )
     _write(narrow, store, "w_subset")  # strict subset: no NEW columns
-    meta = store.topic_meta("w_subset")
-    assert meta.get("schema_evolved") is True, meta["schema"]
+    batches = [store.consume("c-subset", "w_subset", b, 1000)[0] for b in (0, 1)]
+    polled = batches[0].unionByName(batches[1])
+    assert polled.filter(F.col("lang") == "en").count() == 40
+    assert polled.filter(F.col("lang").isNull()).count() == 40
     got = store.read_topic("w_subset")
     assert "lang" in got.columns
     # the wide wave's lang values survive (never silently nulled)

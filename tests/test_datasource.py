@@ -139,10 +139,9 @@ def test_stream_reader_delivers_and_resumes(spark, store, tmp_path, tier):
 @pytest.mark.parametrize("tier", ["partitioned", "simple"])
 def test_stream_cursor_survives_retention_gap(spark, sf_dir, tmp_path, tier):
     """After truncate() raises a bucket's floor, the stream cursor must
-    advance past the gap (simple tier: from the max served seq;
-    partitioned tier: latestOffset clamps the cursor to the manifest
-    floor) — a count-based cursor would lag behind the gap and
-    re-deliver the tail of every bucket forever."""
+    advance past the gap (both tiers clamp the cursor to the manifest
+    floor when they plan a trigger) — a count-based cursor would lag
+    behind the gap and re-deliver the tail of every bucket forever."""
     spark.dataSource.register(RippleTopicDataSource)
     st = TopicStore(spark, str(tmp_path / "gap_topics"))
     st.create_topic("g1", n_buckets=2)
@@ -2137,7 +2136,8 @@ def test_mid_stream_discovered_topic_admission_is_capped(spark, sf_dir, tmp_path
     assert sum(n for (_e, t, _b, n) in batches if t == "cap_a") == 20
 
 
-def test_stream_drains_key_compacted_topic_with_seq_gaps(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("tier", ["partitioned", "simple"])
+def test_stream_drains_key_compacted_topic_with_seq_gaps(spark, sf_dir, tmp_path, tier):
     """Key compaction leaves seq GAPS; the streaming source's seq-range
     admission must deliver exactly the surviving rows (no phantom
     waits, no duplicates), and a restart mid-history replays exactly —
@@ -2169,6 +2169,7 @@ def test_stream_drains_key_compacted_topic_with_seq_gaps(spark, sf_dir, tmp_path
             .option("root", st.root)
             .option("topic", "gp")
             .option("batch_size", 40)
+            .option("reader_tier", tier)
             .load()
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ck)

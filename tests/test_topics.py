@@ -6,6 +6,8 @@ contiguous gap-free sequences.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -257,9 +259,11 @@ def test_schema_evolution_on_produce(spark, tmp_path):
 
 
 def test_schema_evolution_flag_and_compact_reset(spark, tmp_path):
-    """The manifest tracks evolution: un-evolved topics read without
-    mergeSchema; an evolving produce sets the flag; compaction rewrites
-    to one uniform schema and clears it (evolved column survives)."""
+    """The manifest's recorded schema types every read: an un-evolved
+    topic reads its own columns; after an evolving produce the old rows
+    read the new column as typed nulls; compaction rewrites to one
+    uniform schema and the same rows read back (evolved column
+    survives)."""
     from ripple_server_spark.catalog import load_table
     from tests.conftest import SF_SMOKE
 
@@ -267,20 +271,30 @@ def test_schema_evolution_flag_and_compact_reset(spark, tmp_path):
     store = TopicStore(spark, str(tmp_path))
     store.create_topic("evo2", n_buckets=2)
     store.produce(ev.filter(F.col("event_id") < 100), "evo2", key_col="user_id")
-    assert not store.latest_manifest("evo2")[1].get("schema_evolved")
+    df = store.read_topic("evo2")
+    assert df.columns == ["event_id", "user_id", "ts", "seq", "bucket"]
+    assert df.count() == 100
     store.produce(
         ev.filter((F.col("event_id") >= 100) & (F.col("event_id") < 200))
         .withColumn("tag", F.lit("v2")),
         "evo2",
         key_col="user_id",
     )
-    assert store.latest_manifest("evo2")[1]["schema_evolved"] is True
+
+    def rows():
+        df = store.read_topic("evo2")
+        assert df.columns == ["event_id", "user_id", "ts", "seq", "tag", "bucket"]
+        assert dict(df.dtypes)["tag"] == "string"
+        return sorted(tuple(r) for r in df.collect())
+
+    evolved = rows()
+    assert len(evolved) == 200
+    assert sum(r[4] is None for r in evolved) == 100  # old rows
+    assert sum(r[4] == "v2" for r in evolved) == 100
+    batch, _ = store.consume("c-evo2", "evo2", bucket=0, count=10_000)
+    assert "tag" in batch.columns
     store.compact("evo2")
-    m = store.latest_manifest("evo2")[1]
-    assert m["schema_evolved"] is False
-    df = store.read_topic("evo2")
-    assert "tag" in df.columns and df.count() == 200
-    assert df.filter(F.col("tag") == "v2").count() == 100
+    assert rows() == evolved
 
 
 def test_edge_cases_empty_produce_past_hwm_noop_truncate(spark, sf_dir, tmp_path):
@@ -1161,10 +1175,12 @@ def polled(spark, sf_dir, tmp_path_factory):
     return st
 
 
-def test_caught_up_consume_plans_only_overlapping_files(polled):
-    """Range pruning: a poll near the tail plans exactly the files of
+def test_caught_up_consume_plans_only_overlapping_files(polled, monkeypatch):
+    """Range pruning: a poll near the tail scans exactly the files of
     its bucket whose manifest seq range overlaps [offset, next)."""
     import os
+
+    from ripple_server_spark.sources import datasource
 
     st = polled
     m = st.latest_manifest("pp")[1]
@@ -1172,6 +1188,14 @@ def test_caught_up_consume_plans_only_overlapping_files(polled):
     mx = int(m["maxima"][str(b)])
     st.register_consumer("tail", "pp")
     st.commit("tail", "pp", b, mx - 4)
+    scanned: list[str] = []
+    real_scan = datasource._scan
+
+    def recording(files, *args):
+        scanned.extend(files)
+        return real_scan(files, *args)
+
+    monkeypatch.setattr(datasource, "_scan", recording)
     df, nxt = st.consume("tail", "pp", b, 100)
     assert nxt == mx + 1
     want = {
@@ -1179,37 +1203,58 @@ def test_caught_up_consume_plans_only_overlapping_files(polled):
         for rel, (lo, hi) in m["seq_ranges"].items()
         if manifest.bucket_of(rel) == b and hi >= mx - 4 and lo <= mx
     }
-    got = {
-        os.path.relpath(f.removeprefix("file://"), st.data_dir("pp"))
-        for f in df.inputFiles()
-    }
+    got = {os.path.relpath(f, st.data_dir("pp")) for f in scanned}
     assert got == want
     in_bucket = [r for r in m["files"] if manifest.bucket_of(r) == b]
     assert len(got) < len(in_bucket) / 4
     assert [r["seq"] for r in df.collect()] == list(range(mx - 4, mx + 1))
 
 
+@contextmanager
+def _jobs_in(sc, group: str):
+    """Collect the ids of the Spark jobs run inside the block, under a
+    job group of its own; the caller's job group is restored after."""
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    caller = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup(group, group)
+    jobs: list[int] = []
+    try:
+        yield jobs
+    finally:
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+        for k, v in caller.items():
+            sc.setLocalProperty(k, v)
+
+
 def test_consume_materializes_in_one_job_in_seq_order(polled):
     """A poll whose range spans many files — more than Spark lists
-    without a job — is one Spark job (no listing, inference or
-    global-sort jobs) and returns its rows seq-ordered."""
+    without a job — runs no Spark job at all, and consuming the same
+    range as a DataFrame is one job; both return the rows seq-ordered."""
     st = polled
     sc = st.spark.sparkContext
     st.register_consumer("one_job", "pp")
     m = st.latest_manifest("pp")[1]
-    for b in (0, 5):
-        group = f"consume-jobs-{b}"
-        sc.setJobGroup(group, group)
-        try:
-            df, nxt = st.consume("one_job", "pp", b, 10_000)
-            tbl = df.toArrow()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-        n_files = sum(1 for r in m["files"] if manifest.bucket_of(r) == b)
-        assert n_files > 32
-        assert tbl["seq"].to_pylist() == list(range(nxt))
-        assert set(tbl["bucket"].to_pylist()) == {b}
+    sc.setJobGroup("caller", "the caller's own group")
+    try:
+        for b in (0, 5):
+            n_files = sum(1 for r in m["files"] if manifest.bucket_of(r) == b)
+            assert n_files > 32
+            with _jobs_in(sc, f"poll-jobs-{b}") as jobs:
+                polled_tbl, nxt = st.poll("one_job", "pp", b, 10_000)
+            assert jobs == []
+            assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+            with _jobs_in(sc, f"consume-jobs-{b}") as jobs:
+                df, nxt2 = st.consume("one_job", "pp", b, 10_000)
+                tbl = df.toArrow()
+            assert len(jobs) == 1
+            assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+            assert nxt2 == nxt
+            assert polled_tbl["seq"].to_pylist() == list(range(nxt))
+            assert tbl["seq"].to_pylist() == list(range(nxt))
+            assert set(tbl["bucket"].to_pylist()) == {b}
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
 
 
 def test_consume_schema_matches_read_topic_on_evolved_topic(spark, sf_dir, tmp_path):
@@ -1228,7 +1273,9 @@ def test_consume_schema_matches_read_topic_on_evolved_topic(spark, sf_dir, tmp_p
         "ep",
     )
     st.produce(ev.limit(0).withColumn("score", F.lit(1.5)), "ep")
-    assert st.latest_manifest("ep")[1]["schema_evolved"]
+    evolved = st.read_topic("ep")
+    assert evolved.columns[-3:] == ["tag", "score", "bucket"]
+    assert evolved.filter(F.col("score").isNotNull()).count() == 0
     st.register_consumer("evo", "ep")
     for b in range(2):
         df, nxt = st.consume("evo", "ep", b, 10_000)
@@ -1244,4 +1291,111 @@ def test_consume_schema_matches_read_topic_on_evolved_topic(spark, sf_dir, tmp_p
         got = [r.asDict() for r in df.select(*cols).collect()]
         assert got == [r.asDict() for r in ref.select(*cols).collect()]
         assert any(r["tag"] is None for r in got) and any(r["tag"] for r in got)
+
+
+@pytest.fixture(scope="module")
+def one_range(spark, sf_dir, tmp_path_factory, polled):
+    """One poll range per case, as (store, topic, consumer, bucket,
+    count): an evolved column the bucket's first file lacks, an offset
+    below a truncate floor, a lagging poll over more files than Spark
+    lists without a job, and an empty range at the high-water mark."""
+    st = TopicStore(spark, str(tmp_path_factory.mktemp("one_range")))
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    st.create_topic("evo", n_buckets=2)
+    st.produce(ev.filter(F.col("event_id") < 100), "evo")
+    st.produce(
+        ev.filter((F.col("event_id") >= 100) & (F.col("event_id") < 200)).withColumn(
+            "tag", F.lit("v2")
+        ),
+        "evo",
+    )
+    st.create_topic("floor", n_buckets=2)
+    for lo in (0, 60, 120):
+        st.produce(
+            ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < lo + 60)),
+            "floor",
+        )
+    assert st.truncate("floor", before_seq=25) >= 1
+    assert st._bucket_floors("floor")[1] > 0
+    polled.register_consumer("lagging", "pp")
+    polled.commit("lagging", "pp", 6, 0)
+    polled.register_consumer("at_hwm", "pp")
+    polled.commit("at_hwm", "pp", 2, polled._bucket_maxima("pp")[2] + 1)
+    st.register_consumer("eq", "evo")
+    st.register_consumer("eq", "floor")
+    return {
+        "evolved_column_missing_from_first_file": (st, "evo", "eq", 1, 10_000),
+        "offset_below_truncate_floor": (st, "floor", "eq", 1, 40),
+        "lagging_poll_over_many_files": (polled, "pp", "lagging", 6, 10_000),
+        "empty_range": (polled, "pp", "at_hwm", 2, 100),
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "evolved_column_missing_from_first_file",
+        "offset_below_truncate_floor",
+        "lagging_poll_over_many_files",
+        "empty_range",
+    ],
+)
+def test_poll_consume_and_read_topic_return_one_range(one_range, case):
+    """poll, consume and read_topic filtered to [offset, next_offset)
+    return the same seqs, columns and values for one bucket range."""
+    st, topic, consumer, b, count = one_range[case]
+    offset = max(
+        st.committed_offsets(consumer, topic).get(b, 0),
+        st._bucket_floors(topic).get(b, 0),
+    )
+    tbl, nxt = st.poll(consumer, topic, b, count)
+    df, nxt2 = st.consume(consumer, topic, b, count)
+    ref = (
+        st.read_topic(topic)
+        .filter((F.col("bucket") == b) & (F.col("seq") >= offset) & (F.col("seq") < nxt))
+        .orderBy("seq")
+    )
+    assert nxt2 == nxt
+    got = {"poll": tbl, "consume": df.toArrow(), "read_topic": ref.toArrow()}
+    for name, t in got.items():
+        assert t.column_names == ref.columns, name
+        assert t.to_pylist() == got["read_topic"].to_pylist(), name
+    seqs = tbl["seq"].to_pylist()
+    if case == "empty_range":
+        assert seqs == [] and nxt == offset
+    else:
+        assert seqs == list(range(offset, nxt)) and seqs
+    if case == "evolved_column_missing_from_first_file":
+        tags = tbl["tag"].to_pylist()
+        assert None in tags and "v2" in tags
+    if case == "offset_below_truncate_floor":
+        assert st.committed_offsets(consumer, topic).get(b, 0) < offset
+    if case == "lagging_poll_over_many_files":
+        m = st.latest_manifest(topic)[1]
+        assert len(manifest.files_for(m, b, offset, nxt)) > 32
+
+
+def test_type_clash_fails_every_read_with_the_column_named(spark, tmp_path):
+    """A column produced as int and then as bigint has no one type to
+    read it with: poll, consume and read_topic each raise ValueError
+    naming it, instead of failing deep inside a Spark footer merge."""
+    import datetime as dt
+
+    st = TopicStore(spark, str(tmp_path / "clash"))
+    st.create_topic("clash", n_buckets=1)
+    t0 = dt.datetime(2026, 1, 1)
+    for typ in ("int", "bigint"):
+        st.produce(
+            spark.createDataFrame(
+                [(1, t0, 7, 3)], f"event_id long, ts timestamp, user_id long, x {typ}"
+            ),
+            "clash",
+        )
+    st.register_consumer("c", "clash")
+    with pytest.raises(ValueError, match="column 'x'"):
+        st.poll("c", "clash", 0, 10)
+    with pytest.raises(ValueError, match="column 'x'"):
+        st.consume("c", "clash", 0, 10)
+    with pytest.raises(ValueError, match="column 'x'"):
+        st.read_topic("clash")
         assert all(r["score"] is None for r in got)
