@@ -20,13 +20,15 @@ Execution model — EVERY write task is an independent producer client:
 
 - each task buffers its Arrow batches, routes rows to buckets
   (``pmod(key, n_buckets)``, NULL -> 0, same as ``TopicStore.produce``),
-  sorts by (bucket, ts, event_id), and appends through the SAME
-  transaction produce uses (``manifest.append``: epoch check, applied-id
-  idempotence, atomic claim of version v+1, seq-race restage) — all
-  executor-side, rows never pass through the driver;
+  sorts by (bucket, ts, event_id) in Arrow, stages them through the
+  SAME kernel produce stages through (``staging.stage_kernel``: seq
+  assignment, file naming, row-group flush, seq ranges) and appends
+  through the SAME transaction (``manifest.append``: epoch check,
+  applied-id idempotence, atomic claim of version v+1, seq-race
+  restage) — all executor-side, rows never pass through the driver;
 - seqs stay contiguous per bucket: a task claims ``[maxima+1, +n)``
-  atomically with its manifest commit; on a lost race it rewrites its
-  rows with seqs from the new base (pure Arrow add-constant) and
+  atomically with its manifest commit; on a lost race it restages its
+  sorted rows through the kernel with seqs from the new base and
   retries, scoped to one task's rows;
 - FIFO within a bucket = task commit order, each task's rows internally
   ordered by (ts, event_id) — the arrival-order contract of the
@@ -81,7 +83,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ripple_server_spark.config import N_BUCKETS
-from ripple_server_spark.sources import manifest
+from ripple_server_spark.sources import manifest, staging
 
 
 class TaskCommit(WriterCommitMessage):
@@ -107,10 +109,11 @@ def _task_append(
 ) -> TaskCommit:
     """Append one task's Arrow batches as a producer transaction.
 
-    Runs entirely executor-side: route -> sort -> stage parquet directly
-    into the bucket dirs (invisible until the manifest commit), with
-    ``manifest.append`` claiming the contiguous seqs; a lost seq race
-    restages with shifted seqs. Raced/leftover staged files are
+    Runs entirely executor-side: route -> sort (once) -> stage parquet
+    through ``staging.stage_kernel`` directly into the bucket dirs
+    (invisible until the manifest commit), with ``manifest.append``
+    claiming the contiguous seqs; a lost seq race restages the same
+    sorted rows against the new base. Raced/leftover staged files are
     crash-orphan-equivalent (vacuum reclaims them).
 
     ``producer_epoch`` (``option("producer_epoch", N)``) opts this
@@ -120,8 +123,6 @@ def _task_append(
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from ripple_server_spark.sources import fsio
 
     batches = [b for b in batches if b.num_rows]
     if not batches:
@@ -138,48 +139,30 @@ def _task_append(
                 "+ the (ts, event_id) FIFO order key — produce parity)"
             )
     data_dir = os.path.join(root, "topics", topic, "data")
-    parts: dict[int, pa.Table] = {}
+    file_cols = [*tbl.column_names, "seq"]
+    routed = None
 
     def stage(m: dict) -> dict[str, list[int]]:
-        if not parts:
+        nonlocal routed
+        if routed is None:
             # bucket = pmod(key, n) with NULL -> 0
             # (operators/relational.bucket_of + produce's coalesce),
-            # routed once by the bucket count of the first base
+            # routed once by the bucket count of the first base, and
+            # sorted once in produce's FIFO order: NULLS FIRST, as the
+            # JVM sort in front of produce's kernel (pyarrow's default
+            # nulls-at-end would give NULL-ts rows the highest seqs
+            # here but the lowest via produce; test-pinned)
             key = pc.fill_null(pc.cast(tbl[key_col], pa.int64()), 0)
             k = key.to_numpy(zero_copy_only=False)
             b = (k % int(m["n_buckets"])).astype(np.int32)  # non-negative for n>0
-            routed = tbl.append_column("__b", pa.array(b))
-            # NULLS FIRST to match produce's (ts, event_id) FIFO order
-            # key exactly (the staging kernel's JVM sort): pyarrow's
-            # default is nulls-at-END, which gave NULL-ts rows the
-            # HIGHEST seqs via the sink but the lowest via produce() on
-            # the same topic (ADVICE r12 drift fix; test-pinned in
-            # test_datasink).
-            routed = routed.sort_by(
-                [("__b", "ascending"), ("ts", "ascending"), ("event_id", "ascending")],
+            routed = tbl.append_column("bucket", pa.array(b)).sort_by(
+                [("bucket", "ascending"), ("ts", "ascending"), ("event_id", "ascending")],
                 null_placement="at_start",
             )
-            for x in np.unique(b):
-                parts[int(x)] = routed.filter(
-                    pc.equal(routed["__b"], int(x))
-                ).drop_columns("__b")
-        tag = uuid.uuid4().hex[:12]
-        ranges: dict[str, list[int]] = {}
-        for bb, sub in parts.items():
-            lo = int(m.get("maxima", {}).get(str(bb), -1)) + 1
-            seq = pa.array(np.arange(sub.num_rows, dtype=np.int64) + lo)
-            fsio.DATA_FS.makedirs(os.path.join(data_dir, f"bucket={bb}"))
-            rel = f"bucket={bb}/dsw-{tag}.parquet"
-            # TIMESTAMP(MICROS) matches produce's staging kernel — one
-            # physical ts type across a topic's round-9+ files, and
-            # unlike the INT96 both writers used before round 9, micros
-            # columns carry min/max statistics so time seeks/retention
-            # prune row groups (readers handle mixed-era topics)
-            fsio.DATA_FS.write_table(
-                sub.append_column("seq", seq), os.path.join(data_dir, rel)
-            )
-            ranges[rel] = [lo, lo + sub.num_rows - 1]
-        return ranges
+        base = {int(b): int(x) for b, x in m.get("maxima", {}).items()}
+        kernel = staging.stage_kernel(data_dir, base, file_cols, prefix="dsw")
+        out = kernel(iter(routed.to_batches()))
+        return staging.staged_ranges(r for rb in out for r in rb.to_pylist())
 
     committed = manifest.append(
         root, topic, stage, fields, applied_id=applied_id, producer_epoch=producer_epoch

@@ -97,6 +97,9 @@ TOPIC_SCHEMA_DDL = (
     "value double, props string, seq long, bucket int"
 )
 _SEQ_END = 2**63 - 1  # exclusive upper bound of an open-ended seq range
+# Catch-up chunk sizing target: bytes of bucket data per chunk task of
+# the partitioned tier's uncapped first offer (see partitions()).
+_CATCH_UP_CHUNK_BYTES = 32 << 20
 
 
 class BucketPartition(InputPartition):
@@ -677,12 +680,6 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
         self.start_at = _check_start_at(options.get("start_at", "earliest"))
         self.schema = schema
         self._target = to_arrow_schema(schema)
-        # Catch-up chunk sizing target (bytes of bucket data per chunk
-        # task) — see partitions(); an option so a deployment can trade
-        # task granularity against decode overlap without code changes.
-        self._chunk_target_bytes = int(
-            options.get("catch_up_chunk_bytes", 32 << 20)
-        )
         # Last planned/committed per-bucket cursors — the admission
         # anchor. None until initialOffset/partitions/commit runs
         # (i.e. until the first offset state of this reader's life).
@@ -825,7 +822,7 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
             # chunk count by the pruning granularity the driver can see
             # without opening footers: at least one chunk per FILE in
             # the span (every file is >= 1 row group) plus one per
-            # catch_up_chunk_bytes of span bytes (row groups inside a
+            # _CATCH_UP_CHUNK_BYTES of span bytes (row groups inside a
             # large compacted file are far smaller than that, so decode
             # overlap per chunk stays bounded while a one-file backlog
             # still fans out). Steady-state triggers (span <=
@@ -837,7 +834,7 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
                 except OSError:
                     nbytes = 0
                 cap = max(
-                    len(span_files), -(-nbytes // self._chunk_target_bytes), 1
+                    len(span_files), -(-nbytes // _CATCH_UP_CHUNK_BYTES), 1
                 )
                 want = min(want, cap)
             width = -(-span // want)

@@ -1,21 +1,20 @@
 """Filesystem seam for executor-direct DATA-file writes (r13,
 VERDICT r12 item 7).
 
-Three hot paths bypass Spark's committer and write parquet straight to
-final locations from executor workers — produce/compaction staging
-(``topics._produce_stage_kernel``), the native sink's task staging (the
-``stage`` callback ``datasink._task_append`` hands to
-``manifest.append``), and the rollup's per-hour partition write
+Two kernels bypass Spark's committer and write parquet straight to
+final locations from executor workers — the topic staging kernel
+(``staging.stage_kernel``, behind produce, both compactions and the
+native sink's write tasks) and the rollup's per-hour partition write
 (``rollup._write_hours``). The staged files' mtime refresh before an
-append or compaction commit (``manifest.touch``) goes through the same
+append or rewrite commit (``manifest.touch``) goes through the same
 seam. Through round 12 they called ``os.*`` /
 ``pyarrow.parquet`` directly, which silently assumed a POSIX shared
-filesystem on the engine's two hottest write paths. This module is the
+filesystem on the engine's hottest write paths. This module is the
 ONE swap point: every executor-direct data write goes through
 ``DATA_FS``, whose default is the POSIX implementation below, and a
 deployment whose topic store lives on non-POSIX storage replaces it
 once (``fsio.DATA_FS = MyFS()`` in the engine bootstrap shipped to
-workers) instead of patching three kernels. fsspec is the natural
+workers) instead of patching each kernel. fsspec is the natural
 backing for such an implementation; it is not vendored here because
 this environment is offline — the seam is the contract, the POSIX
 class the reference implementation.
@@ -47,7 +46,7 @@ class PosixDataFS:
 
     def parquet_writer(self, path: str, schema):
         """An open ``pyarrow.parquet.ParquetWriter`` for streaming
-        row-group appends (the produce/compaction staging kernel)."""
+        row-group appends (the topic staging kernel)."""
         import pyarrow.parquet as pq
 
         return pq.ParquetWriter(path, schema)

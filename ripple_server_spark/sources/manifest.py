@@ -1,7 +1,8 @@
 """The manifest log of one topic: the single implementation of its path
 layout, topic-name validation, version listing, torn-read-hardened load,
 atomic version-slot claim, optimistic commit loop, the append
-transaction both producers share, and the seq-range read planner.
+transaction both producers share, the rewrite transaction both
+compactions share, and the seq-range read planner.
 
 Layout: ``<root>/topics/<topic>/_log/<version:020d>.json``. Every
 version is a FULL snapshot of the topic's state (live ``files``,
@@ -376,6 +377,67 @@ def append(
             continue
     raise RuntimeError(
         f"seq-claim contention on topic {topic!r} after {RETRIES} attempts"
+    )
+
+
+# Cap on restages of one rewrite: each means a concurrent commit removed
+# an input file (a truncate or another rewrite), which is rare next to
+# appends, and a restage repeats the whole rewrite's scan.
+REWRITE_RETRIES = 20
+
+
+class _Superseded(Exception):
+    """A concurrent commit removed one of the rewrite's input files: the
+    staged output holds rows the live manifest no longer serves."""
+
+
+def rewrite(
+    root: str, topic: str, base_version: int | None, stage, edit=None
+) -> dict | None:
+    """The rewrite transaction, shared by ``TopicStore.compact`` and
+    ``compact_by_key``: swap a base version's live files for a staged
+    replacement. Returns the committed manifest, or None when ``stage``
+    declined to write anything.
+
+    ``stage(version, manifest) -> {rel: [lo, hi]} | None`` stages the
+    replacement of that base's files and returns their seq ranges.
+    Each attempt stages against the base (``base_version``, or the
+    latest), refreshes the staged files' mtimes and commits a swap that
+    keeps files committed concurrently (they are not in the input set),
+    records the ranges and applies ``edit(manifest, ranges)`` if given.
+    If a concurrent commit removed any input file (a truncate, or
+    another rewrite), swapping in output built from the stale base would
+    resurrect aged-out rows below the retention floor: the swap aborts
+    and the rewrite restages from the latest manifest, at most
+    ``REWRITE_RETRIES`` times. Superseded staged files are
+    crash-orphan-equivalent (vacuum reclaims them)."""
+    if base_version is None:
+        v, m = latest(root, topic)
+    else:
+        v, m = base_version, load(root, topic, base_version)
+    for _ in range(REWRITE_RETRIES):
+        inputs = set(m["files"])
+        ranges = stage(v, m)
+        if ranges is None:
+            return None
+        touch(root, topic, ranges)
+
+        def apply(man: dict) -> dict:
+            if inputs - set(man["files"]):
+                raise _Superseded()
+            kept = [f for f in man["files"] if f not in inputs]
+            man["files"] = sorted(ranges) + kept
+            add_ranges(man, ranges)
+            if edit is not None:
+                edit(man, ranges)
+            return man
+
+        try:
+            return commit(root, topic, v, apply)
+        except _Superseded:
+            v, m = latest(root, topic)
+    raise RuntimeError(
+        f"rewrite superseded {REWRITE_RETRIES} times on topic {topic!r}"
     )
 
 

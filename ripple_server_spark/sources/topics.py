@@ -25,8 +25,9 @@ Scale design: at 100 TB a topic is the same layout with more buckets —
 the manifest records each file's bucket and seq range, so a consume
 plans only the files of its bucket that overlap its seq range and tail
 reads touch only tail files. Sequence assignment shuffles
-only the *new* batch (window over batch rows) and reads only the
-per-bucket maxima of existing data (column-pruned parquet footer scan).
+only the *new* batch (one exchange + sort, then the staging kernel of
+``sources/staging.py``) and reads only the per-bucket maxima recorded
+in the manifest.
 """
 
 from __future__ import annotations
@@ -49,7 +50,7 @@ from pyspark.sql.types import StructType
 
 from ripple_server_spark.config import N_BUCKETS
 from ripple_server_spark.operators.relational import bucket_of
-from ripple_server_spark.sources import datasource, manifest
+from ripple_server_spark.sources import datasource, manifest, staging
 from ripple_server_spark.sources.manifest import (  # noqa: F401  (re-exported)
     StaleGenerationError,
     StaleProducerEpochError,
@@ -72,27 +73,27 @@ def normalize_offsets_doc(doc: dict) -> dict:
 
 
 # One cloned engine session per user session (SparkContext shared).
-# Engine topic writes execute there with outputTimestampType pinned to
-# TIMESTAMP_MICROS ONCE, so no shared-session SQL conf is ever mutated:
+# Engine topic FILES are all written by the pyarrow staging kernel
+# (sources/staging.py), never by a Spark writer; the clone hosts only
+# plans whose session confs must differ from the user's —
+# compact_by_key's aggregation, whose Observations need
+# AQEPropagateEmptyRelation excluded (see _engine_session). A
+# dedicated session means no shared-session SQL conf is ever mutated:
 # the pre-r10 set/restore window — even serialized by a module lock —
-# still re-typed a USER parquet write that ran on another driver thread
-# during an engine produce/compact (review r09/ADVICE r09). A dedicated
-# session has no such window: user writes keep the user's configured
-# type unconditionally, engine files always carry micros stats.
+# still re-typed a USER parquet write that ran on another driver
+# thread (review r09/ADVICE r09).
 _ENGINE_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
     weakref.WeakKeyDictionary()
 )
 _ENGINE_LOCK = threading.Lock()
 
 # Runtime confs mirrored from the user session into the engine clone —
-# RE-SYNCED at every engine-write entry, not just at clone time
-# (ADVICE r10: newSession() starts from the builder's initial confs,
-# and a one-shot copy goes stale the moment the user changes a runtime
-# conf). These affect engine-write plans: shuffle width of the seq
-# window; AQE; ANSI arithmetic semantics; session timezone for any
-# tz-aware expression the rebound plan still evaluates engine-side
-# (the physical parquet TIMESTAMP encoding itself is instant-based and
-# tz-independent, but expression SEMANTICS are not).
+# RE-SYNCED at every entry, not just at clone time (ADVICE r10:
+# newSession() starts from the builder's initial confs, and a one-shot
+# copy goes stale the moment the user changes a runtime conf). These
+# affect the rebound plans: shuffle width of the aggregation; AQE;
+# ANSI arithmetic semantics; session timezone for any tz-aware
+# expression the rebound plan evaluates engine-side.
 _ENGINE_MIRRORED_CONFS = (
     "spark.sql.shuffle.partitions",
     "spark.sql.adaptive.enabled",
@@ -129,7 +130,7 @@ def _engine_session(spark: SparkSession) -> SparkSession:
             # CollectMetrics nodes — an Observation on the scan then
             # gets no metrics row and Observation.get dies in toPyRow
             # (hit by compact_by_key when every key is tombstoned).
-            # Engine writes observe their row counts as the commit's
+            # compact_by_key observes its row counts as the commit's
             # source of truth, so on THIS session correctness of
             # metrics outranks the empty-plan shortcut.
             eng.conf.set(
@@ -144,24 +145,20 @@ def _engine_session(spark: SparkSession) -> SparkSession:
 
 @_contextmanager
 def _micros_ts_writes(df: DataFrame):
-    """Yield ``df`` rebound to the engine session, whose
-    ``outputTimestampType=TIMESTAMP_MICROS`` is pinned once at clone
-    time: micros columns carry parquet min/max statistics (Spark's
-    INT96 default does not), so time predicates over TOPIC files —
-    offsets_for_times, truncate_before_timestamp, start_at=timestamp —
-    prune row groups instead of scanning the retained log.
+    """Yield ``df`` rebound to the engine session (see
+    ``_engine_session``): today only ``compact_by_key`` builds its
+    aggregation there, so its Observations survive an all-empty
+    shuffle. Topic files are written by the pyarrow staging kernel
+    (TIMESTAMP_MICROS with min/max statistics natively), never on this
+    session; its pinned ``outputTimestampType=TIMESTAMP_MICROS`` is a
+    guard for any future Spark-written topic file.
 
     Why a cloned session and not a conf window: SQL confs are
-    session-global across driver threads, and Spark ignores a per-write
-    ``.option("outputTimestampType", ...)`` (probed), so any set/restore
-    on the SHARED session races a concurrent user parquet write on
-    another thread — the exact re-typing regression the round-9 scoping
-    was meant to prevent (naive TIMESTAMP became TIMESTAMPTZ for
-    pipelines that round-trip their own parquet). The clone shares the
-    SparkContext, so the rebind is a global-temp-view handoff of the
-    ANALYZED plan — lazy, zero data movement, and the view is dropped
-    once the write completes. The native sink path writes via pyarrow
-    and never needs any of this."""
+    session-global across driver threads, so any set/restore on the
+    SHARED session races a concurrent user job on another thread (the
+    round-9 re-typing regression). The clone shares the SparkContext,
+    so the rebind is a global-temp-view handoff of the ANALYZED plan —
+    lazy, zero data movement, and the view is dropped on exit."""
     spark = df.sparkSession
     eng = _engine_session(spark)
     name = f"ripple_micros_{uuid.uuid4().hex}"
@@ -171,177 +168,6 @@ def _micros_ts_writes(df: DataFrame):
         yield eng.table(f"{gdb}.{name}")
     finally:
         spark.catalog.dropGlobalTempView(name)
-
-
-# Per-task staging buffer target: rows of the CURRENT bucket accumulate
-# until this many Arrow bytes, then flush as one parquet row group — the
-# kernel's memory bound (plus one in-flight Arrow batch). Small produces
-# still land as one row group per file (the r12 layout); a skewed
-# produce whose whole batch routes to one bucket streams through in
-# bounded memory instead of buffering the task's entire input
-# (VERDICT r12 item 3).
-_STAGE_FLUSH_BYTES = 64 << 20
-
-
-def _produce_stage_kernel(
-    data_dir: str,
-    base: dict[int, int],
-    file_cols: list[str],
-    prefix: str = "prd",
-    assign_seq: bool = True,
-    flush_bytes: int = _STAGE_FLUSH_BYTES,
-):
-    """mapInArrow kernel for :meth:`TopicStore.produce`'s staging write.
-
-    The caller repartitions by bucket AND sorts within partitions by
-    (bucket, ts, event_id) ascending NULLS FIRST — the exact order the
-    pre-r12 window plan used — in the JVM, whose sort spills gracefully
-    (the r12 form sorted in Python and buffered one task's ENTIRE batch
-    in the worker; a skewed produce routing everything to one bucket
-    had no spill path — VERDICT r12 item 3). The kernel then STREAMS:
-    it walks the sorted batches, assigns contiguous per-bucket seqs
-    from the driver-shipped maxima as running counters, and appends
-    row groups to ONE open ``pq.ParquetWriter`` per (task, bucket),
-    buffering at most ``flush_bytes`` of the current bucket plus one
-    Arrow batch. Files land straight in the live bucket dirs under
-    collision-free names (invisible until the manifest commit, the
-    native sink's ``_task_append`` protocol). Returns one
-    (bucket, n, rel, lo, hi) row per file — ``[lo, hi]`` is the file's
-    seq range, recorded in the manifest's ``seq_ranges`` by the commit
-    that adds the file; the caller's collect is bounded by the bucket
-    count.
-
-    Why not ``df.write.partitionBy("bucket")``: the Hadoop commit
-    protocol serializes driver-side renames + existence checks per
-    partition directory and per file (~0.3-0.5 s per produce at bench
-    scale, measured r12 — the same overhead wave 1 removed from the
-    rollup refresh), and the staged files then paid a second
-    driver-side rename into the live bucket dirs. pyarrow writes the SAME
-    physical layout (TIMESTAMP_MICROS with min/max statistics — the
-    ``_micros_ts_writes`` contract; snappy; one row group per file at
-    produce batch sizes) with zero committer involvement. A failed or
-    speculative task attempt leaves only uniquely-named orphans that no
-    manifest references (vacuum reclaims them), identical to the sink's
-    crash story.
-
-    Correctness notes: a bucket's rows land in exactly ONE task (the
-    caller repartitions by bucket) and arrive contiguously (the sort),
-    so per-bucket seq ranges never overlap and each bucket opens
-    exactly one writer; ``base`` is re-validated inside the manifest
-    commit (seq race -> rebase), so a stale driver read cannot publish
-    overlapping seqs; an input ``seq`` column is dropped and recomputed
-    at its original position (``file_cols``), the old
-    withColumn-overwrite contract.
-
-    ``assign_seq=False`` reuses the same streaming writer for inputs
-    whose ``seq`` is already correct (compaction's bucket rewrite,
-    which sorts by (bucket, seq) instead): the kernel preserves the
-    input ``seq`` verbatim. ``prefix`` names the staged files (``prd``
-    produce, ``cmp`` compaction) so operators can attribute orphans."""
-
-    def stage(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ripple_server_spark.sources import fsio
-
-        state = {
-            "writer": None,  # open pq.ParquetWriter of the current bucket
-            "bucket": None,
-            "rel": None,
-            "n": 0,  # rows written+buffered for the current bucket
-            "lo": None,  # seq range of the current bucket's file
-            "hi": None,
-            "next_seq": 0,
-            "buf": [],  # buffered tables for the current bucket
-            "buf_rows": 0,
-            "buf_bytes": 0,
-        }
-        out: list[tuple[int, int, str, int, int]] = []
-
-        def flush_row_group():
-            if state["buf_rows"]:
-                state["writer"].write_table(pa.concat_tables(state["buf"]))
-                state["buf"], state["buf_rows"], state["buf_bytes"] = [], 0, 0
-
-        def close_bucket():
-            if state["writer"] is not None:
-                flush_row_group()
-                state["writer"].close()
-                out.append(
-                    (state["bucket"], state["n"], state["rel"], state["lo"], state["hi"])
-                )
-            state["writer"] = None
-            state["bucket"] = None
-            state["rel"] = None
-            state["n"] = 0
-            state["lo"] = state["hi"] = None
-
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            bvals = batch.column("bucket").to_numpy(zero_copy_only=False)
-            cuts = (np.flatnonzero(bvals[1:] != bvals[:-1]) + 1).tolist()
-            for s, e in zip([0, *cuts], [*cuts, len(bvals)]):
-                bb = int(bvals[s])
-                sub = pa.Table.from_batches([batch.slice(s, e - s)])
-                if bb != state["bucket"]:
-                    close_bucket()
-                    state["bucket"] = bb
-                    state["next_seq"] = base.get(bb, -1) + 1
-                    fsio.DATA_FS.makedirs(
-                        os.path.join(data_dir, f"bucket={bb}")
-                    )
-                    state["rel"] = (
-                        f"bucket={bb}/{prefix}-{uuid.uuid4().hex[:12]}.parquet"
-                    )
-                if assign_seq:
-                    if "seq" in sub.column_names:
-                        sub = sub.drop_columns("seq")
-                    sub = sub.append_column(
-                        "seq",
-                        pa.array(
-                            np.arange(sub.num_rows, dtype=np.int64)
-                            + state["next_seq"]
-                        ),
-                    )
-                    state["next_seq"] += sub.num_rows
-                sub = sub.select(file_cols)
-                mm = pc.min_max(sub.column("seq"))
-                lo, hi = mm["min"].as_py(), mm["max"].as_py()
-                state["lo"] = lo if state["lo"] is None else min(state["lo"], lo)
-                state["hi"] = hi if state["hi"] is None else max(state["hi"], hi)
-                if state["writer"] is None:
-                    state["writer"] = fsio.DATA_FS.parquet_writer(
-                        os.path.join(data_dir, state["rel"]), sub.schema
-                    )
-                state["n"] += sub.num_rows
-                state["buf"].append(sub)
-                state["buf_rows"] += sub.num_rows
-                state["buf_bytes"] += sub.nbytes
-                if state["buf_bytes"] >= flush_bytes:
-                    flush_row_group()
-        close_bucket()
-        if out:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([o[0] for o in out], pa.int32()),
-                    pa.array([o[1] for o in out], pa.int64()),
-                    pa.array([o[2] for o in out], pa.string()),
-                    pa.array([o[3] for o in out], pa.int64()),
-                    pa.array([o[4] for o in out], pa.int64()),
-                ],
-                names=["bucket", "n", "rel", "lo", "hi"],
-            )
-
-    return stage
-
-
-def _staged_ranges(staged: list) -> dict[str, list[int]]:
-    """``{rel: [lo, hi]}`` of staging-kernel rows — the ``seq_ranges``
-    entries the commit adding these files records."""
-    return {r["rel"]: [int(r["lo"]), int(r["hi"])] for r in staged}
 
 
 def _stage_by_bucket(
@@ -354,9 +180,11 @@ def _stage_by_bucket(
 ) -> list:
     """One exchange (hash on bucket — a bucket's rows land in exactly
     one task) + a spillable JVM sort within partitions, then the
-    streaming Arrow staging kernel. Sort key is the produce FIFO order
-    (bucket, ts, event_id) when assigning seqs, or (bucket, seq) when
-    preserving them (compaction). Returns the kernel's bounded
+    streaming Arrow staging kernel (``staging.stage_kernel``). Sort key
+    is the produce FIFO order (bucket, ts, event_id) when assigning
+    seqs, or (bucket, seq) when preserving them (compaction). The sort
+    runs in the JVM because a Python sort of a skewed batch buffers the
+    task's whole input with no spill path. Returns the kernel's bounded
     (bucket, n, rel, lo, hi) rows."""
     order = (
         [
@@ -367,7 +195,7 @@ def _stage_by_bucket(
         if assign_seq
         else [F.col("bucket").asc_nulls_first(), F.col("seq").asc_nulls_first()]
     )
-    kernel = _produce_stage_kernel(
+    kernel = staging.stage_kernel(
         data_dir, base, file_cols, prefix=prefix, assign_seq=assign_seq
     )
     return (
@@ -421,8 +249,11 @@ class TopicStore:
     commit point. Appends have one transaction, ``manifest.append``,
     shared by :meth:`produce` and the native sink's write tasks: epoch
     fencing, applied-id idempotence, seq-race restaging and the schema
-    merge are written once. A manifest is a FULL snapshot: the live file
-    list plus the state that must commit atomically with it
+    merge are written once. File swaps have one, ``manifest.rewrite``,
+    shared by :meth:`compact` and :meth:`compact_by_key`. Every staged
+    file is written by one kernel, ``staging.stage_kernel``. A manifest
+    is a FULL snapshot: the live file list plus the state that must
+    commit atomically with it
     (``applied_batches`` for idempotent produce, per-bucket
     ``maxima``/``floors`` so cold opens never scan the log, and
     ``seq_ranges`` — the ``[lo, hi]`` seq range of every live file,
@@ -451,16 +282,6 @@ class TopicStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        # Warm-path caches of the manifest's maxima/floors, STAMPED with
-        # the manifest version they reflect: the warm path costs one
-        # log-dir listing (not a manifest read, never a parquet scan),
-        # and a commit by ANY writer — this instance or another process
-        # — invalidates the entry. An unstamped cache livelocks a
-        # consumer whose producer is a different TopicStore instance:
-        # its cached maxima never advance, so delivered-row sizing stays
-        # 0 forever while the data sits committed in the manifest.
-        self._maxima: dict[str, tuple[int, dict[int, int]]] = {}
-        self._floors: dict[str, tuple[int, dict[int, int]]] = {}
         os.makedirs(os.path.join(root, "topics"), exist_ok=True)
         os.makedirs(os.path.join(root, "offsets"), exist_ok=True)
 
@@ -659,8 +480,6 @@ class TopicStore:
             return m
 
         committed = manifest.commit(self.root, topic, base_v, apply)
-        self._maxima.pop(topic, None)
-        self._floors.pop(topic, None)
         return int(committed["version"])
 
     def producer_epoch(self, topic: str) -> int:
@@ -736,8 +555,6 @@ class TopicStore:
             raise FileNotFoundError(f"topic {topic!r} does not exist")
         shutil.rmtree(manifest.log_dir(self.root, topic), ignore_errors=True)
         shutil.rmtree(tdir, ignore_errors=True)
-        self._maxima.pop(topic, None)
-        self._floors.pop(topic, None)
         removed = 0
         odir = os.path.join(self.root, "offsets")
         for fn in sorted(os.listdir(odir)):
@@ -884,7 +701,7 @@ class TopicStore:
                 )
             maxima = {int(b): int(x) for b, x in m.get("maxima", {}).items()}
             staged[:] = _stage_by_bucket(src, data_dir, maxima, file_cols)
-            return _staged_ranges(staged)
+            return staging.staged_ranges(staged)
 
         committed = manifest.append(
             self.root,
@@ -896,36 +713,16 @@ class TopicStore:
         )
         if committed is None:
             return 0
-        self._maxima[topic] = (
-            committed["version"],
-            {int(b): x for b, x in committed["maxima"].items()},
-        )
         return sum(int(r["n"]) for r in staged)
 
     def _bucket_maxima(self, topic: str) -> dict[int, int]:
-        """Current max seq per bucket: warm from the version-stamped
-        cache (freshness = one log-dir listing), cold from the manifest
-        — never a log scan (the manifest is the metadata table)."""
-        v = manifest.latest_version(self.root, topic)
-        cached = self._maxima.get(topic)
-        if cached is not None and cached[0] == v:
-            return cached[1]
-        maxima = {
-            int(b): x for b, x in self.latest_manifest(topic)[1]["maxima"].items()
-        }
-        self._maxima[topic] = (v, maxima)
-        return maxima
+        """Current max seq per bucket, read from the latest manifest —
+        never a log scan (the manifest is the metadata table)."""
+        return {int(b): x for b, x in self.topic_meta(topic)["maxima"].items()}
 
     def _bucket_floors(self, topic: str) -> dict[int, int]:
-        v = manifest.latest_version(self.root, topic)
-        cached = self._floors.get(topic)
-        if cached is not None and cached[0] == v:
-            return cached[1]
-        floors = {
-            int(b): x for b, x in self.latest_manifest(topic)[1]["floors"].items()
-        }
-        self._floors[topic] = (v, floors)
-        return floors
+        """Retained floor per bucket, read from the latest manifest."""
+        return {int(b): x for b, x in self.topic_meta(topic)["floors"].items()}
 
     def read_topic(self, topic: str, version: int | None = None) -> DataFrame:
         """Snapshot read: exactly the files of the latest (or a pinned)
@@ -972,73 +769,31 @@ class TopicStore:
         is preserved by the rebase (its files are not in the compacted
         input set, so the swap keeps them). A concurrent truncate (or
         second compact) that REMOVED one of our input files supersedes
-        this attempt entirely: swapping in output built from the stale
-        base would resurrect aged-out rows below the retention floor,
-        so the commit aborts and the compaction restages from the
-        latest manifest (the superseded staged files are crash-orphan
-        equivalent; vacuum reclaims them). Seq/content are untouched,
-        so consumer offsets stay valid.
+        this attempt entirely, and the compaction restages from the
+        latest manifest (:func:`manifest.rewrite`, the swap shared with
+        :meth:`compact_by_key`). Seq/content are untouched, so consumer
+        offsets stay valid.
         """
-        if base_version is None:
-            base_v, base = self.latest_manifest(topic)
-        else:
-            base_v = base_version
-            base = manifest.load(self.root, topic, base_v)
 
-        class _InputSuperseded(Exception):
-            """A concurrent commit removed one of this compaction's
-            input files — the staged output contains rows the live
-            manifest no longer serves and must not be swapped in."""
-
-        for _ in range(20):
-            compacted_input = set(base["files"])
-            # Same staging pipeline as produce (r13): one exchange on
-            # bucket + a spillable JVM (bucket, seq) sort + the
-            # streaming Arrow kernel writing one file per (task, bucket)
-            # directly into the live bucket dirs — no Hadoop committer
-            # (its per-partition-dir driver renames were ~0.4-0.5 s of
-            # every compaction at bench scale), no second rename, no
-            # engine-session rebind (pyarrow writes TIMESTAMP_MICROS
-            # with statistics natively). seq/content
-            # are preserved verbatim (assign_seq=False); files stay
-            # invisible until the manifest swap commits.
-            src = self.read_topic(topic, version=base_v)
-            file_cols = [c for c in src.columns if c != "bucket"]
-            data_dir = self.data_dir(topic)
+        def stage(v: int, _m: dict) -> dict[str, list[int]]:
+            # Same staging pipeline as produce: one exchange on bucket +
+            # a spillable JVM (bucket, seq) sort + the streaming Arrow
+            # kernel writing one file per (task, bucket) directly into
+            # the live bucket dirs, with seq/content preserved verbatim
+            # (assign_seq=False); files stay invisible until the
+            # manifest swap commits.
+            src = self.read_topic(topic, version=v)
             staged = _stage_by_bucket(
                 src,
-                data_dir,
+                self.data_dir(topic),
                 {},
-                file_cols,
+                [c for c in src.columns if c != "bucket"],
                 prefix="cmp",
                 assign_seq=False,
             )
-            new_files = sorted(r["rel"] for r in staged)
-            ranges = _staged_ranges(staged)
+            return staging.staged_ranges(staged)
 
-            def apply(
-                m: dict,
-                compacted_input=compacted_input,
-                new_files=new_files,
-                ranges=ranges,
-            ) -> dict:
-                if compacted_input - set(m["files"]):
-                    raise _InputSuperseded()
-                # keep files committed concurrently (not part of our input)
-                kept = [f for f in m["files"] if f not in compacted_input]
-                m["files"] = new_files + kept
-                manifest.add_ranges(m, ranges)
-                return m
-
-            try:
-                # staged at task time; refresh mtimes at the commit point
-                # so a concurrent vacuum's grace window measures from now
-                manifest.touch(self.root, topic, new_files)
-                manifest.commit(self.root, topic, base_v, apply)
-                return
-            except _InputSuperseded:
-                base_v, base = self.latest_manifest(topic)
-        raise RuntimeError(f"compaction superseded 20 times on topic {topic!r}")
+        manifest.rewrite(self.root, topic, base_version, stage)
 
     def key_compaction_dirty_ratio(self, topic: str) -> float:
         """Dirty bytes / total live bytes — the Kafka
@@ -1158,7 +913,7 @@ class TopicStore:
         task, not the raw log (a window/rank formulation would shuffle
         every row). Null keys group by a per-row synthetic key (single
         branch — no self-union, no second scan). The bucket-layout
-        rewrite then reuses :meth:`compact`'s commit protocol:
+        rewrite is :meth:`compact`'s transaction, :func:`manifest.rewrite`:
         snapshot-pinned readers keep the old files until vacuum, a
         concurrent truncate supersedes the attempt (retry from the new
         base) rather than resurrecting aged-out rows.
@@ -1178,22 +933,17 @@ class TopicStore:
         changed — that IS the change); repeat passes over the same
         clean set burn nothing.
         """
-        if base_version is None:
-            base_v, base = self.latest_manifest(topic)
-        else:
-            base_v = base_version
-            base = manifest.load(self.root, topic, base_v)
+        # the counts of the latest staging attempt, read by the swap's
+        # cleaner-checkpoint edit and by the no-drop path below
+        seen: dict = {}
 
-        class _InputSuperseded(Exception):
-            pass
-
-        for _ in range(20):
-            compacted_input = set(base["files"])
-            if not base["files"]:
-                return 0  # empty topic: nothing to compact (and no
+        def stage(v: int, m: dict) -> dict[str, list[int]] | None:
+            seen.update(v=v, m=m, dropped=0, retained=0)
+            if not m["files"]:
+                return None  # empty topic: nothing to compact (and no
                 # schema yet to validate — a maintenance loop started
                 # before the first produce must not error every cycle)
-            src = self.read_topic(topic, version=base_v)
+            src = self.read_topic(topic, version=v)
             if key_col not in src.columns:
                 raise ValueError(
                     f"topic {topic!r} has no {key_col!r} column; key "
@@ -1309,77 +1059,59 @@ class TopicStore:
                     prefix="cmp",
                     assign_seq=False,
                 )
-            retained_tombstones = int(obs_out.get["t"])
-            dropped = int(obs_in.get["n"]) - int(obs_out.get["n"])
-            if dropped == 0:
+            seen["retained"] = int(obs_out.get["t"])
+            seen["dropped"] = int(obs_in.get["n"]) - int(obs_out.get["n"])
+            if seen["dropped"] == 0:
                 # already fully compacted: do NOT swap identical content
-                # under pinned readers. But the pass PROVED the scanned
-                # files clean, so advance the cleaner checkpoint
-                # (metadata-only commit) unless it already covers them —
-                # otherwise the dirty-ratio gate would send the cleaner
-                # back over the same bytes every interval.
+                # under pinned readers (the checkpoint is handled below)
                 for r in staged:
                     os.remove(os.path.join(data_dir, r["rel"]))
-                if retained_tombstones == 0:
-                    if not compacted_input <= set(base.get("cleaned_files", [])):
+                return None
+            return staging.staged_ranges(staged)
 
-                        def apply_clean(m: dict, inp=compacted_input) -> dict:
-                            live = set(m["files"])
-                            m["cleaned_files"] = sorted(
-                                (set(m.get("cleaned_files", [])) | inp) & live
-                            )
-                            return m
+        def edit(m: dict, ranges: dict[str, list[int]]) -> None:
+            # cleaner checkpoint: exactly this pass's output is clean;
+            # files kept by the swap landed concurrently and stay dirty.
+            # Output holding retained within-window tombstones is NOT
+            # clean — the post-window second pass must still be sent
+            # back over it.
+            m["cleaned_files"] = sorted(ranges) if seen["retained"] == 0 else []
 
-                        manifest.commit(self.root, topic, base_v, apply_clean)
-                elif base.get("cleaned_files"):
-                    # a no-drop pass that RETAINED tombstones must not
-                    # leave a mostly-clean checkpoint standing: a lone
-                    # within-window marker (e.g. a delete of an
-                    # already-compacted-away key) would keep the dirty
-                    # ratio near zero and the gate would starve the
-                    # post-window second pass forever. Clearing the
-                    # checkpoint keeps the cleaner returning each
-                    # interval until the window passes (review r11).
+        committed = manifest.rewrite(self.root, topic, base_version, stage, edit)
+        if committed is not None:
+            return seen["dropped"]
+        # A pass that dropped nothing PROVED the scanned files clean, so
+        # advance the cleaner checkpoint (metadata-only commit) unless it
+        # already covers them — otherwise the dirty-ratio gate would send
+        # the cleaner back over the same bytes every interval.
+        base_v, base = seen["v"], seen["m"]
+        compacted_input = set(base["files"])
+        if seen["retained"] == 0:
+            if not compacted_input <= set(base.get("cleaned_files", [])):
 
-                    def apply_unclean(m: dict) -> dict:
-                        m["cleaned_files"] = []
-                        return m
+                def apply_clean(m: dict) -> dict:
+                    live = set(m["files"])
+                    m["cleaned_files"] = sorted(
+                        (set(m.get("cleaned_files", [])) | compacted_input) & live
+                    )
+                    return m
 
-                    manifest.commit(self.root, topic, base_v, apply_unclean)
-                return 0
-            new_files = sorted(r["rel"] for r in staged)
-            ranges = _staged_ranges(staged)
+                manifest.commit(self.root, topic, base_v, apply_clean)
+        elif base.get("cleaned_files"):
+            # a no-drop pass that RETAINED tombstones must not leave a
+            # mostly-clean checkpoint standing: a lone within-window
+            # marker (e.g. a delete of an already-compacted-away key)
+            # would keep the dirty ratio near zero and the gate would
+            # starve the post-window second pass forever. Clearing the
+            # checkpoint keeps the cleaner returning each interval
+            # until the window passes (review r11).
 
-            def apply(
-                m: dict,
-                compacted_input=compacted_input,
-                new_files=new_files,
-                ranges=ranges,
-            ) -> dict:
-                if compacted_input - set(m["files"]):
-                    raise _InputSuperseded()
-                kept = [f for f in m["files"] if f not in compacted_input]
-                m["files"] = new_files + kept
-                manifest.add_ranges(m, ranges)
-                # cleaner checkpoint: exactly this pass's output is
-                # clean; `kept` files landed concurrently and stay
-                # dirty. Output holding retained within-window
-                # tombstones is NOT clean — the post-window second pass
-                # must still be sent back over it.
-                m["cleaned_files"] = (
-                    sorted(new_files) if retained_tombstones == 0 else []
-                )
+            def apply_unclean(m: dict) -> dict:
+                m["cleaned_files"] = []
                 return m
 
-            try:
-                manifest.touch(self.root, topic, new_files)
-                manifest.commit(self.root, topic, base_v, apply)
-                return dropped
-            except _InputSuperseded:
-                base_v, base = self.latest_manifest(topic)
-        raise RuntimeError(
-            f"key compaction superseded 20 times on topic {topic!r}"
-        )
+            manifest.commit(self.root, topic, base_v, apply_unclean)
+        return 0
 
     def truncate(self, topic: str, before_seq: int) -> int:
         """Retention: drop log FILES wholly below ``before_seq`` in every
@@ -1490,7 +1222,6 @@ class TopicStore:
             return m
 
         manifest.commit(self.root, topic, base_v, apply)
-        self._floors.pop(topic, None)
         return len(drop)
 
     # -- consume (A6-A8) ---------------------------------------------------
@@ -2279,11 +2010,7 @@ class TopicStore:
             m["restored_from"] = {"version": version, "token": uuid.uuid4().hex}
             return m
 
-        committed = manifest.commit(self.root, topic, latest_v, apply)
-        # the rollback invalidates both warm caches
-        self._maxima.pop(topic, None)
-        self._floors.pop(topic, None)
-        return committed
+        return manifest.commit(self.root, topic, latest_v, apply)
 
     # -- util --------------------------------------------------------------
     @staticmethod

@@ -70,33 +70,52 @@ def test_compact_then_truncate_is_exact(spark, store):
     assert store.truncate("t", before_seq=hi) == 4
 
 
-def test_stale_base_compact_does_not_resurrect_truncated_rows(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("rewrite", ["compact", "compact_by_key"])
+def test_stale_base_compact_does_not_resurrect_truncated_rows(
+    spark, sf_dir, tmp_path, monkeypatch, rewrite
+):
     """Compact racing truncate: a compaction whose base snapshot predates
     a truncate holds the aged-out rows in its staged output — swapping it
     in would serve them again below the retention floor, permanently
     (the compacted file straddles the floor, so no later truncate could
     reclaim them). The commit must detect its input was superseded and
     restage from the post-truncate manifest. Simulated deterministically
-    by pinning base_version to the pre-truncate manifest."""
+    by pinning base_version to the pre-truncate manifest. Both
+    compactions share the swap (manifest.rewrite): the first batch's
+    keys occur only below the floor, so a key-compacted stale output
+    would carry them too, and the second batch's repeated keys make the
+    stale pass drop rows (a no-drop pass attempts no swap)."""
+    from tests.conftest import count_stagings
+
     st = TopicStore(spark, str(tmp_path / "race"))
     st.create_topic("r", n_buckets=1)
     ev = load_table(spark, sf_dir, "events")
-    st.produce(ev.filter(F.col("event_id") < 100), "r")  # seqs 0-99
     st.produce(
-        ev.filter((F.col("event_id") >= 100) & (F.col("event_id") < 200)), "r"
-    )  # seqs 100-199
+        ev.filter(F.col("event_id") < 100).withColumn("user_id", F.col("event_id")),
+        "r",
+    )  # seqs 0-99, 100 distinct keys
+    st.produce(
+        ev.filter((F.col("event_id") >= 100) & (F.col("event_id") < 200)).withColumn(
+            "user_id", F.col("event_id") % 10 + 1000
+        ),
+        "r",
+    )  # seqs 100-199, 10 keys
     post_produce_v, _ = st.latest_manifest("r")
     assert st.truncate("r", before_seq=100) == 1  # first file aged out
     floor = st._bucket_floors("r")[0]
     assert floor == 100
 
     # compact pinned to the PRE-truncate base: must rebase, not resurrect
-    st.compact("r", base_version=post_produce_v)
+    stagings = count_stagings(monkeypatch)
+    getattr(st, rewrite)("r", base_version=post_produce_v)
+    monkeypatch.undo()
+    assert len(stagings) == 2, "the stale-base swap must abort and restage"
     after = st.read_topic("r")
     assert after.filter(F.col("seq") < floor).count() == 0, (
         "stale-base compaction resurrected rows below the retention floor"
     )
-    assert after.count() == 100  # seqs 100-199 intact
+    # seqs 100-199 intact, or their 10 keys' latest rows
+    assert after.count() == (100 if rewrite == "compact" else 10)
     assert st._bucket_floors("r")[0] == floor  # floor survived the swap
 
 

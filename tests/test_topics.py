@@ -896,7 +896,7 @@ def test_rekey_topic_rebuilds_clean_mapping_after_expand(spark, sf_dir, tmp_path
 
 def test_produce_kernel_stage_equivalence(spark, tmp_path):
     """r12 optimization pin: produce's pyarrow staging kernel
-    (_produce_stage_kernel) must reproduce the old window+partitionBy
+    (staging.stage_kernel) must reproduce the old window+partitionBy
     plan exactly — seq order (ts, event_id) ascending NULLS FIRST per
     bucket, TIMESTAMP_MICROS physical columns WITH min/max statistics
     (the _micros_ts_writes contract the old Spark writer honored), and
@@ -980,7 +980,7 @@ def test_produce_stage_kernel_streams_bounded_row_groups(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ripple_server_spark.sources.topics import _produce_stage_kernel
+    from ripple_server_spark.sources.staging import stage_kernel
 
     data_dir = str(tmp_path / "data")
     os.makedirs(data_dir)
@@ -1001,7 +1001,7 @@ def test_produce_stage_kernel_streams_bounded_row_groups(tmp_path):
         }
     )
     batches = tbl.to_batches(max_chunksize=1000)
-    kernel = _produce_stage_kernel(
+    kernel = stage_kernel(
         data_dir,
         base={3: 99},  # seqs must start at 100
         file_cols=["event_id", "ts", "user_id", "seq"],
@@ -1121,7 +1121,7 @@ def test_executor_direct_writes_route_through_fsio_seam(tmp_path):
     import pyarrow as pa
 
     from ripple_server_spark.sources import fsio
-    from ripple_server_spark.sources.topics import _produce_stage_kernel
+    from ripple_server_spark.sources.staging import stage_kernel
 
     calls = []
 
@@ -1147,7 +1147,7 @@ def test_executor_direct_writes_route_through_fsio_seam(tmp_path):
             "bucket": pa.array([1] * 10, pa.int32()),
         }
     )
-    kernel = _produce_stage_kernel(
+    kernel = stage_kernel(
         data_dir, base={}, file_cols=["event_id", "ts", "user_id", "seq"]
     )
     orig = fsio.DATA_FS
