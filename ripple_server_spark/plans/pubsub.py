@@ -1349,10 +1349,10 @@ def q_seek_to_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     COMMITTED offsets joined back against the log, not from a ts
     filter, so a wrong offset surfaces as a hash/count mismatch.
 
-    Scale: offsets_for_times is one job whose ts predicate pushes into
-    the parquet scan (row-group pruning below T) + a per-bucket
-    min(seq) partial agg; the replay read is bucket-pruned with the
-    seq floor in row-group stats."""
+    Scale: offsets_for_times runs no Spark job — one driver-side scan
+    per bucket with the ts predicate pushed in (row-group pruning below
+    T) and min(seq) folded over its batches; the replay read is
+    bucket-pruned with the seq floor in row-group stats."""
     import hashlib
     import shutil
     import tempfile
@@ -1432,9 +1432,10 @@ def q_retention_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — a floor that rose too far or a file wrongly retained
     surfaces as a count/hash mismatch.
 
-    Scale: retention is O(manifest) + one pushed offsets_for_times job
-    + footer-stats file drops — no data is read or rewritten; vacuum
-    does physical deletion later."""
+    Scale: retention is O(manifest) + one pushed offsets_for_times
+    driver scan of [ts, seq] (no Spark job) + manifest seq-range file
+    drops — no data is rewritten; vacuum does physical deletion
+    later."""
     import hashlib
     import shutil
     import tempfile

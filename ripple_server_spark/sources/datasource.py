@@ -283,11 +283,12 @@ def _initial_cursors(root: str, topic: str, start_at: str) -> dict[str, int]:
     or never-committed consumer starts at 0 per bucket, matching
     register_consumer's contract). ``timestamp:<epoch_ms>`` starts at
     the first event at/after that instant per bucket (Kafka
-    offsetsForTimes — see :func:`_timestamp_cursors`)."""
+    offsetsForTimes — see :func:`offsets_for_times`)."""
     if start_at == "latest":
         return _latest_cursors(root, topic)
     if start_at.startswith("timestamp:"):
-        return _timestamp_cursors(root, topic, int(start_at.split(":", 1)[1]))
+        t = int(start_at.split(":", 1)[1])
+        return {str(b): o for b, o in offsets_for_times(root, topic, t).items()}
     if start_at.startswith("consumer:"):
         consumer_id = start_at.split(":", 1)[1]
         path = os.path.join(root, "offsets", f"{consumer_id}--{topic}.json")
@@ -307,64 +308,76 @@ def _initial_cursors(root: str, topic: str, start_at: str) -> dict[str, int]:
     return {}
 
 
-def _timestamp_cursors(root: str, topic: str, epoch_ms: int) -> dict[str, int]:
-    """Kafka ``offsetsForTimes`` parity: per-bucket first seq whose
-    event ``ts`` is >= the given epoch-millisecond instant; buckets
-    with nothing at/after it start at their high-water mark (tail
-    only, Kafka's null-offset-means-end convention).
+def offsets_for_times(root: str, topic: str, epoch_ms: int) -> dict[int, int]:
+    """Kafka ``offsetsForTimes``: per-bucket offset of the FIRST
+    message whose event ``ts`` is at/after the epoch-millisecond
+    instant; buckets with nothing at/after it map to their high-water
+    mark (Kafka's null-offset-means-end convention). ``{}`` for a
+    topic nothing was produced to. The one implementation behind
+    ``TopicStore.offsets_for_times`` (and so ``seek_to_timestamp`` and
+    time retention) and ``start_at=timestamp:``.
 
-    Per-bucket seq order is (ts, event_id) order within each produce
-    batch, so the cursor replays exactly the rows with ts >= T when
-    batches arrive in event-time order; late produces carrying earlier
-    timestamps are still replayed (first-at/after-T, Kafka's
-    offsetsForTimes semantics). One column-pruned seq read per bucket
-    with the ts predicate PUSHED into the dataset scan (row-group
-    stats prune below-T row groups) and the min folded over scanner
-    BATCHES — driver memory stays one batch even when T matches the
-    whole retained log (review r09) — once at query start, never on
-    the per-trigger path."""
+    Per-bucket seq order is (ts, event_id) order WITHIN each produce
+    batch, so the offset replays exactly the rows with ts >= T when
+    batches arrive in event-time order; a later produce carrying
+    earlier timestamps gets higher seqs and is replayed too (first
+    at/after T, never only at/after T — Kafka's semantics on
+    out-of-order partitions).
+
+    Spark-free, on the driver: ONE manifest version gives the maxima,
+    the recorded schema and the live files. Each bucket is one dataset
+    scan over ``[ts, seq]`` typed by the recorded schema — the explicit
+    ``timestamp[us, UTC]`` casts pre-round-9 INT96 files exactly, as in
+    :func:`_scan` — with ``ts >= T`` pushed into it (row-group stats
+    prune below-T row groups) and ``min(seq)`` folded over scanner
+    batches, so the driver holds one batch even when T matches the
+    whole log (review r09). T is clamped to the int64 microsecond
+    range: above it every bucket tails, below it every row matches."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    _, maxima, _ = _log_bounds(root, topic)
-    cursors = {b: mx + 1 for b, mx in maxima.items()}  # default: tail
-    for b, files in _bucket_files(root, topic):
-        lo: int | None = None
-        # PER-FILE scalars: a topic upgraded across round 9 holds both
-        # INT96 files (pyarrow: naive timestamp[ns]) and MICROS files
-        # (timestamp[us, tz=UTC]); one dataset-level scalar typed from
-        # the first fragment crashes the scan on the other era's files
-        # (ArrowNotImplementedError kernel mismatch — review r09).
-        # Epoch values are tz-independent, so the same T converts
-        # per-file into that file's own unit/tz and compares exactly.
-        for fpath in files:
-            dset = ds.dataset(fpath, format="parquet")
-            ts_type = dset.schema.field("ts").type
-            # ms -> the file's unit; ts >= T with T on an exact ms
-            # boundary is equivalent to floor_ms(ts) >= T_ms. Pushes to
-            # row-group statistics where the file has them (micros);
-            # INT96 files scan, batch-folded, one batch of driver RAM.
-            mult = {"s": None, "ms": 1, "us": 1_000, "ns": 1_000_000}[ts_type.unit]
-            t_units = -(-epoch_ms // 1000) if mult is None else epoch_ms * mult
-            if t_units > (1 << 63) - 1:
-                # T beyond int64 (e.g. a far-future sentinel on an ns
-                # column overflows the unit): nothing representable in
-                # this file can be >= T. Exact bound — values in
-                # (2^62, 2^63) are valid int64 timestamps and must
-                # still be compared, not skipped (ADVICE r09).
-                continue
-            t_scalar = pa.scalar(t_units, type=ts_type)
-            scanner = dset.scanner(
-                columns=["seq"], filter=pc.field("ts") >= t_scalar
-            )
-            for rb in scanner.to_batches():
-                if rb.num_rows:
-                    m = int(pc.min(rb.column("seq")).as_py())
-                    lo = m if lo is None else min(lo, m)
-        if lo is not None:
-            cursors[str(b)] = lo
-    return cursors
+    from ripple_server_spark.sources.topics import _message_ddl
+
+    _v, m = manifest.latest(root, topic)
+    out = {int(b): int(mx) + 1 for b, mx in m.get("maxima", {}).items()}
+    if not out:
+        return {}
+    _message_ddl(m)  # a column recorded under two types: ValueError
+    recorded = dict(f.split(":", 1) for f in m.get("schema") or [])
+    # the Arrow form of the recorded Spark type, written out: the
+    # stream's initialOffset runs where no session parses DDL
+    ts_type = {
+        "timestamp": pa.timestamp("us", tz="UTC"),
+        "timestamp_ntz": pa.timestamp("us"),
+    }.get(recorded.get("ts"))
+    if ts_type is None:
+        # a ts-less topic (native sink with a custom schema) cannot be
+        # time-positioned: a named contract error, the message a
+        # retain_ms cycle or a start_at=timestamp stream surfaces
+        raise ValueError(
+            f"topic {topic!r} has no 'ts' column (recorded schema: "
+            f"{list(recorded)}); time-based positioning "
+            "(offsets_for_times / seek_to_timestamp / start_at=timestamp "
+            "/ retain_ms) requires a timestamp column named 'ts'"
+        )
+    t_us = max(int(epoch_ms) * 1000, -(2**63))
+    if t_us > _SEQ_END:
+        return out
+    flt = pc.field("ts") >= pa.scalar(t_us, ts_type)
+    scan_schema = pa.schema([("ts", ts_type), ("seq", pa.int64())])
+    data = os.path.join(root, "topics", topic, "data")
+    for b in out:
+        files = [os.path.join(data, r) for r in manifest.files_for(m, b, 0, _SEQ_END)]
+        if not files:
+            continue
+        scanner = ds.dataset(files, format="parquet", schema=scan_schema).scanner(
+            columns=["seq"], filter=flt
+        )
+        for rb in scanner.to_batches():
+            if rb.num_rows:
+                out[b] = min(out[b], pc.min(rb.column("seq")).as_py())
+    return out
 
 
 def _check_start_at(start_at: str) -> str:

@@ -67,9 +67,9 @@ class TopicMaintenance:
     ``retain_seqs`` (both None disables retention; both set drops the
     UNION of what each bound ages out, so whichever bound retains
     LESS determines what survives — Kafka's either-limit-violating
-    deletion). The time pass costs a Spark job (row-group-pruned on
-    round-9+ files, which carry micros ts statistics; pre-round-9
-    INT96 files scan), so it is rate-limited by
+    deletion). The time pass scans the retained log's ``ts`` on the
+    driver (row-group-pruned on round-9+ files, which carry micros ts
+    statistics; pre-round-9 INT96 files scan), so it is rate-limited by
     ``retention_check_interval_s`` (Kafka's
     ``log.retention.check.interval.ms``, default 5 min) rather than
     run every cycle.

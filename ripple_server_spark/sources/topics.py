@@ -1136,14 +1136,14 @@ class TopicStore:
         """TIME-based retention (Kafka ``retention.ms``): age out log
         files wholly older than the epoch-ms instant. Composes the two
         primitives this log already has — :meth:`offsets_for_times`
-        maps T to each bucket's first at/after-T offset (one Spark job;
-        the ts predicate pushes to the scan), then the seq-granularity
-        file drop reuses :meth:`truncate`'s machinery with that
-        PER-BUCKET bound (per-file seq ranges are the droppable unit —
-        exact for any file layout; ts stats, which round-9+ files also
-        carry, only prune the offsets_for_times scan). A file ages out
-        only when every row in it
-        precedes its bucket's at/after-T offset; out-of-order produces
+        maps T to each bucket's first at/after-T offset (a driver-side
+        scan with the ts predicate pushed in, no Spark job), then the
+        seq-granularity file drop reuses :meth:`truncate`'s machinery
+        with that PER-BUCKET bound (per-file seq ranges are the
+        droppable unit — exact for any file layout; ts stats, which
+        round-9+ files also carry, only prune the offsets_for_times
+        scan). A file ages out only when every row in it precedes its
+        bucket's at/after-T offset; out-of-order produces
         (late data with old timestamps above the cutoff seq) are
         therefore RETAINED, exactly Kafka's offset-granularity
         retention behavior. Same consistency contract as truncate:
@@ -1307,75 +1307,28 @@ class TopicStore:
         """Kafka ``offsetsForTimes``: per-bucket offset of the FIRST
         message whose event ``ts`` is at/after the epoch-millisecond
         instant; buckets with nothing at/after it map to their
-        high-water mark (Kafka's null-offset-means-end convention).
-
-        Per-bucket seq order is (ts, event_id) order WITHIN each
-        produce batch (the FIFO arrival analog), so the returned
-        offset replays exactly the rows with ts >= T whenever batches
-        arrive in event-time order; a LATER produce carrying EARLIER
-        timestamps gets higher seqs, and the replay then also includes
-        those pre-T late arrivals — the same over-delivery Kafka's
-        offsetsForTimes has on out-of-order-appended partitions (the
-        offset is "first at/after T", never "only at/after T"). One
-        Spark job: the ts predicate is an attribute-vs-literal compare
-        (NOT a function of ts — that would be unpushable) so it pushes
-        into the parquet scan and row-group stats prune below-T row
-        groups, then a per-bucket min(seq) partial agg — O(matching
-        rows), never a full sort."""
-        maxima = self._bucket_maxima(topic)
-        if not maxima:
-            # created-but-never-produced topic: no offsets exist and
-            # read_topic's empty fallback frame has no ts column to
-            # filter — {} is the correct "nothing to seek" answer
-            # (review r09: a maintenance loop started before the first
-            # produce must not error every cycle)
-            return {}
-        recorded = self.latest_manifest(topic)[1].get("schema")
-        if recorded is not None and not any(
-            s.split(":", 1)[0] == "ts" for s in recorded
-        ):
-            # A ts-less topic (native sink with a custom schema) cannot
-            # be time-positioned: fail with a named contract error, not
-            # the opaque AnalysisException the Spark filter would raise
-            # — the message is what a retain_ms maintenance cycle or a
-            # start_at=timestamp stream surfaces (ADVICE r09).
-            raise ValueError(
-                f"topic {topic!r} has no 'ts' column (recorded schema: "
-                f"{[s.split(':', 1)[0] for s in recorded]}); time-based "
-                "positioning (offsets_for_times / seek_to_timestamp / "
-                "start_at=timestamp / retain_ms) requires a timestamp "
-                "column named 'ts'"
-            )
-        got = {
-            int(r["bucket"]): int(r["o"])
-            for r in (
-                self.read_topic(topic)
-                .filter(
-                    F.col("ts") >= F.timestamp_millis(F.lit(int(epoch_ms)))
-                )
-                .groupBy("bucket")
-                .agg(F.min("seq").alias("o"))
-                .collect()
-            )
-        }
-        return {b: got.get(b, mx + 1) for b, mx in maxima.items()}
+        high-water mark. A driver-side scan planned from one manifest
+        version, no Spark job — see
+        :func:`datasource.offsets_for_times` for the exactness
+        contract and the ts-less-topic ``ValueError``."""
+        return datasource.offsets_for_times(self.root, topic, epoch_ms)
 
     def seek_to_timestamp(
         self, consumer_id: str, topic: str, epoch_ms: int
     ) -> dict[int, int]:
         """Position a batch consumer at a point in TIME (Kafka
         ``offsetsForTimes`` + ``seek``): registers the consumer and
-        commits every bucket's timestamp offset, so the next
-        ``consume`` starts at the first message at/after the instant
-        (see :meth:`offsets_for_times` for the exactness contract —
-        late produces carrying earlier timestamps are still replayed,
-        Kafka's semantics). Returns the committed {bucket: offset}
-        map. The streaming analog is the ``ripple_topic`` source's
+        commits every bucket's timestamp offset in one atomic offsets
+        publish (:meth:`commit_many`), so the next ``consume`` starts
+        at the first message at/after the instant (see
+        :meth:`offsets_for_times` for the exactness contract — late
+        produces carrying earlier timestamps are still replayed,
+        Kafka's semantics) and a failed write leaves no bucket seeked.
+        Returns the committed {bucket: offset} map. The streaming analog is the ``ripple_topic`` source's
         ``start_at=timestamp:<epoch_ms>`` option."""
         offsets = self.offsets_for_times(topic, epoch_ms)
         self.register_consumer(consumer_id, topic)
-        for b, o in offsets.items():
-            self.commit(consumer_id, topic, b, o)
+        self.commit_many(consumer_id, topic, offsets)
         return offsets
 
     @staticmethod

@@ -76,3 +76,20 @@ def batches_with_rows(query) -> int:
     ``processAllAvailable()`` and checks this is at least 2: the
     ripple_topic source's first trigger takes the whole backlog."""
     return sum(1 for p in query.recentProgress if p.numInputRows > 0)
+
+
+def offsets_for_times_reference(store, topic: str, epoch_ms: int) -> dict[int, int]:
+    """offsetsForTimes computed independently in Spark: per bucket, the
+    smallest seq of the retained rows with ``ts`` at/after ``epoch_ms``,
+    and the high-water mark for a bucket with no such row."""
+    from pyspark.sql import functions as F
+
+    got = {
+        r["bucket"]: r["min(seq)"]
+        for r in store.read_topic(topic)
+        .filter(F.unix_millis("ts") >= epoch_ms)
+        .groupBy("bucket")
+        .min("seq")
+        .collect()
+    }
+    return {b: got.get(b, mx + 1) for b, mx in store._bucket_maxima(topic).items()}

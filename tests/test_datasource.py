@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ripple_server_spark.catalog import load_table
 from ripple_server_spark.sources.datasource import RippleTopicDataSource
 from ripple_server_spark.sources.topics import TopicStore
-from tests.conftest import topic_stream
+from tests.conftest import offsets_for_times_reference, topic_stream
 
 
 @pytest.fixture(scope="module")
@@ -1770,8 +1770,10 @@ def test_stream_starts_at_timestamp(spark, sf_dir, tmp_path, tier):
         .collect()
     }
     assert got == expect and expect  # exact at/after-T replay
-    # batch surface agrees: offsets_for_times == first delivered seqs
+    # batch surface agrees with an independent Spark reference, and
+    # with the first delivered seqs
     offs = st.offsets_for_times("ts1", t_ms)
+    assert offs == offsets_for_times_reference(st, "ts1", t_ms)
     first = {}
     for b, s in got:
         first[b] = min(s, first.get(b, 1 << 60))
@@ -1857,23 +1859,49 @@ def test_fixed_list_restart_does_not_resurrect_removed_topic(
     )
 
 
-def test_timestamp_start_far_future_tails_not_crashes(spark, sf_dir, tmp_path):
-    """Review r09: a far-future timestamp anchor (beyond the ns-unit
-    int64 range after ms->ns conversion) must tail from the HWM — the
-    Kafka null-offset-means-end convention — not overflow pa.scalar."""
-    from ripple_server_spark.sources.datasource import _timestamp_cursors
+def _store_offsets(st, topic, epoch_ms):
+    return st.offsets_for_times(topic, epoch_ms)
 
+
+def _stream_cursors(st, topic, epoch_ms):
+    from ripple_server_spark.sources.datasource import (
+        _check_start_at,
+        _initial_cursors,
+    )
+
+    start_at = _check_start_at(f"timestamp:{epoch_ms}")
+    return {int(b): o for b, o in _initial_cursors(st.root, topic, start_at).items()}
+
+
+@pytest.mark.parametrize(
+    "surface", [_store_offsets, _stream_cursors], ids=["store", "stream"]
+)
+def test_timestamp_start_far_future_tails_not_crashes(
+    spark, sf_dir, tmp_path, surface
+):
+    """Review r09: a timestamp anchor outside the int64 microsecond
+    range must not overflow, on the batch surface and the stream's
+    start cursors alike. A far-future T tails from the HWM (Kafka's
+    null-offset-means-end convention); a far-past T starts at each
+    bucket's first retained seq (Kafka's before-earliest -> earliest)."""
     st = TopicStore(spark, str(tmp_path / "far_topics"))
     st.create_topic("far", n_buckets=2)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    st.produce(ev.limit(60), "far")
-    hwm = {str(b): mx + 1 for b, mx in st._bucket_maxima("far").items()}
+    st.produce(ev.filter(F.col("event_id") < 60), "far")
+    first_wave = st._bucket_maxima("far")
+    st.produce(ev.filter(F.col("event_id").between(500, 559)), "far")
+    # age out the first wave, so the first retained seq is not 0
+    st._truncate_bounds("far", lambda b: first_wave[int(b)] + 1)
+    floors = st._bucket_floors("far")
+    assert sorted(floors) == [0, 1] and all(floors.values())
+    hwm = {b: mx + 1 for b, mx in st._bucket_maxima("far").items()}
     # year ~2262+ in ms: * 1e6 for an ns column exceeds int64
-    assert _timestamp_cursors(st.root, "far", 9_300_000_000_000) == hwm
+    assert surface(st, "far", 9_300_000_000_000) == hwm
     # and an absurd sentinel far past any unit's range
-    assert _timestamp_cursors(st.root, "far", 10**17) == hwm
+    assert surface(st, "far", 10**17) == hwm
+    assert surface(st, "far", -(10**17)) == floors
 
 
 def test_pattern_narrowing_restart_does_not_resurrect(spark, sf_dir, tmp_path):
@@ -1976,12 +2004,14 @@ def test_mixed_era_topic_timestamp_surfaces(spark, sf_dir, tmp_path):
     got = st.read_topic("era")
     assert got.count() == ev.count()
     assert got.filter(F.unix_millis("ts") >= t_ms).count() == n_new
-    # offsets_for_times + the pyarrow streaming path agree across eras
-    from ripple_server_spark.sources.datasource import _timestamp_cursors
+    # offsets_for_times and the stream's start cursors match an
+    # independent Spark reference across eras
+    from ripple_server_spark.sources.datasource import _initial_cursors
 
-    offs = st.offsets_for_times("era", t_ms)
-    cur = _timestamp_cursors(st.root, "era", t_ms)
-    assert {str(b): o for b, o in offs.items()} == cur
+    ref = offsets_for_times_reference(st, "era", t_ms)
+    assert st.offsets_for_times("era", t_ms) == ref
+    cur = _initial_cursors(st.root, "era", f"timestamp:{t_ms}")
+    assert cur == {str(b): o for b, o in ref.items()}
     spark.dataSource.register(RippleTopicDataSource)
     for tier in ("partitioned", "simple"):
         q = (

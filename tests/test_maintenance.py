@@ -220,9 +220,10 @@ def test_time_retention_on_never_produced_topic_is_noop(spark, tmp_path):
 
 
 def test_time_retention_pass_is_rate_limited(spark, sf_dir, tmp_path):
-    """The retain_ms pass costs a Spark job over the log (no ts stats
-    to prune with), so it runs at most every retention_check_interval_s
-    (Kafka log.retention.check.interval.ms), not every cycle."""
+    """The retain_ms pass scans the log's ts column (no ts stats to
+    prune with on INT96 files), so it runs at most every
+    retention_check_interval_s (Kafka log.retention.check.interval.ms),
+    not every cycle."""
     from ripple_server_spark.catalog import load_table
     from ripple_server_spark.sources.maintenance import TopicMaintenance
     from ripple_server_spark.sources.topics import TopicStore

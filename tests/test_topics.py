@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ripple_server_spark.catalog import load_table
 from ripple_server_spark.sources import manifest
 from ripple_server_spark.sources.topics import TopicStore
+from tests.conftest import offsets_for_times_reference
 
 N_BUCKETS = 4
 
@@ -759,6 +760,11 @@ def test_time_positioning_on_ts_less_topic_raises_named_error(spark, tmp_path):
         st.offsets_for_times("nt", 1_700_000_000_000)
     with pytest.raises(ValueError, match="no 'ts' column"):
         st.truncate_before_timestamp("nt", 1_700_000_000_000)
+    # the stream's start_at=timestamp cursors name the same contract
+    from ripple_server_spark.sources.datasource import _initial_cursors
+
+    with pytest.raises(ValueError, match="no 'ts' column"):
+        _initial_cursors(st.root, "nt", "timestamp:1700000000000")
     # seq-based reads are unaffected by the missing ts
     assert st.read_topic("nt").count() == 3
 
@@ -1255,6 +1261,55 @@ def test_consume_materializes_in_one_job_in_seq_order(polled):
     finally:
         for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(k, None)
+
+
+def test_offsets_for_times_runs_no_spark_job(polled):
+    """offsetsForTimes over a 300+ file log is a driver-side scan: no
+    Spark job, the caller's job group left as it was, and the answer of
+    an independent Spark min(seq) over the at/after-T rows, with the
+    high-water mark for a bucket that has none."""
+    st = polled
+    sc = st.spark.sparkContext
+    t_ms = 1705276800000  # 2024-01-15T00:00:00Z, mid-fixture
+    sc.setJobGroup("caller", "the caller's own group")
+    try:
+        with _jobs_in(sc, "offsets-for-times") as jobs:
+            got = st.offsets_for_times("pp", t_ms)
+        assert jobs == []
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    assert got == offsets_for_times_reference(st, "pp", t_ms)
+    assert sorted(got) == list(range(8))
+    hwm = {b: mx + 1 for b, mx in st._bucket_maxima("pp").items()}
+    assert any(got[b] < hwm[b] for b in got)
+
+
+def test_seek_to_timestamp_is_one_offsets_publish(spark, sf_dir, tmp_path, monkeypatch):
+    """seek_to_timestamp moves every bucket in one atomic offsets-file
+    publish: with every write after the first failing, the seek still
+    lands whole, so a crash can never leave some buckets seeked and
+    others at their prior offsets."""
+    st = TopicStore(spark, str(tmp_path / "seek_one"))
+    st.create_topic("sk", n_buckets=4)
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    st.produce(ev, "sk")
+    st.register_consumer("c", "sk")
+    writes: list[str] = []
+    real = TopicStore._write_json
+
+    def one_write(path, doc):
+        writes.append(path)
+        if len(writes) > 1:
+            raise OSError("offsets write failed")
+        real(path, doc)
+
+    monkeypatch.setattr(TopicStore, "_write_json", staticmethod(one_write))
+    offsets = st.seek_to_timestamp("c", "sk", 1705276800000)
+    assert len(writes) == 1
+    assert len(offsets) == 4
+    assert st.committed_offsets("c", "sk") == offsets
 
 
 def test_consume_schema_matches_read_topic_on_evolved_topic(spark, sf_dir, tmp_path):
