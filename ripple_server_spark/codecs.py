@@ -877,10 +877,6 @@ class AudioHandle:
         return self.data.shape[1]
 
     @property
-    def duration_s(self) -> float:
-        return self.n_samples / self.rate
-
-    @property
     def full_scale(self) -> int:
         return {1: 128, 2: 32768, 3: 1 << 23, 4: 1 << 31}[self.sample_width]
 

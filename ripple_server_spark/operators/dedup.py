@@ -29,7 +29,7 @@ from ripple_server_spark.config import (
     MINHASH_PERMS,
 )
 from ripple_server_spark.functions.text import exploded_tokens, shingles_pandas
-from ripple_server_spark.functions.vectors import cosine, dot, l2_norm
+from ripple_server_spark.functions.vectors import dot, l2_norm
 
 
 def exact_dedup_docs(docs: DataFrame) -> DataFrame:
@@ -479,28 +479,6 @@ def _nearest_above(pairs: DataFrame, min_sim: float) -> DataFrame:
     )
 
 
-def embedding_neardup(emb: DataFrame, min_sim: float = 0.2) -> DataFrame:
-    """Blocked cosine nearest-neighbor per vector (block = label here;
-    at scale, block = LSH bucket from functions.vectors.lsh_bucket_expr
-    so candidate count stays near-linear)."""
-    a = emb.alias("a")
-    b = emb.alias("b")
-    sim = cosine(F.col("a.embedding"), F.col("b.embedding"))
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            sim.alias("sim"),
-        )
-    )
-    return _nearest_above(pairs, min_sim)
-
-
 def setsim_join_prefix(
     docs: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
@@ -677,17 +655,3 @@ class IncrementalSetSimJoin:
         self._last_batch_id = batch_id
         self._last_pairs = pairs
         return pairs
-
-
-def setsim_join_prefix_incremental(
-    corpus: DataFrame | None,
-    chunk: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-) -> DataFrame:
-    """One epoch of :class:`IncrementalSetSimJoin` from cold state
-    (compat shim for callers without a live state object: the corpus is
-    replayed as a first epoch, then the chunk is observed)."""
-    inc = IncrementalSetSimJoin(threshold)
-    if corpus is not None:
-        inc.observe(corpus)
-    return inc.observe(chunk)

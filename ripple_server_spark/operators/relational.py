@@ -65,13 +65,3 @@ def union_topics(*dfs: DataFrame) -> DataFrame:
     for d in dfs[1:]:
         out = out.unionByName(d)
     return out
-
-
-def exact_dedup(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Exact dedup on a key set (reference analog: ack-id matching keeps
-    one ack per id, internal/broker/ack/ack.go:76-80).
-
-    Scale: hash-shuffle on ``keys`` once; partial map-side reduction via
-    dropDuplicates (first-row-wins aggregate), AQE handles skewed keys.
-    """
-    return df.dropDuplicates(list(keys))

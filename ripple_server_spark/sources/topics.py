@@ -37,13 +37,10 @@ import json
 import os
 import shutil
 import tempfile
-import threading
 import time
 import uuid
-import weakref
-from contextlib import contextmanager as _contextmanager
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
@@ -70,104 +67,6 @@ def normalize_offsets_doc(doc: dict) -> dict:
             "generations": dict(doc.get("generations", {})),
         }
     return {"offsets": dict(doc), "generations": {}}
-
-
-# One cloned engine session per user session (SparkContext shared).
-# Engine topic FILES are all written by the pyarrow staging kernel
-# (sources/staging.py), never by a Spark writer; the clone hosts only
-# plans whose session confs must differ from the user's —
-# compact_by_key's aggregation, whose Observations need
-# AQEPropagateEmptyRelation excluded (see _engine_session). A
-# dedicated session means no shared-session SQL conf is ever mutated:
-# the pre-r10 set/restore window — even serialized by a module lock —
-# still re-typed a USER parquet write that ran on another driver
-# thread (review r09/ADVICE r09).
-_ENGINE_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
-    weakref.WeakKeyDictionary()
-)
-_ENGINE_LOCK = threading.Lock()
-
-# Runtime confs mirrored from the user session into the engine clone —
-# RE-SYNCED at every entry, not just at clone time (ADVICE r10:
-# newSession() starts from the builder's initial confs, and a one-shot
-# copy goes stale the moment the user changes a runtime conf). These
-# affect the rebound plans: shuffle width of the aggregation; AQE;
-# ANSI arithmetic semantics; session timezone for any tz-aware
-# expression the rebound plan evaluates engine-side.
-_ENGINE_MIRRORED_CONFS = (
-    "spark.sql.shuffle.partitions",
-    "spark.sql.adaptive.enabled",
-    "spark.sql.ansi.enabled",
-    "spark.sql.session.timeZone",
-)
-
-
-def _sync_engine_confs(spark: SparkSession, eng: SparkSession) -> None:
-    """Copy the mirrored runtime confs user -> engine (cheap conf
-    get/set; called under _ENGINE_LOCK)."""
-    for k in _ENGINE_MIRRORED_CONFS:
-        try:
-            eng.conf.set(k, spark.conf.get(k))
-        except Exception:
-            pass  # conf undefined in this Spark build — keep default
-
-
-def _engine_session(spark: SparkSession) -> SparkSession:
-    """The per-user-session engine clone (created lazily, cached weakly
-    so a stopped user session does not pin its clone). Mirrored confs
-    are re-synced from the user session on EVERY call, so engine-side
-    plan evaluation tracks runtime conf changes instead of the values
-    frozen at clone creation (ADVICE r10)."""
-    with _ENGINE_LOCK:
-        eng = _ENGINE_SESSIONS.get(spark)
-        if eng is None:
-            eng = spark.newSession()
-            eng.conf.set(
-                "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-            )
-            # AQE's runtime empty-relation propagation REPLACES the
-            # subtree above a 0-row shuffle, dropping upstream
-            # CollectMetrics nodes — an Observation on the scan then
-            # gets no metrics row and Observation.get dies in toPyRow
-            # (hit by compact_by_key when every key is tombstoned).
-            # compact_by_key observes its row counts as the commit's
-            # source of truth, so on THIS session correctness of
-            # metrics outranks the empty-plan shortcut.
-            eng.conf.set(
-                "spark.sql.adaptive.optimizer.excludedRules",
-                "org.apache.spark.sql.execution.adaptive."
-                "AQEPropagateEmptyRelation",
-            )
-            _ENGINE_SESSIONS[spark] = eng
-        _sync_engine_confs(spark, eng)
-        return eng
-
-
-@_contextmanager
-def _micros_ts_writes(df: DataFrame):
-    """Yield ``df`` rebound to the engine session (see
-    ``_engine_session``): today only ``compact_by_key`` builds its
-    aggregation there, so its Observations survive an all-empty
-    shuffle. Topic files are written by the pyarrow staging kernel
-    (TIMESTAMP_MICROS with min/max statistics natively), never on this
-    session; its pinned ``outputTimestampType=TIMESTAMP_MICROS`` is a
-    guard for any future Spark-written topic file.
-
-    Why a cloned session and not a conf window: SQL confs are
-    session-global across driver threads, so any set/restore on the
-    SHARED session races a concurrent user job on another thread (the
-    round-9 re-typing regression). The clone shares the SparkContext,
-    so the rebind is a global-temp-view handoff of the ANALYZED plan —
-    lazy, zero data movement, and the view is dropped on exit."""
-    spark = df.sparkSession
-    eng = _engine_session(spark)
-    name = f"ripple_micros_{uuid.uuid4().hex}"
-    df.createOrReplaceGlobalTempView(name)
-    try:
-        gdb = spark.conf.get("spark.sql.globalTempDatabase")
-        yield eng.table(f"{gdb}.{name}")
-    finally:
-        spark.catalog.dropGlobalTempView(name)
 
 
 def _stage_by_bucket(
@@ -916,7 +815,17 @@ class TopicStore:
         rewrite is :meth:`compact`'s transaction, :func:`manifest.rewrite`:
         snapshot-pinned readers keep the old files until vacuum, a
         concurrent truncate supersedes the attempt (retry from the new
-        base) rather than resurrecting aged-out rows.
+        base) rather than resurrecting aged-out rows. The plan runs on
+        the caller's session, like :meth:`compact`.
+
+        ROW COUNTS (the return value, and the ``dropped == 0`` test
+        that decides whether a pass swaps files) cost no extra Spark
+        job: input rows are the ``num_rows`` of the input files'
+        parquet footers, read on the driver; output rows are the sum of
+        the staging kernel's per-file ``n``. With a positive
+        ``tombstone_retention_ms``, the retained tombstones are counted
+        by a driver-side Arrow read of ``[key_col, tombstone_col]``
+        over the staged files.
 
         CLEANER CHECKPOINT (the ``min.cleanable.dirty.ratio`` input,
         VERDICT r10 item 2): a successful pass records the file set it
@@ -933,6 +842,9 @@ class TopicStore:
         changed — that IS the change); repeat passes over the same
         clean set burn nothing.
         """
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
         # the counts of the latest staging attempt, read by the swap's
         # cleaner-checkpoint edit and by the no-drop path below
         seen: dict = {}
@@ -970,97 +882,85 @@ class TopicStore:
                 )
             cols = src.columns
             data_dir = self.data_dir(topic)
-            obs_in, obs_out = Observation(), Observation()
-            # Build the whole plan on the ENGINE session (rebind the
-            # scan, then aggregate there): both observations then hang
-            # off the session that actually executes, so input/output
-            # row counts — hence the dropped count — are exact, free
-            # (one action), and gap-proof (a seq-span estimate would
-            # overcount on every pass after the first).
-            with _micros_ts_writes(src) as esrc:
-                esrc = esrc.observe(obs_in, F.count(F.lit(1)).alias("n"))
-                # per-row synthetic group for null keys: bucket:seq can
-                # never collide with a real key under the \x00 prefix
-                gkey = F.when(
-                    F.col(key_col).isNull(),
-                    F.concat_ws(
-                        ":", F.lit("\x00null"), F.col("bucket"), F.col("seq")
-                    ),
-                ).otherwise(F.col(key_col).cast("string"))
-                if order_by is None:
-                    # per-(bucket, key) latest by seq — the produce
-                    # routing invariant makes this global latest except
-                    # across an expand_buckets boundary (docstring)
-                    grouped = esrc.groupBy(
-                        F.col("bucket").alias("_b"), gkey.alias("_gk")
-                    ).agg(F.max_by(F.struct(*cols), F.col("seq")).alias("_r"))
-                else:
-                    # global latest per key by (order_by, seq, bucket):
-                    # one key -> one survivor across ALL buckets, the
-                    # read-side CDC contract (null-key rows keep their
-                    # per-row synthetic group and pass through)
-                    grouped = esrc.groupBy(gkey.alias("_gk")).agg(
-                        F.max_by(
-                            F.struct(*cols),
-                            F.struct(
-                                F.col(order_by), F.col("seq"), F.col("bucket")
-                            ),
-                        ).alias("_r")
+            # per-row synthetic group for null keys: bucket:seq can
+            # never collide with a real key under the \x00 prefix
+            gkey = F.when(
+                F.col(key_col).isNull(),
+                F.concat_ws(":", F.lit("\x00null"), F.col("bucket"), F.col("seq")),
+            ).otherwise(F.col(key_col).cast("string"))
+            if order_by is None:
+                # per-(bucket, key) latest by seq — the produce routing
+                # invariant makes this global latest except across an
+                # expand_buckets boundary (docstring)
+                grouped = src.groupBy(
+                    F.col("bucket").alias("_b"), gkey.alias("_gk")
+                ).agg(F.max_by(F.struct(*cols), F.col("seq")).alias("_r"))
+            else:
+                # global latest per key by (order_by, seq, bucket): one
+                # key -> one survivor across ALL buckets, the read-side
+                # CDC contract (null-key rows keep their per-row
+                # synthetic group and pass through)
+                grouped = src.groupBy(gkey.alias("_gk")).agg(
+                    F.max_by(
+                        F.struct(*cols),
+                        F.struct(F.col(order_by), F.col("seq"), F.col("bucket")),
+                    ).alias("_r")
+                )
+            survivors = grouped.select("_r.*")
+            if tombstone_col is not None:
+                # a keyed survivor with a NULL value is a tombstone: the
+                # key's latest state is "deleted" — older versions are
+                # gone via the latest-wins agg; the tombstone ROW is
+                # dropped immediately (retention 0) or once its event
+                # time leaves the retention window (Kafka
+                # delete.retention.ms; null-KEY rows are unkeyed
+                # records, not deletes — they pass through)
+                keep_tombstone = F.lit(False)
+                if tombstone_retention_ms > 0:
+                    cutoff_ms = int(time.time() * 1000) - int(tombstone_retention_ms)
+                    keep_tombstone = F.col("ts") >= F.timestamp_millis(
+                        F.lit(cutoff_ms)
                     )
-                survivors = grouped.select("_r.*")
-                if tombstone_col is not None:
-                    # a keyed survivor with a NULL value is a tombstone:
-                    # the key's latest state is "deleted" — older
-                    # versions are gone via the latest-wins agg; the
-                    # tombstone ROW is dropped immediately (retention 0)
-                    # or once its event time leaves the retention
-                    # window (Kafka delete.retention.ms; null-KEY rows
-                    # are unkeyed records, not deletes — they pass
-                    # through)
-                    keep_tombstone = F.lit(False)
-                    if tombstone_retention_ms > 0:
-                        cutoff_ms = (
-                            int(time.time() * 1000) - int(tombstone_retention_ms)
-                        )
-                        keep_tombstone = F.col("ts") >= F.timestamp_millis(
-                            F.lit(cutoff_ms)
-                        )
-                    survivors = survivors.filter(
-                        F.col(key_col).isNull()
-                        | F.col(tombstone_col).isNotNull()
-                        | keep_tombstone
-                    )
-                out_metrics = [F.count(F.lit(1)).alias("n")]
+                survivors = survivors.filter(
+                    F.col(key_col).isNull()
+                    | F.col(tombstone_col).isNotNull()
+                    | keep_tombstone
+                )
+            # the bucket rewrite stages through compact()'s kernel: one
+            # file per bucket, seq order preserved, invisible until the
+            # manifest swap commits
+            staged = _stage_by_bucket(
+                survivors,
+                data_dir,
+                {},
+                [c for c in cols if c != "bucket"],
+                prefix="cmp",
+                assign_seq=False,
+            )
+            # Exact counts with no second scan: read_topic(version=v)
+            # reads exactly m["files"], unfiltered, so their footers sum
+            # to the input rows, and the kernel's n sums to the output
+            # rows (a seq-span estimate would overcount on every pass
+            # after the first — compaction leaves gaps).
+            n_in = sum(
+                pq.read_metadata(os.path.join(data_dir, rel)).num_rows
+                for rel in m["files"]
+            )
+            seen["dropped"] = n_in - sum(r["n"] for r in staged)
+            if tombstone_col is not None and tombstone_retention_ms > 0:
                 # retained within-window tombstones (delete.retention.ms
                 # analog): counted so the cleaner checkpoint below can
                 # DECLINE to mark their files clean — the second pass of
                 # the two-pass tombstone lifecycle must still happen
                 # after the window expires, and a clean checkpoint would
                 # gate it off forever
-                out_metrics.append(
-                    F.count(
-                        F.when(
-                            F.col(key_col).isNotNull()
-                            & F.col(tombstone_col).isNull(),
-                            1,
-                        )
-                    ).alias("t")
-                    if tombstone_col is not None and tombstone_retention_ms > 0
-                    else F.lit(0).alias("t")
-                )
-                # the bucket rewrite stages through compact()'s kernel:
-                # one file per bucket, seq order preserved, invisible
-                # until the manifest swap commits
-                staged = _stage_by_bucket(
-                    survivors.observe(obs_out, *out_metrics),
-                    data_dir,
-                    {},
-                    [c for c in cols if c != "bucket"],
-                    prefix="cmp",
-                    assign_seq=False,
-                )
-            seen["retained"] = int(obs_out.get["t"])
-            seen["dropped"] = int(obs_in.get["n"]) - int(obs_out.get["n"])
+                for r in staged:
+                    t = pq.ParquetFile(os.path.join(data_dir, r["rel"])).read(
+                        columns=[key_col, tombstone_col]
+                    )
+                    seen["retained"] += t.filter(
+                        pc.and_(pc.is_valid(t[key_col]), pc.is_null(t[tombstone_col]))
+                    ).num_rows
             if seen["dropped"] == 0:
                 # already fully compacted: do NOT swap identical content
                 # under pinned readers (the checkpoint is handled below)
@@ -1609,19 +1509,6 @@ class TopicStore:
         for member in out:
             self.register_consumer(member, topic)
         return out
-
-    def _fence_group_commit(
-        self,
-        topic: str,
-        group_id: str,
-        generation: int | None,
-        consumer_id: str,
-        bucket: int,
-    ) -> None:
-        """Single-bucket form of :meth:`_fence_group_commit_many`."""
-        self._fence_group_commit_many(
-            topic, group_id, generation, consumer_id, [bucket]
-        )
 
     def _fence_group_commit_many(
         self,

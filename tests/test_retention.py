@@ -251,6 +251,40 @@ def test_compact_by_key_latest_wins_and_gap_tolerant_consume(spark, tmp_path):
     assert st.latest_manifest("kc")[0] == v
 
 
+def test_compact_by_key_dropped_count_is_exact_across_seq_gaps(spark, tmp_path):
+    """The dropped count is the exact row difference even when the
+    input files' seq ranges have holes: ``dropped == 0`` decides
+    whether a pass swaps files, so a count taken from seq spans
+    (``hi - lo + 1``) would overcount on every pass after the first
+    and rewrite an already-compacted log forever."""
+    st = TopicStore(spark, str(tmp_path / "kc_gaps"))
+    st.create_topic("kg", n_buckets=1)
+    base_ts = F.lit("2026-01-01 00:00:00").cast("timestamp")
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "event_id bigint, user_id bigint").select(
+            "event_id",
+            (base_ts + F.make_interval(secs=F.col("event_id"))).alias("ts"),
+            "user_id",
+        )
+
+    # seqs 0..3 = keys 1, 2, 3, 2: key 2 is updated out of step, so the
+    # survivors {0, 2, 3} leave a hole inside the compacted file's range
+    st.produce(batch([(0, 1), (1, 2), (2, 3), (3, 2)]), "kg")
+    assert st.compact_by_key("kg", key_col="user_id") == 1
+    # seqs 4, 5 = keys 2, 4: survivors {0, 2, 4, 5} span 6 seqs
+    st.produce(batch([(4, 2), (5, 4)]), "kg")
+    n_before = st.read_topic("kg").count()
+    dropped = st.compact_by_key("kg", key_col="user_id")
+    n_after = st.read_topic("kg").count()
+    assert (n_before, n_after) == (5, 4)
+    assert dropped == n_before - n_after
+    # nothing new: the pass drops nothing and swaps no files
+    files = st.latest_manifest("kg")[1]["files"]
+    assert st.compact_by_key("kg", key_col="user_id") == 0
+    assert st.latest_manifest("kg")[1]["files"] == files
+
+
 def test_compact_by_key_preserves_concurrent_produce(spark, tmp_path):
     """A produce landing mid-compaction is preserved verbatim (its
     files are not in the compacted input set) — even when it carries
@@ -437,11 +471,11 @@ def test_compact_by_key_matches_pandas_model_randomized(spark, tmp_path):
 
 def test_compact_by_key_all_keys_tombstoned_empties_topic(spark, tmp_path):
     """Every key deleted: the compacted log is EMPTY (zero survivors),
-    which exercises the AQE empty-relation edge — the engine session
-    must keep the input-count observation alive when the aggregate
-    yields 0 rows (AQEPropagateEmptyRelation would drop the upstream
-    CollectMetrics and kill Observation.get). Consumers see an empty
-    gap-only log with valid HWMs."""
+    so the staging kernel stages zero files and the whole dropped count
+    comes from the input files' footers (AQE may replace the all-empty
+    aggregate with an empty relation; the count must not depend on the
+    plan running). Consumers see an empty gap-only log with valid
+    HWMs."""
     st = TopicStore(spark, str(tmp_path / "kc_empty_all"))
     st.create_topic("ka", n_buckets=2)
     base_ts = F.lit("2026-01-01 00:00:00").cast("timestamp")

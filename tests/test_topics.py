@@ -648,32 +648,25 @@ def test_assign_buckets_range_assignor(spark, sf_dir, tmp_path):
             assert batch.count() == 0
 
 
-def test_engine_micros_session_isolated_from_user_writes(spark, sf_dir, tmp_path):
-    """ADVICE r09 (medium): engine topic writes run on a dedicated
-    cloned session with outputTimestampType pinned ONCE, so a user
-    parquet write racing an engine produce/compact on another driver
-    thread keeps the user's configured type — the pre-r10 set/restore
-    window on the shared session conf re-typed such writes."""
+def test_user_writes_keep_their_types_during_compaction(spark, sf_dir, tmp_path):
+    """ADVICE r09 (medium): the engine never sets a SQL conf on the
+    shared session, so a user parquet write racing produce and
+    compact_by_key on another driver thread keeps the user's configured
+    timestamp type (the pre-r10 set/restore window on the shared
+    session conf re-typed such writes), while every topic file, written
+    by the staging kernel, carries micros."""
     import glob
     import threading
 
     import pyarrow.parquet as pq
-
-    from ripple_server_spark.sources.topics import _engine_session
 
     st = TopicStore(spark, str(tmp_path / "iso_topics"))
     st.create_topic("iso", n_buckets=4)
     ev = load_table(spark, sf_dir, "events").limit(300).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-
-    eng = _engine_session(spark)
-    assert eng is not spark
-    assert (
-        eng.conf.get("spark.sql.parquet.outputTimestampType")
-        == "TIMESTAMP_MICROS"
-    )
-    assert _engine_session(spark) is eng  # cached per user session
+    rules = "spark.sql.adaptive.optimizer.excludedRules"
+    rules_before = spark.conf.get(rules, None)
 
     user_dir = str(tmp_path / "user_out")
     stop = threading.Event()
@@ -695,17 +688,18 @@ def test_engine_micros_session_isolated_from_user_writes(spark, sf_dir, tmp_path
     try:
         for k in range(3):
             st.produce(ev.filter(F.col("event_id") % 3 == k), "iso")
-        st.compact("iso")
+        dropped = st.compact_by_key("iso", key_col="user_id")
     finally:
         stop.set()
         t.join()
     assert not errs, errs
+    assert dropped > 0  # the pass swapped in compacted files
 
     # every ENGINE file carries micros ts (row-group-stats capable)...
     eng_files = glob.glob(
         str(tmp_path / "iso_topics/topics/iso/data/bucket=*/*.parquet")
     )
-    assert eng_files
+    assert any("/cmp-" in f for f in eng_files)
     for f in eng_files:
         typ = str(pq.ParquetFile(f).schema_arrow.field("ts").type)
         assert typ.startswith("timestamp[us"), (f, typ)
@@ -715,16 +709,9 @@ def test_engine_micros_session_isolated_from_user_writes(spark, sf_dir, tmp_path
     for f in user_files:
         typ = str(pq.ParquetFile(f).schema_arrow.field("ts").type)
         assert typ.startswith("timestamp[ns"), (f, typ)
-    # user session conf untouched; plan-handoff views cleaned up
-    # (scoped to OUR prefix: other tests in the session may hold their
-    # own global temp views legitimately)
+    # user session confs untouched
     assert spark.conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
-    leftover = [
-        v.name
-        for v in spark.catalog.listTables("global_temp")
-        if v.name.startswith("ripple_micros_")
-    ]
-    assert leftover == []
+    assert spark.conf.get(rules, None) == rules_before
 
 
 def test_time_positioning_on_ts_less_topic_raises_named_error(spark, tmp_path):
@@ -905,7 +892,7 @@ def test_produce_kernel_stage_equivalence(spark, tmp_path):
     (staging.stage_kernel) must reproduce the old window+partitionBy
     plan exactly — seq order (ts, event_id) ascending NULLS FIRST per
     bucket, TIMESTAMP_MICROS physical columns WITH min/max statistics
-    (the _micros_ts_writes contract the old Spark writer honored), and
+    (the contract the old Spark writer's micros conf honored), and
     recomputing any seq/bucket columns the batch already carries with
     seq at its original schema position (the withColumn-overwrite
     contract a consume->produce round trip relies on)."""
