@@ -1213,9 +1213,11 @@ def q_consumer_group_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket->member recomputation.
 
     Scale: each consume is a bucket-pruned tail read (partition filter
-    + seq row-group floor); the assignment itself is a pure function
-    of (n_buckets, group, n_members) — no coordination state, so N
-    members scale without a rebalance protocol."""
+    + seq row-group floor); the range split is a pure function of
+    (n_buckets, group, n_members), recorded once in the group's
+    manifest entry by one metadata-only commit. These members commit
+    ungated, to their own offsets files; fenced commits would store
+    the offsets in that entry, per (group, bucket)."""
     import hashlib
     import shutil
     import tempfile

@@ -278,32 +278,30 @@ def _initial_cursors(root: str, topic: str, start_at: str) -> dict[str, int]:
     whole retained log, ``latest`` tails from the manifest high-water
     marks, and ``consumer:<id>`` bridges the batch consumer-group
     surface (A7/A8) into streaming — the stream picks up exactly where
-    that consumer's committed offsets point (TopicStore.commit writes
-    next-seq cursors, the same unit as stream offsets; an unregistered
-    or never-committed consumer starts at 0 per bucket, matching
-    register_consumer's contract). ``timestamp:<epoch_ms>`` starts at
-    the first event at/after that instant per bucket (Kafka
-    offsetsForTimes — see :func:`offsets_for_times`)."""
+    that consumer's committed offsets point, read by
+    ``topics.committed_offsets_in`` like every batch read, so a group
+    member resumes its owned buckets at the group's committed offsets
+    (TopicStore.commit writes next-seq cursors, the same unit as stream
+    offsets; an unregistered or never-committed consumer starts at 0
+    per bucket, matching register_consumer's contract).
+    ``timestamp:<epoch_ms>`` starts at the first event at/after that
+    instant per bucket (Kafka offsetsForTimes — see
+    :func:`offsets_for_times`)."""
     if start_at == "latest":
         return _latest_cursors(root, topic)
     if start_at.startswith("timestamp:"):
         t = int(start_at.split(":", 1)[1])
         return {str(b): o for b, o in offsets_for_times(root, topic, t).items()}
     if start_at.startswith("consumer:"):
-        consumer_id = start_at.split(":", 1)[1]
-        path = os.path.join(root, "offsets", f"{consumer_id}--{topic}.json")
-        if not os.path.isfile(path):
-            return {}
-        with open(path) as f:
-            doc = json.load(f)
-        # one shared normalizer for wrapped (r11+, generation-stamped)
-        # and legacy flat offsets documents — lazy import keeps this
-        # module's import graph light for executor workers
-        from ripple_server_spark.sources.topics import normalize_offsets_doc
+        # lazy import keeps this module's import graph light for
+        # executor workers
+        from ripple_server_spark.sources.topics import committed_offsets_in
 
+        consumer_id = start_at.split(":", 1)[1]
+        _v, m = manifest.latest(root, topic)
         return {
-            str(b): int(v)
-            for b, v in normalize_offsets_doc(doc)["offsets"].items()
+            str(b): o
+            for b, o in committed_offsets_in(root, topic, consumer_id, m).items()
         }
     return {}
 
@@ -395,15 +393,7 @@ def _check_start_at(start_at: str) -> str:
     ):
         raise ValueError(_START_AT_DOC + repr(start_at))
     if start_at.startswith("consumer:"):
-        # the id is interpolated into the offsets/<id>--<topic>.json
-        # path — reject separators so 'consumer:../x' cannot escape the
-        # offsets directory (ADVICE r07; TopicStore ids are flat names)
-        consumer_id = start_at.split(":", 1)[1]
-        if "/" in consumer_id or os.sep in consumer_id or ".." in consumer_id:
-            raise ValueError(
-                f"consumer id {consumer_id!r} must be a flat name "
-                "(no path separators or '..')"
-            )
+        manifest.validate_consumer_id(start_at.split(":", 1)[1])
     return start_at
 
 

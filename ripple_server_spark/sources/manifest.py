@@ -92,6 +92,23 @@ def validate_topic_name(topic: str) -> None:
         )
 
 
+def validate_consumer_id(consumer_id: str) -> None:
+    """Reject consumer ids that would leave the offsets directory once
+    interpolated into ``<consumer>--<topic>.json``: empty, or holding a
+    path separator or ``..``. A ``--`` inside an id stays legal (the
+    topic side of the separator cannot hold one)."""
+    if (
+        not consumer_id
+        or "/" in consumer_id
+        or os.sep in consumer_id
+        or ".." in consumer_id
+    ):
+        raise ValueError(
+            f"consumer id {consumer_id!r} must be a non-empty flat name "
+            "(no path separators or '..')"
+        )
+
+
 def log_dir(root: str, topic: str) -> str:
     return os.path.join(root, "topics", topic, "_log")
 

@@ -54,21 +54,6 @@ from ripple_server_spark.sources.manifest import (  # noqa: F401  (re-exported)
 )
 
 
-def normalize_offsets_doc(doc: dict) -> dict:
-    """One normalizer for BOTH offsets-file formats — the r11+ wrapped
-    document ``{"offsets": {b: o}, "generations": {b: g}}`` and the
-    legacy flat ``{b: o}`` map — shared by every reader (TopicStore
-    and the ``ripple_topic`` source's ``start_at=consumer:`` cursor
-    load), so a future format change cannot silently diverge between
-    the batch and streaming paths (review r11)."""
-    if "offsets" in doc and isinstance(doc.get("offsets"), dict):
-        return {
-            "offsets": dict(doc["offsets"]),
-            "generations": dict(doc.get("generations", {})),
-        }
-    return {"offsets": dict(doc), "generations": {}}
-
-
 def _stage_by_bucket(
     df: DataFrame,
     data_dir: str,
@@ -130,6 +115,94 @@ def _arrow_schema(ddl: str) -> "pa.Schema":
     return to_arrow_schema(StructType.fromDDL(ddl))
 
 
+def offsets_path(root: str, consumer_id: str, topic: str) -> str:
+    """The one path of a consumer's own offsets file,
+    ``<root>/offsets/<consumer_id>--<topic>.json``. Both names are
+    checked first, so no id or topic can place the file outside the
+    offsets directory."""
+    manifest.validate_consumer_id(consumer_id)
+    manifest.validate_topic_name(topic)
+    return os.path.join(root, "offsets", f"{consumer_id}--{topic}.json")
+
+
+def _offsets_file(path: str) -> dict[str, int]:
+    """A consumer's own offsets file as ``{"<bucket>": offset}``, {}
+    when absent. Reads the flat form and the wrapped
+    ``{"offsets": {...}, ...}`` form older versions wrote."""
+    try:
+        with open(path) as f:
+            doc = json.load(f)
+    except FileNotFoundError:
+        return {}
+    return dict(doc["offsets"]) if isinstance(doc.get("offsets"), dict) else doc
+
+
+def _range_split(n_buckets: int, group_id: str, n_members: int) -> dict[str, list[int]]:
+    """The pure Kafka range-assignor function: member k of the group
+    owns a contiguous run of buckets; runs differ in size by at most
+    one; coverage is exhaustive and disjoint."""
+    base, extra = divmod(n_buckets, n_members)
+    out: dict[str, list[int]] = {}
+    start = 0
+    for k in range(n_members):
+        size = base + (1 if k < extra else 0)
+        out[f"{group_id}-{k}"] = list(range(start, start + size))
+        start += size
+    return out
+
+
+def _assignment(m: dict, group_id: str) -> dict[str, list[int]]:
+    """The one ownership reader: member -> sorted buckets of a group
+    recorded in manifest ``m`` ({} for an unknown group). Every entry
+    written by ``assign_buckets`` stores its assignment; a range entry
+    written before assignments were stored reads as its range split."""
+    entry = m.get("groups", {}).get(group_id)
+    if entry is None:
+        return {}
+    stored = entry.get("assignment")
+    if not stored:
+        return _range_split(int(m["n_buckets"]), group_id, int(entry["n_members"]))
+    return {mem: sorted(int(b) for b in bs) for mem, bs in stored.items()}
+
+
+def committed_offsets_in(
+    root: str, topic: str, consumer_id: str, m: dict
+) -> dict[int, int]:
+    """A consumer's committed ``{bucket: offset}`` on ``topic`` under
+    manifest ``m``: its own offsets file (the reference's
+    ``/consumers/<id>`` node), overridden for each bucket it owns in a
+    group recorded in ``m`` by the group's committed offset, where the
+    group has one. Group offsets belong to (group, bucket), so a
+    rebalance hands a bucket's progress to its new owner. Spark-free:
+    the one offsets read behind ``poll``/``consume``,
+    ``committed_offsets``, ``describe_group`` and the ``ripple_topic``
+    source's ``start_at=consumer:``."""
+    out = {
+        int(b): int(o)
+        for b, o in _offsets_file(offsets_path(root, consumer_id, topic)).items()
+    }
+    for group_id, entry in m.get("groups", {}).items():
+        committed = entry.get("offsets", {})
+        for b in _assignment(m, group_id).get(consumer_id, ()):
+            if str(b) in committed:
+                out[b] = int(committed[str(b)])
+    return out
+
+
+def _check_ungrouped(m: dict, consumer_id: str, op: str) -> None:
+    """ValueError when ``consumer_id`` owns buckets in a group recorded
+    in ``m``: those buckets read the group's offsets, which ``op``
+    (a write to the consumer's own file) would not move."""
+    for group_id in m.get("groups", {}):
+        if _assignment(m, group_id).get(consumer_id):
+            raise ValueError(
+                f"{op}: {consumer_id!r} owns buckets of group {group_id!r} "
+                f"on topic {m.get('topic')!r}, whose committed offsets "
+                "override its own; move a group's offsets with fenced "
+                "commits (group_id=, generation=)"
+            )
+
+
 class TopicStore:
     """Filesystem-backed topic registry (the ZooKeeper analog) with a
     MANIFEST LOG as the commit protocol.
@@ -139,7 +212,12 @@ class TopicStore:
         root/
           topics/<topic>/_log/<version>.json   # manifest log (source of truth)
           topics/<topic>/data/bucket=<n>/      # parquet event log (append-only)
-          offsets/<consumer_id>--<topic>.json  # committed per-bucket offsets
+          offsets/<consumer_id>--<topic>.json  # a consumer's own offsets
+
+    A consumer group's committed offsets live in its entry of the topic
+    manifest (``groups[<group>]["offsets"]``, keyed by bucket) beside
+    its generation and assignment, so a fenced group commit is one
+    manifest commit and a bucket's progress survives a rebalance.
 
     Commit protocol (Delta-/Iceberg-style, sized for a filesystem;
     implemented once, in ``sources/manifest.py``): every mutation
@@ -190,9 +268,6 @@ class TopicStore:
 
     def data_dir(self, topic: str) -> str:
         return os.path.join(self.topic_dir(topic), "data")
-
-    def _offsets_path(self, consumer_id: str, topic: str) -> str:
-        return os.path.join(self.root, "offsets", f"{consumer_id}--{topic}.json")
 
     # -- manifest log (sources/manifest.py) -------------------------------
     def latest_manifest(self, topic: str) -> tuple[int, dict]:
@@ -324,10 +399,11 @@ class TopicStore:
         valid because both iterate buckets from the manifest, where the
         new buckets simply appear. Every consumer GROUP's generation is
         bumped in the same commit (Kafka's epoch bump on partition-count
-        change): member ranges derive from n_buckets, so fenced commits
-        from the pre-expansion epoch are rejected until the member
-        re-joins via :meth:`assign_buckets` (idempotent at the same
-        n_members — it adopts the new epoch without another bump).
+        change): every assignment must now cover the new buckets, so
+        fenced commits from the pre-expansion epoch are rejected until
+        the member re-joins via :meth:`assign_buckets` (at the same
+        n_members it refreshes the assignment and adopts the new epoch
+        without another bump). Group offsets carry over unchanged.
 
         The one semantic cost is Kafka's too: the key->bucket mapping
         changes at the expansion point, so per-KEY FIFO order holds
@@ -363,14 +439,14 @@ class TopicStore:
             m["n_buckets"] = new_n_buckets
             # Bump EVERY consumer group's generation in the SAME commit
             # (Kafka bumps the group epoch on a partition-count change):
-            # member ranges are computed from n_buckets, so every
-            # assignment just changed — fenced commits from the
-            # pre-expansion epoch must fence with the accurate "the
-            # group rebalanced, re-join" error instead of a misleading
-            # out-of-range one while group_state still claimed their
-            # generation was current (ADVICE r10). Members re-join with
-            # assign_buckets (idempotent at the same n_members: it
-            # adopts the post-expansion epoch without double-bumping).
+            # every assignment must now cover the new buckets, so
+            # fenced commits from the pre-expansion epoch must fence
+            # with the accurate "the group rebalanced, re-join" error
+            # instead of a misleading out-of-range one while
+            # group_state still claimed their generation was current
+            # (ADVICE r10). Members re-join with
+            # assign_buckets (at the same n_members it refreshes the
+            # assignment and adopts this epoch without double-bumping).
             if m.get("groups"):
                 m["groups"] = {
                     g: {**e, "generation": int(e["generation"]) + 1}
@@ -478,32 +554,33 @@ class TopicStore:
         high-water mark (``"latest"`` — the next consume sees only
         NEW messages). Registers the consumer if needed and returns
         the committed {bucket: offset} map. One atomic offsets
-        publish (:meth:`commit_many`); O(manifest), no Spark job —
-        floors and maxima are commit state. Time-based resets are
-        :meth:`seek_to_timestamp`.
+        publish (:meth:`commit_many`); one manifest version gives the
+        bucket count, floors and maxima, no Spark job. Time-based
+        resets are :meth:`seek_to_timestamp`.
+
+        Resets move a consumer's own offsets file. A consumer that owns
+        buckets in a recorded group reads those buckets from the
+        group's offsets, which a reset would not move, so it is a
+        ``ValueError`` naming the group.
 
         OPERATIONAL CONTRACT (ADVICE r11): run resets only while the
-        consumer's group is QUIESCED — the same rule Kafka enforces by
-        requiring the group inactive for ``--reset-offsets``. This
-        publish is deliberately not generation-fenced (it is the
-        recovery tool an operator reaches for precisely when a group's
-        generation state is the thing being repaired), so a reset
-        racing a live fenced member would overwrite offsets that
-        member commits next."""
+        consumer is QUIESCED — the same rule Kafka enforces by
+        requiring the group inactive for ``--reset-offsets``. The
+        publish is not generation-fenced, so a reset racing the
+        consumer's own commits keeps whichever lands last."""
         if to not in ("earliest", "latest"):
             raise ValueError(
                 f"reset_offsets: to must be 'earliest' or 'latest', got {to!r}"
             )
-        n_buckets = int(self.topic_meta(topic)["n_buckets"])
-        floors = self._bucket_floors(topic)
-        maxima = self._bucket_maxima(topic)
+        _v, m = self.latest_manifest(topic)
+        _check_ungrouped(m, consumer_id, "reset_offsets")
         offsets = {
             b: (
-                floors.get(b, 0)
+                int(m["floors"].get(str(b), 0))
                 if to == "earliest"
-                else maxima.get(b, -1) + 1
+                else int(m["maxima"].get(str(b), -1)) + 1
             )
-            for b in range(n_buckets)
+            for b in range(int(m["n_buckets"]))
         }
         self.register_consumer(consumer_id, topic)
         self.commit_many(consumer_id, topic, offsets)
@@ -1128,26 +1205,16 @@ class TopicStore:
     def register_consumer(self, consumer_id: str, topic: str) -> None:
         """First-contact registration: offsets start at 0 for every
         bucket (reference: ZK /consumers/<id> = "0", core.go:77-85)."""
-        path = self._offsets_path(consumer_id, topic)
+        path = offsets_path(self.root, consumer_id, topic)
         if not os.path.exists(path):
             self._write_json(path, {})
 
-    def _read_offsets_doc(self, consumer_id: str, topic: str) -> dict:
-        """Raw offsets document: ``{"offsets": {b: o}, "generations":
-        {b: g}}``. Legacy flat ``{b: o}`` files (written before fenced
-        commits stamped generations) are normalized on read."""
-        path = self._offsets_path(consumer_id, topic)
-        if not os.path.exists(path):
-            return {"offsets": {}, "generations": {}}
-        with open(path) as f:
-            doc = json.load(f)
-        return normalize_offsets_doc(doc)
-
     def committed_offsets(self, consumer_id: str, topic: str) -> dict[int, int]:
-        return {
-            int(k): v
-            for k, v in self._read_offsets_doc(consumer_id, topic)["offsets"].items()
-        }
+        """The consumer's committed {bucket: offset} — its own file, with
+        the buckets it owns in a group read from the group's offsets
+        (:func:`committed_offsets_in`, one manifest version)."""
+        _v, m = self.latest_manifest(topic)
+        return committed_offsets_in(self.root, topic, consumer_id, m)
 
     def poll(
         self, consumer_id: str, topic: str, bucket: int, count: int
@@ -1173,8 +1240,8 @@ class TopicStore:
 
     def _poll(self, consumer_id: str, topic: str, bucket: int, count: int):
         """:meth:`poll` plus the DDL of its table."""
-        offset = self.committed_offsets(consumer_id, topic).get(bucket, 0)
         _v, m = self.latest_manifest(topic)
+        offset = committed_offsets_in(self.root, topic, consumer_id, m).get(bucket, 0)
         # Retention clamp: offsets below the retained floor resume at
         # the floor (Kafka earliest-offset reset; see truncate()).
         offset = max(offset, int(m["floors"].get(str(bucket), 0)))
@@ -1224,8 +1291,14 @@ class TopicStore:
         :meth:`offsets_for_times` for the exactness contract — late
         produces carrying earlier timestamps are still replayed,
         Kafka's semantics) and a failed write leaves no bucket seeked.
-        Returns the committed {bucket: offset} map. The streaming analog is the ``ripple_topic`` source's
-        ``start_at=timestamp:<epoch_ms>`` option."""
+        Returns the committed {bucket: offset} map. The streaming
+        analog is the ``ripple_topic`` source's
+        ``start_at=timestamp:<epoch_ms>`` option. Like
+        :meth:`reset_offsets`, a ``ValueError`` for a consumer that owns
+        buckets in a recorded group."""
+        _check_ungrouped(
+            self.latest_manifest(topic)[1], consumer_id, "seek_to_timestamp"
+        )
         offsets = self.offsets_for_times(topic, epoch_ms)
         self.register_consumer(consumer_id, topic)
         self.commit_many(consumer_id, topic, offsets)
@@ -1275,22 +1348,6 @@ class TopicStore:
                 pool = pool[need:]
         return cur
 
-    @staticmethod
-    def _range_split(
-        n_buckets: int, group_id: str, n_members: int
-    ) -> dict[str, list[int]]:
-        """The pure Kafka range-assignor function: member k of the
-        group owns a contiguous run of buckets; runs differ in size by
-        at most one; coverage is exhaustive and disjoint."""
-        base, extra = divmod(n_buckets, n_members)
-        out: dict[str, list[int]] = {}
-        start = 0
-        for k in range(n_members):
-            size = base + (1 if k < extra else 0)
-            out[f"{group_id}-{k}"] = list(range(start, start + size))
-            start += size
-        return out
-
     def group_state(self, topic: str, group_id: str) -> dict | None:
         """{"generation": g, "n_members": n} for a group recorded in
         the topic manifest, or None before its first assignment."""
@@ -1302,20 +1359,6 @@ class TopicStore:
             "n_members": int(entry["n_members"]),
             "strategy": entry.get("strategy", "range"),
         }
-
-    def _group_assignment(
-        self, topic: str, group_id: str, n_buckets: int
-    ) -> dict[str, list[int]]:
-        """Current member -> buckets map for a recorded group: the
-        stored sticky assignment when one exists, else the pure range
-        split (one manifest read, no Spark job)."""
-        entry = self.latest_manifest(topic)[1].get("groups", {}).get(group_id)
-        if entry is None:
-            return {}
-        stored = entry.get("assignment")
-        if stored:
-            return {m: sorted(int(b) for b in bs) for m, bs in stored.items()}
-        return self._range_split(n_buckets, group_id, int(entry["n_members"]))
 
     def assign_buckets(
         self,
@@ -1334,45 +1377,43 @@ class TopicStore:
         item 5): same coverage/balance contract, but a rebalance moves
         the MINIMUM number of buckets — surviving members keep their
         buckets up to the new target size (see :meth:`_sticky_split`
-        for the determinism + movement bound). Sticky assignments are
-        STATE (the previous split seeds the next), so they are stored
-        in the group's manifest entry and committed atomically with
-        the generation bump; fenced commits and :meth:`describe_group`
-        read ownership from the stored assignment. Switching strategy
-        on a live group is a rebalance (generation bumps). After
-        :meth:`expand_buckets` (which bumps every group's generation),
-        the first ``assign_buckets`` call refreshes a sticky
-        assignment over the new buckets WITHOUT another bump — old
-        buckets stay put, new buckets fill the deficits.
+        for the determinism + movement bound); the previous assignment
+        seeds the next. Switching strategy on a live group is a
+        rebalance (generation bumps). After :meth:`expand_buckets`
+        (which bumps every group's generation), the first
+        ``assign_buckets`` call refreshes the assignment over the new
+        buckets WITHOUT another bump — for sticky groups old buckets
+        stay put and new buckets fill the deficits.
 
         This is an EXTENSION beyond the reference, whose consumers are
         fan-out-only (every /consumers/<id> independently sees the full
         stream, core.go:77-85) — but bucket splitting is the first
         operational question a real user asks of a partitioned log.
-        The assignment composes with the existing per-consumer offset
-        surface: each member id is an ordinary consumer (register /
-        consume / commit per owned bucket), so offsets stay independent
-        and a member crash replays only its own buckets. The split is a
-        pure function of (n_buckets, group_id, n_members) — every
-        member computes the same runs with no coordination, exactly why
-        Kafka's range assignor needs no state either. Rebalancing =
-        calling again with a new n_members and draining from the
-        members' committed offsets (same at-least-once contract as any
-        consumer restart).
+        Each member id is an ordinary consumer (register / poll /
+        consume per owned bucket). Committed progress belongs to the
+        GROUP: fenced commits (:meth:`commit_many` with ``group_id`` +
+        ``generation``) store offsets per (group, bucket) in the
+        group's manifest entry, and every rebalance carries them
+        forward, so a bucket's new owner resumes where its previous
+        owner committed — a rebalance replays only what was delivered
+        but not committed (the at-least-once contract of any consumer
+        restart).
+
+        The group's entry in the topic manifest holds its generation,
+        strategy, member count, assignment (stored for both
+        strategies; :func:`_assignment` is the one reader) and
+        offsets. A rebalance is one (metadata-only) manifest commit,
+        and the version claim serializes concurrent rebalances.
 
         GENERATION FENCING (Kafka group-epoch zombie fencing): the
-        group's generation lives in the topic manifest and is bumped
-        exactly when ``n_members`` changes — a rebalance is a state
-        change, so it is a (metadata-only) manifest commit, and the
-        O_EXCL version claim serializes concurrent rebalances. Calling
-        with the CURRENT n_members never bumps (idempotent: every
-        member of one generation converges on one epoch with no
-        coordination). Fenced commits — :meth:`commit` with
-        ``group_id``/``generation`` — then reject a member whose epoch
-        is stale or whose bucket no longer falls in its range, closing
-        the window where a zombie from the pre-rebalance generation
-        silently commits to a bucket it no longer owns. Fetch the
-        current epoch with :meth:`group_state`.
+        generation is bumped exactly when ``n_members`` or the
+        strategy changes. Calling with the CURRENT configuration never
+        bumps (idempotent: every member of one generation converges on
+        one epoch with no coordination). Fenced commits then reject a
+        member whose epoch is stale or whose bucket it no longer owns,
+        so a zombie from the pre-rebalance generation cannot commit to
+        a bucket it lost. Fetch the current epoch with
+        :meth:`group_state`.
         """
         if n_members < 1:
             raise ValueError(f"assign_buckets: n_members must be >= 1, got {n_members}")
@@ -1381,190 +1422,73 @@ class TopicStore:
                 f"assign_buckets: strategy must be 'range' or 'sticky', "
                 f"got {strategy!r}"
             )
+        manifest.validate_consumer_id(group_id)  # member ids name files
+
+        def plan(m: dict) -> dict | None:
+            """The group's next entry under manifest ``m``, or None when
+            the recorded entry already is this request's."""
+            cur = m.get("groups", {}).get(group_id)
+            nb = int(m["n_buckets"])
+            owners = _assignment(m, group_id)
+            assignment = (
+                _range_split(nb, group_id, n_members)
+                if strategy == "range"
+                # the current owners seed stickiness
+                else self._sticky_split(nb, group_id, n_members, owners)
+            )
+            same = (
+                cur is not None
+                and int(cur["n_members"]) == n_members
+                and cur.get("strategy", "range") == strategy
+            )
+            if same and owners == assignment:
+                return None
+            return {
+                # `same` with a changed assignment is the refresh after
+                # expand_buckets, which already bumped the generation
+                # in its own commit: adopt it, don't double-bump
+                "generation": int(cur["generation"]) + (0 if same else 1)
+                if cur
+                else 1,
+                "n_members": n_members,
+                "strategy": strategy,
+                "assignment": assignment,
+                "offsets": dict(cur.get("offsets", {})) if cur else {},
+            }
 
         class _AlreadyCurrent(Exception):
             pass
 
-        def _complete(assignment: dict, nb: int) -> bool:
-            got = sorted(int(b) for bs in assignment.values() for b in bs)
-            return got == list(range(nb))
+        def apply(m: dict) -> dict:
+            entry = plan(m)
+            if entry is None:
+                # another member of THIS generation won the race:
+                # adopt its epoch, do not double-bump
+                raise _AlreadyCurrent()
+            m["groups"] = {**m.get("groups", {}), group_id: entry}
+            return m
 
         v, m = self.latest_manifest(topic)
-        entry = m.get("groups", {}).get(group_id)
-        n_buckets = int(m["n_buckets"])
-        if (
-            entry is not None
-            and int(entry["n_members"]) == n_members
-            and entry.get("strategy", "range") == strategy
-            and (
-                strategy == "range"
-                or _complete(entry.get("assignment") or {}, n_buckets)
-            )
-        ):
-            # idempotent fast path: every member of one generation
-            # converges on one epoch + assignment with no commit
-            out = (
-                self._range_split(n_buckets, group_id, n_members)
-                if strategy == "range"
-                else {
-                    mem: sorted(int(b) for b in bs)
-                    for mem, bs in entry["assignment"].items()
-                }
-            )
-        else:
-            result: dict = {}
-
-            def apply(mm: dict) -> dict:
-                groups = dict(mm.get("groups", {}))
-                cur = groups.get(group_id)
-                nb = int(mm["n_buckets"])
-                same = (
-                    cur is not None
-                    and int(cur["n_members"]) == n_members
-                    and cur.get("strategy", "range") == strategy
-                )
-                if strategy == "range":
-                    if same:
-                        # another member of THIS generation won the
-                        # race: adopt its epoch, do not double-bump
-                        raise _AlreadyCurrent()
-                    new_entry = {
-                        "generation": (int(cur["generation"]) + 1) if cur else 1,
-                        "n_members": n_members,
-                        "strategy": "range",
-                    }
-                    result["assignment"] = self._range_split(
-                        nb, group_id, n_members
-                    )
-                else:
-                    # stickiness seed: the stored assignment, else the
-                    # previous generation's range split (first sticky
-                    # call on a range group keeps range placement)
-                    if cur is not None and cur.get("assignment"):
-                        prev = cur["assignment"]
-                    elif cur is not None:
-                        prev = self._range_split(
-                            nb, group_id, int(cur["n_members"])
-                        )
-                    else:
-                        prev = {}
-                    assignment = self._sticky_split(
-                        nb, group_id, n_members, prev
-                    )
-                    if same and (cur.get("assignment") or {}) == assignment:
-                        raise _AlreadyCurrent()
-                    new_entry = {
-                        # `same` + changed assignment = the refresh
-                        # after expand_buckets (which already bumped
-                        # every group's generation in ITS commit) —
-                        # adopt, don't double-bump
-                        "generation": (
-                            int(cur["generation"]) + (0 if same else 1)
-                        )
-                        if cur
-                        else 1,
-                        "n_members": n_members,
-                        "strategy": "sticky",
-                        "assignment": assignment,
-                    }
-                    result["assignment"] = assignment
-                groups[group_id] = new_entry
-                mm["groups"] = groups
-                return mm
-
+        if plan(m) is not None:
             try:
-                manifest.commit(self.root, topic, v, apply)
-                out = result["assignment"]
+                m = manifest.commit(self.root, topic, v, apply)
             except _AlreadyCurrent:
-                # adopt the winner's committed state — but only if the
-                # winner actually matches this member's request; a
-                # CONCURRENT reconfiguration (different strategy or
-                # member count landing between our apply and this
-                # re-read) means the group moved on and this member
-                # must re-join, not crash on a missing key (review r11)
-                won = (
-                    self.latest_manifest(topic)[1]
-                    .get("groups", {})
-                    .get(group_id)
-                )
-                if (
-                    won is None
-                    or int(won["n_members"]) != n_members
-                    or won.get("strategy", "range") != strategy
-                    or (strategy == "sticky" and not won.get("assignment"))
-                ):
+                # adopt the winner's committed state — but only if it
+                # matches this request; a CONCURRENT reconfiguration
+                # (different strategy or member count landing between
+                # our apply and this re-read) means the group moved on
+                # and this member must re-join (review r11)
+                m = self.latest_manifest(topic)[1]
+                if plan(m) is not None:
                     raise StaleGenerationError(
                         f"group {group_id!r} on topic {topic!r} was "
                         "reconfigured concurrently (strategy or member "
                         "count changed) — re-run assign_buckets"
                     ) from None
-                out = (
-                    self._range_split(n_buckets, group_id, n_members)
-                    if strategy == "range"
-                    else {
-                        mem: sorted(int(b) for b in bs)
-                        for mem, bs in won["assignment"].items()
-                    }
-                )
+        out = _assignment(m, group_id)
         for member in out:
             self.register_consumer(member, topic)
         return out
-
-    def _fence_group_commit_many(
-        self,
-        topic: str,
-        group_id: str,
-        generation: int | None,
-        consumer_id: str,
-        buckets,
-    ) -> None:
-        """Reject a group-scoped commit from a stale generation or for
-        any bucket the member does not own under the CURRENT assignment
-        (Kafka ILLEGAL_GENERATION / fenced-member errors). Every bucket
-        is validated against ONE manifest snapshot — one read per fence
-        phase instead of several per bucket, and no window where a
-        rebalance lands between two buckets of the same "atomic" set
-        and they get fenced against different generations (review
-        r11)."""
-        if generation is None:
-            raise ValueError(
-                "group-scoped commit requires generation= (fetch it with "
-                "group_state); omit group_id for ungated independent-"
-                "consumer commits"
-            )
-        m = self.latest_manifest(topic)[1]
-        entry = m.get("groups", {}).get(group_id)
-        if entry is None:
-            raise StaleGenerationError(
-                f"group {group_id!r} has no recorded assignment on topic "
-                f"{topic!r} — call assign_buckets first"
-            )
-        cur_gen = int(entry["generation"])
-        if int(generation) != cur_gen:
-            raise StaleGenerationError(
-                f"commit by {consumer_id!r} carries generation "
-                f"{int(generation)}, but group {group_id!r} on topic "
-                f"{topic!r} is at generation {cur_gen} — the "
-                "group rebalanced; this member must re-join (re-run "
-                "assign_buckets) before committing"
-            )
-        stored = entry.get("assignment")
-        if stored:
-            assignment = {
-                mem: sorted(int(b) for b in bs) for mem, bs in stored.items()
-            }
-        else:
-            assignment = self._range_split(
-                int(m["n_buckets"]), group_id, int(entry["n_members"])
-            )
-        owned = assignment.get(consumer_id)
-        for bucket in buckets:
-            if owned is None or bucket not in owned:
-                raise StaleGenerationError(
-                    f"member {consumer_id!r} does not own bucket {bucket} of "
-                    f"topic {topic!r} under generation {cur_gen} "
-                    f"(owned: {owned}) — stale assignment"
-                )
 
     def describe_group(self, topic: str, group_id: str) -> dict:
         """Kafka ``kafka-consumer-groups --describe`` analog: the
@@ -1573,25 +1497,22 @@ class TopicStore:
         clamped at the retained floor — a member parked below the
         floor reports only what a consume can actually deliver).
         Raises KeyError for a group with no recorded assignment.
-        O(manifest + one offsets file per member); no Spark job."""
-        entry = self.group_state(topic, group_id)
+        One manifest version plus one offsets file per member
+        (:func:`committed_offsets_in`); no Spark job."""
+        _v, m = self.latest_manifest(topic)
+        entry = m.get("groups", {}).get(group_id)
         if entry is None:
             raise KeyError(
                 f"group {group_id!r} has no recorded assignment on "
                 f"topic {topic!r}"
             )
-        n_buckets = int(self.topic_meta(topic)["n_buckets"])
-        maxima = self._bucket_maxima(topic)
-        floors = self._bucket_floors(topic)
         members = {}
-        for member, owned in self._group_assignment(
-            topic, group_id, n_buckets
-        ).items():
-            offs = self.committed_offsets(member, topic)
+        for member, owned in _assignment(m, group_id).items():
+            offs = committed_offsets_in(self.root, topic, member, m)
             lag = {}
             for b in owned:
-                hwm = maxima.get(b, -1) + 1
-                eff = max(offs.get(b, 0), floors.get(b, 0))
+                hwm = int(m["maxima"].get(str(b), -1)) + 1
+                eff = max(offs.get(b, 0), int(m["floors"].get(str(b), 0)))
                 lag[b] = max(0, hwm - eff)
             members[member] = {
                 "buckets": owned,
@@ -1599,8 +1520,8 @@ class TopicStore:
                 "lag": lag,
             }
         return {
-            "generation": entry["generation"],
-            "n_members": entry["n_members"],
+            "generation": int(entry["generation"]),
+            "n_members": int(entry["n_members"]),
             "members": members,
             "total_lag": sum(
                 v for m in members.values() for v in m["lag"].values()
@@ -1645,17 +1566,17 @@ class TopicStore:
         group_id: str | None = None,
         generation: int | None = None,
     ) -> None:
-        """Atomically persist a consumer offset (tmp-file + rename — the
-        single-writer-per-consumer model the reference also assumes).
+        """Persist one committed offset: the one-entry form of
+        :meth:`commit_many`.
 
-        With ``group_id`` + ``generation`` the commit is GROUP-FENCED:
-        it is rejected (:class:`StaleGenerationError`) when the group
-        has rebalanced past the member's generation or the bucket is
-        outside the member's current range — Kafka's zombie fencing.
-        Without them the consumer is an independent fan-out reader and
-        commits are ungated (the reference's model). One-entry form of
-        :meth:`commit_many` — see there for the fencing atomicity
-        contract."""
+        Without ``group_id`` the consumer is an independent fan-out
+        reader and the commit is an ungated write of its own offsets
+        file (the reference's model). With ``group_id`` +
+        ``generation`` the commit is GROUP-FENCED and stores the
+        offset as the group's: it is rejected
+        (:class:`StaleGenerationError`) when the group has rebalanced
+        past the member's generation or the member does not own the
+        bucket — Kafka's zombie fencing."""
         self.commit_many(
             consumer_id,
             topic,
@@ -1673,59 +1594,70 @@ class TopicStore:
         group_id: str | None = None,
         generation: int | None = None,
     ) -> None:
-        """Persist a SET of per-bucket offsets in one atomic file
-        publish (tmp-file + rename): either every entry lands or none —
-        the primitive the streaming→batch handover
-        (``commit_stream_position``) needs for its "never a partial
-        cursor set" promise.
+        """Persist a SET of per-bucket offsets atomically: either every
+        entry lands or none — the primitive the streaming→batch
+        handover (``commit_stream_position``) needs for its "never a
+        partial cursor set" promise.
 
-        Fencing atomicity (ADVICE r10): a bare check-then-write leaves
-        a window where a rebalance lands between the fence read and the
-        offset write, letting a zombie commit slip in. The fenced path
-        here closes that window by WRITE-THEN-REVALIDATE:
+        Ungated (no ``group_id``): one atomic publish (tmp-file +
+        rename) of the consumer's own offsets file — the
+        single-writer-per-consumer model the reference also assumes.
 
-        1. pre-fence every bucket (friendly rejection on the common
-           stale case, before touching the file);
-        2. write the offsets, each entry stamped with the generation it
-           was committed under (same atomic rename);
-        3. re-read the group state and re-fence. Still current → the
-           commit stands, and any rebalance that commits later
-           observes a file that linearizes BEFORE it (an ordinary
-           pre-rebalance commit, which Kafka also honors). Stale → a
-           rebalance raced us and we cannot know which side of its
-           assignment read our write landed on, so the write is rolled
-           back to the prior document (same atomic rename) and
-           :class:`StaleGenerationError` raised.
-
-        The member's offsets file has a single writer (the member), so
-        the rollback cannot clobber anyone else. Residual window: a
-        CRASH between steps 2 and 3 can leave the stale entries on
-        disk — they are generation-stamped for detection, and the next
-        fenced commit by a live member rewrites the file. Crash-free
-        executions are race-free."""
-        if group_id is not None:
-            self._fence_group_commit_many(
-                topic, group_id, generation, consumer_id, list(offsets)
+        Group-scoped (``group_id`` + ``generation``): ONE manifest
+        commit whose ``apply`` fences and then writes. It rejects a
+        stale generation, an unknown group, or any bucket the member
+        does not own under the current assignment
+        (:func:`_assignment`), and otherwise stores the offsets in the
+        group's entry, keyed by bucket. The fence and the write are one
+        version claim: a rebalance that lands first makes the claim
+        lose, and the rebase re-runs the fence against it. A failed or
+        crashed commit leaves the previous version, so there is nothing
+        to roll back. No offsets file is written."""
+        if group_id is None:
+            path = offsets_path(self.root, consumer_id, topic)
+            doc = _offsets_file(path)
+            doc.update({str(b): int(o) for b, o in offsets.items()})
+            self._write_json(path, doc)
+            return
+        if generation is None:
+            raise ValueError(
+                "group-scoped commit requires generation= (fetch it with "
+                "group_state); omit group_id for ungated independent-"
+                "consumer commits"
             )
-        doc = self._read_offsets_doc(consumer_id, topic)
-        prior = {
-            "offsets": dict(doc["offsets"]),
-            "generations": dict(doc["generations"]),
-        }
-        for b, o in offsets.items():
-            doc["offsets"][str(b)] = o
-            if generation is not None:
-                doc["generations"][str(b)] = int(generation)
-        path = self._offsets_path(consumer_id, topic)
-        self._write_json(path, doc)
-        if group_id is not None:
-            try:
-                self._fence_group_commit_many(
-                    topic, group_id, generation, consumer_id, list(offsets)
+
+        def apply(m: dict) -> dict:
+            entry = m.get("groups", {}).get(group_id)
+            if entry is None:
+                raise StaleGenerationError(
+                    f"group {group_id!r} has no recorded assignment on topic "
+                    f"{topic!r} — call assign_buckets first"
                 )
-            except StaleGenerationError:
-                self._write_json(path, prior)  # roll the whole set back
-                raise
+            cur_gen = int(entry["generation"])
+            if int(generation) != cur_gen:
+                raise StaleGenerationError(
+                    f"commit by {consumer_id!r} carries generation "
+                    f"{int(generation)}, but group {group_id!r} on topic "
+                    f"{topic!r} is at generation {cur_gen} — the "
+                    "group rebalanced; this member must re-join (re-run "
+                    "assign_buckets) before committing"
+                )
+            owned = _assignment(m, group_id).get(consumer_id)
+            for bucket in offsets:
+                if owned is None or bucket not in owned:
+                    raise StaleGenerationError(
+                        f"member {consumer_id!r} does not own bucket {bucket} "
+                        f"of topic {topic!r} under generation {cur_gen} "
+                        f"(owned: {owned}) — stale assignment"
+                    )
+            committed = dict(entry.get("offsets", {}))
+            committed.update({str(b): int(o) for b, o in offsets.items()})
+            m["groups"] = {**m["groups"], group_id: {**entry, "offsets": committed}}
+            return m
+
+        manifest.commit(
+            self.root, topic, manifest.latest_version(self.root, topic), apply
+        )
 
     def read_increment(
         self, topic: str, since_version: int, version: int | None = None

@@ -329,15 +329,15 @@ def commit_stream_position(
     (or more than one) carries cursors for ``topic``.
 
     With ``group_id`` + ``generation`` the handover is GROUP-FENCED
-    through :meth:`TopicStore.commit_many`: every cursor bucket is
-    pre-fenced against the group's CURRENT epoch, the whole set lands
-    in ONE atomic file publish, and the fence is RE-VALIDATED after
-    the write — a rebalance racing the handover rolls the entire set
-    back and raises :class:`~ripple_server_spark.sources.topics.
-    StaleGenerationError`, so there is never a partial or stale cursor
-    set in a crash-free execution (Kafka zombie fencing extended to
-    the stream-to-batch bridge; commit_many documents the residual
-    crash-mid-rollback window).
+    through :meth:`TopicStore.commit_many`: ONE manifest commit fences
+    every cursor bucket against the group's CURRENT epoch and
+    assignment and stores the whole set as the group's offsets, keyed
+    by bucket. A rebalance racing the handover makes the commit's
+    version claim lose and its rebase re-runs the fence, which raises
+    :class:`~ripple_server_spark.sources.topics.StaleGenerationError`;
+    a crash leaves the previous version. There is never a partial or
+    stale cursor set (Kafka zombie fencing extended to the
+    stream-to-batch bridge).
 
     Returns the committed {bucket: next_seq} offsets.
     """
@@ -427,11 +427,10 @@ def commit_stream_position(
             )
     store.register_consumer(consumer_id, topic)
     # ONE atomic multi-bucket commit (commit_many): the whole cursor
-    # set lands in a single file publish, pre-fenced AND re-validated
-    # after the write — a rebalance racing the handover rolls the
-    # entire set back and raises, never leaving a partial or stale
-    # cursor set behind (ADVICE r10: the old fence-then-loop left the
-    # check-to-write window open across the whole loop).
+    # set lands at once — an offsets-file publish, or with a group one
+    # manifest commit whose fence and write share its version claim
+    # (ADVICE r10: the old fence-then-loop left the check-to-write
+    # window open across the whole loop).
     store.commit_many(
         consumer_id, topic, cursors, group_id=group_id, generation=generation
     )

@@ -1,8 +1,8 @@
 """Round-11 Kafka-parity surface (VERDICT r10 items 2, 4-7 + ADVICE):
 the min.cleanable.dirty.ratio cleaner gate, delete.retention.ms
 tombstone windows, the sticky assignor, producer-epoch fencing, the
-expand_buckets group-epoch bump, and commit_many's write-then-revalidate
-fencing atomicity."""
+expand_buckets group-epoch bump, and the fenced group commit: one
+manifest claim that stores offsets per (group, bucket)."""
 
 from __future__ import annotations
 
@@ -16,6 +16,7 @@ from ripple_server_spark.sources.topics import (
     StaleGenerationError,
     StaleProducerEpochError,
     TopicStore,
+    offsets_path,
 )
 
 
@@ -427,67 +428,280 @@ def test_producer_epoch_fences_native_sink(spark, tmp_path):
 # -- commit_many / fencing atomicity (ADVICE r10) ----------------------------
 
 
-def test_commit_many_is_one_atomic_multi_bucket_publish(spark, tmp_path):
+def test_commit_many_is_one_atomic_multi_bucket_publish(
+    spark, tmp_path, monkeypatch
+):
     st = TopicStore(spark, str(tmp_path / "cm"))
     st.create_topic("t", n_buckets=4)
     st.produce(_wave(spark, 0, n=40, keys=8), "t")
     st.assign_buckets("t", "g", 1)
     gen = st.group_state("t", "g")["generation"]
+    v0 = st.latest_manifest("t")[0]
+    writes: list[str] = []
+    real = TopicStore._write_json
+
+    def recording(path, doc):
+        writes.append(path)
+        real(path, doc)
+
+    monkeypatch.setattr(TopicStore, "_write_json", staticmethod(recording))
     st.commit_many(
         "g-0", "t", {0: 3, 1: 4, 2: 5}, group_id="g", generation=gen
     )
+    monkeypatch.undo()
     offs = st.committed_offsets("g-0", "t")
     assert offs == {0: 3, 1: 4, 2: 5}
-    # entries are generation-stamped for forensics
-    doc = st._read_offsets_doc("g-0", "t")
-    assert doc["generations"] == {"0": gen, "1": gen, "2": gen}
+    # the offsets are the group's, held by ONE new manifest version
+    v1, m = st.latest_manifest("t")
+    assert v1 == v0 + 1
+    assert m["groups"]["g"]["offsets"] == {"0": 3, "1": 4, "2": 5}
+    assert writes == []  # no member offsets file was written
 
 
-def test_commit_revalidates_after_write_and_rolls_back(
+def test_rebalance_landing_inside_a_group_commit_is_fenced(
     spark, tmp_path, monkeypatch
 ):
-    """The ADVICE r10 race, reproduced: a rebalance lands BETWEEN the
-    pre-fence and the offset write. The post-write revalidation must
-    roll the whole cursor set back and raise — no stale entry
-    survives."""
+    """A rebalance that lands after a group commit read its base but
+    before it claims its version makes the claim lose; the rebase
+    re-runs the fence against the rebalance and rejects the commit —
+    nothing is written and nothing needs rolling back."""
+    from tests.conftest import land_before_next_commit
+
     st = TopicStore(spark, str(tmp_path / "reval"))
     st.create_topic("t", n_buckets=4)
     st.produce(_wave(spark, 0, n=40, keys=8), "t")
     st.assign_buckets("t", "g", 2)
     gen = st.group_state("t", "g")["generation"]
     st.commit("g-0", "t", 0, 1, group_id="g", generation=gen)
-    baseline = st._read_offsets_doc("g-0", "t")
+    before = st.latest_manifest("t")[1]["groups"]["g"]["offsets"]
 
-    orig = st._write_json
-    raced = {"done": False}
-
-    def rebalance_mid_write(path, obj):
-        out = orig(path, obj)
-        if not raced["done"] and path.endswith("g-0--t.json"):
-            raced["done"] = True
-            # the rebalance wins the race right after our bytes land
-            st.assign_buckets("t", "g", 3)
-        return out
-
-    monkeypatch.setattr(st, "_write_json", rebalance_mid_write)
-    with pytest.raises(StaleGenerationError):
+    land_before_next_commit(monkeypatch, lambda: st.assign_buckets("t", "g", 3))
+    with pytest.raises(StaleGenerationError, match="rebalanced"):
         st.commit_many(
             "g-0", "t", {0: 9, 1: 9}, group_id="g", generation=gen
         )
     monkeypatch.undo()
-    # rolled back to the pre-race document, offsets AND stamps
-    assert st._read_offsets_doc("g-0", "t") == baseline
+    after = st.latest_manifest("t")[1]["groups"]["g"]
+    assert after["generation"] == gen + 1  # the rebalance landed
+    assert after["offsets"] == before == {"0": 1}
     assert st.committed_offsets("g-0", "t") == {0: 1}
+
+
+def test_rebalance_hands_committed_group_offsets_to_new_owner(spark, tmp_path):
+    """Group offsets belong to (group, bucket): after a 2 -> 3 rebalance
+    the new owner of a moved bucket resumes at the offset its previous
+    owner committed, so a fully drained group re-delivers nothing and
+    reports no lag."""
+    st = TopicStore(spark, str(tmp_path / "handoff"))
+    st.create_topic("t", n_buckets=4)
+    st.produce(_wave(spark, 0, n=80, keys=8), "t")
+    a2 = st.assign_buckets("t", "w", 2)
+    gen = st.group_state("t", "w")["generation"]
+    for member, owned in a2.items():
+        for b in owned:
+            _tbl, nxt = st.poll(member, "t", b, 10_000)
+            st.commit(member, "t", b, nxt, group_id="w", generation=gen)
+    assert st.describe_group("t", "w")["total_lag"] == 0
+
+    a3 = st.assign_buckets("t", "w", 3)
+    assert a3["w-2"] == [3] and 3 in a2["w-1"]  # bucket 3 moved
+    redelivered = sum(
+        st.poll(member, "t", b, 10_000)[0].num_rows
+        for member, owned in a3.items()
+        for b in owned
+    )
+    assert redelivered == 0
+    assert st.describe_group("t", "w")["total_lag"] == 0
+
+
+def test_claim_fault_in_group_commit_leaves_previous_version(
+    spark, tmp_path, monkeypatch
+):
+    from ripple_server_spark.sources import manifest
+
+    st = TopicStore(spark, str(tmp_path / "fault"))
+    st.create_topic("t", n_buckets=2)
+    st.produce(_wave(spark, 0, n=20, keys=4), "t")
+    st.assign_buckets("t", "g", 1)
+    gen = st.group_state("t", "g")["generation"]
+    st.commit_many("g-0", "t", {0: 2, 1: 3}, group_id="g", generation=gen)
+    v0, m0 = st.latest_manifest("t")
+
+    def failing_claim(slot, m):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(manifest, "claim", failing_claim)
+    with pytest.raises(OSError, match="disk full"):
+        st.commit_many("g-0", "t", {0: 9, 1: 9}, group_id="g", generation=gen)
+    monkeypatch.undo()
+    assert st.latest_manifest("t") == (v0, m0)
+    assert st.committed_offsets("g-0", "t") == {0: 2, 1: 3}
+
+
+def test_group_offsets_override_only_committed_buckets(spark, tmp_path):
+    """A member's own file still serves every bucket its group has not
+    committed; the group's offset wins only where the group has one."""
+    st = TopicStore(spark, str(tmp_path / "override"))
+    st.create_topic("t", n_buckets=4)
+    st.produce(_wave(spark, 0, n=40, keys=8), "t")
+    st.assign_buckets("t", "g", 2)  # g-0 owns [0, 1]
+    st.commit_many("g-0", "t", {0: 5, 1: 6, 3: 7})  # ungated, own file
+    gen = st.group_state("t", "g")["generation"]
+    st.commit("g-0", "t", 0, 9, group_id="g", generation=gen)
+    assert st.committed_offsets("g-0", "t") == {0: 9, 1: 6, 3: 7}
+    _tbl, nxt = st.poll("g-0", "t", 1, 1)
+    assert nxt == 7  # bucket 1 polls from the file's offset
+
+
+def test_start_at_consumer_member_resumes_at_group_offset(spark, tmp_path):
+    """start_at=consumer:<member> reads the same offsets as poll: after
+    a rebalance, a moved bucket starts at the group's committed offset,
+    not at the new owner's empty file."""
+    from tests.conftest import topic_stream
+
+    st = TopicStore(spark, str(tmp_path / "startat"))
+    st.create_topic("t", n_buckets=2)
+    st.produce(_wave(spark, 0, n=40, keys=4), "t")
+    st.assign_buckets("t", "w", 1)
+    gen = st.group_state("t", "w")["generation"]
+    st.commit_many("w-0", "t", {0: 4, 1: 6}, group_id="w", generation=gen)
+    a2 = st.assign_buckets("t", "w", 2)
+    assert a2 == {"w-0": [0], "w-1": [1]}
+
+    q = (
+        topic_stream(st, "t", start_at="consumer:w-1")
+        .writeStream.format("memory")
+        .queryName("startat_member")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    got = spark.sql("SELECT bucket, min(seq) AS lo FROM startat_member GROUP BY 1")
+    lows = {r["bucket"]: r["lo"] for r in got.collect()}
+    # bucket 1 resumes at the group's 6; w-1 owns no bucket 0 offset
+    assert lows == {0: 0, 1: 6}
+
+
+def test_offset_writes_refuse_group_members(spark, tmp_path):
+    """reset_offsets and seek_to_timestamp write a consumer's own file,
+    which its group's offsets override: on a member id they raise."""
+    st = TopicStore(spark, str(tmp_path / "refuse"))
+    st.create_topic("t", n_buckets=2)
+    st.produce(_wave(spark, 0), "t")
+    st.assign_buckets("t", "g", 2)
+    v0 = st.latest_manifest("t")[0]
+    with pytest.raises(ValueError, match="group 'g'"):
+        st.reset_offsets("g-0", "t", to="latest")
+    with pytest.raises(ValueError, match="group 'g'"):
+        st.seek_to_timestamp("g-1", "t", 1767225600000)
+    assert st.latest_manifest("t")[0] == v0
+    assert st.committed_offsets("g-0", "t") == {}
+    # a consumer outside every group still resets
+    assert st.reset_offsets("solo", "t", to="earliest") == {0: 0, 1: 0}
+
+
+def test_consumer_ids_cannot_escape_the_offsets_dir(spark, tmp_path):
+    root = tmp_path / "store"
+    st = TopicStore(spark, str(root))
+    st.create_topic("t", n_buckets=2)
+    st.produce(_wave(spark, 0), "t")
+    before = {p for p in tmp_path.rglob("*") if "offsets" not in p.parts}
+    with pytest.raises(ValueError, match="flat name"):
+        st.commit("../../escaped", "t", 0, 5)
+    with pytest.raises(ValueError, match="flat name"):
+        st.assign_buckets("t", "../g", 2)
+    for bad in ("", "a/b", ".."):
+        with pytest.raises(ValueError, match="flat name"):
+            st.register_consumer(bad, "t")
+    assert {p for p in tmp_path.rglob("*") if "offsets" not in p.parts} == before
+    assert list((root / "offsets").iterdir()) == []
+    assert st.list_groups("t") == []
+    # '--' inside a consumer id stays legal
+    st.commit("a--b", "t", 0, 1)
+    assert st.committed_offsets("a--b", "t") == {0: 1}
+
+
+def test_seeded_membership_walk_delivers_each_row_once(spark, tmp_path):
+    """A seeded walk over group membership (1-4 members, range <-> sticky
+    switches, one expand_buckets) with a fresh wave produced before each
+    rebalance: every member drains its owned buckets with fenced
+    commits, and across the whole walk no (bucket, seq) is delivered
+    twice, none is missed, and the group ends with no lag."""
+    import random
+
+    rng = random.Random(12)
+    sizes = rng.sample([1, 2, 3, 4] * 2, 8)
+    strategies = [rng.choice(("range", "sticky")) for _ in sizes]
+    switches = {(a, b) for a, b in zip(strategies, strategies[1:]) if a != b}
+    assert switches == {("range", "sticky"), ("sticky", "range")}
+
+    st = TopicStore(spark, str(tmp_path / "walk"))
+    st.create_topic("t", n_buckets=4)
+    delivered: list[tuple[int, int]] = []
+    for step, (n_members, strategy) in enumerate(zip(sizes, strategies)):
+        st.produce(_wave(spark, step, n=24, keys=12), "t")
+        if step == 4:
+            st.expand_buckets("t", 6)
+        asg = st.assign_buckets("t", "g", n_members, strategy=strategy)
+        gen = st.group_state("t", "g")["generation"]
+        for member, owned in asg.items():
+            for b in owned:
+                tbl, nxt = st.poll(member, "t", b, 10_000)
+                delivered += [(b, s) for s in tbl.column("seq").to_pylist()]
+                st.commit(member, "t", b, nxt, group_id="g", generation=gen)
+
+    assert len(delivered) == len(set(delivered))
+    every = {
+        (r["bucket"], r["seq"])
+        for r in st.read_topic("t").select("bucket", "seq").collect()
+    }
+    assert set(delivered) == every
+    assert st.describe_group("t", "g")["total_lag"] == 0
 
 
 def test_legacy_flat_offsets_files_still_read(spark, tmp_path):
     st = TopicStore(spark, str(tmp_path / "legacy"))
     st.create_topic("t", n_buckets=2)
-    st._write_json(st._offsets_path("old", "t"), {"0": 7, "1": 9})
+    st._write_json(offsets_path(st.root, "old", "t"), {"0": 7, "1": 9})
     assert st.committed_offsets("old", "t") == {0: 7, 1: 9}
-    # a new-format write upgrades the document without losing entries
+    # a commit rewrites the document without losing entries
     st.commit("old", "t", 1, 11)
     assert st.committed_offsets("old", "t") == {0: 7, 1: 11}
+    # the wrapped form older versions wrote, with generation stamps
+    st._write_json(
+        offsets_path(st.root, "wrapped", "t"),
+        {"offsets": {"0": 3}, "generations": {"0": 1}},
+    )
+    assert st.committed_offsets("wrapped", "t") == {0: 3}
+
+
+def test_range_entry_without_stored_assignment_reads_as_range_split(
+    spark, tmp_path
+):
+    """A range group recorded before assignments were stored has only
+    generation and member count; every ownership read sees its range
+    split, and re-joining at the same size commits nothing."""
+    from ripple_server_spark.sources import manifest
+
+    st = TopicStore(spark, str(tmp_path / "oldgroup"))
+    st.create_topic("t", n_buckets=4)
+
+    def apply(m):
+        m["groups"] = {"g": {"generation": 3, "n_members": 2, "strategy": "range"}}
+        return m
+
+    manifest.commit(st.root, "t", st.latest_manifest("t")[0], apply)
+    v0 = st.latest_manifest("t")[0]
+    split = {"g-0": [0, 1], "g-1": [2, 3]}
+    assert st.assign_buckets("t", "g", 2) == split
+    assert st.latest_manifest("t")[0] == v0
+    d = st.describe_group("t", "g")
+    assert {mem: e["buckets"] for mem, e in d["members"].items()} == split
+    st.commit("g-1", "t", 2, 5, group_id="g", generation=3)
+    with pytest.raises(StaleGenerationError, match="does not own"):
+        st.commit("g-1", "t", 0, 5, group_id="g", generation=3)
+    assert st.committed_offsets("g-1", "t") == {2: 5}
 
 
 # -- compact_by_key(order_by=) (VERDICT r10 item 7) ---------------------------
