@@ -714,9 +714,9 @@ def q_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     into both batches and doubles the partition writes; measured 1.5x
     slower at sf0.01's 720 one-row-group hour partitions).
 
-    Scale: refresh #2's cost is bounded by the new slice (seq > hwm
-    pushes to row-group stats) x affected hours, never a full log
-    rescan; the rewrite touches only the partitions whose hours appear
+    Scale: refresh #2's cost is bounded by the new slice (only files
+    past each bucket's HWM are planned) x affected hours, never a full
+    log rescan; the rewrite touches only the partitions whose hours appear
     in the tail (dynamic partition overwrite)."""
     import hashlib
     import shutil
@@ -774,9 +774,11 @@ def q_topic_increment_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     under compaction because compaction rewrites content-identically),
     previously pytest-only (tests/test_topics.py).
 
-    Scale: an incremental consumer reads O(increment) — the seq bound
-    pushes to row-group stats on the pinned snapshot's files — never
-    O(log); the version pin is one manifest read.
+    Scale: an incremental consumer reads O(increment), never O(log):
+    each bucket opens only the files whose manifest seq range reaches
+    past its base maximum, and inside a compacted file the lowest base
+    maximum prunes row groups by seq stats; the version pin is one
+    manifest read.
 
     Reference parity: the consumer cursor resume
     (consumer/server/core.go:46-63) done as a table-format contract

@@ -10,9 +10,13 @@ scheduler (cron trigger / `Trigger(availableNow)`) refreshes cheaply.
 Refresh strategy — *recompute affected partitions*:
 
 1. The seq high-water mark per bucket (from the last refresh) bounds
-   the NEW slice of the log; ``seq > hwm`` pushes into the scan (row-
-   group min/max skipping), so discovering what changed reads only the
-   log tail, never the history.
+   the NEW slice of the log. The tail is read through the topic
+   store's one manifest-planned scan: only files whose recorded seq
+   range reaches past a bucket's mark are opened, a bucket with no
+   mark (its first rows arrived after the last refresh) is read whole,
+   and the lowest mark prunes row groups inside large compacted files,
+   so discovering what changed reads only the log tail, never the
+   history.
 2. Only the hours PRESENT in that new slice are recomputed — from the
    base log, so refresh is idempotent: re-running after a crash between
    data write and state write just rewrites the same partitions with
@@ -32,6 +36,7 @@ refresh.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -42,6 +47,20 @@ from pyspark.sql import functions as F
 from ripple_server_spark.sources.topics import TopicStore
 
 HOUR_FMT = "yyyy-MM-dd-HH"
+
+
+def _fold(log: DataFrame, hours: list[str] | None = None) -> DataFrame:
+    """The rollup's aggregate of ``log`` rows, per (hour, event_type);
+    restricted to ``hours`` when given."""
+    keyed = log.withColumn("hour_key", F.date_format("ts", HOUR_FMT))
+    if hours is not None:
+        keyed = keyed.filter(F.col("hour_key").isin(hours))
+    return keyed.groupBy("hour_key", "event_type").agg(
+        F.count("*").alias("n"),
+        F.sum("value").alias("sum_value"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+    )
 
 
 class HourlyRollup:
@@ -75,8 +94,7 @@ class HourlyRollup:
         # high-water mark: taking maxima from a separate (possibly
         # newer) read would advance the HWM past rows a concurrent
         # produce landed AFTER our snapshot — silently never folded.
-        v, manifest = self.store.latest_manifest(self.topic)
-        log = self.store.read_topic(self.topic, version=v)
+        _v, manifest = self.store.latest_manifest(self.topic)
         hwm, seen_restore = self._load_state()
         maxima = {
             int(b): x for b, x in manifest.get("maxima", {}).items()
@@ -109,62 +127,30 @@ class HourlyRollup:
                 self._write_state(maxima, manifest)
             return {"hours_refreshed": 0, "new_rows": 0}
 
-        hour_key = F.date_format("ts", HOUR_FMT).alias("hour_key")
+        log_after = functools.partial(self.store._read, self.topic, manifest)
         if hwm:
-            hwm_df = self.spark.createDataFrame(
-                list(hwm.items()), "bucket int, hwm bigint"
-            )
-            # Global lower bound pushes to row-group stats on every
-            # file. It must cover buckets ABSENT from the saved map (a
-            # bucket whose first rows arrived after the last refresh
-            # starts at seq 0): any such bucket drops the bound to -1,
-            # i.e. no prefilter — the exact per-bucket coalesce(hwm,-1)
-            # cut in codegen stays the one source of truth.
-            min_hwm = min(hwm.get(b, -1) for b in set(maxima) | set(hwm))
-            new = (
-                log.filter(F.col("seq") > F.lit(min_hwm))
-                .join(F.broadcast(hwm_df), on="bucket", how="left")
-                .filter(F.col("seq") > F.coalesce(F.col("hwm"), F.lit(-1)))
-            )
-            # ONE job yields both the affected hours and the new-row
-            # count; the tail filter above bounds it to the log tail.
+            # The tail: rows past the saved HWM, planned per bucket from
+            # the manifest's seq ranges (a bucket absent from the map
+            # first got rows after the last refresh and is read whole).
+            # ONE job over it yields both the affected hours and the
+            # new-row count.
             hour_counts = (
-                new.groupBy(F.date_format("ts", HOUR_FMT).alias("hk"))
+                log_after(hwm)
+                .groupBy(F.date_format("ts", HOUR_FMT).alias("hk"))
                 .agg(F.count("*").alias("c"))
                 .collect()
             )
             hours = [r["hk"] for r in hour_counts]
             n_new = sum(r["c"] for r in hour_counts)
-            rolled = (
-                log.withColumn("hour_key", hour_key)
-                .filter(F.col("hour_key").isin(hours))
-                .groupBy("hour_key", "event_type")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum("value").alias("sum_value"),
-                    F.min("value").alias("min_value"),
-                    F.max("value").alias("max_value"),
-                )
-            )
             if hours:
-                self._write_hours(rolled)
+                self._write_hours(_fold(log_after({}), hours))
         else:
             # First refresh (or post-restore rebuild): every log row is
             # new, so the fold itself already yields both the affected
             # hours and the new-row count — ONE full pass over the log
             # instead of a separate hour-count scan plus the fold
             # (guide §1.2: remove whole passes before tuning anything).
-            rolled = (
-                log.withColumn("hour_key", hour_key)
-                .groupBy("hour_key", "event_type")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum("value").alias("sum_value"),
-                    F.min("value").alias("min_value"),
-                    F.max("value").alias("max_value"),
-                )
-            )
-            written = self._write_hours(rolled)
+            written = self._write_hours(_fold(log_after({})))
             hours = [h for h, _ in written]
             n_new = sum(c for _, c in written)
         if not hours:

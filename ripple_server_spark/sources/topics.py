@@ -323,28 +323,6 @@ class TopicStore:
         return removed
 
     # -- DDL (CreateBucket analog) ----------------------------------------
-    # Kafka-style topic-level config keys the engine understands (a
-    # free-form dict is still stored verbatim — unknown keys pass
-    # through for forward compatibility, like Kafka's config map):
-    #   cleanup.policy        "delete" | "compact" | "compact,delete"
-    #   retention.ms          time retention horizon
-    #   retention.seqs        depth retention horizon (extension)
-    #   key.column            compaction key (default user_id)
-    #   tombstone.column      null-means-delete value column
-    #   delete.retention.ms   tombstone retention window (Kafka parity)
-    #   min.cleanable.dirty.ratio  cleaner gate (Kafka parity, def 0.5)
-    #   compaction.order.by   event-time column for order_by compaction
-    _KNOWN_CONFIG = (
-        "cleanup.policy",
-        "retention.ms",
-        "retention.seqs",
-        "key.column",
-        "tombstone.column",
-        "delete.retention.ms",
-        "min.cleanable.dirty.ratio",
-        "compaction.order.by",
-    )
-
     def create_topic(
         self,
         topic: str,
@@ -355,7 +333,21 @@ class TopicStore:
 
     def topic_config(self, topic: str) -> dict:
         """The topic's config map (Kafka ``describe --topic`` configs);
-        {} for topics created before configs existed."""
+        {} for topics created before configs existed.
+
+        Keys the engine understands (the map is stored verbatim, so
+        unknown keys pass through for forward compatibility, like
+        Kafka's config map)::
+
+            cleanup.policy             "delete" | "compact" | "compact,delete"
+            retention.ms               time retention horizon
+            retention.seqs             depth retention horizon (extension)
+            key.column                 compaction key (default user_id)
+            tombstone.column           null-means-delete value column
+            delete.retention.ms        tombstone retention window (Kafka parity)
+            min.cleanable.dirty.ratio  cleaner gate (Kafka parity, default 0.5)
+            compaction.order.by        event-time column for order_by compaction
+        """
         return dict(self.latest_manifest(topic)[1].get("config", {}))
 
     def alter_topic_config(self, topic: str, updates: dict) -> dict:
@@ -718,15 +710,40 @@ class TopicStore:
             _v, m = self.latest_manifest(topic)
         else:
             m = manifest.load(self.root, topic, version)
+        return self._read(topic, m, {})
+
+    def _read(self, topic: str, m: dict, after: dict[int, int]) -> DataFrame:
+        """The rows of manifest ``m`` with ``seq > after[bucket]``; a
+        bucket missing from ``after`` is read whole. The one Spark-side
+        topic scan (:meth:`read_topic`, :meth:`read_increment`, the
+        rollup's tail): it opens only the files
+        :func:`manifest.files_for` plans for each bucket's tail, typed
+        by the recorded schema. The exact per-bucket cut cannot reach
+        parquet, so the global bound ``seq > min(after[b])`` over the
+        planned buckets (−1 if one is missing) rides beside it and
+        prunes row groups inside large compacted files."""
         ddl = _message_ddl(m) or "seq bigint, bucket int"
-        if not m["files"]:
+        buckets = set(map(manifest.bucket_of, m["files"]))
+        first = {b: after.get(b, -1) + 1 for b in buckets}
+        planned = {
+            rel
+            for b, lo in first.items()
+            for rel in manifest.files_for(m, b, lo, datasource._SEQ_END)
+        }
+        if not planned:
             return self.spark.createDataFrame([], ddl)
         data = self.data_dir(topic)
-        return (
+        df = (
             self.spark.read.option("basePath", data)
             .schema(ddl)
-            .parquet(*[os.path.join(data, rel) for rel in m["files"]])
+            .parquet(*[os.path.join(data, rel) for rel in m["files"] if rel in planned])
         )
+        if not after:
+            return df
+        bound = min(first[manifest.bucket_of(rel)] for rel in planned) - 1
+        pairs = [(F.lit(b), F.lit(x).cast("bigint")) for b, x in after.items()]
+        cut = F.coalesce(F.create_map(*sum(pairs, ()))[F.col("bucket")], F.lit(-1))
+        return df.filter((F.col("seq") > bound) & (F.col("seq") > cut))
 
     # -- maintenance -------------------------------------------------------
     def compact(self, topic: str, base_version: int | None = None) -> None:
@@ -1204,10 +1221,21 @@ class TopicStore:
     # -- consume (A6-A8) ---------------------------------------------------
     def register_consumer(self, consumer_id: str, topic: str) -> None:
         """First-contact registration: offsets start at 0 for every
-        bucket (reference: ZK /consumers/<id> = "0", core.go:77-85)."""
-        path = offsets_path(self.root, consumer_id, topic)
+        bucket (reference: ZK /consumers/<id> = "0", core.go:77-85).
+        Raises FileNotFoundError for an unknown topic."""
+        path = self._own_offsets_path(consumer_id, topic)
         if not os.path.exists(path):
             self._write_json(path, {})
+
+    def _own_offsets_path(self, consumer_id: str, topic: str) -> str:
+        """:func:`offsets_path` for a write, after one ``stat`` that the
+        topic exists: FileNotFoundError naming it otherwise, since an
+        offsets file of an unknown topic is one :meth:`delete_topic`
+        can never sweep."""
+        path = offsets_path(self.root, consumer_id, topic)
+        if not os.path.isdir(manifest.log_dir(self.root, topic)):
+            raise FileNotFoundError(f"topic {topic!r} does not exist")
+        return path
 
     def committed_offsets(self, consumer_id: str, topic: str) -> dict[int, int]:
         """The consumer's committed {bucket: offset} — its own file, with
@@ -1602,6 +1630,7 @@ class TopicStore:
         Ungated (no ``group_id``): one atomic publish (tmp-file +
         rename) of the consumer's own offsets file — the
         single-writer-per-consumer model the reference also assumes.
+        An unknown topic raises FileNotFoundError and writes nothing.
 
         Group-scoped (``group_id`` + ``generation``): ONE manifest
         commit whose ``apply`` fences and then writes. It rejects a
@@ -1614,7 +1643,7 @@ class TopicStore:
         crashed commit leaves the previous version, so there is nothing
         to roll back. No offsets file is written."""
         if group_id is None:
-            path = offsets_path(self.root, consumer_id, topic)
+            path = self._own_offsets_path(consumer_id, topic)
             doc = _offsets_file(path)
             doc.update({str(b): int(o) for b, o in offsets.items()})
             self._write_json(path, doc)
@@ -1691,10 +1720,11 @@ class TopicStore:
         consumer must re-read the snapshot after a rollback (the same
         continuity break Delta CDF declares on RESTORE).
 
-        The filter is a per-bucket OR of (bucket = b AND seq > hwm_b):
-        bucket is a partition column and seq bounds hit row-group
-        stats, so an incremental consumer pays for the tail, not the
-        log.
+        Only the tail is planned: each bucket opens just the files
+        whose recorded seq range reaches past its base maximum
+        (:meth:`_read`), so an incremental consumer pays for the tail,
+        not the log. A bucket added by :meth:`expand_buckets` after
+        ``since_version`` has no base maximum and is read whole.
         """
         base = manifest.load(self.root, topic, since_version)
         if version is None:
@@ -1709,17 +1739,7 @@ class TopicStore:
                 "the snapshot instead"
             )
         base_max = {int(b): x for b, x in base.get("maxima", {}).items()}
-        df = self.read_topic(topic, version=version)
-        if not base_max:
-            return df  # nothing existed at the base version
-        n_buckets = base.get("n_buckets", len(base_max))
-        pred = None
-        for b in range(n_buckets):
-            cond = (F.col("bucket") == b) & (
-                F.col("seq") > F.lit(base_max.get(b, -1))
-            )
-            pred = cond if pred is None else (pred | cond)
-        return df.filter(pred)
+        return self._read(topic, target, base_max)
 
     def restore(self, topic: str, version: int) -> dict:
         """Delta-style RESTORE: roll the topic back to ``version`` by

@@ -382,6 +382,25 @@ def test_read_increment_is_exactly_the_appended_rows(spark, sf_dir, tmp_path):
     assert st.read_increment("i", since_version=1).count() == 130
 
 
+def test_read_increment_reads_buckets_added_by_expand_buckets(spark, sf_dir, tmp_path):
+    """A bucket added by expand_buckets after the base version has no
+    base maximum: its rows are all appended since, so the increment
+    reads it whole instead of dropping it."""
+    st = TopicStore(spark, str(tmp_path / "incexp"))
+    st.create_topic("e", n_buckets=2)
+    ev = load_table(spark, sf_dir, "events")
+    st.produce(ev.filter(F.col("event_id") < 20), "e")
+    v0, _ = st.latest_manifest("e")
+    st.expand_buckets("e", 4)
+    st.produce(ev.filter((F.col("event_id") >= 20) & (F.col("event_id") < 60)), "e")
+    m = st.latest_manifest("e")[1]
+    assert {2, 3} <= {manifest.bucket_of(r) for r in m["files"]}
+
+    inc = st.read_increment("e", since_version=v0)
+    got = sorted(r["event_id"] for r in inc.select("event_id").collect())
+    assert got == list(range(20, 60))
+
+
 def test_restore_rolls_back_and_reuses_seqs(spark, sf_dir, tmp_path):
     """RESTORE commits the target version's state forward: reads see
     the old snapshot, history classifies the commit as ``restore``,
@@ -1248,6 +1267,59 @@ def test_consume_materializes_in_one_job_in_seq_order(polled):
     finally:
         for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(k, None)
+
+
+def test_read_increment_plans_only_the_tail_files(polled):
+    """Building an increment over a 300+ file log runs no Spark job
+    (no listing job over the whole snapshot; the caller's job group is
+    left as it was) and opens exactly the files manifest.files_for
+    plans past each bucket's base maximum."""
+    import os
+    from urllib.parse import urlparse
+
+    st = polled
+    sc = st.spark.sparkContext
+    produces = [h["version"] for h in st.history("pp") if h["operation"] == "produce"]
+    since = produces[-2]
+    base = manifest.load(st.root, "pp", since)
+    v, m = st.latest_manifest("pp")
+    assert len(m["files"]) > 300
+    sc.setJobGroup("caller", "the caller's own group")
+    try:
+        with _jobs_in(sc, "read-increment") as jobs:
+            inc = st.read_increment("pp", since_version=since, version=v)
+        assert jobs == []
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    base_max = {int(b): x for b, x in base["maxima"].items()}
+    want = {
+        rel
+        for b in range(int(m["n_buckets"]))
+        for rel in manifest.files_for(m, b, base_max.get(b, -1) + 1, 2**63 - 1)
+    }
+    got = {
+        os.path.relpath(urlparse(f).path, st.data_dir("pp")) for f in inc.inputFiles()
+    }
+    assert got == want
+    assert len(got) < len(m["files"]) / 4
+    tail = sum(int(x) - base_max.get(int(b), -1) for b, x in m["maxima"].items())
+    assert inc.count() == tail > 0
+
+
+def test_offsets_writes_refuse_an_unknown_topic(spark, tmp_path):
+    """register_consumer and an ungated commit on a topic that does not
+    exist raise FileNotFoundError naming it and write no offsets file,
+    which delete_topic could never sweep."""
+    import os
+
+    st = TopicStore(spark, str(tmp_path / "orphan"))
+    with pytest.raises(FileNotFoundError, match="'nope'"):
+        st.register_consumer("c", "nope")
+    with pytest.raises(FileNotFoundError, match="'nope'"):
+        st.commit("d", "nope", 0, 5)
+    assert os.listdir(os.path.join(st.root, "offsets")) == []
 
 
 def test_offsets_for_times_runs_no_spark_job(polled):
