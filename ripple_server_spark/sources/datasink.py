@@ -20,8 +20,9 @@ Execution model — EVERY write task is an independent producer client:
 
 - each task buffers its Arrow batches, routes rows to buckets
   (``pmod(key, n_buckets)``, NULL -> 0, same as ``TopicStore.produce``),
-  sorts by (bucket, ts, event_id) in Arrow, stages them through the
-  SAME kernel produce stages through (``staging.stage_kernel``: seq
+  then sorts by (bucket, ts, event_id) in Arrow and stages them through
+  the SAME function a local-relation produce stages through
+  (``staging.arrow_stager`` over ``staging.stage_kernel``: seq
   assignment, file naming, row-group flush, seq ranges) and appends
   through the SAME transaction (``manifest.append``: epoch check,
   applied-id idempotence, atomic claim of version v+1, seq-race
@@ -109,8 +110,9 @@ def _task_append(
 ) -> TaskCommit:
     """Append one task's Arrow batches as a producer transaction.
 
-    Runs entirely executor-side: route -> sort (once) -> stage parquet
-    through ``staging.stage_kernel`` directly into the bucket dirs
+    Runs entirely executor-side: route, then ``staging.arrow_stager``
+    sorts once and stages parquet through ``staging.stage_kernel``
+    directly into the bucket dirs
     (invisible until the manifest commit), with ``manifest.append``
     claiming the contiguous seqs; a lost seq race restages the same
     sorted rows against the new base. Raced/leftover staged files are
@@ -140,29 +142,23 @@ def _task_append(
             )
     data_dir = os.path.join(root, "topics", topic, "data")
     file_cols = [*tbl.column_names, "seq"]
-    routed = None
+    stager = None
 
     def stage(m: dict) -> dict[str, list[int]]:
-        nonlocal routed
-        if routed is None:
+        nonlocal stager
+        if stager is None:
             # bucket = pmod(key, n) with NULL -> 0
             # (operators/relational.bucket_of + produce's coalesce),
-            # routed once by the bucket count of the first base, and
-            # sorted once in produce's FIFO order: NULLS FIRST, as the
-            # JVM sort in front of produce's kernel (pyarrow's default
-            # nulls-at-end would give NULL-ts rows the highest seqs
-            # here but the lowest via produce; test-pinned)
+            # routed once by the bucket count of the first base and
+            # sorted once in produce's FIFO order
             key = pc.fill_null(pc.cast(tbl[key_col], pa.int64()), 0)
             k = key.to_numpy(zero_copy_only=False)
             b = (k % int(m["n_buckets"])).astype(np.int32)  # non-negative for n>0
-            routed = tbl.append_column("bucket", pa.array(b)).sort_by(
-                [("bucket", "ascending"), ("ts", "ascending"), ("event_id", "ascending")],
-                null_placement="at_start",
+            stager = staging.arrow_stager(
+                tbl.append_column("bucket", pa.array(b)), data_dir, file_cols, prefix="dsw"
             )
         base = {int(b): int(x) for b, x in m.get("maxima", {}).items()}
-        kernel = staging.stage_kernel(data_dir, base, file_cols, prefix="dsw")
-        out = kernel(iter(routed.to_batches()))
-        return staging.staged_ranges(r for rb in out for r in rb.to_pylist())
+        return staging.staged_ranges(stager(base))
 
     committed = manifest.append(
         root, topic, stage, fields, applied_id=applied_id, producer_epoch=producer_epoch

@@ -4,7 +4,8 @@ VERDICT r12 item 7).
 Two kernels bypass Spark's committer and write parquet straight to
 final locations from executor workers — the topic staging kernel
 (``staging.stage_kernel``, behind produce, both compactions and the
-native sink's write tasks) and the rollup's per-hour partition write
+native sink's write tasks; a local-relation produce runs it on the
+driver) and the rollup's per-hour partition write
 (``rollup._write_hours``). The staged files' mtime refresh before an
 append or rewrite commit (``manifest.touch``) goes through the same
 seam. Through round 12 they called ``os.*`` /

@@ -1,17 +1,22 @@
 """The staging kernel: the one place sorted rows become staged topic
-files, shared by every file-writing path of the topic log —
-``TopicStore.produce`` and the compactions (through
-``topics._stage_by_bucket``'s exchange + JVM sort + ``mapInArrow``)
-and the native sink's write tasks (``datasink._task_append``, which
-sorts in Arrow and feeds the kernel directly).
+files, shared by every file-writing path of the topic log. Its callers
+reach it in one of two ways:
+
+- ``topics._stage_by_bucket``'s exchange + JVM sort + ``mapInArrow``:
+  ``TopicStore.produce`` of a distributed (non-local) DataFrame and the
+  compactions;
+- :func:`arrow_stager`, which sorts an in-memory Arrow table once and
+  feeds the kernel directly: ``TopicStore.produce`` of a local relation
+  (on the driver) and the native sink's write tasks
+  (``datasink._task_append``, on the executors).
 
 It owns the per-bucket split of sorted rows into runs, seq assignment
 from the base maxima, the file naming ``bucket=<n>/<prefix>-<hex>.parquet``,
 the bounded row-group flush, and the ``(bucket, n, rel, lo, hi)`` rows
 whose ``[lo, hi]`` become the manifest's ``seq_ranges``.
 
-Spark-free on purpose: it runs inside executor Python workers, with or
-without a SparkSession.
+Spark-free on purpose: it runs inside executor Python workers and on
+the driver, with or without a SparkSession.
 """
 
 from __future__ import annotations
@@ -37,7 +42,8 @@ def stage_kernel(
     flush_bytes: int = FLUSH_BYTES,
 ):
     """``batches -> [RecordBatch of (bucket, n, rel, lo, hi)]`` — a
-    ``mapInArrow`` function, also called directly by the native sink.
+    ``mapInArrow`` function, also called directly by
+    :func:`arrow_stager`.
 
     Input contract: the batches carry a ``bucket`` column, every bucket's
     rows arrive contiguously in one call (the caller partitions by
@@ -159,6 +165,31 @@ def stage_kernel(
                 ],
                 names=["bucket", "n", "rel", "lo", "hi"],
             )
+
+    return stage
+
+
+def arrow_stager(routed, data_dir: str, file_cols: list[str], prefix: str = "prd"):
+    """Staging of an in-memory Arrow table that already carries its
+    ``bucket``: sorts it once in the produce FIFO order and returns
+    ``stage(base) -> [kernel row dicts]``. Each call (the first staging
+    and every seq-race restage) runs :func:`stage_kernel` over the same
+    sorted rows with seqs from ``base`` — no re-route, no re-sort, no
+    Spark job. The Arrow sort holds the whole table, so callers pass
+    only rows already in memory: one write task's input, or a local
+    relation collected to the driver."""
+    # the produce FIFO order, NULLS FIRST like the JVM sort in front of
+    # the exchange path's kernel (pyarrow's default nulls-at-end would
+    # give NULL-ts rows the highest seqs here but the lowest there;
+    # test-pinned)
+    ordered = routed.sort_by(
+        [("bucket", "ascending"), ("ts", "ascending"), ("event_id", "ascending")],
+        null_placement="at_start",
+    )
+
+    def stage(base: dict[int, int]) -> list[dict]:
+        kernel = stage_kernel(data_dir, base, file_cols, prefix=prefix)
+        return [r for rb in kernel(iter(ordered.to_batches())) for r in rb.to_pylist()]
 
     return stage
 

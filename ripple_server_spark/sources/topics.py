@@ -24,10 +24,12 @@ Reference semantics reproduced (SURVEY.md §2 Table A, §3):
 Scale design: at 100 TB a topic is the same layout with more buckets —
 the manifest records each file's bucket and seq range, so a consume
 plans only the files of its bucket that overlap its seq range and tail
-reads touch only tail files. Sequence assignment shuffles
-only the *new* batch (one exchange + sort, then the staging kernel of
-``sources/staging.py``) and reads only the per-bucket maxima recorded
-in the manifest.
+reads touch only tail files. Sequence assignment touches only the
+*new* batch and reads only the per-bucket maxima recorded in the
+manifest: a distributed batch is shuffled once (one exchange + a
+spillable JVM sort, then the staging kernel of ``sources/staging.py``);
+a local relation, whose rows are already on the driver, is collected
+once and sorted and staged there with no exchange and no Python task.
 """
 
 from __future__ import annotations
@@ -64,7 +66,8 @@ def _stage_by_bucket(
 ) -> list:
     """One exchange (hash on bucket — a bucket's rows land in exactly
     one task) + a spillable JVM sort within partitions, then the
-    streaming Arrow staging kernel (``staging.stage_kernel``). Sort key
+    streaming Arrow staging kernel (``staging.stage_kernel``): the
+    staging of a non-local produce and of both compactions. Sort key
     is the produce FIFO order (bucket, ts, event_id) when assigning
     seqs, or (bucket, seq) when preserving them (compaction). The sort
     runs in the JVM because a Python sort of a skewed batch buffers the
@@ -592,6 +595,19 @@ class TopicStore:
         FIFO order within a bucket follows (ts, event_id) of the batch —
         the arrival order analog. Returns number of rows appended.
 
+        The path follows the input, not a setting. A local relation
+        (``df.isLocal()``: ``createDataFrame`` of an Arrow table or of
+        a pandas frame, SQL ``VALUES``) is collected once, routed by
+        the same ``bucket_of`` expression, then sorted in Arrow and
+        staged on the driver (``staging.arrow_stager``): one Spark
+        job, no exchange, no Python task. Its rows are already held by
+        the driver, so the in-memory sort adds no unbounded buffer and
+        needs no spill path. Any other input is shuffled once by bucket
+        and sorted by the spillable JVM sort in front of the executors'
+        staging kernel (``_stage_by_bucket``), which bounds the memory
+        of a distributed, skewed batch. Both paths give the same seqs,
+        file layout and recorded schema.
+
         ``batch_id`` makes the append IDEMPOTENT: a replayed produce
         with an already-applied id is a no-op (returns 0). Replay
         safety is transactional, not best-effort: the data files and
@@ -644,31 +660,48 @@ class TopicStore:
         data_dir = self.data_dir(topic)
         os.makedirs(data_dir, exist_ok=True)
         staged: list = []  # kernel rows of the latest staging
+        local = df.isLocal()
+        stager = None  # the local path's sorted in-memory batch
+
+        def routed(m: dict) -> DataFrame:
+            # routed once, by the bucket count of the first attempt's base
+            return df.withColumn(
+                "bucket",
+                F.coalesce(bucket_of(F.col(key_col), int(m["n_buckets"])), F.lit(0)),
+            )
 
         def stage(m: dict) -> dict[str, list[int]]:
-            # One exchange (hash on bucket — a bucket's rows land in
-            # exactly one task) + a spillable JVM sort, then the
-            # streaming Arrow kernel assigns contiguous per-bucket seqs
-            # from this base's maxima and stages parquet straight into
-            # the bucket dirs; the per-bucket counts and seq ranges ride
-            # back on the same job. A later attempt (a lost seq race)
-            # restages from the previous attempt's files through the
-            # same sort + kernel: identical (ts, event_id) order, so
-            # identical seqs shifted by the per-bucket delta, and one
-            # extra pass over the BATCH (never the topic).
-            if staged:
-                src = self.spark.read.option("basePath", data_dir).parquet(
-                    *[os.path.join(data_dir, r["rel"]) for r in staged]
-                )
-            else:
-                src = df.withColumn(
-                    "bucket",
-                    F.coalesce(
-                        bucket_of(F.col(key_col), int(m["n_buckets"])), F.lit(0)
-                    ),
-                )
+            nonlocal stager
             maxima = {int(b): int(x) for b, x in m.get("maxima", {}).items()}
-            staged[:] = _stage_by_bucket(src, data_dir, maxima, file_cols)
+            if local:
+                # The rows are already in driver memory: one JVM-only
+                # collect of the routed batch, then one Arrow sort and
+                # the kernel, all on the driver. A lost seq race
+                # restages the same sorted table against the new base
+                # with no Spark job.
+                if stager is None:
+                    stager = staging.arrow_stager(routed(m).toArrow(), data_dir, file_cols)
+                staged[:] = stager(maxima)
+            else:
+                # One exchange (hash on bucket — a bucket's rows land in
+                # exactly one task) + a spillable JVM sort, then the
+                # streaming Arrow kernel assigns contiguous per-bucket
+                # seqs from this base's maxima and stages parquet
+                # straight into the bucket dirs; the per-bucket counts
+                # and seq ranges ride back on the same job. A later
+                # attempt (a lost seq race) restages from the previous
+                # attempt's files through the same sort + kernel:
+                # identical (ts, event_id) order, so identical seqs
+                # shifted by the per-bucket delta, and one extra pass
+                # over the BATCH (never the topic).
+                src = (
+                    self.spark.read.option("basePath", data_dir).parquet(
+                        *[os.path.join(data_dir, r["rel"]) for r in staged]
+                    )
+                    if staged
+                    else routed(m)
+                )
+                staged[:] = _stage_by_bucket(src, data_dir, maxima, file_cols)
             return staging.staged_ranges(staged)
 
         committed = manifest.append(

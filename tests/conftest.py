@@ -39,19 +39,31 @@ def land_before_next_commit(monkeypatch, sibling) -> None:
 
 
 def count_stagings(monkeypatch) -> list:
-    """Record each run of produce's staging kernel (first stagings and
-    seq-race restages alike); returns the list the runs append to."""
-    from ripple_server_spark.sources import topics
+    """Record each driver-side staging (first stagings and seq-race
+    restages alike, through the exchange path or a local produce's
+    in-memory one): each builds one ``staging.stage_kernel``. Returns
+    the list the runs append to."""
+    from ripple_server_spark.sources import staging
 
     runs: list = []
-    real = topics._stage_by_bucket
+    real = staging.stage_kernel
 
     def counting(*a, **k):
         runs.append(1)
         return real(*a, **k)
 
-    monkeypatch.setattr(topics, "_stage_by_bucket", counting)
+    monkeypatch.setattr(staging, "stage_kernel", counting)
     return runs
+
+
+def in_form(df, form: str):
+    """``df`` as the produce input ``form`` names: itself (a plan over
+    files or a range, so the exchange path), or its rows as a local
+    relation (``createDataFrame`` of an Arrow table)."""
+    if form == "local":
+        df = df.sparkSession.createDataFrame(df.toArrow())
+    assert df.isLocal() == (form == "local")
+    return df
 
 
 def topic_stream(store, topic: str, **options):

@@ -18,6 +18,7 @@ from ripple_server_spark.sources.topics import (
     TopicStore,
     offsets_path,
 )
+from tests.conftest import in_form
 
 
 def _wave(spark, w, n=20, keys=5):
@@ -350,7 +351,7 @@ def test_producer_epoch_fences_produce(spark, tmp_path):
 
 
 def test_producer_fence_landing_mid_produce_is_atomic(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, form="exchange"
 ):
     """A fence_producers that commits AFTER the zombie's entry check but
     BEFORE its manifest commit must still fence it — the epoch re-check
@@ -359,11 +360,13 @@ def test_producer_fence_landing_mid_produce_is_atomic(
     st.create_topic("t", n_buckets=2)
     st.produce(_wave(spark, 0), "t", producer_epoch=0)
     before = st.read_topic("t").count()
+    zombie = in_form(_wave(spark, 1), form)
 
     # Hook the manifest-commit seam: by the first manifest.commit call
-    # the produce has already staged its files (the mapInArrow kernel
-    # wrote them during the collect), so fencing here lands between
-    # stage and commit — the window the test has always exercised.
+    # the produce has already staged its files (the kernel wrote them,
+    # in the mapInArrow job or on the driver), so fencing here lands
+    # between stage and commit — the window the test has always
+    # exercised.
     from ripple_server_spark.sources import manifest
 
     orig = manifest.commit
@@ -377,12 +380,22 @@ def test_producer_fence_landing_mid_produce_is_atomic(
 
     monkeypatch.setattr(manifest, "commit", fence_then_commit)
     with pytest.raises(StaleProducerEpochError):
-        st.produce(_wave(spark, 1), "t", producer_epoch=0)
+        st.produce(zombie, "t", producer_epoch=0)
     monkeypatch.undo()
     assert st.read_topic("t").count() == before  # staged rows invisible
     # the orphaned staged files are vacuum-reclaimable, not live
     st.vacuum("t", grace_s=0.0)
     assert st.read_topic("t").count() == before
+
+
+def test_producer_fence_landing_mid_local_produce_is_atomic(
+    spark, tmp_path, monkeypatch
+):
+    """The mid-produce fence above, with the zombie's batch a local
+    relation staged on the driver."""
+    test_producer_fence_landing_mid_produce_is_atomic(
+        spark, tmp_path, monkeypatch, form="local"
+    )
 
 
 def test_producer_epoch_fences_native_sink(spark, tmp_path):

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ripple_server_spark.catalog import load_table
 from ripple_server_spark.sources import manifest
 from ripple_server_spark.sources.topics import TopicStore
+from tests.conftest import in_form
 
 
 def _mk(spark, sf_dir, tmp_path, topic="m1", n=300, buckets=4):
@@ -134,7 +135,7 @@ def test_cold_store_instance_never_scans_for_maxima(spark, sf_dir, tmp_path):
 
 
 def test_concurrent_produce_seq_race_is_rebased(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path, monkeypatch, form="exchange"
 ):
     """Two producers appending from the same observed base must not
     assign overlapping seqs: the second commit detects the advanced
@@ -155,6 +156,7 @@ def test_concurrent_produce_seq_race_is_rebased(
     s1.create_topic("race", n_buckets=2)
     s1.produce(b1, "race")
     s2 = TopicStore(spark, str(tmp_path))
+    b3 = in_form(b3, form)
     stagings = count_stagings(monkeypatch)
     land_before_next_commit(monkeypatch, lambda: s2.produce(b2, "race"))
     s1.produce(b3, "race")  # stale base -> must restage, not overlap
@@ -182,8 +184,16 @@ def test_concurrent_produce_seq_race_is_rebased(
         assert maxima[r["bucket"]] == r["hi"]
 
 
+def test_local_produce_seq_race_is_rebased(spark, sf_dir, tmp_path, monkeypatch):
+    """The rebase above with the raced batch a local relation: the
+    driver-side path restages its sorted in-memory rows."""
+    test_concurrent_produce_seq_race_is_rebased(
+        spark, sf_dir, tmp_path, monkeypatch, form="local"
+    )
+
+
 def test_replayed_batch_id_race_cannot_double_append(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path, monkeypatch, form="exchange"
 ):
     """The batch_id idempotence check re-runs inside the commit: a
     replayed produce whose twin landed after its entry check (forced
@@ -207,6 +217,7 @@ def test_replayed_batch_id_race_cannot_double_append(
     # force the in-commit path on a third instance: its entry check
     # (the append's first manifest read) is shown a manifest without B1
     s3 = TopicStore(spark, str(tmp_path))
+    replay = in_form(batch, form)
     v_before = s3.latest_manifest("idem")[0]
     real = manifest.latest
     calls = {"n": 0}
@@ -221,7 +232,7 @@ def test_replayed_batch_id_race_cannot_double_append(
 
     stagings = count_stagings(monkeypatch)
     monkeypatch.setattr(manifest, "latest", stale_once)
-    assert s3.produce(batch, "idem", batch_id="B1") == 0
+    assert s3.produce(replay, "idem", batch_id="B1") == 0
     monkeypatch.undo()
     # the batch got past the entry check and staged; only the in-commit
     # applied-id check can have refused it
@@ -230,6 +241,15 @@ def test_replayed_batch_id_race_cannot_double_append(
 
     df = s1.read_topic("idem")
     assert df.count() == 100  # appended exactly once across all replays
+
+
+def test_local_produce_replayed_batch_id_race_cannot_double_append(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The in-commit applied-id check above, replaying a local relation."""
+    test_replayed_batch_id_race_cannot_double_append(
+        spark, sf_dir, tmp_path, monkeypatch, form="local"
+    )
 
 
 def test_history_classifies_operations(spark, sf_dir, tmp_path):
@@ -476,7 +496,9 @@ def _lose_every_seq_race(monkeypatch, n_buckets):
     return calls
 
 
-def test_produce_seq_race_retries_are_bounded(spark, sf_dir, tmp_path, monkeypatch):
+def test_produce_seq_race_retries_are_bounded(
+    spark, sf_dir, tmp_path, monkeypatch, form="exchange"
+):
     """A produce that loses every seq race gives up after
     ``manifest.RETRIES`` restages with a RuntimeError, and none of its
     rows become visible."""
@@ -484,8 +506,11 @@ def test_produce_seq_race_retries_are_bounded(spark, sf_dir, tmp_path, monkeypat
 
     store, _ev = _mk(spark, sf_dir, tmp_path, n=100, buckets=2)
     before = store.read_topic("m1").count()
-    late = load_table(spark, sf_dir, "events").filter(
-        (F.col("event_id") >= 100) & (F.col("event_id") < 200)
+    late = in_form(
+        load_table(spark, sf_dir, "events").filter(
+            (F.col("event_id") >= 100) & (F.col("event_id") < 200)
+        ),
+        form,
     )
     stagings = count_stagings(monkeypatch)
     calls = _lose_every_seq_race(monkeypatch, n_buckets=2)
@@ -494,6 +519,15 @@ def test_produce_seq_race_retries_are_bounded(spark, sf_dir, tmp_path, monkeypat
     monkeypatch.undo()
     assert len(calls) == len(stagings) == 3
     assert store.read_topic("m1").count() == before
+
+
+def test_local_produce_seq_race_retries_are_bounded(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The retry bound above, for a local relation's driver-side path."""
+    test_produce_seq_race_retries_are_bounded(
+        spark, sf_dir, tmp_path, monkeypatch, form="local"
+    )
 
 
 def test_sink_seq_race_retries_are_bounded(spark, sf_dir, tmp_path, monkeypatch):

@@ -914,20 +914,27 @@ def test_produce_kernel_stage_equivalence(spark, tmp_path):
     (the contract the old Spark writer's micros conf honored), and
     recomputing any seq/bucket columns the batch already carries with
     seq at its original schema position (the withColumn-overwrite
-    contract a consume->produce round trip relies on)."""
+    contract a consume->produce round trip relies on).
+
+    Both produce paths are held to it on one input set: the batch as a
+    distributed frame (exchange + JVM sort + mapInArrow) and as a local
+    relation (one collect, then the Arrow sort and the kernel on the
+    driver) give the same rows, file statistics and recorded schema."""
     import glob
     import os
 
     import pyarrow.parquet as pq
 
+    from tests.conftest import in_form
+
     st = TopicStore(spark, str(tmp_path / "kern"))
-    st.create_topic("k", n_buckets=2)
     base_ts = F.lit("2026-01-01 00:00:00").cast("timestamp")
     df = spark.createDataFrame(
         # event_id 5/6: NULL ts -> must take the LOWEST seqs of their
         # bucket (NULLS FIRST, the old window's ascending default);
-        # event_id 0..4: ts descending by id -> seq must INVERT id order
-        [(0, 0, 4), (1, 0, 3), (2, 0, 2), (3, 0, 1), (4, 0, 0), (5, 0, None), (6, 1, None), (7, 1, 0)],
+        # event_id 0..4: ts descending by id -> seq must INVERT id order;
+        # event_id 8: NULL key -> bucket 0, after the ts=4 row (id 0)
+        [(0, 0, 4), (1, 0, 3), (2, 0, 2), (3, 0, 1), (4, 0, 0), (5, 0, None), (6, 1, None), (7, 1, 0), (8, None, 5)],
         "event_id bigint, user_id bigint, off int",
     ).select(
         "event_id",
@@ -937,45 +944,65 @@ def test_produce_kernel_stage_equivalence(spark, tmp_path):
         ).alias("ts"),
         "user_id",
     )
-    assert st.produce(df, "k") == 8
-    got = {
-        (r["bucket"], r["seq"]): r["event_id"]
-        for r in st.read_topic("k").collect()
-    }
-    # bucket 0: NULL-ts row first, then ts ascending (= event_id 4..0)
-    assert [got[(0, s)] for s in range(6)] == [5, 4, 3, 2, 1, 0]
-    # bucket 1: NULL ts (6) before ts=0 (7)
-    assert [got[(1, s)] for s in range(2)] == [6, 7]
-
-    # physical layout: timestamp[us] with statistics on every column
-    f = sorted(
-        glob.glob(os.path.join(st.data_dir("k"), "bucket=0", "*.parquet"))
-    )[0]
-    sch = pq.read_schema(f)
-    assert str(sch.field("ts").type).startswith("timestamp[us")
-    rg = pq.read_metadata(f).row_group(0)
-    for i in range(rg.num_columns):
-        col = rg.column(i)
-        assert col.statistics is not None, col.path_in_schema
-
     # a batch already carrying seq/bucket: both recomputed, seq at its
     # original position, values from THIS produce (not the stale ones)
-    st.create_topic("k2", n_buckets=2)
     carried = df.withColumn("seq", F.lit(999).cast("bigint")).withColumn(
         "bucket", F.lit(77)
     )
-    assert st.produce(carried, "k2") == 8
-    rt = st.read_topic("k2")
-    names = [fld.name for fld in rt.schema.fields]
-    # seq keeps its pre-bucket position; bucket is the partition column
-    assert names.index("seq") < len(names) - 1
-    assert rt.filter(F.col("seq") == 999).count() == 0
-    assert sorted(r["bucket"] for r in rt.select("bucket").distinct().collect()) == [0, 1]
-    per_bucket = rt.groupBy("bucket").agg(
-        F.min("seq").alias("mn"), F.max("seq").alias("mx"), F.count("*").alias("n")
-    ).collect()
-    for r in per_bucket:
-        assert r["mn"] == 0 and r["mx"] == r["n"] - 1
+    seen = {}
+    for form in ("exchange", "local"):
+        topic = f"k{form}"
+        st.create_topic(topic, n_buckets=2)
+        assert st.produce(in_form(df, form), topic) == 9
+        got = {
+            (r["bucket"], r["seq"]): r["event_id"]
+            for r in st.read_topic(topic).collect()
+        }
+        # bucket 0: NULL-ts row first, then ts ascending (= event_id
+        # 4..0), then the NULL-key row's ts=5
+        assert [got[(0, s)] for s in range(7)] == [5, 4, 3, 2, 1, 0, 8]
+        # bucket 1: NULL ts (6) before ts=0 (7)
+        assert [got[(1, s)] for s in range(2)] == [6, 7]
+
+        # physical layout: timestamp[us] with statistics on every column
+        stats = {}
+        for b in (0, 1):
+            f = glob.glob(os.path.join(st.data_dir(topic), f"bucket={b}", "*.parquet"))
+            assert len(f) == 1
+            sch = pq.read_schema(f[0])
+            assert str(sch.field("ts").type).startswith("timestamp[us")
+            rg = pq.read_metadata(f[0]).row_group(0)
+            for i in range(rg.num_columns):
+                col = rg.column(i)
+                assert col.statistics is not None, col.path_in_schema
+            ts_stats = rg.column(sch.get_field_index("ts")).statistics
+            stats[b] = (str(sch), ts_stats.null_count, ts_stats.min, ts_stats.max)
+
+        topic2 = f"k2{form}"
+        st.create_topic(topic2, n_buckets=2)
+        assert st.produce(in_form(carried, form), topic2) == 9
+        rt = st.read_topic(topic2)
+        names = [fld.name for fld in rt.schema.fields]
+        # seq keeps its pre-bucket position; bucket is the partition column
+        assert names.index("seq") < len(names) - 1
+        assert rt.filter(F.col("seq") == 999).count() == 0
+        assert sorted(r["bucket"] for r in rt.select("bucket").distinct().collect()) == [0, 1]
+        per_bucket = rt.groupBy("bucket").agg(
+            F.min("seq").alias("mn"), F.max("seq").alias("mx"), F.count("*").alias("n")
+        ).collect()
+        for r in per_bucket:
+            assert r["mn"] == 0 and r["mx"] == r["n"] - 1
+        carried_got = {
+            (r["bucket"], r["seq"]): r["event_id"] for r in rt.collect()
+        }
+        assert carried_got == got
+        seen[form] = (
+            got,
+            stats,
+            st.latest_manifest(topic)[1]["schema"],
+            st.latest_manifest(topic2)[1]["schema"],
+        )
+    assert seen["local"] == seen["exchange"]
 
 
 def test_produce_stage_kernel_streams_bounded_row_groups(tmp_path):
@@ -1236,6 +1263,98 @@ def _jobs_in(sc, group: str):
         jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
         for k, v in caller.items():
             sc.setLocalProperty(k, v)
+
+
+def test_local_relation_produce_runs_one_job(spark, tmp_path):
+    """A produce of a local relation (``createDataFrame`` of an Arrow
+    table: its rows are already in driver memory) runs ONE Spark job,
+    the routed collect, in one stage: no exchange and no mapInArrow
+    stage of Python tasks. The caller's job group is left intact."""
+    import pyarrow as pa
+
+    n = 600
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(
+                [1_767_225_600_000_000 + (i * 7919) % n for i in range(n)],
+                pa.timestamp("us", tz="UTC"),
+            ),
+            "user_id": pa.array([i % 13 for i in range(n)], pa.int64()),
+        }
+    )
+    df = spark.createDataFrame(tbl)
+    assert df.isLocal()
+    st = TopicStore(spark, str(tmp_path / "lp"))
+    st.create_topic("lp", n_buckets=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("caller", "the caller's own group")
+    try:
+        with _jobs_in(sc, "local-produce") as jobs:
+            assert st.produce(df, "lp") == n
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+    m = st.latest_manifest("lp")[1]
+    rt = st.read_topic("lp")
+    assert rt.count() == n
+    for r in rt.groupBy("bucket").agg(
+        F.count("*").alias("n"), F.min("seq").alias("lo"), F.max("seq").alias("hi")
+    ).collect():
+        assert (r["lo"], r["hi"]) == (0, r["n"] - 1)
+        assert int(m["maxima"][str(r["bucket"])]) == r["hi"]
+
+
+def test_local_produce_seq_race_restages_without_a_job(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A local relation's produce that loses a seq race restages its
+    sorted in-memory batch against the new base with no further Spark
+    job: the whole raced produce runs the one collect. Seqs stay
+    contiguous and the manifest maxima equal the data."""
+    from tests.conftest import count_stagings, in_form, land_before_next_commit
+
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    root = str(tmp_path / "lr")
+    s1 = TopicStore(spark, root)
+    s1.create_topic("lr", n_buckets=2)
+    s1.produce(ev.filter(F.col("event_id") < 50), "lr")
+    s2 = TopicStore(spark, root)
+    batch = in_form(
+        ev.filter((F.col("event_id") >= 100) & (F.col("event_id") < 150)), "local"
+    )
+    sc = spark.sparkContext
+    sibling_jobs: list = []
+
+    def sibling():
+        # its own job group, so its jobs are not counted as s1's
+        with _jobs_in(sc, "sibling") as jobs:
+            s2.produce(
+                ev.filter((F.col("event_id") >= 50) & (F.col("event_id") < 100)), "lr"
+            )
+        sibling_jobs.extend(jobs)
+
+    stagings = count_stagings(monkeypatch)
+    land_before_next_commit(monkeypatch, sibling)
+    with _jobs_in(sc, "raced-local") as jobs:
+        assert s1.produce(batch, "lr") == 50
+    monkeypatch.undo()
+    assert len(stagings) == 3, "s1 stages, the sibling produces, s1 must restage"
+    assert sibling_jobs, "the sibling's produce did not land mid-produce"
+    assert len(jobs) == 1, "the restage ran a Spark job"
+    rt = s1.read_topic("lr")
+    assert rt.count() == 150
+    maxima = {int(b): x for b, x in s1.latest_manifest("lr")[1]["maxima"].items()}
+    for r in rt.groupBy("bucket").agg(
+        F.count("*").alias("n"),
+        F.countDistinct("seq").alias("nd"),
+        F.min("seq").alias("lo"),
+        F.max("seq").alias("hi"),
+    ).collect():
+        assert r["nd"] == r["n"] and (r["lo"], r["hi"]) == (0, r["n"] - 1)
+        assert maxima[r["bucket"]] == r["hi"]
 
 
 def test_consume_materializes_in_one_job_in_seq_order(polled):
