@@ -18,15 +18,22 @@ each bucket a contiguous, gap-free per-bucket ``seq``.
 
 Execution model — EVERY write task is an independent producer client:
 
-- each task buffers its Arrow batches, routes rows to buckets
-  (``pmod(key, n_buckets)``, NULL -> 0, same as ``TopicStore.produce``),
-  then sorts by (bucket, ts, event_id) in Arrow and stages them through
-  the SAME function a local-relation produce stages through
-  (``staging.arrow_stager`` over ``staging.stage_kernel``: seq
-  assignment, file naming, row-group flush, seq ranges) and appends
-  through the SAME transaction (``manifest.append``: epoch check,
-  applied-id idempotence, atomic claim of version v+1, seq-race
-  restage) — all executor-side, rows never pass through the driver;
+- each task buffers its Arrow batches and hands them to
+  ``staging.append_arrow``, the SAME append a ``TopicStore.produce`` of
+  a ``pyarrow.Table`` or of a local relation runs on the driver: one
+  Arrow router (``pmod(key, n_buckets)``, NULL -> 0), one sort by
+  (bucket, ts, event_id) NULLS FIRST, the staging kernel
+  (``staging.stage_kernel``: seq assignment, file naming, row-group
+  flush, seq ranges) and the SAME transaction (``manifest.append``:
+  epoch check, applied-id idempotence, atomic claim of version v+1,
+  seq-race restage) — all executor-side, rows never pass through the
+  driver;
+- the input is checked once, on the driver, before any task runs
+  (``staging.message_fields`` in :func:`_writer_common`, the check
+  ``produce`` runs too): the routing key and ``ts``/``event_id`` must
+  be columns, and a fractional key (FLOAT, DOUBLE, DECIMAL) is refused
+  with ``staging.AppendInputError``; the recorded schema follows
+  produce's rule (an input ``seq`` keeps its position);
 - seqs stay contiguous per bucket: a task claims ``[maxima+1, +n)``
   atomically with its manifest commit; on a lost race it restages its
   sorted rows through the kernel with seqs from the new base and
@@ -88,15 +95,11 @@ from ripple_server_spark.sources import manifest, staging
 
 
 class TaskCommit(WriterCommitMessage):
-    """Rows + manifest version committed by one write task (version is
-    None when the task no-op'd on its applied id)."""
+    """Rows committed by one write task (0 when the task had no rows or
+    no-op'd on its applied id)."""
 
-    def __init__(self, rows: int, version: int | None):
+    def __init__(self, rows: int):
         self.rows = rows
-        self.version = version
-
-
-# -- task append kernel -----------------------------------------------------
 
 
 def _task_append(
@@ -108,64 +111,33 @@ def _task_append(
     fields: list[str],
     producer_epoch: int | None = None,
 ) -> TaskCommit:
-    """Append one task's Arrow batches as a producer transaction.
-
-    Runs entirely executor-side: route, then ``staging.arrow_stager``
-    sorts once and stages parquet through ``staging.stage_kernel``
-    directly into the bucket dirs
-    (invisible until the manifest commit), with ``manifest.append``
-    claiming the contiguous seqs; a lost seq race restages the same
-    sorted rows against the new base. Raced/leftover staged files are
+    """Append one task's Arrow batches as a producer transaction through
+    ``staging.append_arrow``, executor-side. A task with no rows commits
+    nothing (no version, no applied id). Raced/leftover staged files are
     crash-orphan-equivalent (vacuum reclaims them).
 
     ``producer_epoch`` (``option("producer_epoch", N)``) opts this
     transaction into topic-level producer fencing, checked at entry AND
     inside the commit (VERDICT r10 item 6; mirrors produce()).
     """
-    import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     batches = [b for b in batches if b.num_rows]
     if not batches:
-        return TaskCommit(0, None)
+        return TaskCommit(0)
     tbl = pa.Table.from_batches(batches)
-    drop = [c for c in ("bucket", "seq") if c in tbl.column_names]
-    if drop:
-        # recomputed below — produce's withColumn-overwrite contract
-        tbl = tbl.drop_columns(drop)
-    for req in (key_col, "ts", "event_id"):
-        if req not in tbl.column_names:
-            raise ValueError(
-                f"ripple_topic sink requires column {req!r} (routing key "
-                "+ the (ts, event_id) FIFO order key — produce parity)"
-            )
-    data_dir = os.path.join(root, "topics", topic, "data")
-    file_cols = [*tbl.column_names, "seq"]
-    stager = None
-
-    def stage(m: dict) -> dict[str, list[int]]:
-        nonlocal stager
-        if stager is None:
-            # bucket = pmod(key, n) with NULL -> 0
-            # (operators/relational.bucket_of + produce's coalesce),
-            # routed once by the bucket count of the first base and
-            # sorted once in produce's FIFO order
-            key = pc.fill_null(pc.cast(tbl[key_col], pa.int64()), 0)
-            k = key.to_numpy(zero_copy_only=False)
-            b = (k % int(m["n_buckets"])).astype(np.int32)  # non-negative for n>0
-            stager = staging.arrow_stager(
-                tbl.append_column("bucket", pa.array(b)), data_dir, file_cols, prefix="dsw"
-            )
-        base = {int(b): int(x) for b, x in m.get("maxima", {}).items()}
-        return staging.staged_ranges(stager(base))
-
-    committed = manifest.append(
-        root, topic, stage, fields, applied_id=applied_id, producer_epoch=producer_epoch
+    return TaskCommit(
+        staging.append_arrow(
+            lambda: tbl,
+            root,
+            topic,
+            key_col,
+            fields,
+            applied_id=applied_id,
+            producer_epoch=producer_epoch,
+            prefix="dsw",
+        )
     )
-    if committed is None:
-        return TaskCommit(0, None)  # retried task: its twin already landed
-    return TaskCommit(tbl.num_rows, int(committed["version"]))
 
 
 # -- writer classes ---------------------------------------------------------
@@ -187,18 +159,12 @@ def _writer_common(options: dict, schema: StructType, overwrite: bool):
     if len(topics) != 1:
         raise ValueError("ripple_topic writes go to exactly one topic")
     key_col = options.get("key_col", "user_id")
-    # the recorded MESSAGE schema must match what the files hold:
-    # input columns minus bucket (a partition dir, not a file column)
-    # plus the seq the writer assigns — byte-identical to what
-    # TopicStore.produce records, so a sink-established topic's
-    # empty-frame DDL carries seq (poll() orders on it) and the
-    # first produce() after a sink write does NOT record a spurious
-    # schema evolution (review r08 finding)
-    fields = [
-        f"{f.name}:{f.dataType.simpleString()}"
-        for f in schema.fields
-        if f.name not in ("bucket", "seq")
-    ] + ["seq:bigint"]
+    # checked here, on the driver, before any task runs; the recorded
+    # MESSAGE schema is what produce records for the same input, so a
+    # sink-established topic's empty-frame DDL carries seq (poll()
+    # orders on it) and a produce() after a sink write records no
+    # spurious schema evolution (review r08 finding)
+    fields = staging.message_fields(schema, key_col)
     create = str(options.get("create_topic", "false")).lower() == "true"
     n_buckets = int(options.get("n_buckets", N_BUCKETS))
     epoch = options.get("producer_epoch")

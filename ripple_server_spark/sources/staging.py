@@ -1,19 +1,27 @@
-"""The staging kernel: the one place sorted rows become staged topic
-files, shared by every file-writing path of the topic log. Its callers
-reach it in one of two ways:
+"""The staging kernel and the one Arrow append: the one place sorted
+rows become staged topic files, shared by every file-writing path of
+the topic log. Its callers reach the kernel in one of two ways:
 
 - ``topics._stage_by_bucket``'s exchange + JVM sort + ``mapInArrow``:
   ``TopicStore.produce`` of a distributed (non-local) DataFrame and the
   compactions;
-- :func:`arrow_stager`, which sorts an in-memory Arrow table once and
-  feeds the kernel directly: ``TopicStore.produce`` of a local relation
-  (on the driver) and the native sink's write tasks
-  (``datasink._task_append``, on the executors).
+- :func:`append_arrow`, which routes, sorts and stages rows already in
+  memory as one Arrow table and commits them through
+  ``manifest.append``: ``TopicStore.produce`` of a ``pyarrow.Table``
+  or of a local relation (on the driver) and the native sink's write
+  tasks (``datasink._task_append``, on the executors).
 
-It owns the per-bucket split of sorted rows into runs, seq assignment
-from the base maxima, the file naming ``bucket=<n>/<prefix>-<hex>.parquet``,
-the bounded row-group flush, and the ``(bucket, n, rel, lo, hi)`` rows
-whose ``[lo, hi]`` become the manifest's ``seq_ranges``.
+:func:`message_fields` is the one input check and recorded-schema rule
+of both append surfaces (``produce`` and the sink): the routing key and
+the ``(ts, event_id)`` FIFO order key must be present, and the key must
+be an integer or a string holding one, the keys on which Spark's
+``pmod`` and :func:`append_arrow`'s Arrow router agree.
+
+The kernel owns the per-bucket split of sorted rows into runs, seq
+assignment from the base maxima, the file naming
+``bucket=<n>/<prefix>-<hex>.parquet``, the bounded row-group flush, and
+the ``(bucket, n, rel, lo, hi)`` rows whose ``[lo, hi]`` become the
+manifest's ``seq_ranges``.
 
 Spark-free on purpose: it runs inside executor Python workers and on
 the driver, with or without a SparkSession.
@@ -23,6 +31,8 @@ from __future__ import annotations
 
 import os
 import uuid
+
+from ripple_server_spark.sources import manifest
 
 # Per-task staging buffer target: rows of the CURRENT bucket accumulate
 # until this many Arrow bytes, then flush as one parquet row group — the
@@ -43,7 +53,7 @@ def stage_kernel(
 ):
     """``batches -> [RecordBatch of (bucket, n, rel, lo, hi)]`` — a
     ``mapInArrow`` function, also called directly by
-    :func:`arrow_stager`.
+    :func:`append_arrow`.
 
     Input contract: the batches carry a ``bucket`` column, every bucket's
     rows arrive contiguously in one call (the caller partitions by
@@ -169,29 +179,109 @@ def stage_kernel(
     return stage
 
 
-def arrow_stager(routed, data_dir: str, file_cols: list[str], prefix: str = "prd"):
-    """Staging of an in-memory Arrow table that already carries its
-    ``bucket``: sorts it once in the produce FIFO order and returns
-    ``stage(base) -> [kernel row dicts]``. Each call (the first staging
-    and every seq-race restage) runs :func:`stage_kernel` over the same
-    sorted rows with seqs from ``base`` — no re-route, no re-sort, no
-    Spark job. The Arrow sort holds the whole table, so callers pass
-    only rows already in memory: one write task's input, or a local
-    relation collected to the driver."""
-    # the produce FIFO order, NULLS FIRST like the JVM sort in front of
-    # the exchange path's kernel (pyarrow's default nulls-at-end would
-    # give NULL-ts rows the highest seqs here but the lowest there;
-    # test-pinned)
-    ordered = routed.sort_by(
-        [("bucket", "ascending"), ("ts", "ascending"), ("event_id", "ascending")],
-        null_placement="at_start",
-    )
+class AppendInputError(ValueError):
+    """An append input the topic log cannot take: a missing routing or
+    FIFO-order column, or a routing key that is not an integer (or a
+    string holding one)."""
 
-    def stage(base: dict[int, int]) -> list[dict]:
+
+# Spark types of the routing keys every surface routes alike: Spark's
+# pmod and the Arrow router below both read them as BIGINT. A
+# fractional key would route by its truncation in one and fail in the
+# other, so it is refused at entry instead.
+_KEY_TYPES = ("tinyint", "smallint", "int", "bigint", "string", "void")
+
+
+def message_fields(schema, key_col: str) -> list[str]:
+    """The recorded message schema (``"name:type"`` entries) of an
+    append input with Spark schema ``schema``, after the one input
+    check of both append surfaces: ``key_col``, ``ts`` and ``event_id``
+    must be columns, and the key must be an integer or a string holding
+    one (:class:`AppendInputError` otherwise). ``bucket`` is a
+    partition dir, not a file column, and is left out; ``seq`` keeps
+    its position when the input carries one (a consume -> produce round
+    trip), and is appended otherwise. The entries' names, in order, are
+    the staged files' columns. Reads only the fields' names and
+    ``dataType.simpleString()``."""
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    for req in (key_col, "ts", "event_id"):
+        if req not in types:
+            raise AppendInputError(
+                f"a topic append requires column {req!r} (the routing key "
+                "and the (ts, event_id) FIFO order key)"
+            )
+    if types[key_col] not in _KEY_TYPES:
+        raise AppendInputError(
+            f"routing key {key_col!r} has type {types[key_col]}: topics "
+            "route integer keys (or strings holding one) by pmod(key, "
+            "n_buckets), and refuse a fractional or other key rather "
+            "than route its truncation"
+        )
+    types.pop("bucket", None)
+    types["seq"] = "bigint"
+    return [f"{n}:{t}" for n, t in types.items()]
+
+
+def append_arrow(
+    load,
+    root: str,
+    topic: str,
+    key_col: str,
+    fields: list[str],
+    applied_id: str | None = None,
+    producer_epoch: int | None = None,
+    prefix: str = "prd",
+) -> int:
+    """The one append of in-memory Arrow rows: ``load() -> pyarrow.Table``
+    is called once, inside the first staging, so a replayed
+    ``applied_id`` loads nothing. The table drops any ``bucket``/``seq``
+    it carries, is routed by the first base's ``n_buckets`` (bucket =
+    pmod(key, n), NULL to 0: the one Arrow router), and is sorted once
+    in the produce FIFO order. Every staging (the first and each
+    seq-race restage) runs :func:`stage_kernel` over the same sorted
+    rows with seqs from its base, and ``manifest.append`` commits them
+    under ``fields`` (:func:`message_fields`; their names are the file
+    columns). No Spark job, so it runs on the driver and in executor
+    tasks alike. Returns the rows appended: 0 when nothing was
+    committed.
+
+    The Arrow sort holds the whole table, so callers pass only rows
+    already in memory: one write task's input, or a batch that sits on
+    the driver."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    data_dir = os.path.join(root, "topics", topic, "data")
+    file_cols = [f.split(":", 1)[0] for f in fields]
+    ordered = None  # the routed, sorted batch
+
+    def stage(m: dict) -> dict[str, list[int]]:
+        nonlocal ordered
+        if ordered is None:
+            tbl = load()
+            tbl = tbl.drop_columns([c for c in ("bucket", "seq") if c in tbl.column_names])
+            key = pc.fill_null(pc.cast(tbl[key_col], pa.int64()), 0)
+            n = int(m["n_buckets"])
+            bucket = (key.to_numpy(zero_copy_only=False) % n).astype(np.int32)
+            # the produce FIFO order, NULLS FIRST like the JVM sort in
+            # front of the exchange path's kernel (pyarrow's default
+            # nulls-at-end would give NULL-ts rows the highest seqs here
+            # but the lowest there; test-pinned)
+            ordered = tbl.append_column("bucket", pa.array(bucket)).sort_by(
+                [("bucket", "ascending"), ("ts", "ascending"), ("event_id", "ascending")],
+                null_placement="at_start",
+            )
+        base = {int(b): int(x) for b, x in m.get("maxima", {}).items()}
         kernel = stage_kernel(data_dir, base, file_cols, prefix=prefix)
-        return [r for rb in kernel(iter(ordered.to_batches())) for r in rb.to_pylist()]
+        return staged_ranges(
+            r for rb in kernel(iter(ordered.to_batches())) for r in rb.to_pylist()
+        )
 
-    return stage
+    committed = manifest.append(
+        root, topic, stage, fields, applied_id=applied_id, producer_epoch=producer_epoch
+    )
+    return 0 if committed is None else ordered.num_rows
 
 
 def staged_ranges(staged) -> dict[str, list[int]]:

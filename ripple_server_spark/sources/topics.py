@@ -28,8 +28,11 @@ reads touch only tail files. Sequence assignment touches only the
 *new* batch and reads only the per-bucket maxima recorded in the
 manifest: a distributed batch is shuffled once (one exchange + a
 spillable JVM sort, then the staging kernel of ``sources/staging.py``);
-a local relation, whose rows are already on the driver, is collected
-once and sorted and staged there with no exchange and no Python task.
+a ``pyarrow.Table``, or a local relation collected once, is routed,
+sorted and staged on the driver by ``staging.append_arrow``, the one
+Arrow append the native sink's tasks run too, with no exchange and no
+Python task. Every form passes the sink's input check first
+(``staging.message_fields``): a fractional routing key is refused.
 """
 
 from __future__ import annotations
@@ -42,10 +45,16 @@ import tempfile
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import (
+    _check_arrow_table_timestamps_localize,
+    from_arrow_schema,
+    to_arrow_schema,
+)
 from pyspark.sql.types import StructType
+from pyspark.sql.utils import is_timestamp_ntz_preferred
 
 from ripple_server_spark.config import N_BUCKETS
 from ripple_server_spark.operators.relational import bucket_of
@@ -54,6 +63,24 @@ from ripple_server_spark.sources.manifest import (  # noqa: F401  (re-exported)
     StaleGenerationError,
     StaleProducerEpochError,
 )
+
+
+def _spark_arrow(spark: SparkSession, tbl: pa.Table):
+    """``(schema, load)`` of a ``pyarrow.Table`` produce: the Spark
+    schema ``spark.createDataFrame(tbl)`` records, and a loader of the
+    rows that frame's ``toArrow()`` returns (its Arrow types, naive
+    timestamps localized to the session time zone, nanoseconds
+    floored), built the way ``createDataFrame`` builds them but with no
+    JVM round trip and no Spark job."""
+    jconf = spark._jconf
+    schema = from_arrow_schema(tbl.schema, prefer_timestamp_ntz=is_timestamp_ntz_preferred())
+
+    def load() -> pa.Table:
+        return _check_arrow_table_timestamps_localize(
+            tbl, schema, True, jconf.sessionLocalTimeZone()
+        ).cast(to_arrow_schema(schema, prefers_large_types=jconf.arrowUseLargeVarTypes()))
+
+    return schema, load
 
 
 def _stage_by_bucket(
@@ -584,7 +611,7 @@ class TopicStore:
     # -- produce (A5) ------------------------------------------------------
     def produce(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         topic: str,
         key_col: str = "user_id",
         batch_id: str | None = None,
@@ -595,21 +622,32 @@ class TopicStore:
         FIFO order within a bucket follows (ts, event_id) of the batch —
         the arrival order analog. Returns number of rows appended.
 
-        The path follows the input, not a setting. A local relation
-        (``df.isLocal()``: ``createDataFrame`` of an Arrow table or of
-        a pandas frame, SQL ``VALUES``) is collected once, routed by
-        the same ``bucket_of`` expression, then sorted in Arrow and
-        staged on the driver (``staging.arrow_stager``): one Spark
-        job, no exchange, no Python task. Its rows are already held by
-        the driver, so the in-memory sort adds no unbounded buffer and
-        needs no spill path. Any other input is shuffled once by bucket
-        and sorted by the spillable JVM sort in front of the executors'
-        staging kernel (``_stage_by_bucket``), which bounds the memory
-        of a distributed, skewed batch. Both paths give the same seqs,
-        file layout and recorded schema.
+        ``df`` is a DataFrame or a ``pyarrow.Table``, and the path
+        follows the input, not a setting. A ``pyarrow.Table`` takes the
+        Spark types ``createDataFrame`` would give it (a naive
+        timestamp becomes a session-time-zone ``timestamp``) and is
+        appended by ``staging.append_arrow`` on the driver: no Spark
+        job. A local relation (``df.isLocal()``: ``createDataFrame`` of
+        an Arrow table or of a pandas frame, SQL ``VALUES``) is
+        collected once (``df.toArrow()``, one JVM-only job) into the
+        same append. Its rows are already held by the driver, so the
+        in-memory Arrow sort adds no unbounded buffer and needs no
+        spill path. Any other input is routed by ``bucket_of``,
+        shuffled once by bucket and sorted by the spillable JVM sort in
+        front of the executors' staging kernel (``_stage_by_bucket``),
+        which bounds the memory of a distributed, skewed batch. All
+        paths give the same seqs, file layout and recorded schema.
+
+        Every form is checked first, before any Spark job, by the check
+        the native sink runs (``staging.message_fields``):
+        ``staging.AppendInputError``, a ``ValueError``, when ``key_col``,
+        ``ts`` or ``event_id`` is missing or the key is not an integer
+        or a string holding one. A fractional key (FLOAT, DOUBLE,
+        DECIMAL) is refused rather than routed by its truncation.
 
         ``batch_id`` makes the append IDEMPOTENT: a replayed produce
-        with an already-applied id is a no-op (returns 0). Replay
+        with an already-applied id is a no-op (returns 0, with no Spark
+        job on the local and Arrow paths). Replay
         safety is transactional, not best-effort: the data files and
         the applied-batch id become visible in the SAME manifest
         commit, so a crash anywhere before the commit leaves only
@@ -637,71 +675,54 @@ class TopicStore:
         vacuum-reclaimed orphans and no partial rows are visible).
         ``None`` keeps the reference's unfenced single-producer model.
         """
-        in_names = [f.name for f in df.schema.fields]
-        for req in ("ts", "event_id"):
-            if req not in in_names:
-                raise ValueError(
-                    f"produce requires column {req!r} (the (ts, event_id) "
-                    "FIFO order key — native-sink parity)"
-                )
-        # Message schema of the staged files (bucket is a partition dir,
-        # not a file column): recorded in the manifest, which types every
-        # read without opening a footer — the Delta/Iceberg
-        # metadata-tracked-evolution shape.
-        # Derived driver-side BEFORE the write; seq lands at its original
-        # position when the batch carries one (consume->produce round
-        # trip), appended otherwise — the old withColumn-overwrite order.
-        types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        types["seq"] = "bigint"
-        file_cols = [n for n in in_names if n != "bucket"]
-        if "seq" not in file_cols:
-            file_cols.append("seq")
-        fields = [f"{n}:{types[n]}" for n in file_cols]
+        if isinstance(df, pa.Table):
+            schema, load = _spark_arrow(self.spark, df)
+        else:
+            schema, load = df.schema, (df.toArrow if df.isLocal() else None)
+        # Message schema of the staged files, recorded in the manifest,
+        # which types every read without opening a footer — the
+        # Delta/Iceberg metadata-tracked-evolution shape.
+        fields = staging.message_fields(schema, key_col)
+        if load is not None:
+            return staging.append_arrow(
+                load,
+                self.root,
+                topic,
+                key_col,
+                fields,
+                applied_id=batch_id,
+                producer_epoch=producer_epoch,
+            )
+        file_cols = [f.split(":", 1)[0] for f in fields]
         data_dir = self.data_dir(topic)
         os.makedirs(data_dir, exist_ok=True)
         staged: list = []  # kernel rows of the latest staging
-        local = df.isLocal()
-        stager = None  # the local path's sorted in-memory batch
-
-        def routed(m: dict) -> DataFrame:
-            # routed once, by the bucket count of the first attempt's base
-            return df.withColumn(
-                "bucket",
-                F.coalesce(bucket_of(F.col(key_col), int(m["n_buckets"])), F.lit(0)),
-            )
 
         def stage(m: dict) -> dict[str, list[int]]:
-            nonlocal stager
+            # One exchange (hash on bucket — a bucket's rows land in
+            # exactly one task) + a spillable JVM sort, then the
+            # streaming Arrow kernel assigns contiguous per-bucket seqs
+            # from this base's maxima and stages parquet straight into
+            # the bucket dirs; the per-bucket counts and seq ranges
+            # ride back on the same job. The batch is routed once, by
+            # the bucket count of the first attempt's base: a later
+            # attempt (a lost seq race) restages from the previous
+            # attempt's files through the same sort + kernel —
+            # identical (ts, event_id) order, so identical seqs shifted
+            # by the per-bucket delta, and one extra pass over the
+            # BATCH (never the topic).
             maxima = {int(b): int(x) for b, x in m.get("maxima", {}).items()}
-            if local:
-                # The rows are already in driver memory: one JVM-only
-                # collect of the routed batch, then one Arrow sort and
-                # the kernel, all on the driver. A lost seq race
-                # restages the same sorted table against the new base
-                # with no Spark job.
-                if stager is None:
-                    stager = staging.arrow_stager(routed(m).toArrow(), data_dir, file_cols)
-                staged[:] = stager(maxima)
-            else:
-                # One exchange (hash on bucket — a bucket's rows land in
-                # exactly one task) + a spillable JVM sort, then the
-                # streaming Arrow kernel assigns contiguous per-bucket
-                # seqs from this base's maxima and stages parquet
-                # straight into the bucket dirs; the per-bucket counts
-                # and seq ranges ride back on the same job. A later
-                # attempt (a lost seq race) restages from the previous
-                # attempt's files through the same sort + kernel:
-                # identical (ts, event_id) order, so identical seqs
-                # shifted by the per-bucket delta, and one extra pass
-                # over the BATCH (never the topic).
-                src = (
-                    self.spark.read.option("basePath", data_dir).parquet(
-                        *[os.path.join(data_dir, r["rel"]) for r in staged]
-                    )
-                    if staged
-                    else routed(m)
+            src = (
+                self.spark.read.option("basePath", data_dir).parquet(
+                    *[os.path.join(data_dir, r["rel"]) for r in staged]
                 )
-                staged[:] = _stage_by_bucket(src, data_dir, maxima, file_cols)
+                if staged
+                else df.withColumn(
+                    "bucket",
+                    F.coalesce(bucket_of(F.col(key_col), int(m["n_buckets"])), F.lit(0)),
+                )
+            )
+            staged[:] = _stage_by_bucket(src, data_dir, maxima, file_cols)
             return staging.staged_ranges(staged)
 
         committed = manifest.append(

@@ -58,8 +58,11 @@ def count_stagings(monkeypatch) -> list:
 
 def in_form(df, form: str):
     """``df`` as the produce input ``form`` names: itself (a plan over
-    files or a range, so the exchange path), or its rows as a local
-    relation (``createDataFrame`` of an Arrow table)."""
+    files or a range, so the exchange path), its rows as a local
+    relation (``createDataFrame`` of an Arrow table), or its rows as a
+    ``pyarrow.Table`` (``"arrow"``)."""
+    if form == "arrow":
+        return df.toArrow()
     if form == "local":
         df = df.sparkSession.createDataFrame(df.toArrow())
     assert df.isLocal() == (form == "local")

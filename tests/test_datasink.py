@@ -392,6 +392,34 @@ def test_sink_established_topic_records_seq_in_schema(spark, store, sf_dir):
     assert batch.count() == 0 and "seq" in batch.columns
 
 
+def test_sink_and_produce_record_one_schema_for_a_carried_seq(spark, store, sf_dir):
+    """One recorded-schema rule for both append surfaces: a frame that
+    carries ``seq`` in mid-schema, written by the sink into one topic
+    and produced into another, records the same message schema and
+    stages the same parquet column order (``seq`` keeps its
+    position)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    df = _events(spark, sf_dir, n=40).select(
+        "event_id", "ts", F.lit(7).cast("bigint").alias("seq"), "user_id", "value"
+    )
+    store.create_topic("w_seq_sink", n_buckets=2)
+    store.create_topic("w_seq_produce", n_buckets=2)
+    _write(df, store, "w_seq_sink")
+    store.produce(df, "w_seq_produce")
+    schemas, orders = [], []
+    for t in ("w_seq_sink", "w_seq_produce"):
+        schemas.append(store.topic_meta(t)["schema"])
+        files = glob.glob(os.path.join(store.data_dir(t), "bucket=*", "*.parquet"))
+        assert files
+        orders.append({tuple(pq.read_schema(f).names) for f in files})
+    assert schemas[0] == schemas[1]
+    assert schemas[0][2] == "seq:bigint"
+    assert orders[0] == orders[1] == {("event_id", "ts", "seq", "user_id", "value")}
+
+
 def test_sink_subset_schema_write_flags_evolution(spark, store, sf_dir):
     """ADVICE r08: a sink task writing a strict SUBSET of the recorded
     schema leaves heterogeneous parquet footers in the topic; reads are

@@ -398,6 +398,16 @@ def test_producer_fence_landing_mid_local_produce_is_atomic(
     )
 
 
+def test_producer_fence_landing_mid_arrow_produce_is_atomic(
+    spark, tmp_path, monkeypatch
+):
+    """The mid-produce fence above, with the zombie's batch a
+    ``pyarrow.Table``."""
+    test_producer_fence_landing_mid_produce_is_atomic(
+        spark, tmp_path, monkeypatch, form="arrow"
+    )
+
+
 def test_producer_epoch_fences_native_sink(spark, tmp_path):
     from ripple_server_spark.sources.datasource import RippleTopicDataSource
 

@@ -192,6 +192,14 @@ def test_local_produce_seq_race_is_rebased(spark, sf_dir, tmp_path, monkeypatch)
     )
 
 
+def test_arrow_produce_seq_race_is_rebased(spark, sf_dir, tmp_path, monkeypatch):
+    """The rebase above with the raced batch a ``pyarrow.Table``: the
+    Arrow append restages its sorted rows."""
+    test_concurrent_produce_seq_race_is_rebased(
+        spark, sf_dir, tmp_path, monkeypatch, form="arrow"
+    )
+
+
 def test_replayed_batch_id_race_cannot_double_append(
     spark, sf_dir, tmp_path, monkeypatch, form="exchange"
 ):
@@ -249,6 +257,15 @@ def test_local_produce_replayed_batch_id_race_cannot_double_append(
     """The in-commit applied-id check above, replaying a local relation."""
     test_replayed_batch_id_race_cannot_double_append(
         spark, sf_dir, tmp_path, monkeypatch, form="local"
+    )
+
+
+def test_arrow_produce_replayed_batch_id_race_cannot_double_append(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The in-commit applied-id check above, replaying a ``pyarrow.Table``."""
+    test_replayed_batch_id_race_cannot_double_append(
+        spark, sf_dir, tmp_path, monkeypatch, form="arrow"
     )
 
 
@@ -527,6 +544,15 @@ def test_local_produce_seq_race_retries_are_bounded(
     """The retry bound above, for a local relation's driver-side path."""
     test_produce_seq_race_retries_are_bounded(
         spark, sf_dir, tmp_path, monkeypatch, form="local"
+    )
+
+
+def test_arrow_produce_seq_race_retries_are_bounded(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The retry bound above, for a ``pyarrow.Table`` produce."""
+    test_produce_seq_race_retries_are_bounded(
+        spark, sf_dir, tmp_path, monkeypatch, form="arrow"
     )
 
 

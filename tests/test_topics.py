@@ -917,15 +917,25 @@ def test_produce_kernel_stage_equivalence(spark, tmp_path):
     contract a consume->produce round trip relies on).
 
     Both produce paths are held to it on one input set: the batch as a
-    distributed frame (exchange + JVM sort + mapInArrow) and as a local
-    relation (one collect, then the Arrow sort and the kernel on the
-    driver) give the same rows, file statistics and recorded schema."""
+    distributed frame (exchange + JVM sort + mapInArrow), as a local
+    relation (one collect, then the Arrow append on the driver) and as
+    a ``pyarrow.Table`` (the Arrow append with no collect), also one
+    whose ``ts`` is a naive ``timestamp[us]``, give the same rows, file
+    statistics and recorded schema."""
     import glob
     import os
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from tests.conftest import in_form
+
+    def as_input(frame, form):
+        if form != "naive_arrow":
+            return in_form(frame, form)
+        tbl = frame.toArrow()
+        i = tbl.schema.get_field_index("ts")
+        return tbl.set_column(i, "ts", tbl["ts"].cast(pa.timestamp("us")))
 
     st = TopicStore(spark, str(tmp_path / "kern"))
     base_ts = F.lit("2026-01-01 00:00:00").cast("timestamp")
@@ -950,10 +960,10 @@ def test_produce_kernel_stage_equivalence(spark, tmp_path):
         "bucket", F.lit(77)
     )
     seen = {}
-    for form in ("exchange", "local"):
+    for form in ("exchange", "local", "arrow", "naive_arrow"):
         topic = f"k{form}"
         st.create_topic(topic, n_buckets=2)
-        assert st.produce(in_form(df, form), topic) == 9
+        assert st.produce(as_input(df, form), topic) == 9
         got = {
             (r["bucket"], r["seq"]): r["event_id"]
             for r in st.read_topic(topic).collect()
@@ -980,7 +990,7 @@ def test_produce_kernel_stage_equivalence(spark, tmp_path):
 
         topic2 = f"k2{form}"
         st.create_topic(topic2, n_buckets=2)
-        assert st.produce(in_form(carried, form), topic2) == 9
+        assert st.produce(as_input(carried, form), topic2) == 9
         rt = st.read_topic(topic2)
         names = [fld.name for fld in rt.schema.fields]
         # seq keeps its pre-bucket position; bucket is the partition column
@@ -1002,7 +1012,8 @@ def test_produce_kernel_stage_equivalence(spark, tmp_path):
             st.latest_manifest(topic)[1]["schema"],
             st.latest_manifest(topic2)[1]["schema"],
         )
-    assert seen["local"] == seen["exchange"]
+    for form in ("local", "arrow", "naive_arrow"):
+        assert seen[form] == seen["exchange"], form
 
 
 def test_produce_stage_kernel_streams_bounded_row_groups(tmp_path):
@@ -1355,6 +1366,177 @@ def test_local_produce_seq_race_restages_without_a_job(
     ).collect():
         assert r["nd"] == r["n"] and (r["lo"], r["hi"]) == (0, r["n"] - 1)
         assert maxima[r["bucket"]] == r["hi"]
+
+
+def test_arrow_table_produce_runs_no_job(spark, tmp_path):
+    """A produce of a ``pyarrow.Table`` runs no Spark job: its rows are
+    routed, sorted and staged on the driver by the one Arrow append.
+    It records the schema and rows the same table gives as a local
+    relation, and the caller's job group is left intact."""
+    import pyarrow as pa
+
+    n = 600
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(
+                [1_767_225_600_000_000 + (i * 7919) % n for i in range(n)],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array([i % 13 - 6 for i in range(n)], pa.int64()),
+        }
+    )
+    st = TopicStore(spark, str(tmp_path / "ap"))
+    for t in ("arrow", "local"):
+        st.create_topic(t, n_buckets=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("caller", "the caller's own group")
+    try:
+        with _jobs_in(sc, "arrow-produce") as jobs:
+            assert st.produce(tbl, "arrow") == n
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert st.produce(spark.createDataFrame(tbl), "local") == n
+
+    def rows(t):
+        return sorted(tuple(r) for r in st.read_topic(t).collect())
+
+    assert rows("arrow") == rows("local")
+    assert st.topic_meta("arrow")["schema"] == st.topic_meta("local")["schema"]
+
+
+def test_local_produce_replay_runs_no_job(spark, tmp_path):
+    """A replayed ``batch_id`` produce of a local relation returns 0
+    before its rows are collected: no Spark job."""
+    import pyarrow as pa
+
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(20), pa.int64()),
+            "ts": pa.array(
+                [1_767_225_600_000_000 + i for i in range(20)], pa.timestamp("us", tz="UTC")
+            ),
+            "user_id": pa.array(range(20), pa.int64()),
+        }
+    )
+    df = spark.createDataFrame(tbl)
+    st = TopicStore(spark, str(tmp_path / "rp"))
+    st.create_topic("rp", n_buckets=4)
+    assert st.produce(df, "rp", batch_id="B1") == 20
+    v = st.latest_manifest("rp")[0]
+    with _jobs_in(spark.sparkContext, "replay") as jobs:
+        assert st.produce(df, "rp", batch_id="B1") == 0
+    assert jobs == []
+    assert st.latest_manifest("rp")[0] == v
+
+
+def test_produce_without_key_column_raises_before_any_job(spark, sf_dir, tmp_path):
+    """A missing routing-key column is the append input check's error,
+    raised before any Spark job, in every produce form."""
+    from ripple_server_spark.sources.staging import AppendInputError
+    from tests.conftest import in_form
+
+    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20)
+    ev = ev.select("event_id", "user_id", "ts")
+    st = TopicStore(spark, str(tmp_path / "nk"))
+    st.create_topic("nk", n_buckets=2)
+    for form in ("exchange", "local", "arrow"):
+        df = in_form(ev, form)
+        with _jobs_in(spark.sparkContext, f"no-key-{form}") as jobs:
+            with pytest.raises(AppendInputError, match="requires column 'nope'"):
+                st.produce(df, "nk", key_col="nope")
+        assert jobs == [], form
+    assert st.latest_manifest("nk")[1]["files"] == []
+
+
+# key type -> (DDL type, key values); every row also gets an event_id
+# and a ts (NULL for one row)
+_ROUTING_KEYS = {
+    "bigint": ("bigint", [-9, -1, 0, 7, 12, None]),
+    "int": ("int", [-9, 3, None]),
+    "numeric string": ("string", ["12", "-3", None]),
+    "double": ("double", [3.7, -1.5, 12.0, None]),
+    "decimal": ("decimal(5,2)", ["-1.50", "9.25"]),
+}
+
+
+@pytest.mark.parametrize("key_type", sorted(_ROUTING_KEYS))
+def test_one_routing_contract_on_every_append_surface(spark, tmp_path, key_type):
+    """One routing contract over every append surface: produce of a
+    distributed frame (exchange), of a local relation, of a
+    ``pyarrow.Table``, and the native sink. An integer key, or a string
+    holding one, lands every row in bucket pmod(key, 8) (NULL -> 0)
+    with the same (bucket, seq, event_id) rows on all four. A
+    fractional key is refused at entry by the one input check, with no
+    file staged and no Spark job."""
+    import glob
+    import os
+
+    from ripple_server_spark.sources.datasource import RippleTopicDataSource
+    from ripple_server_spark.sources.staging import AppendInputError
+    from tests.conftest import in_form
+
+    spark.dataSource.register(RippleTopicDataSource)
+    ddl, keys = _ROUTING_KEYS[key_type]
+    path = str(tmp_path / "in")
+    spark.range(len(keys)).select(
+        F.col("id").alias("event_id"),
+        F.when(F.col("id") != 1, F.timestamp_seconds(F.lit(1_767_225_600) - F.col("id"))).alias(
+            "ts"
+        ),
+        F.element_at(
+            F.array(*[F.lit(k).cast(ddl) for k in keys]), (F.col("id") + 1).cast("int")
+        ).alias("k"),
+    ).write.parquet(path)
+    base = spark.read.parquet(path)
+    assert base.schema["k"].dataType.simpleString() == ddl
+    st = TopicStore(spark, str(tmp_path / "store"))
+
+    def sink(df, topic):
+        (
+            df.coalesce(1)  # one task: the task's order is the batch order
+            .write.format("ripple_topic")
+            .mode("append")
+            .option("root", st.root)
+            .option("topic", topic)
+            .option("key_col", "k")
+            .save()
+        )
+
+    got = {}
+    for surface in ("exchange", "local", "arrow", "sink"):
+        st.create_topic(surface, n_buckets=8)
+        df = base if surface == "sink" else in_form(base, surface)
+        with _jobs_in(spark.sparkContext, f"route-{key_type}-{surface}") as jobs:
+            try:
+                if surface == "sink":
+                    sink(df, surface)
+                else:
+                    st.produce(df, surface, key_col="k")
+            except Exception as e:  # the sink surfaces it through Spark
+                got[surface] = e
+        if isinstance(got.get(surface), Exception):
+            assert key_type in ("double", "decimal"), got[surface]
+            assert f"routing key 'k' has type {ddl}" in str(got[surface])
+            if surface != "sink":
+                assert isinstance(got[surface], AppendInputError)
+            assert jobs == [], surface
+            assert not glob.glob(os.path.join(st.data_dir(surface), "*", "*.parquet"))
+            assert st.latest_manifest(surface)[1]["files"] == []
+            continue
+        got[surface] = sorted(
+            (r["bucket"], r["seq"], r["event_id"]) for r in st.read_topic(surface).collect()
+        )
+    if key_type in ("double", "decimal"):
+        assert all(isinstance(e, Exception) for e in got.values()) and len(got) == 4
+        return
+    want_bucket = {i: 0 if k is None else int(k) % 8 for i, k in enumerate(keys)}
+    assert sorted(b for b, _s, _e in got["exchange"]) == sorted(want_bucket.values())
+    assert all(want_bucket[e] == b for b, _s, e in got["exchange"])
+    for surface in ("local", "arrow", "sink"):
+        assert got[surface] == got["exchange"], surface
 
 
 def test_consume_materializes_in_one_job_in_seq_order(polled):
