@@ -1208,18 +1208,19 @@ def q_consumer_group_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out-only consumers, /consumers/<id> core.go:77-85): three
     members split an 8-bucket topic into contiguous runs ([0-2],
     [3-5], [6-7] — Kafka's range assignor), each member consume()s
-    ONLY its owned buckets and commits, and the per-member xor
-    fingerprint proves the group collectively saw every produced row
-    exactly once with zero overlap: any row delivered to two members
-    (or none) flips exactly one member's hash vs the oracle's
-    bucket->member recomputation.
+    ONLY its owned buckets and makes a fenced group commit, and the
+    per-member xor fingerprint proves the group collectively saw every
+    produced row exactly once with zero overlap: any row delivered to
+    two members (or none) flips exactly one member's hash vs the
+    oracle's bucket->member recomputation.
 
     Scale: each consume is a bucket-pruned tail read (partition filter
     + seq row-group floor); the range split is a pure function of
-    (n_buckets, group, n_members), recorded once in the group's
-    manifest entry by one metadata-only commit. These members commit
-    ungated, to their own offsets files; fenced commits would store
-    the offsets in that entry, per (group, bucket)."""
+    (n_buckets, group, n_members), recorded once in the group's entry
+    of the topic's consumer-state log by one commit. The members make
+    fenced commits (group_id + generation), which store the offsets in
+    that entry, per (group, bucket); an ungated commit by a member is
+    refused."""
     import hashlib
     import shutil
     import tempfile
@@ -1240,11 +1241,12 @@ def q_consumer_group_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     store.create_topic("gd", n_buckets=8)
     store.produce(ev, "gd", key_col="user_id")
     assignment = store.assign_buckets("gd", "grp", 3)
+    gen = store.group_state("gd", "grp")["generation"]
     drained = []
     for member, buckets in assignment.items():
         for b in buckets:
             batch, nxt = store.consume(member, "gd", bucket=b, count=1_000_000)
-            store.commit(member, "gd", b, nxt)
+            store.commit(member, "gd", b, nxt, group_id="grp", generation=gen)
             drained.append(
                 batch.select("event_id", "event_type").withColumn(
                     "member", F.lit(member)

@@ -278,14 +278,14 @@ def _initial_cursors(root: str, topic: str, start_at: str) -> dict[str, int]:
     whole retained log, ``latest`` tails from the manifest high-water
     marks, and ``consumer:<id>`` bridges the batch consumer-group
     surface (A7/A8) into streaming — the stream picks up exactly where
-    that consumer's committed offsets point, read by
-    ``topics.committed_offsets_in`` like every batch read, so a group
-    member resumes its owned buckets at the group's committed offsets
-    (TopicStore.commit writes next-seq cursors, the same unit as stream
-    offsets; an unregistered or never-committed consumer starts at 0
-    per bucket, matching register_consumer's contract).
-    ``timestamp:<epoch_ms>`` starts at the first event at/after that
-    instant per bucket (Kafka offsetsForTimes — see
+    that consumer's committed offsets point, read from one version of
+    the topic's consumer-state log by ``topics.committed_offsets_in``
+    like every batch read, so a group member resumes its owned buckets
+    at the group's committed offsets (TopicStore.commit writes next-seq
+    cursors, the same unit as stream offsets; a consumer with no
+    committed offsets starts at 0 per bucket, the value the reference
+    registers). ``timestamp:<epoch_ms>`` starts at the first event
+    at/after that instant per bucket (Kafka offsetsForTimes — see
     :func:`offsets_for_times`)."""
     if start_at == "latest":
         return _latest_cursors(root, topic)
@@ -295,14 +295,14 @@ def _initial_cursors(root: str, topic: str, start_at: str) -> dict[str, int]:
     if start_at.startswith("consumer:"):
         # lazy import keeps this module's import graph light for
         # executor workers
-        from ripple_server_spark.sources.topics import committed_offsets_in
+        from ripple_server_spark.sources.topics import (
+            committed_offsets_in,
+            consumer_state,
+        )
 
+        state = consumer_state(root, topic)[1]
         consumer_id = start_at.split(":", 1)[1]
-        _v, m = manifest.latest(root, topic)
-        return {
-            str(b): o
-            for b, o in committed_offsets_in(root, topic, consumer_id, m).items()
-        }
+        return {str(b): o for b, o in committed_offsets_in(state, consumer_id).items()}
     return {}
 
 

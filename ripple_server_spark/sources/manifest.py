@@ -1,15 +1,29 @@
-"""The manifest log of one topic: the single implementation of its path
-layout, topic-name validation, version listing, torn-read-hardened load,
-atomic version-slot claim, optimistic commit loop, the append
-transaction both producers share, the rewrite transaction both
-compactions share, and the seq-range read planner.
+"""The two logs of one topic, under one protocol: the single
+implementation of their path layout, topic-name validation, version
+listing, torn-read-hardened load, atomic version-slot claim and
+optimistic commit loop, plus the append transaction both producers
+share, the rewrite transaction both compactions share, and the
+seq-range read planner.
 
-Layout: ``<root>/topics/<topic>/_log/<version:020d>.json``. Every
-version is a FULL snapshot of the topic's state (live ``files``,
-per-bucket ``maxima``/``floors``, ``applied_batches``, recorded
-``schema``, ``seq_ranges``, config, groups, ...). Writers commit
-version v+1 by claiming its name atomically; readers resolve the newest
-name and parse it.
+Layout: ``<root>/topics/<topic>/<log>/<version:020d>.json``, where
+``<log>`` is :data:`LOG`, the data manifest, or :data:`CONSUMER_LOG`,
+the consumer state. Every version is a FULL snapshot of its log's
+state. Writers commit version v+1 by claiming its name atomically;
+readers resolve the newest name and parse it. :func:`log_dir`,
+:func:`path`, :func:`latest_version`, :func:`load`, :func:`latest` and
+:func:`commit` take the log as their last argument, defaulting to the
+data manifest; the append and rewrite transactions and the planner
+serve the data manifest.
+
+- The data manifest holds the live ``files``, per-bucket
+  ``maxima``/``floors``, ``applied_batches``, the recorded ``schema``,
+  ``seq_ranges``, ``n_buckets`` and config. :func:`create` claims its
+  version 1.
+- The consumer state holds ``consumers`` (``{id: {bucket: offset}}``)
+  and ``groups`` (``{group: {generation, n_members, strategy,
+  assignment, offsets}}``). A topic with no consumer-state version
+  reads as the empty state at version 0, which :func:`commit` rebases
+  on, so the first write claims version 1.
 
 ``seq_ranges`` maps each live file (data-dir relative path) to the
 inclusive ``[lo, hi]`` seq range its rows carry. Writers record the
@@ -40,6 +54,11 @@ from ripple_server_spark.config import APPLIED_IDS_KEEP
 # constant. Retries are cheap: a listing + JSON parse.
 RETRIES = 200
 
+# The log directories of a topic: the data manifest and the consumer
+# state (offsets and groups).
+LOG = "_log"
+CONSUMER_LOG = "_consumers"
+
 
 class StaleGenerationError(RuntimeError):
     """A group-scoped commit was fenced: the member's generation is
@@ -63,13 +82,12 @@ _TOPIC_NAME_RE = re.compile(r"^[A-Za-z0-9._-]{1,249}$")
 
 def validate_topic_name(topic: str) -> None:
     """Reject topic names that would break the storage layout (checked
-    by :func:`create` and ``TopicStore.delete_topic``). Kafka's
-    character set and length cap ([A-Za-z0-9._-], <= 249), no bare
-    ``.``/``..`` (path traversal through topic_dir), and no ``--`` —
-    that token is the consumer-offsets filename separator
-    (``<consumer>--<topic>.json``), and a topic name containing it
-    would make delete_topic's suffix match ambiguous against another
-    topic's offsets (review r11)."""
+    by :func:`create`, ``TopicStore.delete_topic`` and every
+    consumer-state write). A topic name is outside input that becomes
+    a directory: Kafka's character set and length cap
+    ([A-Za-z0-9._-], <= 249) and no bare ``.``/``..`` keep it one
+    path segment inside ``topics/``. ``--`` and a leading ``-`` stay
+    reserved, so the set of legal names does not change."""
     if topic in (".", ".."):
         raise ValueError(f"invalid topic name {topic!r}")
     if not _TOPIC_NAME_RE.fullmatch(topic):
@@ -78,25 +96,17 @@ def validate_topic_name(topic: str) -> None:
             "[A-Za-z0-9._-]"
         )
     if "--" in topic:
-        raise ValueError(
-            f"invalid topic name {topic!r}: '--' is reserved as the "
-            "offsets-file separator"
-        )
+        raise ValueError(f"invalid topic name {topic!r}: '--' is reserved")
     if topic.startswith("-"):
-        # a consumer id ending in '-' before the '--' separator would
-        # make '<c->--<-b>.json' end with '--b.json' and alias topic
-        # 'b' in delete_topic's offsets sweep (ADVICE r11)
-        raise ValueError(
-            f"invalid topic name {topic!r}: a leading '-' makes the "
-            "offsets-file suffix ambiguous"
-        )
+        raise ValueError(f"invalid topic name {topic!r}: a leading '-' is reserved")
 
 
 def validate_consumer_id(consumer_id: str) -> None:
-    """Reject consumer ids that would leave the offsets directory once
-    interpolated into ``<consumer>--<topic>.json``: empty, or holding a
-    path separator or ``..``. A ``--`` inside an id stays legal (the
-    topic side of the separator cannot hold one)."""
+    """Reject consumer ids that are not flat names: empty, or holding a
+    path separator or ``..``. An id is outside input (an ungated
+    writer's id, a group id that names its members, the
+    ``start_at=consumer:<id>`` option), checked before it becomes a key
+    of the consumer state. A ``--`` inside an id is legal."""
     if (
         not consumer_id
         or "/" in consumer_id
@@ -109,20 +119,20 @@ def validate_consumer_id(consumer_id: str) -> None:
         )
 
 
-def log_dir(root: str, topic: str) -> str:
-    return os.path.join(root, "topics", topic, "_log")
+def log_dir(root: str, topic: str, log: str = LOG) -> str:
+    return os.path.join(root, "topics", topic, log)
 
 
-def path(root: str, topic: str, version: int) -> str:
-    return os.path.join(log_dir(root, topic), f"{version:020d}.json")
+def path(root: str, topic: str, version: int, log: str = LOG) -> str:
+    return os.path.join(log_dir(root, topic, log), f"{version:020d}.json")
 
 
-def latest_version(root: str, topic: str) -> int:
+def latest_version(root: str, topic: str, log: str = LOG) -> int:
     """Newest committed version — one directory listing, no file reads
     (the cheap cache-freshness probe). Raises FileNotFoundError when
-    the topic has no manifest."""
+    the log has no version."""
     try:
-        names = [n for n in os.listdir(log_dir(root, topic)) if n.endswith(".json")]
+        names = [n for n in os.listdir(log_dir(root, topic, log)) if n.endswith(".json")]
     except FileNotFoundError:
         names = []
     if not names:
@@ -133,13 +143,13 @@ def latest_version(root: str, topic: str) -> int:
     return max(int(n[:-5]) for n in names)
 
 
-def load(root: str, topic: str, version: int) -> dict:
+def load(root: str, topic: str, version: int, log: str = LOG) -> dict:
     """Parse one committed version. A JSONDecodeError is retried
     briefly: impossible on the ``os.link`` claim path (bytes precede the
     name), but the linkless-filesystem fallback of :func:`claim` creates
     the name before copying content in, leaving a short torn-read
-    window. Every manifest read in the engine goes through here."""
-    p = path(root, topic, version)
+    window. Every read of either log goes through here."""
+    p = path(root, topic, version, log)
     for attempt in range(5):
         try:
             with open(p) as f:
@@ -151,10 +161,10 @@ def load(root: str, topic: str, version: int) -> dict:
     raise AssertionError("unreachable")
 
 
-def latest(root: str, topic: str) -> tuple[int, dict]:
-    """(version, manifest) of the newest committed version."""
-    v = latest_version(root, topic)
-    return v, load(root, topic, v)
+def latest(root: str, topic: str, log: str = LOG) -> tuple[int, dict]:
+    """(version, snapshot) of the newest committed version."""
+    v = latest_version(root, topic, log)
+    return v, load(root, topic, v, log)
 
 
 def claim(slot: str, manifest: dict) -> bool:
@@ -216,24 +226,24 @@ def create(root: str, topic: str, n_buckets: int, config: dict | None = None) ->
     )
 
 
-def commit(
-    root: str, topic: str, base_version: int, apply, retries: int = RETRIES
-) -> dict:
-    """Optimistic-concurrency commit of version+1: ``apply(manifest) ->
-    manifest`` transforms the base snapshot, and claiming the next slot
-    is the commit point. On collision the edit is re-applied to the
-    newer base and retried, so ``apply`` must be a self-contained rebase
-    (add these files / drop those files / swap this subset); it may
-    raise to abort the commit. ``seq_ranges`` entries of files the edit
-    removed are dropped here, so no writer prunes the map itself."""
+def commit(root: str, topic: str, base_version: int, apply, log: str = LOG) -> dict:
+    """Optimistic-concurrency commit of version+1 of one log:
+    ``apply(snapshot) -> snapshot`` transforms the base snapshot, and
+    claiming the next slot is the commit point. On collision the edit is
+    re-applied to the newer base and retried, so ``apply`` must be a
+    self-contained rebase (add these files / drop those files / swap
+    this subset / set these offsets); it may raise to abort the commit.
+    Version 0 is the empty snapshot ``{}``, the base of a log's first
+    write. ``seq_ranges`` entries of files the edit removed are dropped
+    here, so no writer prunes the map itself."""
     v = base_version
-    for _ in range(retries):
+    for _ in range(RETRIES):
         try:
-            base = load(root, topic, v)
+            base = load(root, topic, v, log) if v else {}
         except FileNotFoundError:
             # base vacuumed away mid-commit: a newer version exists by
             # definition, so rebase onto the latest
-            v, base = latest(root, topic)
+            v, base = latest(root, topic, log)
         new = apply(dict(base))
         new["version"] = v + 1
         if "seq_ranges" in new:
@@ -241,9 +251,9 @@ def commit(
             new["seq_ranges"] = {
                 f: r for f, r in new["seq_ranges"].items() if f in live
             }
-        if claim(path(root, topic, v + 1), new):
+        if claim(path(root, topic, v + 1, log), new):
             return new
-        v = latest_version(root, topic)
+        v = latest_version(root, topic, log)
     raise RuntimeError(f"manifest commit contention on topic {topic!r}")
 
 

@@ -253,9 +253,9 @@ class HourlyRollup:
         ]
 
     def _write_state(self, maxima: dict, manifest: dict) -> None:
-        # atomic (tmp + rename, same discipline as TopicStore._write_json):
-        # a crash mid-dump must leave the previous state readable, not a
-        # truncated JSON that breaks every later refresh
+        # atomic (tmp + rename): a crash mid-dump must leave the
+        # previous state readable, not a truncated JSON that breaks
+        # every later refresh
         path = self._state_path()
         tmp = path + ".tmp"
         with open(tmp, "w") as f:

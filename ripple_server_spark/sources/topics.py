@@ -38,10 +38,8 @@ Python task. Every form passes the sink's input check first
 from __future__ import annotations
 
 import functools
-import json
 import os
 import shutil
-import tempfile
 import time
 import uuid
 
@@ -145,26 +143,39 @@ def _arrow_schema(ddl: str) -> "pa.Schema":
     return to_arrow_schema(StructType.fromDDL(ddl))
 
 
-def offsets_path(root: str, consumer_id: str, topic: str) -> str:
-    """The one path of a consumer's own offsets file,
-    ``<root>/offsets/<consumer_id>--<topic>.json``. Both names are
-    checked first, so no id or topic can place the file outside the
-    offsets directory."""
-    manifest.validate_consumer_id(consumer_id)
-    manifest.validate_topic_name(topic)
-    return os.path.join(root, "offsets", f"{consumer_id}--{topic}.json")
-
-
-def _offsets_file(path: str) -> dict[str, int]:
-    """A consumer's own offsets file as ``{"<bucket>": offset}``, {}
-    when absent. Reads the flat form and the wrapped
-    ``{"offsets": {...}, ...}`` form older versions wrote."""
+def _consumer_version(root: str, topic: str) -> int:
+    """Newest version of the topic's consumer log, 0 before its first
+    write (one listing). FileNotFoundError naming an unknown topic."""
     try:
-        with open(path) as f:
-            doc = json.load(f)
+        return manifest.latest_version(root, topic, manifest.CONSUMER_LOG)
     except FileNotFoundError:
-        return {}
-    return dict(doc["offsets"]) if isinstance(doc.get("offsets"), dict) else doc
+        if not os.path.isdir(manifest.log_dir(root, topic)):
+            raise FileNotFoundError(f"topic {topic!r} does not exist") from None
+        return 0
+
+
+def consumer_state(root: str, topic: str) -> tuple[int, dict]:
+    """(version, snapshot) of the topic's consumer log: every consumer's
+    own offsets (``consumers``) and every group (``groups``). Version 0
+    is the empty state. Spark-free: the one consumer-state read."""
+    v = _consumer_version(root, topic)
+    return v, manifest.load(root, topic, v, manifest.CONSUMER_LOG) if v else {}
+
+
+def _commit_consumers(root: str, topic: str, apply) -> dict:
+    """One consumer-log commit of ``apply(snapshot) -> snapshot``
+    (:func:`manifest.commit`, so ``apply`` re-runs on every rebase and
+    its checks hold at the claim). The first write creates the log. An
+    unknown topic raises FileNotFoundError naming it and creates
+    nothing."""
+    manifest.validate_topic_name(topic)
+    v = _consumer_version(root, topic)
+    if v == 0:
+        try:
+            os.mkdir(manifest.log_dir(root, topic, manifest.CONSUMER_LOG))
+        except FileExistsError:
+            pass  # a concurrent first write made it
+    return manifest.commit(root, topic, v, apply, manifest.CONSUMER_LOG)
 
 
 def _range_split(n_buckets: int, group_id: str, n_members: int) -> dict[str, list[int]]:
@@ -181,56 +192,43 @@ def _range_split(n_buckets: int, group_id: str, n_members: int) -> dict[str, lis
     return out
 
 
-def _assignment(m: dict, group_id: str) -> dict[str, list[int]]:
-    """The one ownership reader: member -> sorted buckets of a group
-    recorded in manifest ``m`` ({} for an unknown group). Every entry
-    written by ``assign_buckets`` stores its assignment; a range entry
-    written before assignments were stored reads as its range split."""
-    entry = m.get("groups", {}).get(group_id)
+def _assignment(state: dict, group_id: str) -> dict[str, list[int]]:
+    """The one ownership reader: member -> sorted buckets of a group in
+    consumer-state snapshot ``state`` ({} for an unknown group)."""
+    entry = state.get("groups", {}).get(group_id)
     if entry is None:
         return {}
-    stored = entry.get("assignment")
-    if not stored:
-        return _range_split(int(m["n_buckets"]), group_id, int(entry["n_members"]))
-    return {mem: sorted(int(b) for b in bs) for mem, bs in stored.items()}
+    return {mem: sorted(int(b) for b in bs) for mem, bs in entry["assignment"].items()}
 
 
-def committed_offsets_in(
-    root: str, topic: str, consumer_id: str, m: dict
-) -> dict[int, int]:
-    """A consumer's committed ``{bucket: offset}`` on ``topic`` under
-    manifest ``m``: its own offsets file (the reference's
+def _generation(entry: dict, n_buckets: int) -> int:
+    """A group's effective generation on a topic of ``n_buckets``: its
+    stored generation, plus one while its stored assignment covers
+    fewer buckets (``expand_buckets`` grew the topic since the group
+    last rebalanced; Kafka bumps the epoch on a partition-count
+    change). Read by ``group_state``, ``describe_group``, the fence and
+    ``assign_buckets``."""
+    covered = {int(b) for bs in entry["assignment"].values() for b in bs}
+    return int(entry["generation"]) + (len(covered) < n_buckets)
+
+
+def committed_offsets_in(state: dict, consumer_id: str) -> dict[int, int]:
+    """A consumer's committed ``{bucket: offset}`` in consumer-state
+    snapshot ``state``: its own offsets (the reference's
     ``/consumers/<id>`` node), overridden for each bucket it owns in a
-    group recorded in ``m`` by the group's committed offset, where the
-    group has one. Group offsets belong to (group, bucket), so a
-    rebalance hands a bucket's progress to its new owner. Spark-free:
-    the one offsets read behind ``poll``/``consume``,
-    ``committed_offsets``, ``describe_group`` and the ``ripple_topic``
-    source's ``start_at=consumer:``."""
-    out = {
-        int(b): int(o)
-        for b, o in _offsets_file(offsets_path(root, consumer_id, topic)).items()
-    }
-    for group_id, entry in m.get("groups", {}).items():
+    group by the group's committed offset, where the group has one.
+    Group offsets belong to (group, bucket), so a rebalance hands a
+    bucket's progress to its new owner. The one offsets read behind
+    ``poll``/``consume``, ``committed_offsets``, ``describe_group`` and
+    the ``ripple_topic`` source's ``start_at=consumer:``."""
+    own = state.get("consumers", {}).get(consumer_id, {})
+    out = {int(b): int(o) for b, o in own.items()}
+    for group_id, entry in state.get("groups", {}).items():
         committed = entry.get("offsets", {})
-        for b in _assignment(m, group_id).get(consumer_id, ()):
+        for b in _assignment(state, group_id).get(consumer_id, ()):
             if str(b) in committed:
                 out[b] = int(committed[str(b)])
     return out
-
-
-def _check_ungrouped(m: dict, consumer_id: str, op: str) -> None:
-    """ValueError when ``consumer_id`` owns buckets in a group recorded
-    in ``m``: those buckets read the group's offsets, which ``op``
-    (a write to the consumer's own file) would not move."""
-    for group_id in m.get("groups", {}):
-        if _assignment(m, group_id).get(consumer_id):
-            raise ValueError(
-                f"{op}: {consumer_id!r} owns buckets of group {group_id!r} "
-                f"on topic {m.get('topic')!r}, whose committed offsets "
-                "override its own; move a group's offsets with fenced "
-                "commits (group_id=, generation=)"
-            )
 
 
 class TopicStore:
@@ -239,15 +237,18 @@ class TopicStore:
 
     Layout::
 
-        root/
-          topics/<topic>/_log/<version>.json   # manifest log (source of truth)
-          topics/<topic>/data/bucket=<n>/      # parquet event log (append-only)
-          offsets/<consumer_id>--<topic>.json  # a consumer's own offsets
+        root/topics/<topic>/
+          _log/<version>.json        # data manifest log (source of truth)
+          _consumers/<version>.json  # consumer-state log: offsets + groups
+          data/bucket=<n>/           # parquet event log (append-only)
 
-    A consumer group's committed offsets live in its entry of the topic
-    manifest (``groups[<group>]["offsets"]``, keyed by bucket) beside
-    its generation and assignment, so a fenced group commit is one
-    manifest commit and a bucket's progress survives a rebalance.
+    Every consumer's own offsets and every consumer group (generation,
+    strategy, assignment and offsets keyed by bucket) live in the
+    consumer-state log, committed through the same protocol as the data
+    manifest (:func:`consumer_state` reads it). Every offsets write is
+    one consumer-log claim whose checks run inside it; none writes a
+    data-manifest version, and a bucket's group progress survives a
+    rebalance.
 
     Commit protocol (Delta-/Iceberg-style, sized for a filesystem;
     implemented once, in ``sources/manifest.py``): every mutation
@@ -290,7 +291,6 @@ class TopicStore:
         self.spark = spark
         self.root = root
         os.makedirs(os.path.join(root, "topics"), exist_ok=True)
-        os.makedirs(os.path.join(root, "offsets"), exist_ok=True)
 
     # -- paths -------------------------------------------------------------
     def topic_dir(self, topic: str) -> str:
@@ -310,7 +310,8 @@ class TopicStore:
     def vacuum(self, topic: str, grace_s: float = 0.0) -> int:
         """Delete data files no manifest-latest references (compacted-
         away segments, truncated segments, crashed-produce orphans) and
-        all but the newest manifest. Returns files removed.
+        all but the newest version of the data manifest and of the
+        consumer-state log. Returns data files removed.
 
         ``grace_s`` spares files modified within the last N seconds:
         a concurrent produce moves staged files into ``data/`` BEFORE
@@ -320,8 +321,6 @@ class TopicStore:
         writer is in flight; the scheduled loop
         (:class:`~ripple_server_spark.sources.maintenance.TopicMaintenance`)
         always runs with a positive grace."""
-        import time
-
         v, m = self.latest_manifest(topic)
         live = set(m["files"])
         data = self.data_dir(topic)
@@ -339,17 +338,22 @@ class TopicStore:
                 ):
                     os.remove(p)
                     removed += 1
-        for n in os.listdir(manifest.log_dir(self.root, topic)):
-            p = os.path.join(manifest.log_dir(self.root, topic), n)
-            # grace applies to manifests too: an in-flight commit may
-            # still re-read its base version, and a pinned snapshot
-            # reader its pinned version
-            if (
-                n.endswith(".json")
-                and int(n[:-5]) < v
-                and os.path.getmtime(p) <= cutoff
-            ):
-                os.remove(p)
+        for log, newest in (
+            (manifest.LOG, v),
+            (manifest.CONSUMER_LOG, _consumer_version(self.root, topic)),
+        ):
+            d = manifest.log_dir(self.root, topic, log)
+            for n in os.listdir(d) if newest else ():
+                p = os.path.join(d, n)
+                # grace applies to log versions too: an in-flight commit
+                # may still re-read its base version, and a pinned
+                # snapshot reader its pinned version
+                if (
+                    n.endswith(".json")
+                    and int(n[:-5]) < newest
+                    and os.path.getmtime(p) <= cutoff
+                ):
+                    os.remove(p)
         return removed
 
     # -- DDL (CreateBucket analog) ----------------------------------------
@@ -419,13 +423,20 @@ class TopicStore:
         produces route by ``pmod(key, new_n)``; existing per-bucket
         cursors — consumer groups AND streaming checkpoints — stay
         valid because both iterate buckets from the manifest, where the
-        new buckets simply appear. Every consumer GROUP's generation is
-        bumped in the same commit (Kafka's epoch bump on partition-count
-        change): every assignment must now cover the new buckets, so
-        fenced commits from the pre-expansion epoch are rejected until
-        the member re-joins via :meth:`assign_buckets` (at the same
-        n_members it refreshes the assignment and adopts the new epoch
-        without another bump). Group offsets carry over unchanged.
+        new buckets simply appear. The commit touches the data manifest
+        only. A group whose stored assignment covers fewer buckets than
+        ``n_buckets`` reads as one generation past its stored one
+        (:func:`_generation`, Kafka's epoch bump on a partition-count
+        change), so from this commit on :meth:`group_state` reports the
+        bumped epoch and fenced commits carrying the pre-expansion epoch
+        are rejected until the member re-joins via
+        :meth:`assign_buckets` (at the same n_members it stores the
+        refreshed assignment at that epoch, with no second bump). Group
+        offsets carry over unchanged. A fenced commit reads
+        ``n_buckets`` just before its claim, so an expansion landing in
+        between can let that one commit through, on a bucket the member
+        owned under the old assignment: harmless, as expansion moves no
+        rows.
 
         The one semantic cost is Kafka's too: the key->bucket mapping
         changes at the expansion point, so per-KEY FIFO order holds
@@ -459,21 +470,6 @@ class TopicStore:
             if int(m["n_buckets"]) >= new_n_buckets:
                 return m  # concurrent expansion won; idempotent
             m["n_buckets"] = new_n_buckets
-            # Bump EVERY consumer group's generation in the SAME commit
-            # (Kafka bumps the group epoch on a partition-count change):
-            # every assignment must now cover the new buckets, so
-            # fenced commits from the pre-expansion epoch must fence
-            # with the accurate "the group rebalanced, re-join" error
-            # instead of a misleading out-of-range one while
-            # group_state still claimed their generation was current
-            # (ADVICE r10). Members re-join with
-            # assign_buckets (at the same n_members it refreshes the
-            # assignment and adopts this epoch without double-bumping).
-            if m.get("groups"):
-                m["groups"] = {
-                    g: {**e, "generation": int(e["generation"]) + 1}
-                    for g, e in m["groups"].items()
-                }
             return m
 
         committed = manifest.commit(self.root, topic, base_v, apply)
@@ -516,31 +512,26 @@ class TopicStore:
         return sorted(os.listdir(os.path.join(self.root, "topics")))
 
     def delete_topic(self, topic: str) -> int:
-        """Delete a topic outright — data files, manifest log, and
-        every consumer's offsets for it (the Kafka ``kafka-topics
-        --delete`` analog; the reference never deletes, its queues
-        just grow, concurrent_list.go). Returns the number of offset
-        files removed alongside the topic.
+        """Delete a topic outright — data files, manifest log, and the
+        consumer-state log with every consumer's offsets and every group
+        on it (the Kafka ``kafka-topics --delete`` analog; the reference
+        never deletes, its queues just grow, concurrent_list.go).
+        Returns the number of consumer ids that had offsets of their own
+        committed on the topic.
 
         Deletion order makes concurrent access fail CLEANLY rather
         than read half a topic: the manifest log goes first (every
-        reader/writer entry point resolves the latest manifest, so
-        from that point they raise topic-not-found), then the data
-        dir, then the offsets. A produce/compact racing the delete
-        can at worst recreate nothing — their commits target manifest
-        version slots that no longer have a log dir and fail with
-        FileNotFoundError, and their staged files die with the tree.
-        Snapshot-pinned READERS that already resolved a manifest lose
-        their files mid-scan (FileNotFound at task level) — quiesce
-        consumers first, same operational rule as Kafka's delete.
-        Raises FileNotFoundError for an unknown topic.
-
-        The offsets sweep matches on the ``--{topic}.json`` suffix,
-        which is unambiguous because ``validate_topic_name`` (enforced
-        at every create path, and re-checked HERE before any path
-        resolves) rejects ``--`` and a leading ``-`` in topic names — a
-        consumer id may contain ``--``, but the TOPIC side of the
-        separator cannot (review r11).
+        reader/writer entry point resolves the latest manifest or
+        checks for it, so from that point they raise topic-not-found),
+        then the topic directory, consumer log included. A
+        produce/compact racing the delete can at worst recreate
+        nothing — their commits target version slots that no longer
+        have a log dir and fail with FileNotFoundError, and their
+        staged files die with the tree. Snapshot-pinned READERS that
+        already resolved a manifest lose their files mid-scan
+        (FileNotFound at task level) — quiesce consumers first, same
+        operational rule as Kafka's delete. Raises FileNotFoundError
+        for an unknown topic.
 
         The entry validation is the destructive-path guard (ADVICE
         r11): without it, ``delete_topic("..")`` resolved topic_dir to
@@ -550,21 +541,19 @@ class TopicStore:
         tdir = self.topic_dir(topic)
         if not os.path.isdir(tdir):
             raise FileNotFoundError(f"topic {topic!r} does not exist")
+        try:
+            consumers = consumer_state(self.root, topic)[1].get("consumers", {})
+        except FileNotFoundError:  # a delete that crashed after the log went
+            consumers = {}
         shutil.rmtree(manifest.log_dir(self.root, topic), ignore_errors=True)
         shutil.rmtree(tdir, ignore_errors=True)
-        removed = 0
-        odir = os.path.join(self.root, "offsets")
-        for fn in sorted(os.listdir(odir)):
-            if fn.endswith(f"--{topic}.json"):
-                os.remove(os.path.join(odir, fn))
-                removed += 1
-        return removed
+        return len(consumers)
 
     def list_groups(self, topic: str) -> list[str]:
         """Consumer groups with a recorded assignment on the topic
         (Kafka ``kafka-consumer-groups --list``, scoped to one topic
-        since groups live in the topic manifest here)."""
-        return sorted(self.latest_manifest(topic)[1].get("groups", {}))
+        since groups live in the topic's consumer-state log here)."""
+        return sorted(consumer_state(self.root, topic)[1].get("groups", {}))
 
     def reset_offsets(
         self, consumer_id: str, topic: str, to: str = "earliest"
@@ -574,16 +563,17 @@ class TopicStore:
         committed offset at the retained floor (``"earliest"`` — the
         next consume replays the whole retained log) or at the
         high-water mark (``"latest"`` — the next consume sees only
-        NEW messages). Registers the consumer if needed and returns
-        the committed {bucket: offset} map. One atomic offsets
-        publish (:meth:`commit_many`); one manifest version gives the
-        bucket count, floors and maxima, no Spark job. Time-based
-        resets are :meth:`seek_to_timestamp`.
+        NEW messages). Returns the committed {bucket: offset} map. One
+        manifest version gives the bucket count, floors and maxima, no
+        Spark job; the write is one ungated consumer-log commit
+        (:meth:`commit_many`). Time-based resets are
+        :meth:`seek_to_timestamp`.
 
-        Resets move a consumer's own offsets file. A consumer that owns
-        buckets in a recorded group reads those buckets from the
-        group's offsets, which a reset would not move, so it is a
-        ``ValueError`` naming the group.
+        Resets move a consumer's own offsets. A consumer that owns
+        buckets in a group reads those buckets from the group's
+        offsets, which a reset would not move, so the commit refuses
+        it with a ``ValueError`` naming the group (checked inside the
+        consumer-log claim).
 
         OPERATIONAL CONTRACT (ADVICE r11): run resets only while the
         consumer is QUIESCED — the same rule Kafka enforces by
@@ -595,7 +585,6 @@ class TopicStore:
                 f"reset_offsets: to must be 'earliest' or 'latest', got {to!r}"
             )
         _v, m = self.latest_manifest(topic)
-        _check_ungrouped(m, consumer_id, "reset_offsets")
         offsets = {
             b: (
                 int(m["floors"].get(str(b), 0))
@@ -604,8 +593,7 @@ class TopicStore:
             )
             for b in range(int(m["n_buckets"]))
         }
-        self.register_consumer(consumer_id, topic)
-        self.commit_many(consumer_id, topic, offsets)
+        self._commit_own(consumer_id, topic, offsets, "reset_offsets")
         return offsets
 
     # -- produce (A5) ------------------------------------------------------
@@ -1274,29 +1262,22 @@ class TopicStore:
 
     # -- consume (A6-A8) ---------------------------------------------------
     def register_consumer(self, consumer_id: str, topic: str) -> None:
-        """First-contact registration: offsets start at 0 for every
-        bucket (reference: ZK /consumers/<id> = "0", core.go:77-85).
-        Raises FileNotFoundError for an unknown topic."""
-        path = self._own_offsets_path(consumer_id, topic)
-        if not os.path.exists(path):
-            self._write_json(path, {})
-
-    def _own_offsets_path(self, consumer_id: str, topic: str) -> str:
-        """:func:`offsets_path` for a write, after one ``stat`` that the
-        topic exists: FileNotFoundError naming it otherwise, since an
-        offsets file of an unknown topic is one :meth:`delete_topic`
-        can never sweep."""
-        path = offsets_path(self.root, consumer_id, topic)
-        if not os.path.isdir(manifest.log_dir(self.root, topic)):
-            raise FileNotFoundError(f"topic {topic!r} does not exist")
-        return path
+        """First-contact check: validates the id and the topic
+        (ValueError for an id that is not a flat name,
+        FileNotFoundError naming an unknown topic) and writes nothing.
+        A consumer with no committed offsets reads offset 0 for every
+        bucket, the value the reference registers (ZK /consumers/<id> =
+        "0", core.go:77-85)."""
+        manifest.validate_consumer_id(consumer_id)
+        manifest.validate_topic_name(topic)
+        manifest.latest_version(self.root, topic)
 
     def committed_offsets(self, consumer_id: str, topic: str) -> dict[int, int]:
-        """The consumer's committed {bucket: offset} — its own file, with
-        the buckets it owns in a group read from the group's offsets
-        (:func:`committed_offsets_in`, one manifest version)."""
-        _v, m = self.latest_manifest(topic)
-        return committed_offsets_in(self.root, topic, consumer_id, m)
+        """The consumer's committed {bucket: offset} — its own offsets,
+        with the buckets it owns in a group read from the group's
+        offsets (:func:`committed_offsets_in`, one consumer-log
+        version)."""
+        return committed_offsets_in(consumer_state(self.root, topic)[1], consumer_id)
 
     def poll(
         self, consumer_id: str, topic: str, bucket: int, count: int
@@ -1323,7 +1304,8 @@ class TopicStore:
     def _poll(self, consumer_id: str, topic: str, bucket: int, count: int):
         """:meth:`poll` plus the DDL of its table."""
         _v, m = self.latest_manifest(topic)
-        offset = committed_offsets_in(self.root, topic, consumer_id, m).get(bucket, 0)
+        state = consumer_state(self.root, topic)[1]
+        offset = committed_offsets_in(state, consumer_id).get(bucket, 0)
         # Retention clamp: offsets below the retained floor resume at
         # the floor (Kafka earliest-offset reset; see truncate()).
         offset = max(offset, int(m["floors"].get(str(bucket), 0)))
@@ -1366,9 +1348,9 @@ class TopicStore:
         self, consumer_id: str, topic: str, epoch_ms: int
     ) -> dict[int, int]:
         """Position a batch consumer at a point in TIME (Kafka
-        ``offsetsForTimes`` + ``seek``): registers the consumer and
-        commits every bucket's timestamp offset in one atomic offsets
-        publish (:meth:`commit_many`), so the next ``consume`` starts
+        ``offsetsForTimes`` + ``seek``): commits every bucket's
+        timestamp offset in one ungated consumer-log commit
+        (:meth:`commit_many`), so the next ``consume`` starts
         at the first message at/after the instant (see
         :meth:`offsets_for_times` for the exactness contract — late
         produces carrying earlier timestamps are still replayed,
@@ -1377,13 +1359,9 @@ class TopicStore:
         analog is the ``ripple_topic`` source's
         ``start_at=timestamp:<epoch_ms>`` option. Like
         :meth:`reset_offsets`, a ``ValueError`` for a consumer that owns
-        buckets in a recorded group."""
-        _check_ungrouped(
-            self.latest_manifest(topic)[1], consumer_id, "seek_to_timestamp"
-        )
+        buckets in a group."""
         offsets = self.offsets_for_times(topic, epoch_ms)
-        self.register_consumer(consumer_id, topic)
-        self.commit_many(consumer_id, topic, offsets)
+        self._commit_own(consumer_id, topic, offsets, "seek_to_timestamp")
         return offsets
 
     @staticmethod
@@ -1431,13 +1409,16 @@ class TopicStore:
         return cur
 
     def group_state(self, topic: str, group_id: str) -> dict | None:
-        """{"generation": g, "n_members": n} for a group recorded in
-        the topic manifest, or None before its first assignment."""
-        entry = self.latest_manifest(topic)[1].get("groups", {}).get(group_id)
+        """{"generation": g, "n_members": n, "strategy": s} for a group
+        recorded in the topic's consumer log, or None before its first
+        assignment. ``g`` is the effective generation
+        (:func:`_generation`), the one fenced commits check."""
+        n_buckets = int(self.latest_manifest(topic)[1]["n_buckets"])
+        entry = consumer_state(self.root, topic)[1].get("groups", {}).get(group_id)
         if entry is None:
             return None
         return {
-            "generation": int(entry["generation"]),
+            "generation": _generation(entry, n_buckets),
             "n_members": int(entry["n_members"]),
             "strategy": entry.get("strategy", "range"),
         }
@@ -1462,34 +1443,37 @@ class TopicStore:
         for the determinism + movement bound); the previous assignment
         seeds the next. Switching strategy on a live group is a
         rebalance (generation bumps). After :meth:`expand_buckets`
-        (which bumps every group's generation), the first
-        ``assign_buckets`` call refreshes the assignment over the new
-        buckets WITHOUT another bump — for sticky groups old buckets
+        (from which the group reads one generation past its stored one,
+        :func:`_generation`), the first ``assign_buckets`` call stores
+        the assignment refreshed over the new buckets at that effective
+        generation, with no second bump — for sticky groups old buckets
         stay put and new buckets fill the deficits.
 
         This is an EXTENSION beyond the reference, whose consumers are
         fan-out-only (every /consumers/<id> independently sees the full
         stream, core.go:77-85) — but bucket splitting is the first
         operational question a real user asks of a partitioned log.
-        Each member id is an ordinary consumer (register / poll /
-        consume per owned bucket). Committed progress belongs to the
-        GROUP: fenced commits (:meth:`commit_many` with ``group_id`` +
+        Each member id is an ordinary consumer (poll / consume per owned
+        bucket). Committed progress belongs to the GROUP: fenced
+        commits (:meth:`commit_many` with ``group_id`` +
         ``generation``) store offsets per (group, bucket) in the
-        group's manifest entry, and every rebalance carries them
-        forward, so a bucket's new owner resumes where its previous
-        owner committed — a rebalance replays only what was delivered
-        but not committed (the at-least-once contract of any consumer
-        restart).
+        group's entry, and every rebalance carries them forward, so a
+        bucket's new owner resumes where its previous owner committed —
+        a rebalance replays only what was delivered but not committed
+        (the at-least-once contract of any consumer restart). A
+        member's ungated commits are refused while it owns buckets.
 
-        The group's entry in the topic manifest holds its generation,
-        strategy, member count, assignment (stored for both
-        strategies; :func:`_assignment` is the one reader) and
-        offsets. A rebalance is one (metadata-only) manifest commit,
-        and the version claim serializes concurrent rebalances.
+        The group's entry in the topic's consumer-state log holds its
+        generation, strategy, member count, assignment (stored for both
+        strategies; :func:`_assignment` is the one reader) and offsets.
+        A rebalance is one consumer-log commit (no data-manifest
+        version), and the version claim serializes concurrent
+        rebalances.
 
-        GENERATION FENCING (Kafka group-epoch zombie fencing): the
-        generation is bumped exactly when ``n_members`` or the
-        strategy changes. Calling with the CURRENT configuration never
+        GENERATION FENCING (Kafka group-epoch zombie fencing): the new
+        generation is the effective one, plus one exactly when
+        ``n_members`` or the strategy changes. Calling with the CURRENT
+        configuration never
         bumps (idempotent: every member of one generation converges on
         one epoch with no coordination). Fenced commits then reject a
         member whose epoch is stale or whose bucket it no longer owns,
@@ -1504,14 +1488,14 @@ class TopicStore:
                 f"assign_buckets: strategy must be 'range' or 'sticky', "
                 f"got {strategy!r}"
             )
-        manifest.validate_consumer_id(group_id)  # member ids name files
+        manifest.validate_consumer_id(group_id)  # it prefixes member ids
+        nb = int(self.latest_manifest(topic)[1]["n_buckets"])
 
-        def plan(m: dict) -> dict | None:
-            """The group's next entry under manifest ``m``, or None when
-            the recorded entry already is this request's."""
-            cur = m.get("groups", {}).get(group_id)
-            nb = int(m["n_buckets"])
-            owners = _assignment(m, group_id)
+        def plan(state: dict) -> dict | None:
+            """The group's next entry under consumer state ``state``, or
+            None when the recorded entry already is this request's."""
+            cur = state.get("groups", {}).get(group_id)
+            owners = _assignment(state, group_id)
             assignment = (
                 _range_split(nb, group_id, n_members)
                 if strategy == "range"
@@ -1527,9 +1511,8 @@ class TopicStore:
                 return None
             return {
                 # `same` with a changed assignment is the refresh after
-                # expand_buckets, which already bumped the generation
-                # in its own commit: adopt it, don't double-bump
-                "generation": int(cur["generation"]) + (0 if same else 1)
+                # expand_buckets: store the effective generation
+                "generation": _generation(cur, nb) + (0 if same else 1)
                 if cur
                 else 1,
                 "n_members": n_members,
@@ -1541,36 +1524,33 @@ class TopicStore:
         class _AlreadyCurrent(Exception):
             pass
 
-        def apply(m: dict) -> dict:
-            entry = plan(m)
+        def apply(state: dict) -> dict:
+            entry = plan(state)
             if entry is None:
                 # another member of THIS generation won the race:
                 # adopt its epoch, do not double-bump
                 raise _AlreadyCurrent()
-            m["groups"] = {**m.get("groups", {}), group_id: entry}
-            return m
+            state["groups"] = {**state.get("groups", {}), group_id: entry}
+            return state
 
-        v, m = self.latest_manifest(topic)
-        if plan(m) is not None:
+        state = consumer_state(self.root, topic)[1]
+        if plan(state) is not None:
             try:
-                m = manifest.commit(self.root, topic, v, apply)
+                state = _commit_consumers(self.root, topic, apply)
             except _AlreadyCurrent:
                 # adopt the winner's committed state — but only if it
                 # matches this request; a CONCURRENT reconfiguration
                 # (different strategy or member count landing between
                 # our apply and this re-read) means the group moved on
                 # and this member must re-join (review r11)
-                m = self.latest_manifest(topic)[1]
-                if plan(m) is not None:
+                state = consumer_state(self.root, topic)[1]
+                if plan(state) is not None:
                     raise StaleGenerationError(
                         f"group {group_id!r} on topic {topic!r} was "
                         "reconfigured concurrently (strategy or member "
                         "count changed) — re-run assign_buckets"
                     ) from None
-        out = _assignment(m, group_id)
-        for member in out:
-            self.register_consumer(member, topic)
-        return out
+        return _assignment(state, group_id)
 
     def describe_group(self, topic: str, group_id: str) -> dict:
         """Kafka ``kafka-consumer-groups --describe`` analog: the
@@ -1579,18 +1559,19 @@ class TopicStore:
         clamped at the retained floor — a member parked below the
         floor reports only what a consume can actually deliver).
         Raises KeyError for a group with no recorded assignment.
-        One manifest version plus one offsets file per member
-        (:func:`committed_offsets_in`); no Spark job."""
+        One manifest version and one consumer-log version serve every
+        member (:func:`committed_offsets_in`); no Spark job."""
         _v, m = self.latest_manifest(topic)
-        entry = m.get("groups", {}).get(group_id)
+        state = consumer_state(self.root, topic)[1]
+        entry = state.get("groups", {}).get(group_id)
         if entry is None:
             raise KeyError(
                 f"group {group_id!r} has no recorded assignment on "
                 f"topic {topic!r}"
             )
         members = {}
-        for member, owned in _assignment(m, group_id).items():
-            offs = committed_offsets_in(self.root, topic, member, m)
+        for member, owned in _assignment(state, group_id).items():
+            offs = committed_offsets_in(state, member)
             lag = {}
             for b in owned:
                 hwm = int(m["maxima"].get(str(b), -1)) + 1
@@ -1602,7 +1583,7 @@ class TopicStore:
                 "lag": lag,
             }
         return {
-            "generation": int(entry["generation"]),
+            "generation": _generation(entry, int(m["n_buckets"])),
             "n_members": int(entry["n_members"]),
             "members": members,
             "total_lag": sum(
@@ -1653,7 +1634,8 @@ class TopicStore:
 
         Without ``group_id`` the consumer is an independent fan-out
         reader and the commit is an ungated write of its own offsets
-        file (the reference's model). With ``group_id`` +
+        (the reference's model), refused with a ``ValueError`` while
+        the id owns buckets in a group. With ``group_id`` +
         ``generation`` the commit is GROUP-FENCED and stores the
         offset as the group's: it is rejected
         (:class:`StaleGenerationError`) when the group has rebalanced
@@ -1679,28 +1661,29 @@ class TopicStore:
         """Persist a SET of per-bucket offsets atomically: either every
         entry lands or none — the primitive the streaming→batch
         handover (``commit_stream_position``) needs for its "never a
-        partial cursor set" promise.
+        partial cursor set" promise. Either form is ONE consumer-log
+        commit whose ``apply`` checks and then writes, so the check and
+        the write share one version claim: a concurrent write that
+        lands first makes the claim lose, and the rebase re-runs the
+        check against it. A failed or crashed commit leaves the
+        previous version, so there is nothing to roll back. Neither
+        form writes a data-manifest version. An unknown topic raises
+        FileNotFoundError and writes nothing.
 
-        Ungated (no ``group_id``): one atomic publish (tmp-file +
-        rename) of the consumer's own offsets file — the
+        Ungated (no ``group_id``): the consumer's own offsets — the
         single-writer-per-consumer model the reference also assumes.
-        An unknown topic raises FileNotFoundError and writes nothing.
+        While the id owns buckets in a group, its reads of those
+        buckets come from the group's offsets, which this write would
+        not move: ``ValueError`` naming the group.
 
-        Group-scoped (``group_id`` + ``generation``): ONE manifest
-        commit whose ``apply`` fences and then writes. It rejects a
-        stale generation, an unknown group, or any bucket the member
-        does not own under the current assignment
+        Group-scoped (``group_id`` + ``generation``): rejects a stale
+        generation (:func:`_generation`, under the ``n_buckets`` read
+        just before the claim), an unknown group, or any bucket the
+        member does not own under the current assignment
         (:func:`_assignment`), and otherwise stores the offsets in the
-        group's entry, keyed by bucket. The fence and the write are one
-        version claim: a rebalance that lands first makes the claim
-        lose, and the rebase re-runs the fence against it. A failed or
-        crashed commit leaves the previous version, so there is nothing
-        to roll back. No offsets file is written."""
+        group's entry, keyed by bucket."""
         if group_id is None:
-            path = self._own_offsets_path(consumer_id, topic)
-            doc = _offsets_file(path)
-            doc.update({str(b): int(o) for b, o in offsets.items()})
-            self._write_json(path, doc)
+            self._commit_own(consumer_id, topic, offsets, "commit")
             return
         if generation is None:
             raise ValueError(
@@ -1708,15 +1691,16 @@ class TopicStore:
                 "group_state); omit group_id for ungated independent-"
                 "consumer commits"
             )
+        n_buckets = int(self.latest_manifest(topic)[1]["n_buckets"])
 
-        def apply(m: dict) -> dict:
-            entry = m.get("groups", {}).get(group_id)
+        def apply(state: dict) -> dict:
+            entry = state.get("groups", {}).get(group_id)
             if entry is None:
                 raise StaleGenerationError(
                     f"group {group_id!r} has no recorded assignment on topic "
                     f"{topic!r} — call assign_buckets first"
                 )
-            cur_gen = int(entry["generation"])
+            cur_gen = _generation(entry, n_buckets)
             if int(generation) != cur_gen:
                 raise StaleGenerationError(
                     f"commit by {consumer_id!r} carries generation "
@@ -1725,7 +1709,7 @@ class TopicStore:
                     "group rebalanced; this member must re-join (re-run "
                     "assign_buckets) before committing"
                 )
-            owned = _assignment(m, group_id).get(consumer_id)
+            owned = _assignment(state, group_id).get(consumer_id)
             for bucket in offsets:
                 if owned is None or bucket not in owned:
                     raise StaleGenerationError(
@@ -1735,12 +1719,40 @@ class TopicStore:
                     )
             committed = dict(entry.get("offsets", {}))
             committed.update({str(b): int(o) for b, o in offsets.items()})
-            m["groups"] = {**m["groups"], group_id: {**entry, "offsets": committed}}
-            return m
+            state["groups"] = {**state["groups"], group_id: {**entry, "offsets": committed}}
+            return state
 
-        manifest.commit(
-            self.root, topic, manifest.latest_version(self.root, topic), apply
-        )
+        _commit_consumers(self.root, topic, apply)
+
+    def _commit_own(
+        self, consumer_id: str, topic: str, offsets: dict[int, int], op: str
+    ) -> None:
+        """The one ungated offsets write, behind ``commit``/``commit_many``
+        without ``group_id``, ``reset_offsets``, ``seek_to_timestamp``
+        and ``commit_stream_position`` without ``group_id``: one
+        consumer-log commit merging ``offsets`` into the id's own map.
+        Its ``apply`` raises ValueError naming the group when the id
+        owns buckets in a group of the snapshot it lands on."""
+        manifest.validate_consumer_id(consumer_id)
+
+        def apply(state: dict) -> dict:
+            for group_id in state.get("groups", {}):
+                if _assignment(state, group_id).get(consumer_id):
+                    raise ValueError(
+                        f"{op}: {consumer_id!r} owns buckets of group "
+                        f"{group_id!r} on topic {topic!r}, whose committed "
+                        "offsets override its own; move a group's offsets "
+                        "with fenced commits (group_id=, generation=)"
+                    )
+            consumers = dict(state.get("consumers", {}))
+            consumers[consumer_id] = {
+                **consumers.get(consumer_id, {}),
+                **{str(b): int(o) for b, o in offsets.items()},
+            }
+            state["consumers"] = consumers
+            return state
+
+        _commit_consumers(self.root, topic, apply)
 
     def read_increment(
         self, topic: str, since_version: int, version: int | None = None
@@ -1857,15 +1869,6 @@ class TopicStore:
             return m
 
         return manifest.commit(self.root, topic, latest_v, apply)
-
-    # -- util --------------------------------------------------------------
-    @staticmethod
-    def _write_json(path: str, obj: dict) -> None:
-        d = os.path.dirname(path)
-        fd, tmp = tempfile.mkstemp(dir=d)
-        with os.fdopen(fd, "w") as f:
-            json.dump(obj, f)
-        os.replace(tmp, path)
 
     # -- introspection -------------------------------------------------------
     def history(self, topic: str) -> list[dict]:

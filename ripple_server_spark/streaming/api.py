@@ -328,12 +328,16 @@ def commit_stream_position(
     batch yet, or if the query subscribed to multiple sources and none
     (or more than one) carries cursors for ``topic``.
 
-    With ``group_id`` + ``generation`` the handover is GROUP-FENCED
-    through :meth:`TopicStore.commit_many`: ONE manifest commit fences
-    every cursor bucket against the group's CURRENT epoch and
-    assignment and stores the whole set as the group's offsets, keyed
-    by bucket. A rebalance racing the handover makes the commit's
-    version claim lose and its rebase re-runs the fence, which raises
+    The cursors are checked against ONE manifest version (bucket count
+    and high-water marks), then written by ONE consumer-log commit
+    (:meth:`TopicStore.commit_many`). Without ``group_id`` that is the
+    consumer's own offsets, refused with a ``ValueError`` while the id
+    owns buckets in a group. With ``group_id`` + ``generation`` the
+    handover is GROUP-FENCED: the commit fences every cursor bucket
+    against the group's CURRENT epoch and assignment and stores the
+    whole set as the group's offsets, keyed by bucket. A rebalance
+    racing the handover makes the commit's version claim lose and its
+    rebase re-runs the fence, which raises
     :class:`~ripple_server_spark.sources.topics.StaleGenerationError`;
     a crash leaves the previous version. There is never a partial or
     stale cursor set (Kafka zombie fencing extended to the
@@ -409,8 +413,8 @@ def commit_stream_position(
     # arbitrary ranges — validate the cursors against the target
     # topic's manifest: bucket ids must exist and no cursor may exceed
     # the topic's high-water mark (review r08)
-    n_buckets = int(store.topic_meta(topic)["n_buckets"])
-    maxima = store._bucket_maxima(topic)
+    _v, m = store.latest_manifest(topic)
+    n_buckets = int(m["n_buckets"])
     for b, c in cursors.items():
         if b < 0 or b >= n_buckets:
             raise ValueError(
@@ -418,19 +422,17 @@ def commit_stream_position(
                 f"{topic!r} has {n_buckets} buckets — is this "
                 "checkpoint from a different topic?"
             )
-        hwm = maxima.get(b, -1) + 1
+        hwm = int(m["maxima"].get(str(b), -1)) + 1
         if c > hwm:
             raise ValueError(
                 f"checkpoint cursor for bucket {b} is {c}, beyond topic "
                 f"{topic!r}'s high-water mark {hwm} — is this "
                 "checkpoint from a different topic?"
             )
-    store.register_consumer(consumer_id, topic)
-    # ONE atomic multi-bucket commit (commit_many): the whole cursor
-    # set lands at once — an offsets-file publish, or with a group one
-    # manifest commit whose fence and write share its version claim
-    # (ADVICE r10: the old fence-then-loop left the check-to-write
-    # window open across the whole loop).
+    # ONE atomic multi-bucket consumer-log commit (commit_many): the
+    # whole cursor set lands at once, its check and write sharing one
+    # version claim (ADVICE r10: the old fence-then-loop left the
+    # check-to-write window open across the whole loop).
     store.commit_many(
         consumer_id, topic, cursors, group_id=group_id, generation=generation
     )

@@ -21,19 +21,20 @@ def sf_dir() -> str:
 
 def land_before_next_commit(monkeypatch, sibling) -> None:
     """Run ``sibling()`` — a competing write — inside the next
-    ``manifest.commit`` call, before that commit claims its slot. An
-    append under test has staged its files by then, so a sibling that
-    advances the append's buckets makes it lose a seq race
-    deterministically. The sibling's own commits pass straight through."""
+    ``manifest.commit`` call (to either log of a topic), before that
+    commit claims its slot. An append under test has staged its files
+    by then, so a sibling that advances the append's buckets makes it
+    lose a seq race deterministically. The sibling's own commits pass
+    straight through."""
     from ripple_server_spark.sources import manifest
 
     real = manifest.commit
     pending = [sibling]
 
-    def hooked(root, topic, base_version, apply):
+    def hooked(*args):
         if pending:
             pending.pop()()
-        return real(root, topic, base_version, apply)
+        return real(*args)
 
     monkeypatch.setattr(manifest, "commit", hooked)
 

@@ -898,9 +898,9 @@ def test_partitioned_manifest_parse_cached_per_version(spark, planner_store, mon
     calls = {"n": 0}
     real_load = manifest.load
 
-    def counting_load(root, topic, version):
+    def counting_load(*args):
         calls["n"] += 1
-        return real_load(root, topic, version)
+        return real_load(*args)
 
     monkeypatch.setattr(manifest, "load", counting_load)
     start = r.latestOffset()
@@ -1357,10 +1357,14 @@ def test_subscribe_pattern_batch_and_stream(spark, sf_dir, tmp_path):
         ).option("topic", "logs_a").load().count()
 
 
-def test_stream_position_hands_over_to_consumer_group(spark, sf_dir, tmp_path):
+def test_stream_position_hands_over_to_consumer_group(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """commit_stream_position (reverse of start_at=consumer:<id>): after
     a stream drains the topic, the bridged consumer's consume() resumes
-    at exactly the next produced seq — no replay, no skip."""
+    at exactly the next produced seq — no replay, no skip. The cursors
+    are checked against one data-manifest version (one load)."""
+    from ripple_server_spark.sources import manifest
     from ripple_server_spark.streaming.api import commit_stream_position
 
     st = TopicStore(spark, str(tmp_path / "hand_topics"))
@@ -1382,7 +1386,18 @@ def test_stream_position_hands_over_to_consumer_group(spark, sf_dir, tmp_path):
     )
     q.awaitTermination(120)
 
+    loads: list[int] = []
+    real_load = manifest.load
+
+    def counting(root, topic, version, log=manifest.LOG):
+        if log == manifest.LOG:
+            loads.append(version)
+        return real_load(root, topic, version, log)
+
+    monkeypatch.setattr(manifest, "load", counting)
     committed = commit_stream_position(st, ckpt, "h1", "takeover")
+    monkeypatch.undo()
+    assert len(loads) == 1
     maxima = st._bucket_maxima("h1")
     assert committed == {b: mx + 1 for b, mx in maxima.items()}
     assert st.committed_offsets("takeover", "h1") == committed

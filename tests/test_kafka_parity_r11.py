@@ -2,7 +2,7 @@
 the min.cleanable.dirty.ratio cleaner gate, delete.retention.ms
 tombstone windows, the sticky assignor, producer-epoch fencing, the
 expand_buckets group-epoch bump, and the fenced group commit: one
-manifest claim that stores offsets per (group, bucket)."""
+consumer-log claim that stores offsets per (group, bucket)."""
 
 from __future__ import annotations
 
@@ -16,7 +16,7 @@ from ripple_server_spark.sources.topics import (
     StaleGenerationError,
     StaleProducerEpochError,
     TopicStore,
-    offsets_path,
+    consumer_state,
 )
 from tests.conftest import in_form
 
@@ -459,26 +459,19 @@ def test_commit_many_is_one_atomic_multi_bucket_publish(
     st.produce(_wave(spark, 0, n=40, keys=8), "t")
     st.assign_buckets("t", "g", 1)
     gen = st.group_state("t", "g")["generation"]
-    v0 = st.latest_manifest("t")[0]
-    writes: list[str] = []
-    real = TopicStore._write_json
-
-    def recording(path, doc):
-        writes.append(path)
-        real(path, doc)
-
-    monkeypatch.setattr(TopicStore, "_write_json", staticmethod(recording))
+    v0 = consumer_state(st.root, "t")[0]
+    data_v0 = st.latest_manifest("t")[0]
     st.commit_many(
         "g-0", "t", {0: 3, 1: 4, 2: 5}, group_id="g", generation=gen
     )
-    monkeypatch.undo()
     offs = st.committed_offsets("g-0", "t")
     assert offs == {0: 3, 1: 4, 2: 5}
-    # the offsets are the group's, held by ONE new manifest version
-    v1, m = st.latest_manifest("t")
+    # the offsets are the group's, held by ONE new consumer-log version
+    v1, s = consumer_state(st.root, "t")
     assert v1 == v0 + 1
-    assert m["groups"]["g"]["offsets"] == {"0": 3, "1": 4, "2": 5}
-    assert writes == []  # no member offsets file was written
+    assert s["groups"]["g"]["offsets"] == {"0": 3, "1": 4, "2": 5}
+    assert "g-0" not in s.get("consumers", {})  # no member offsets written
+    assert st.latest_manifest("t")[0] == data_v0
 
 
 def test_rebalance_landing_inside_a_group_commit_is_fenced(
@@ -496,7 +489,7 @@ def test_rebalance_landing_inside_a_group_commit_is_fenced(
     st.assign_buckets("t", "g", 2)
     gen = st.group_state("t", "g")["generation"]
     st.commit("g-0", "t", 0, 1, group_id="g", generation=gen)
-    before = st.latest_manifest("t")[1]["groups"]["g"]["offsets"]
+    before = consumer_state(st.root, "t")[1]["groups"]["g"]["offsets"]
 
     land_before_next_commit(monkeypatch, lambda: st.assign_buckets("t", "g", 3))
     with pytest.raises(StaleGenerationError, match="rebalanced"):
@@ -504,7 +497,7 @@ def test_rebalance_landing_inside_a_group_commit_is_fenced(
             "g-0", "t", {0: 9, 1: 9}, group_id="g", generation=gen
         )
     monkeypatch.undo()
-    after = st.latest_manifest("t")[1]["groups"]["g"]
+    after = consumer_state(st.root, "t")[1]["groups"]["g"]
     assert after["generation"] == gen + 1  # the rebalance landed
     assert after["offsets"] == before == {"0": 1}
     assert st.committed_offsets("g-0", "t") == {0: 1}
@@ -548,7 +541,7 @@ def test_claim_fault_in_group_commit_leaves_previous_version(
     st.assign_buckets("t", "g", 1)
     gen = st.group_state("t", "g")["generation"]
     st.commit_many("g-0", "t", {0: 2, 1: 3}, group_id="g", generation=gen)
-    v0, m0 = st.latest_manifest("t")
+    v0, m0 = consumer_state(st.root, "t")
 
     def failing_claim(slot, m):
         raise OSError("disk full")
@@ -557,29 +550,30 @@ def test_claim_fault_in_group_commit_leaves_previous_version(
     with pytest.raises(OSError, match="disk full"):
         st.commit_many("g-0", "t", {0: 9, 1: 9}, group_id="g", generation=gen)
     monkeypatch.undo()
-    assert st.latest_manifest("t") == (v0, m0)
+    assert consumer_state(st.root, "t") == (v0, m0)
     assert st.committed_offsets("g-0", "t") == {0: 2, 1: 3}
 
 
 def test_group_offsets_override_only_committed_buckets(spark, tmp_path):
-    """A member's own file still serves every bucket its group has not
-    committed; the group's offset wins only where the group has one."""
+    """A member's own offsets, committed before it joined the group,
+    still serve every bucket its group has not committed; the group's
+    offset wins only where the group has one."""
     st = TopicStore(spark, str(tmp_path / "override"))
     st.create_topic("t", n_buckets=4)
     st.produce(_wave(spark, 0, n=40, keys=8), "t")
+    st.commit_many("g-0", "t", {0: 5, 1: 6, 3: 7})  # ungated, before joining
     st.assign_buckets("t", "g", 2)  # g-0 owns [0, 1]
-    st.commit_many("g-0", "t", {0: 5, 1: 6, 3: 7})  # ungated, own file
     gen = st.group_state("t", "g")["generation"]
     st.commit("g-0", "t", 0, 9, group_id="g", generation=gen)
     assert st.committed_offsets("g-0", "t") == {0: 9, 1: 6, 3: 7}
     _tbl, nxt = st.poll("g-0", "t", 1, 1)
-    assert nxt == 7  # bucket 1 polls from the file's offset
+    assert nxt == 7  # bucket 1 polls from the member's own offset
 
 
 def test_start_at_consumer_member_resumes_at_group_offset(spark, tmp_path):
     """start_at=consumer:<member> reads the same offsets as poll: after
     a rebalance, a moved bucket starts at the group's committed offset,
-    not at the new owner's empty file."""
+    not at the new owner's own (empty) offsets."""
     from tests.conftest import topic_stream
 
     st = TopicStore(spark, str(tmp_path / "startat"))
@@ -607,18 +601,21 @@ def test_start_at_consumer_member_resumes_at_group_offset(spark, tmp_path):
 
 
 def test_offset_writes_refuse_group_members(spark, tmp_path):
-    """reset_offsets and seek_to_timestamp write a consumer's own file,
-    which its group's offsets override: on a member id they raise."""
+    """reset_offsets and seek_to_timestamp write a consumer's own
+    offsets, which its group's offsets override: on a member id they
+    raise and write nothing."""
     st = TopicStore(spark, str(tmp_path / "refuse"))
     st.create_topic("t", n_buckets=2)
     st.produce(_wave(spark, 0), "t")
     st.assign_buckets("t", "g", 2)
     v0 = st.latest_manifest("t")[0]
+    c0 = consumer_state(st.root, "t")[0]
     with pytest.raises(ValueError, match="group 'g'"):
         st.reset_offsets("g-0", "t", to="latest")
     with pytest.raises(ValueError, match="group 'g'"):
         st.seek_to_timestamp("g-1", "t", 1767225600000)
     assert st.latest_manifest("t")[0] == v0
+    assert consumer_state(st.root, "t")[0] == c0
     assert st.committed_offsets("g-0", "t") == {}
     # a consumer outside every group still resets
     assert st.reset_offsets("solo", "t", to="earliest") == {0: 0, 1: 0}
@@ -629,7 +626,7 @@ def test_consumer_ids_cannot_escape_the_offsets_dir(spark, tmp_path):
     st = TopicStore(spark, str(root))
     st.create_topic("t", n_buckets=2)
     st.produce(_wave(spark, 0), "t")
-    before = {p for p in tmp_path.rglob("*") if "offsets" not in p.parts}
+    before = {(p, p.stat().st_mtime_ns) for p in tmp_path.rglob("*")}
     with pytest.raises(ValueError, match="flat name"):
         st.commit("../../escaped", "t", 0, 5)
     with pytest.raises(ValueError, match="flat name"):
@@ -637,8 +634,8 @@ def test_consumer_ids_cannot_escape_the_offsets_dir(spark, tmp_path):
     for bad in ("", "a/b", ".."):
         with pytest.raises(ValueError, match="flat name"):
             st.register_consumer(bad, "t")
-    assert {p for p in tmp_path.rglob("*") if "offsets" not in p.parts} == before
-    assert list((root / "offsets").iterdir()) == []
+    # nothing was written anywhere under the root
+    assert {(p, p.stat().st_mtime_ns) for p in tmp_path.rglob("*")} == before
     assert st.list_groups("t") == []
     # '--' inside a consumer id stays legal
     st.commit("a--b", "t", 0, 1)
@@ -668,6 +665,11 @@ def test_seeded_membership_walk_delivers_each_row_once(spark, tmp_path):
             st.expand_buckets("t", 6)
         asg = st.assign_buckets("t", "g", n_members, strategy=strategy)
         gen = st.group_state("t", "g")["generation"]
+        # an ungated commit by a member would lose to the group's
+        # offsets: refused, and nothing moves
+        member, owned = next((m, bs) for m, bs in asg.items() if bs)
+        with pytest.raises(ValueError, match="group 'g'"):
+            st.commit(member, "t", owned[0], 0)
         for member, owned in asg.items():
             for b in owned:
                 tbl, nxt = st.poll(member, "t", b, 10_000)
@@ -683,48 +685,139 @@ def test_seeded_membership_walk_delivers_each_row_once(spark, tmp_path):
     assert st.describe_group("t", "g")["total_lag"] == 0
 
 
-def test_legacy_flat_offsets_files_still_read(spark, tmp_path):
-    st = TopicStore(spark, str(tmp_path / "legacy"))
+def test_ungated_commit_by_group_member_is_refused(spark, tmp_path):
+    """An ungated write by an id that owns buckets in a group would lose
+    to the group's offsets on every read, so it would do nothing:
+    commit, commit_many and commit_stream_position without group_id
+    refuse it, and no consumer-log version is written."""
+    from ripple_server_spark.streaming.api import commit_stream_position
+    from tests.conftest import topic_stream
+
+    st = TopicStore(spark, str(tmp_path / "member"))
     st.create_topic("t", n_buckets=2)
-    st._write_json(offsets_path(st.root, "old", "t"), {"0": 7, "1": 9})
-    assert st.committed_offsets("old", "t") == {0: 7, 1: 9}
-    # a commit rewrites the document without losing entries
-    st.commit("old", "t", 1, 11)
-    assert st.committed_offsets("old", "t") == {0: 7, 1: 11}
-    # the wrapped form older versions wrote, with generation stamps
-    st._write_json(
-        offsets_path(st.root, "wrapped", "t"),
-        {"offsets": {"0": 3}, "generations": {"0": 1}},
+    st.produce(_wave(spark, 0), "t")
+    ckpt = str(tmp_path / "ck")
+    q = (
+        topic_stream(st, "t")
+        .writeStream.format("noop")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
     )
-    assert st.committed_offsets("wrapped", "t") == {0: 3}
+    q.awaitTermination(120)
+    st.assign_buckets("t", "g", 2)  # g-0 owns [0]
+    gen = st.group_state("t", "g")["generation"]
+    st.commit("g-0", "t", 0, 3, group_id="g", generation=gen)
+    v0 = consumer_state(st.root, "t")[0]
+    for write in (
+        lambda: st.commit("g-0", "t", 0, 9),
+        lambda: st.commit_many("g-0", "t", {0: 9, 1: 9}),
+        lambda: commit_stream_position(st, ckpt, "t", "g-0"),
+    ):
+        with pytest.raises(ValueError, match="owns buckets of group 'g'"):
+            write()
+    assert st.committed_offsets("g-0", "t") == {0: 3}
+    assert consumer_state(st.root, "t")[0] == v0
 
 
-def test_range_entry_without_stored_assignment_reads_as_range_split(
-    spark, tmp_path
-):
-    """A range group recorded before assignments were stored has only
-    generation and member count; every ownership read sees its range
-    split, and re-joining at the same size commits nothing."""
-    from ripple_server_spark.sources import manifest
-
-    st = TopicStore(spark, str(tmp_path / "oldgroup"))
+def test_group_traffic_stays_out_of_the_data_log(spark, tmp_path):
+    """Joining, fenced commits, a rebalance and describe_group touch the
+    consumer log only: the data manifest's version and history stay as
+    they were, with no metadata rows for them."""
+    st = TopicStore(spark, str(tmp_path / "quiet"))
     st.create_topic("t", n_buckets=4)
-
-    def apply(m):
-        m["groups"] = {"g": {"generation": 3, "n_members": 2, "strategy": "range"}}
-        return m
-
-    manifest.commit(st.root, "t", st.latest_manifest("t")[0], apply)
-    v0 = st.latest_manifest("t")[0]
-    split = {"g-0": [0, 1], "g-1": [2, 3]}
-    assert st.assign_buckets("t", "g", 2) == split
+    st.produce(_wave(spark, 0, n=40, keys=8), "t")
+    v0, history = st.latest_manifest("t")[0], st.history("t")
+    st.assign_buckets("t", "g", 2)
+    gen = st.group_state("t", "g")["generation"]
+    st.commit_many("g-0", "t", {0: 1, 1: 2}, group_id="g", generation=gen)
+    st.assign_buckets("t", "g", 3)
+    assert st.describe_group("t", "g")["generation"] == gen + 1
     assert st.latest_manifest("t")[0] == v0
-    d = st.describe_group("t", "g")
-    assert {mem: e["buckets"] for mem, e in d["members"].items()} == split
-    st.commit("g-1", "t", 2, 5, group_id="g", generation=3)
-    with pytest.raises(StaleGenerationError, match="does not own"):
-        st.commit("g-1", "t", 0, 5, group_id="g", generation=3)
-    assert st.committed_offsets("g-1", "t") == {2: 5}
+    assert st.history("t") == history
+    assert [r for r in history if r["operation"] == "metadata"] == []
+    assert "groups" not in st.latest_manifest("t")[1]
+
+
+def test_expand_buckets_writes_only_the_data_log(spark, tmp_path):
+    """The order across the two logs: expand_buckets commits the data
+    manifest only, and from that commit on the group reads one
+    generation past its stored one, so a pre-expansion fenced commit is
+    rejected as rebalanced."""
+    st = TopicStore(spark, str(tmp_path / "order"))
+    st.create_topic("t", n_buckets=4)
+    st.produce(_wave(spark, 0, n=20, keys=4), "t")
+    st.assign_buckets("t", "g", 2)
+    gen = st.group_state("t", "g")["generation"]
+    st.commit("g-0", "t", 0, 1, group_id="g", generation=gen)
+    c0 = consumer_state(st.root, "t")
+    st.expand_buckets("t", 8)
+    assert consumer_state(st.root, "t") == c0
+    assert st.group_state("t", "g")["generation"] == gen + 1
+    with pytest.raises(StaleGenerationError, match="rebalanced"):
+        st.commit("g-0", "t", 0, 2, group_id="g", generation=gen)
+    assert st.committed_offsets("g-0", "t") == {0: 1}
+
+
+def test_expansion_inside_a_fenced_commit_admits_only_old_owned_buckets(
+    spark, tmp_path, monkeypatch
+):
+    """An expansion landing between a fenced commit's n_buckets read and
+    its claim lets that one commit through under the old assignment, on
+    a bucket the member owned before; the next commit is fenced."""
+    from tests.conftest import land_before_next_commit
+
+    st = TopicStore(spark, str(tmp_path / "late"))
+    for topic in ("t", "u"):
+        st.create_topic(topic, n_buckets=4)
+        st.produce(_wave(spark, 0, n=20, keys=4), topic)
+        st.assign_buckets(topic, "g", 2)  # g-0 owns [0, 1]
+    gen = st.group_state("t", "g")["generation"]
+
+    land_before_next_commit(monkeypatch, lambda: st.expand_buckets("t", 8))
+    st.commit("g-0", "t", 1, 2, group_id="g", generation=gen)
+    monkeypatch.undo()
+    assert st.latest_manifest("t")[1]["n_buckets"] == 8
+    assert st.committed_offsets("g-0", "t") == {1: 2}
+    with pytest.raises(StaleGenerationError, match="rebalanced"):
+        st.commit("g-0", "t", 1, 3, group_id="g", generation=gen)
+
+    # a late commit on a bucket the member did not own is still refused
+    land_before_next_commit(monkeypatch, lambda: st.expand_buckets("u", 8))
+    with pytest.raises(StaleGenerationError, match="does not own bucket 5"):
+        st.commit("g-0", "u", 5, 2, group_id="g", generation=gen)
+    monkeypatch.undo()
+    assert st.committed_offsets("g-0", "u") == {}
+
+
+def test_vacuum_prunes_the_consumer_log(spark, tmp_path):
+    """vacuum prunes consumer-log versions below the latest under the
+    data log's grace rule: a positive grace keeps recent versions, a
+    zero grace leaves one, and every committed offset reads the same."""
+    import os
+
+    st = TopicStore(spark, str(tmp_path / "vac"))
+    st.create_topic("t", n_buckets=2)
+    st.produce(_wave(spark, 0), "t")
+    for i in range(3):
+        st.commit("solo", "t", 0, i + 1)
+    st.assign_buckets("t", "g", 1)
+    gen = st.group_state("t", "g")["generation"]
+    st.commit_many("g-0", "t", {0: 4, 1: 5}, group_id="g", generation=gen)
+    offsets = {c: st.committed_offsets(c, "t") for c in ("solo", "g-0")}
+    log = os.path.join(st.topic_dir("t"), "_consumers")
+    versions = sorted(os.listdir(log))
+    assert len(versions) == 5
+
+    st.vacuum("t", grace_s=3600)
+    assert sorted(os.listdir(log)) == versions
+    st.vacuum("t", grace_s=0)
+    assert os.listdir(log) == [versions[-1]]
+    assert {c: st.committed_offsets(c, "t") for c in ("solo", "g-0")} == offsets
+    assert st.group_state("t", "g")["generation"] == gen
+    # the pruned log keeps committing
+    st.commit("solo", "t", 1, 2)
+    assert st.committed_offsets("solo", "t") == {0: 3, 1: 2}
 
 
 # -- compact_by_key(order_by=) (VERDICT r10 item 7) ---------------------------
@@ -992,8 +1085,8 @@ def test_exactly_once_read_process_write_recipe(spark, tmp_path):
 
 
 def test_topic_name_validation_guards_layout(spark, tmp_path):
-    """'--' is the offsets-file separator and topic dirs are paths:
-    names that would break either are rejected at every create path."""
+    """Topic dirs are paths, and '--' and a leading '-' stay reserved:
+    such names are rejected at every create path."""
     st = TopicStore(spark, str(tmp_path / "names"))
     for bad in ("a--b", "", "..", "a/b", "a b", "x" * 250, "-b"):
         with pytest.raises(ValueError, match="invalid topic name"):
@@ -1004,8 +1097,8 @@ def test_topic_name_validation_guards_layout(spark, tmp_path):
     for bad in ("..", ".", "a/b", "-b"):
         with pytest.raises(ValueError, match="invalid topic name"):
             st.delete_topic(bad)
-    # consumer ids MAY contain '--': the suffix match still splits
-    # unambiguously because the topic side cannot
+    # consumer ids MAY contain '--', and deleting one topic leaves the
+    # same id's offsets on another topic untouched
     st.create_topic("b", n_buckets=2)
     st.register_consumer("c--x", "b")
     st.commit("c--x", "b", 0, 5)
@@ -1074,27 +1167,30 @@ def test_assign_buckets_adoption_rejects_concurrent_reconfig(
     st.produce(_wave(spark, 0), "t")
     st.assign_buckets("t", "g", 2, strategy="sticky")
 
-    real_v, real_m = st.latest_manifest("t")
+    from ripple_server_spark.sources import topics
+
+    real_v, real_s = consumer_state(st.root, "t")
     # 1st canned read: incomplete assignment -> forces the commit path;
     # apply then sees the REAL (complete, identical) entry and raises
     # _AlreadyCurrent; 2nd canned read: the group switched to range
     # concurrently -> adoption must reject, not KeyError
-    first = copy.deepcopy(real_m)
+    first = copy.deepcopy(real_s)
     first["groups"]["g"]["assignment"] = {"g-0": [0], "g-1": [1]}
-    second = copy.deepcopy(real_m)
+    second = copy.deepcopy(real_s)
     second["groups"]["g"] = {
-        "generation": real_m["groups"]["g"]["generation"] + 1,
+        "generation": real_s["groups"]["g"]["generation"] + 1,
         "n_members": 2,
         "strategy": "range",
+        "assignment": {"g-0": [0, 1], "g-1": [2, 3]},
     }
     canned = [(real_v, first), (real_v + 1, second)]
-    orig = st.latest_manifest
+    orig = topics.consumer_state
 
-    def fake_latest(topic):
+    def fake_state(root, topic):
         if topic == "t" and canned:
             return canned.pop(0)
-        return orig(topic)
+        return orig(root, topic)
 
-    monkeypatch.setattr(st, "latest_manifest", fake_latest)
+    monkeypatch.setattr(topics, "consumer_state", fake_state)
     with pytest.raises(StaleGenerationError, match="reconfigured concurrently"):
         st.assign_buckets("t", "g", 2, strategy="sticky")

@@ -627,8 +627,9 @@ def test_assign_buckets_range_assignor(spark, sf_dir, tmp_path):
     a topic's buckets into contiguous, disjoint, exhaustive runs (sizes
     differ by <= 1); the assignment is a pure function (every member
     computes the same split); and members are ordinary consumers whose
-    commits stay independent — 2 members x 4 buckets drain the topic
-    with disjoint coverage and no row seen twice across the group."""
+    fenced commits stay per bucket — 2 members x 4 buckets drain the
+    topic with disjoint coverage and no row seen twice across the
+    group."""
     st = TopicStore(spark, str(tmp_path / "grp_topics"))
     st.create_topic("g1", n_buckets=4)
     ev = load_table(spark, sf_dir, "events").limit(200)
@@ -647,6 +648,7 @@ def test_assign_buckets_range_assignor(spark, sf_dir, tmp_path):
         st.assign_buckets("g1", "w0", 0)
 
     # group drain: disjoint coverage, exactly-once across the group
+    gen = st.group_state("g1", "workers")["generation"]
     seen: dict[tuple[int, int], str] = {}
     for member, buckets in asg.items():
         for b in buckets:
@@ -655,7 +657,7 @@ def test_assign_buckets_range_assignor(spark, sf_dir, tmp_path):
                 key = (r["bucket"], r["seq"])
                 assert key not in seen, f"{key} seen by {seen[key]} and {member}"
                 seen[key] = member
-            st.commit(member, "g1", b, nxt)
+            st.commit(member, "g1", b, nxt, group_id="workers", generation=gen)
     assert len(seen) == 200
     # commits are independent per member: each member only has offsets
     # for ITS buckets; a member restart replays nothing already committed
@@ -1611,16 +1613,16 @@ def test_read_increment_plans_only_the_tail_files(polled):
 
 def test_offsets_writes_refuse_an_unknown_topic(spark, tmp_path):
     """register_consumer and an ungated commit on a topic that does not
-    exist raise FileNotFoundError naming it and write no offsets file,
-    which delete_topic could never sweep."""
-    import os
-
+    exist raise FileNotFoundError naming it and write nothing anywhere
+    under the root: no consumer log that delete_topic could never
+    reach."""
     st = TopicStore(spark, str(tmp_path / "orphan"))
+    before = {(p, p.stat().st_mtime_ns) for p in tmp_path.rglob("*")}
     with pytest.raises(FileNotFoundError, match="'nope'"):
         st.register_consumer("c", "nope")
     with pytest.raises(FileNotFoundError, match="'nope'"):
         st.commit("d", "nope", 0, 5)
-    assert os.listdir(os.path.join(st.root, "offsets")) == []
+    assert {(p, p.stat().st_mtime_ns) for p in tmp_path.rglob("*")} == before
 
 
 def test_offsets_for_times_runs_no_spark_job(polled):
@@ -1647,27 +1649,29 @@ def test_offsets_for_times_runs_no_spark_job(polled):
 
 
 def test_seek_to_timestamp_is_one_offsets_publish(spark, sf_dir, tmp_path, monkeypatch):
-    """seek_to_timestamp moves every bucket in one atomic offsets-file
-    publish: with every write after the first failing, the seek still
-    lands whole, so a crash can never leave some buckets seeked and
-    others at their prior offsets."""
+    """seek_to_timestamp moves every bucket in one consumer-log claim:
+    with every claim after the first failing, the seek still lands
+    whole, so a crash can never leave some buckets seeked and others at
+    their prior offsets."""
+    from ripple_server_spark.sources import manifest
+
     st = TopicStore(spark, str(tmp_path / "seek_one"))
     st.create_topic("sk", n_buckets=4)
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     st.produce(ev, "sk")
     st.register_consumer("c", "sk")
     writes: list[str] = []
-    real = TopicStore._write_json
+    real = manifest.claim
 
-    def one_write(path, doc):
-        writes.append(path)
+    def one_write(slot, doc):
+        writes.append(slot)
         if len(writes) > 1:
             raise OSError("offsets write failed")
-        real(path, doc)
+        return real(slot, doc)
 
-    monkeypatch.setattr(TopicStore, "_write_json", staticmethod(one_write))
+    monkeypatch.setattr(manifest, "claim", one_write)
     offsets = st.seek_to_timestamp("c", "sk", 1705276800000)
-    assert len(writes) == 1
+    assert len(writes) == 1 and f"/{manifest.CONSUMER_LOG}/" in writes[0]
     assert len(offsets) == 4
     assert st.committed_offsets("c", "sk") == offsets
 
