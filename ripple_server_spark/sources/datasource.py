@@ -43,22 +43,24 @@ selected by ``reader_tier`` (default ``partitioned``):
   chunks), yielded as Arrow RecordBatches. This is the scale tier: the
   reader parallelism IS the bucket layout, same as the reference's
   one-queue-per-bucket broker (internal/broker/server/server.go:25).
-- ``simple`` — the SimpleDataSourceStreamReader tier: it plans each
-  trigger like the partitioned tier (same admission rule, from the
-  manifest) but reads the rows on the driver, with the same
-  manifest-planned scan ``TopicStore.poll`` uses — the right shape
-  for control-plane-small topics where a task round-trip per bucket
-  costs more than the rows.
+- ``simple`` — the SimpleDataSourceStreamReader tier: a driver-side
+  adapter over the partitioned tier's reader — the same admission
+  rule, the same ``partitions`` plan and the same per-partition read,
+  run on the driver instead of in tasks — the right shape for
+  control-plane-small topics where a task round-trip per bucket costs
+  more than the rows.
 
 The ``topic`` option accepts a comma-separated list (Kafka
 ``subscribe`` parity): multi-topic reads add a ``topic`` column and,
 on the streaming side, keep fully independent per-topic cursors /
 pinned versions / admission caps (partitioned tier only).
 
-File lists come from the topic's MANIFEST (latest committed version),
-so both batch and streaming reads are snapshot-consistent with
-TopicStore's commit protocol: crashed-produce orphans and
-mid-compaction files are never served.
+File lists come from the topic's MANIFEST (latest committed version,
+or the version an offset pins), through the one read planner,
+:func:`manifest.plan` — one walk of the manifest's files per read,
+whatever the bucket and chunk count — so both batch and streaming
+reads are snapshot-consistent with TopicStore's commit protocol:
+crashed-produce orphans and mid-compaction files are never served.
 
 The schema comes from the manifest too: each subscribed topic's
 recorded message schema (the columns its producers wrote, ``seq``
@@ -122,34 +124,6 @@ class BucketPartition(InputPartition):
         self.topic = topic
 
 
-def _bucket_files(
-    root: str, topic: str, version: int | None = None, span=None
-) -> list[tuple[int, list[str]]]:
-    """Per-bucket COMMITTED file lists from the topic's manifest —
-    latest by default, or a pinned ``version`` (VERSION AS OF: the
-    same time-travel contract as TopicStore.read_topic, so a reader
-    can replay exactly the snapshot a past consumer saw, across later
-    compactions/retention). Snapshot-consistent either way:
-    crashed-produce orphans and mid-compaction files are invisible.
-    ``span(bucket) -> (lo, hi)`` plans each bucket through
-    :func:`manifest.files_for` — only files whose seq range overlaps
-    ``[lo, hi)``, and buckets left with none are dropped."""
-    if version is None:
-        version = manifest.latest_version(root, topic)
-    m = _load_pinned(root, topic, version)
-    data_dir = os.path.join(root, "topics", topic, "data")
-    by_bucket: dict[int, list[str]] = {}
-    for rel in m["files"]:
-        by_bucket.setdefault(manifest.bucket_of(rel), []).append(rel)
-    if span is not None:
-        by_bucket = {b: manifest.files_for(m, b, *span(b)) for b in by_bucket}
-    return sorted(
-        (b, sorted(os.path.join(data_dir, r) for r in rels))
-        for b, rels in by_bucket.items()
-        if rels
-    )
-
-
 def _load_pinned(root: str, topic: str, version: int) -> dict:
     """One committed manifest version; ValueError when it does not
     exist (never committed, or vacuumed away)."""
@@ -185,8 +159,9 @@ def _bucket_table(part: BucketPartition, target):
     seq < upto``, seq-ordered, cut at ``limit`` rows, as a
     ``pyarrow.Table`` of exactly ``target`` — the scanned file columns
     plus the partition-constant ``bucket`` (and ``topic`` on
-    multi-topic subscriptions). The one range read: executor tasks,
-    the simple tier's driver read and ``TopicStore.poll`` all call it."""
+    multi-topic subscriptions). The one range read: the batch reader's
+    and both stream tiers' partitions (the simple tier reads them on
+    the driver) and ``TopicStore.poll`` all call it."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
@@ -252,7 +227,7 @@ _START_AT_DOC = (
 
 
 def _required_opt(options: dict, key: str) -> str:
-    """A required reader option, with a actionable error instead of a
+    """A required reader option, with an actionable error instead of a
     bare KeyError. The note matters: a table registered with SQL
     ``CREATE TABLE ... USING ripple_topic OPTIONS (...)`` resolves its
     schema WITH the options but Spark does not deliver them back to the
@@ -365,10 +340,8 @@ def offsets_for_times(root: str, topic: str, epoch_ms: int) -> dict[int, int]:
     flt = pc.field("ts") >= pa.scalar(t_us, ts_type)
     scan_schema = pa.schema([("ts", ts_type), ("seq", pa.int64())])
     data = os.path.join(root, "topics", topic, "data")
-    for b in out:
-        files = [os.path.join(data, r) for r in manifest.files_for(m, b, 0, _SEQ_END)]
-        if not files:
-            continue
+    for b, rels in manifest.plan(m, {b: (0, _SEQ_END) for b in out}).items():
+        files = [os.path.join(data, r) for r in rels]
         scanner = ds.dataset(files, format="parquet", schema=scan_schema).scanner(
             columns=["seq"], filter=flt
         )
@@ -508,19 +481,26 @@ class RippleTopicReader(DataSourceReader):
             raise ValueError("version pinning requires a single topic")
 
     def partitions(self):
-        return [
-            BucketPartition(
-                files,
-                b,
-                self.offset,
-                self.limit,
-                topic=t if self.multi else None,
-            )
-            for t in self.topics
-            for b, files in _bucket_files(
-                self.root, t, self.version, lambda b: (self.offset, _SEQ_END)
-            )
-        ]
+        parts = []
+        for t in self.topics:
+            if self.version is None:
+                m = manifest.latest(self.root, t)[1]
+            else:
+                m = _load_pinned(self.root, t, self.version)
+            data = os.path.join(self.root, "topics", t, "data")
+            span = (self.offset, _SEQ_END)
+            planned = manifest.plan(m, {b: span for b in range(int(m["n_buckets"]))})
+            parts += [
+                BucketPartition(
+                    [os.path.join(data, r) for r in rels],
+                    b,
+                    self.offset,
+                    self.limit,
+                    topic=t if self.multi else None,
+                )
+                for b, rels in sorted(planned.items())
+            ]
+        return parts
 
     def read(self, partition: BucketPartition) -> Iterator:
         if partition is None:
@@ -534,18 +514,21 @@ class RippleTopicReader(DataSourceReader):
 
 
 class RippleTopicStreamReader(SimpleDataSourceStreamReader):
-    """Driver-side micro-batch source: offset = {bucket: next_seq} plus
-    the manifest version the batch was planned against.
+    """Micro-batch source read on the driver: an adapter over a
+    :class:`RippleTopicPartitionedStreamReader`, with the same offsets
+    ({bucket: next_seq} cursors plus the manifest version the batch was
+    planned against).
 
-    Plans like the partitioned tier: each trigger reads the latest
-    manifest and advances every bucket's cursor by the rule of
-    :meth:`RippleTopicPartitionedStreamReader.latestOffset` — clamp to
-    the retained floor, then admit at most ``batch_size`` seqs
-    (AskQuery.Count). It then reads ``[start, end)`` on the driver
-    through :meth:`readBetweenOffsets`, the same manifest-planned scan
-    crash replay uses, so a trigger decodes only the files overlapping
-    its range. Seq gaps left by retention or key compaction just make
-    a batch carry fewer rows.
+    ``read(start)`` admits each bucket from ``start`` by the partitioned
+    tier's rule (:func:`_admit`: clamp to the retained floor, then at
+    most ``batch_size`` seqs, AskQuery.Count) against the latest
+    manifest, and packs the end offset with that reader's ``_pack`` and
+    per-version manifest cache. :meth:`readBetweenOffsets` — every
+    trigger's read and crash replay alike — reads ``[start, end)``
+    through that reader's ``partitions(start, end)`` plan and ``read``,
+    on the driver instead of in tasks, so a trigger decodes only the
+    files overlapping its range. Seq gaps left by retention or key
+    compaction just make a batch carry fewer rows.
 
     ``start_at`` (default ``earliest``) controls the FIRST checkpoint
     only — the Kafka ``auto.offset.reset`` analog: ``earliest`` replays
@@ -555,73 +538,33 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
     """
 
     def __init__(self, options: dict, schema: StructType):
-        self.root = _required_opt(options, "root")
-        self.topic = _required_opt(options, "topic")
-        self.batch_size = int(options.get("batch_size", 10_000))
-        self.start_at = _check_start_at(options.get("start_at", "earliest"))
-        self.schema = schema
-        self._target = to_arrow_schema(schema)
+        self._plan = RippleTopicPartitionedStreamReader(options, schema)
 
     def initialOffset(self) -> dict:
         # 'latest' reads the manifest's high-water marks (O(1) in topic
         # size — the same metadata TopicStore's cold path keeps to
         # avoid log scans); 'consumer:<id>' reads that consumer's
         # committed offsets (the A7/A8 bridge).
-        return {
-            "cursors": json.dumps(
-                _initial_cursors(self.root, self.topic, self.start_at)
-            ),
-            "topic": self.topic,  # checkpoint→topic pairing proof
-        }
+        p = self._plan
+        return p._pack(_initial_cursors(p.root, p.topic, p.start_at), None)
 
     def read(self, start: dict):
         # The version rides in the end offset so crash recovery replays
-        # the exact file set this batch saw (see readBetweenOffsets).
-        version, maxima, floors = _log_bounds(self.root, self.topic)
+        # the exact file set this batch saw (see partitions()).
+        p = self._plan
+        version, maxima, floors = p._cached_log_bounds()
         s = json.loads(start.get("cursors", "{}"))
         e = dict(s)
         for b, mx in maxima.items():
-            e[b] = _admit(int(s.get(b, 0)), floors.get(b, 0), mx + 1, self.batch_size)
-        end = {
-            "cursors": json.dumps(e, sort_keys=True),
-            "topic": self.topic,
-            "version": str(version),
-        }
+            e[b] = _admit(int(s.get(b, 0)), floors.get(b, 0), mx + 1, p.batch_size)
+        end = p._pack(e, version)
         # Arrow record batches pass to the JVM Arrow stream verbatim;
         # a list, because Spark's prefetch cache copies the iterator
         return iter(list(self.readBetweenOffsets(start, end))), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
-        # Serve exactly [start, end) from the manifest version the end
-        # offset pins — read() plans each trigger through here, and
-        # crash recovery replays the same range deterministically: a
-        # truncate committed between the batch and the crash must not
-        # shrink the replayed batch (the sink would see a different
-        # batch N than the offset log recorded). Falls back to the
-        # latest manifest only when the pinned version was vacuumed
-        # away (the Delta-retention-horizon caveat: keep vacuum grace
-        # above checkpoint-recovery lag).
-        s = json.loads(start.get("cursors", "{}"))
-        e = json.loads(end.get("cursors", "{}"))
-        version = int(end["version"]) if "version" in end else None
-
-        def span(b: int) -> tuple[int, int]:
-            return int(s.get(str(b), 0)), int(e.get(str(b), 0))
-
-        try:
-            buckets = _bucket_files(self.root, self.topic, version, span)
-        except ValueError:
-            buckets = _bucket_files(self.root, self.topic, None, span)
-        for b, files in buckets:
-            off = int(s.get(str(b), 0))
-            upto = int(e.get(str(b), 0))
-            if upto > off:
-                # bound by SEQ, not row count: a retention gap between
-                # off and upto must shrink the replay, not let it slide
-                # past upto — and the bound is pushed into the scan so
-                # replay cost follows the batch, not the retained tail
-                part = BucketPartition(files, b, off, None, upto=upto)
-                yield from _read_bucket_arrow(part, self._target)
+        for part in self._plan.partitions(start, end):
+            yield from self._plan.read(part)
 
     def commit(self, end: dict) -> None:
         pass  # Spark's checkpoint owns committed offsets
@@ -641,11 +584,14 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
       retention holes below a bucket's floor are skipped in one step
       instead of crawled through in empty batches.
     - ``partitions`` (driver) resolves the END offset's pinned manifest
-      version and gives each task only the files of its bucket whose
-      recorded seq range overlaps its chunk: one task per bucket, and
-      catch-up ranges wider than ``batch_size`` seqs split into chunks
-      so a backlog drain parallelizes WITHIN a bucket too (the chunk
-      bounds push into the parquet scan as seq row-group filters).
+      version (the latest one for a version-less end offset or a
+      vacuumed pin), plans every bucket's ``[start, end)`` in one
+      :func:`manifest.plan` walk, and gives each task only the files
+      of its bucket whose recorded seq range overlaps its chunk: one
+      task per bucket, and catch-up ranges wider than ``batch_size``
+      seqs split into chunks cut from the bucket's planned list, so a
+      backlog drain parallelizes WITHIN a bucket too (the chunk bounds
+      push into the parquet scan as seq row-group filters).
     - ``read`` (EXECUTOR) scans its bucket's files with pyarrow and
       yields Arrow RecordBatches — rows never pass through the driver,
       which is the whole point of this tier (the Simple tier funnels
@@ -672,8 +618,8 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
     anchor the admission cursor). Crash-mid-batch replay takes the
     ordinary partitions() path with the END offset's pinned version,
     so a truncate committed between crash and recovery cannot shrink
-    the replayed batch (same contract as the Simple tier's
-    readBetweenOffsets).
+    the replayed batch. The simple tier reads every batch, replays
+    included, through this same ``partitions``.
     """
 
     def __init__(self, options: dict, schema: StructType):
@@ -775,46 +721,29 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> list[BucketPartition]:
         s = json.loads(start.get("cursors", "{}"))
         e = json.loads(end.get("cursors", "{}"))
-        m = None
-        if "version" in end:
-            try:
-                m = self._manifest(int(end["version"]))
-            except ValueError:
-                # pinned snapshot vacuumed away (keep vacuum grace above
-                # checkpoint-recovery lag); serve from the latest manifest
-                m = self._manifest(manifest.latest_version(self.root, self.topic))
-        data_dir = os.path.join(self.root, "topics", self.topic, "data")
-        if m is None:
-            # version-less end offset: every file of the latest
-            # manifest, unpruned, no floors
-            unpruned = dict(_bucket_files(self.root, self.topic))
-            buckets, floors = sorted(unpruned), {}
-        else:
-            buckets = sorted({manifest.bucket_of(r) for r in m["files"]})
-            floors = _bounds(m)[1]
-
-        def files(b: int, lo: int, hi: int) -> list[str]:
-            # the manifest read planner: only files whose recorded seq
-            # range overlaps [lo, hi)
-            if m is None:
-                return unpruned.get(b, [])
-            rels = manifest.files_for(m, b, lo, hi)
-            return [os.path.join(data_dir, r) for r in rels]
-
-        parts: list[BucketPartition] = []
-        for b in buckets:
-            off = int(s.get(str(b), 0))
-            upto = int(e.get(str(b), 0))
+        try:
+            m = self._manifest(int(end["version"]))
+        except (KeyError, ValueError):
+            # a version-less end offset, or a pinned snapshot vacuumed
+            # away (keep vacuum grace above checkpoint-recovery lag):
+            # plan against the latest manifest — the same rows, since
+            # no live row sits below a bucket's floor
+            m = self._manifest(manifest.latest_version(self.root, self.topic))
+        floors = _bounds(m)[1]
+        spans = {}
+        for b, c in e.items():
+            upto = int(c)
             # clamp the chunk start at the snapshot's retained floor: a
             # consumer/earliest cursor far below a large floor would
             # otherwise emit ~hole/batch_size EMPTY tasks crawling seq
             # space no file retains (ADVICE r07); the clamp skips the
             # retention hole in one step, like latestOffset's admission
-            off = max(off, min(upto, floors.get(str(b), 0)))
+            spans[int(b)] = (max(int(s.get(b, 0)), min(upto, floors.get(b, 0))), upto)
+        data_dir = os.path.join(self.root, "topics", self.topic, "data")
+        parts: list[BucketPartition] = []
+        for b, rels in sorted(manifest.plan(m, spans).items()):
+            off, upto = spans[b]
             span = upto - off
-            span_files = files(b, off, upto) if span > 0 else []
-            if not span_files:
-                continue
             # Catch-up chunking (span > batch_size happens only on the
             # uncapped first offer / replay): a seq-range chunk can only
             # SKIP data at row-group granularity, so more chunks than
@@ -829,23 +758,25 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
             # large compacted file are far smaller than that, so decode
             # overlap per chunk stays bounded while a one-file backlog
             # still fans out). Steady-state triggers (span <=
-            # batch_size) are a single task as before.
+            # batch_size) are a single task as before. Chunks are cut
+            # from the bucket's planned list, never a fresh walk.
             want = -(-span // self.batch_size)
             if want > 1:
                 try:
-                    nbytes = sum(os.path.getsize(f) for f in span_files)
+                    nbytes = sum(
+                        os.path.getsize(os.path.join(data_dir, r)) for r in rels
+                    )
                 except OSError:
                     nbytes = 0
-                cap = max(
-                    len(span_files), -(-nbytes // _CATCH_UP_CHUNK_BYTES), 1
-                )
+                cap = max(len(rels), -(-nbytes // _CATCH_UP_CHUNK_BYTES), 1)
                 want = min(want, cap)
             width = -(-span // want)
             while off < upto:
                 hi = min(upto, off + width)
-                chunk = files(b, off, hi)
+                chunk = manifest.cut(m, rels, off, hi)
                 if chunk:
-                    parts.append(BucketPartition(chunk, b, off, None, upto=hi))
+                    files = [os.path.join(data_dir, r) for r in chunk]
+                    parts.append(BucketPartition(files, b, off, None, upto=hi))
                 off = hi
         # replay after a crash lands here without a commit() first, and
         # a post-restart batch may start from a checkpointed cursor this

@@ -1,6 +1,6 @@
 """The two logs of one topic, under one protocol: the single
-implementation of their path layout, topic-name validation, version
-listing, torn-read-hardened load, atomic version-slot claim and
+implementation of their path layout, topic-name validation, latest-
+version probe, torn-read-hardened load, atomic version-slot claim and
 optimistic commit loop, plus the append transaction both producers
 share, the rewrite transaction both compactions share, and the
 seq-range read planner.
@@ -33,12 +33,21 @@ file. A file without an entry (written before ranges were recorded) is
 served by every planner query, so older manifests read correctly with
 no upgrade step.
 
+:func:`plan` is the read planner, the one source of every topic read's
+files (``TopicStore`` reads and polls, ``offsets_for_times``, the batch
+reader and both stream tiers): given a version and per-bucket
+``[lo, hi)`` spans it walks ``files`` once and returns each bucket's
+overlapping files; :func:`cut` takes a chunk's files from one bucket's
+planned list without another walk. It keeps no cache, so nothing goes
+stale when a deleted topic's name is re-created at version 1.
+
 Spark-free on purpose: executor-side write tasks (the native sink)
 commit through this module where no SparkSession exists.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -127,12 +136,16 @@ def path(root: str, topic: str, version: int, log: str = LOG) -> str:
     return os.path.join(log_dir(root, topic, log), f"{version:020d}.json")
 
 
-def latest_version(root: str, topic: str, log: str = LOG) -> int:
-    """Newest committed version — one directory listing, no file reads
-    (the cheap cache-freshness probe). Raises FileNotFoundError when
-    the log has no version."""
+# Newest version this process has seen, per log directory: the start
+# of latest_version's probe. Only a hint — it is checked against the
+# disk on every call, so it needs no invalidation.
+_seen: dict[str, int] = {}
+
+
+def _listed(d: str, topic: str) -> int:
+    """Newest version by one directory listing."""
     try:
-        names = [n for n in os.listdir(log_dir(root, topic, log)) if n.endswith(".json")]
+        names = [n for n in os.listdir(d) if n.endswith(".json")]
     except FileNotFoundError:
         names = []
     if not names:
@@ -141,6 +154,26 @@ def latest_version(root: str, topic: str, log: str = LOG) -> int:
             "pass option('create_topic', 'true') to the sink"
         )
     return max(int(n[:-5]) for n in names)
+
+
+def latest_version(root: str, topic: str, log: str = LOG) -> int:
+    """Newest committed version — no file reads (the cheap
+    cache-freshness probe). Versions are claimed densely (v+1 after v)
+    and ``TopicStore.vacuum`` removes them oldest first, so the live
+    versions are a contiguous run ending at the newest, and probing
+    v+1, v+2, ... from any live version finds the newest. The probe
+    starts at the newest version this process saw for the log; the
+    directory is listed only when that version is gone (vacuumed, or
+    the topic was deleted and re-created). Raises FileNotFoundError when
+    the log has no version."""
+    d = log_dir(root, topic, log)
+    v = _seen.get(d)
+    if v is None or not os.path.exists(os.path.join(d, f"{v:020d}.json")):
+        v = _listed(d, topic)
+    while os.path.exists(os.path.join(d, f"{v + 1:020d}.json")):
+        v += 1
+    _seen[d] = v
+    return v
 
 
 def load(root: str, topic: str, version: int, log: str = LOG) -> dict:
@@ -179,14 +212,18 @@ def claim(slot: str, manifest: dict) -> bool:
     On filesystems without hard-link support (some FUSE/object-store
     mounts), falls back to an O_CREAT|O_EXCL claim — equally atomic on
     the NAME, but content lands after it appears, so :func:`load` keeps
-    a torn-read retry for that path."""
+    a torn-read retry for that path.
+
+    ``TopicStore.vacuum`` sweeps the tmp files of slots that already
+    exist (lost claims, or ones that crashed before their unlink), so a
+    tmp gone before its link is a lost claim, never a fallback."""
     tmp = f"{slot}.tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
         json.dump(manifest, f)
     try:
         os.link(tmp, slot)
         return True
-    except FileExistsError:
+    except (FileExistsError, FileNotFoundError):
         return False
     except OSError:
         try:
@@ -197,7 +234,8 @@ def claim(slot: str, manifest: dict) -> bool:
             f.write(src.read())
         return True
     finally:
-        os.unlink(tmp)
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
 
 
 def create(root: str, topic: str, n_buckets: int, config: dict | None = None) -> None:
@@ -473,14 +511,31 @@ def bucket_of(rel: str) -> int:
     return int(rel.split("/", 1)[0].split("=", 1)[1])
 
 
-def files_for(m: dict, bucket: int, lo: int, hi: int) -> list[str]:
-    """The read planner: live files of ``bucket`` whose seq range
-    overlaps the half-open ``[lo, hi)``, relative to the topic's data
-    dir. Files without a recorded range are always included."""
+def plan(m: dict, spans: dict[int, tuple[int, int]]) -> dict[int, list[str]]:
+    """The read planner, the one source of every topic read's files:
+    ONE walk of ``m["files"]`` returning, per bucket, its live files
+    (data-dir relative, in manifest order) whose seq range overlaps the
+    half-open span ``spans[bucket]``; a bucket missing from ``spans`` is
+    not read. An empty span plans nothing; a file without a recorded
+    range is always planned for its bucket's span. Buckets with no
+    planned file are absent. Nothing is cached across calls:
+    ``delete_topic`` then ``create_topic`` reuses version numbers."""
     ranges = m.get("seq_ranges", {})
-    out = []
+    out: dict[int, list[str]] = {}
     for rel in m["files"]:
-        r = ranges.get(rel)
-        if bucket_of(rel) == bucket and (r is None or (r[1] >= lo and r[0] < hi)):
-            out.append(rel)
+        b = bucket_of(rel)
+        span = spans.get(b)
+        if span is not None and span[0] < span[1] and _overlaps(ranges.get(rel), *span):
+            out.setdefault(b, []).append(rel)
     return out
+
+
+def cut(m: dict, rels: list[str], lo: int, hi: int) -> list[str]:
+    """The files of one bucket's planned list ``rels`` that overlap
+    ``[lo, hi)`` — a chunk of a :func:`plan`, with no second walk."""
+    ranges = m.get("seq_ranges", {})
+    return [rel for rel in rels if _overlaps(ranges.get(rel), lo, hi)]
+
+
+def _overlaps(r: list[int] | None, lo: int, hi: int) -> bool:
+    return r is None or (r[1] >= lo and r[0] < hi)

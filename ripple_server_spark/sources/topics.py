@@ -143,6 +143,18 @@ def _arrow_schema(ddl: str) -> "pa.Schema":
     return to_arrow_schema(StructType.fromDDL(ddl))
 
 
+def _remove_older(p: str, cutoff: float) -> bool:
+    """Remove ``p`` unless modified after ``cutoff``; True when it is
+    gone (also when a concurrent vacuum or claim removed it first)."""
+    try:
+        if os.path.getmtime(p) > cutoff:
+            return False
+        os.remove(p)
+    except FileNotFoundError:
+        pass
+    return True
+
+
 def _consumer_version(root: str, topic: str) -> int:
     """Newest version of the topic's consumer log, 0 before its first
     write (one listing). FileNotFoundError naming an unknown topic."""
@@ -311,7 +323,10 @@ class TopicStore:
         """Delete data files no manifest-latest references (compacted-
         away segments, truncated segments, crashed-produce orphans) and
         all but the newest version of the data manifest and of the
-        consumer-state log. Returns data files removed.
+        consumer-state log (oldest first), plus the temp files a lost or
+        crashed claim leaves in either log (``<version>.json.tmp-<hex>``
+        of a version at or below the newest, see :func:`manifest.claim`).
+        Returns data files removed.
 
         ``grace_s`` spares files modified within the last N seconds:
         a concurrent produce moves staged files into ``data/`` BEFORE
@@ -343,17 +358,26 @@ class TopicStore:
             (manifest.CONSUMER_LOG, _consumer_version(self.root, topic)),
         ):
             d = manifest.log_dir(self.root, topic, log)
-            for n in os.listdir(d) if newest else ():
-                p = os.path.join(d, n)
-                # grace applies to log versions too: an in-flight commit
-                # may still re-read its base version, and a pinned
-                # snapshot reader its pinned version
-                if (
-                    n.endswith(".json")
-                    and int(n[:-5]) < newest
-                    and os.path.getmtime(p) <= cutoff
-                ):
-                    os.remove(p)
+            try:
+                names = os.listdir(d)
+            except FileNotFoundError:  # no consumer log yet
+                continue
+            # superseded versions oldest first, stopping at the first one
+            # inside the grace window (an in-flight commit may still
+            # re-read its base, a pinned snapshot reader its pin): the
+            # live versions stay a contiguous run ending at the newest,
+            # also after a crash or beside a concurrent vacuum, which
+            # manifest.latest_version's probe relies on
+            for ver in sorted(int(n[:-5]) for n in names if n.endswith(".json")):
+                p = os.path.join(d, f"{ver:020d}.json")
+                if ver >= newest or not _remove_older(p, cutoff):
+                    break
+            # temp files of claims on a version that already exists: lost
+            # claims, or ones that crashed before their unlink (a newer
+            # slot's may be an in-flight claim about to link)
+            for n in names:
+                if ".json.tmp-" in n and int(n.split(".", 1)[0]) <= newest:
+                    _remove_older(os.path.join(d, n), cutoff)
         return removed
 
     # -- DDL (CreateBucket analog) ----------------------------------------
@@ -758,31 +782,28 @@ class TopicStore:
         """The rows of manifest ``m`` with ``seq > after[bucket]``; a
         bucket missing from ``after`` is read whole. The one Spark-side
         topic scan (:meth:`read_topic`, :meth:`read_increment`, the
-        rollup's tail): it opens only the files
-        :func:`manifest.files_for` plans for each bucket's tail, typed
+        rollup's tail): it opens only the files one
+        :func:`manifest.plan` walk plans for the buckets' tails, typed
         by the recorded schema. The exact per-bucket cut cannot reach
         parquet, so the global bound ``seq > min(after[b])`` over the
         planned buckets (−1 if one is missing) rides beside it and
         prunes row groups inside large compacted files."""
         ddl = _message_ddl(m) or "seq bigint, bucket int"
-        buckets = set(map(manifest.bucket_of, m["files"]))
-        first = {b: after.get(b, -1) + 1 for b in buckets}
-        planned = {
-            rel
-            for b, lo in first.items()
-            for rel in manifest.files_for(m, b, lo, datasource._SEQ_END)
-        }
+        end = datasource._SEQ_END
+        planned = manifest.plan(
+            m, {b: (after.get(b, -1) + 1, end) for b in range(int(m["n_buckets"]))}
+        )
         if not planned:
             return self.spark.createDataFrame([], ddl)
         data = self.data_dir(topic)
         df = (
             self.spark.read.option("basePath", data)
             .schema(ddl)
-            .parquet(*[os.path.join(data, rel) for rel in m["files"] if rel in planned])
+            .parquet(*[os.path.join(data, r) for rels in planned.values() for r in rels])
         )
         if not after:
             return df
-        bound = min(first[manifest.bucket_of(rel)] for rel in planned) - 1
+        bound = min(after.get(b, -1) for b in planned)
         pairs = [(F.lit(b), F.lit(x).cast("bigint")) for b, x in after.items()]
         cut = F.coalesce(F.create_map(*sum(pairs, ()))[F.col("bucket")], F.lit(-1))
         return df.filter((F.col("seq") > bound) & (F.col("seq") > cut))
@@ -1295,7 +1316,7 @@ class TopicStore:
         serves the retention floor, the high-water mark, the schema and
         the file list, and its per-file ``seq_ranges`` plan only the
         files of this bucket that overlap the range
-        (:func:`manifest.files_for`), so the cost does not grow with the
+        (:func:`manifest.plan`), so the cost does not grow with the
         log. ``count`` bounds the rows held on the driver, like Kafka's
         ``max.poll.records``."""
         _ddl, tbl, end = self._poll(consumer_id, topic, bucket, count)
@@ -1314,7 +1335,7 @@ class TopicStore:
         mx = int(m["maxima"].get(str(bucket), -1))
         end = offset + max(0, min(count, mx - offset + 1))
         ddl = _message_ddl(m) or "seq bigint, bucket int"
-        rels = manifest.files_for(m, bucket, offset, end) if end > offset else []
+        rels = manifest.plan(m, {bucket: (offset, end)}).get(bucket, [])
         data = self.data_dir(topic)
         part = datasource.BucketPartition(
             [os.path.join(data, r) for r in rels], bucket, offset, None, upto=end

@@ -81,14 +81,15 @@ def test_read_bucket_pushes_upto_bound_into_scan(spark, store):
     the batch's range, not the whole retained tail above the cursor."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    from ripple_server_spark.sources import manifest
     from ripple_server_spark.sources.datasource import (
+        _SEQ_END,
         BucketPartition,
-        _bucket_files,
         _read_bucket_arrow,
     )
 
-    buckets = dict(_bucket_files(store.root, "d1"))
-    files = buckets[0]
+    rels = manifest.plan(store.latest_manifest("d1")[1], {0: (0, _SEQ_END)})[0]
+    files = [os.path.join(store.data_dir("d1"), r) for r in rels]
     part = BucketPartition(files, 0, 3, None, upto=9)
     batches = list(_read_bucket_arrow(part, to_arrow_schema(_events_schema())))
     seqs = sorted(s for rb in batches for s in rb.column("seq").to_pylist())
@@ -693,9 +694,18 @@ def test_partitioned_catchup_chunks_split_within_bucket(spark, sf_dir, tmp_path)
     }
     parts2 = r2.partitions(start2, full_end2)
     assert len(parts2) > len(maxima2), "catch-up did not chunk within buckets"
+    # a version-less end offset is planned against the latest manifest:
+    # each chunk opens exactly the files overlapping its range
+    m2 = st.latest_manifest("pl")[1]
     by_bucket: dict[int, list] = {}
     for p in parts2:
-        assert len(p.files) == 5
+        want = {
+            rel
+            for rel, (lo, hi) in m2["seq_ranges"].items()
+            if rel.startswith(f"bucket={p.bucket}/") and hi >= p.offset and lo < p.upto
+        }
+        assert {os.path.relpath(f, st.data_dir("pl")) for f in p.files} == want
+        assert 1 <= len(p.files) < 5
         by_bucket.setdefault(p.bucket, []).append((p.offset, p.upto))
     for b, spans in by_bucket.items():
         assert len(spans) <= 5, "more chunks than files cannot prune"
@@ -764,7 +774,10 @@ def test_batch_reader_and_replay_plan_only_overlapping_files(
         st.produce(_wave(ev, lo, lo + 100), "pl")
     m = st.latest_manifest("pl")[1]
     data_dir = st.data_dir("pl")
-    every = dict(datasource._bucket_files(st.root, "pl"))
+    every = {
+        b: [os.path.join(data_dir, r) for r in rels]
+        for b, rels in manifest.plan(m, {b: (0, datasource._SEQ_END) for b in range(2)}).items()
+    }
 
     def overlapping(b, lo, hi):
         return {
@@ -829,6 +842,91 @@ def test_batch_reader_and_replay_plan_only_overlapping_files(
         assert len(p.files) < len(every[p.bucket])
     served = {b: sorted(r["seq"] for r in rows if r["bucket"] == b) for b in every}
     assert served == {0: seqs(every[0], 40, 170), 1: seqs(every[1], 120, 190)}
+
+
+def test_one_plan_visits_each_live_file_once(spark, sf_dir, tmp_path, monkeypatch):
+    """Every read plan is ONE walk of the manifest's files, whatever the
+    bucket count and the chunk count: a chunked catch-up offer's
+    partitions() over an 8-bucket topic, TopicStore._read (whole, and
+    past per-bucket cuts) and a poll each parse every live file's
+    bucket exactly once."""
+    from ripple_server_spark.sources import manifest
+
+    st = TopicStore(spark, str(tmp_path / "walk_topics"))
+    st.create_topic("pl", n_buckets=8)
+    ev = load_table(spark, sf_dir, "events")
+    for lo in range(0, 500, 100):
+        st.produce(_wave(ev, lo, lo + 100), "pl")
+    _v, m = st.latest_manifest("pl")
+    r = _planner(st, batch_size=10)
+    end = r.latestOffset()  # a fresh reader's first offer: the whole log
+    visited: list[str] = []
+    real = manifest.bucket_of
+
+    def counting(rel):
+        visited.append(rel)
+        return real(rel)
+
+    monkeypatch.setattr(manifest, "bucket_of", counting)
+    parts = r.partitions({"cursors": "{}"}, end)
+    assert len({p.bucket for p in parts}) == 8
+    assert len(parts) > 8, "catch-up did not chunk within buckets"
+    assert sorted(visited) == sorted(m["files"])
+    for after in ({}, {b: 20 for b in range(8)}):
+        visited.clear()
+        assert st._read("pl", m, after).inputFiles()
+        assert sorted(visited) == sorted(m["files"])
+    visited.clear()
+    st.poll("walker", "pl", 3, 40)
+    assert sorted(visited) == sorted(m["files"])
+
+
+@pytest.mark.parametrize("case", ["versioned", "version_less", "vacuumed_pin"])
+def test_simple_and_partitioned_tiers_serve_the_same_rows(spark, sf_dir, tmp_path, case):
+    """For one set of start cursors — one below a retention floor — the
+    simple tier's readBetweenOffsets and the partitioned tier's
+    partitions + read serve identical rows, exactly the retained seqs of
+    ``[start, end)``: for an end offset pinned to a version, for a
+    version-less end offset, and for a pinned version vacuumed away
+    (both served from the latest manifest)."""
+    import json
+
+    from ripple_server_spark.sources import datasource, manifest
+
+    st = TopicStore(spark, str(tmp_path / "tier_topics"))
+    st.create_topic("pl", n_buckets=2)
+    ev = load_table(spark, sf_dir, "events")
+    st.produce(_wave(ev, 0, 100), "pl")
+    first = st._bucket_maxima("pl")
+    for lo in range(100, 400, 100):
+        st.produce(_wave(ev, lo, lo + 100), "pl")
+    assert st.truncate("pl", before_seq=max(first.values()) + 1) >= 2
+    v, m = st.latest_manifest("pl")
+    floors = {int(b): x for b, x in m["floors"].items()}
+    s = {0: 0, 1: floors[1] + 7}
+    e = {b: int(mx) - 5 for b, mx in m["maxima"].items()}
+    start = {"cursors": json.dumps({str(b): c for b, c in s.items()})}
+    end = {"cursors": json.dumps(e, sort_keys=True), "topic": "pl"}
+    if case != "version_less":
+        end["version"] = str(v)
+    if case == "vacuumed_pin":
+        st.produce(_wave(ev, 400, 500), "pl")
+        st.vacuum("pl")
+        assert not os.path.exists(manifest.path(st.root, "pl", v))
+    opts = {"root": st.root, "topic": "pl", "batch_size": "50"}
+    simple = datasource.RippleTopicStreamReader(dict(opts), _events_schema())
+    got = {"simple": [row for rb in simple.readBetweenOffsets(start, end) for row in rb.to_pylist()]}
+    part = datasource.RippleTopicPartitionedStreamReader(dict(opts), _events_schema())
+    got["partitioned"] = [
+        row for p in part.partitions(start, end) for rb in part.read(p) for row in rb.to_pylist()
+    ]
+    assert got["simple"] == got["partitioned"]
+    want = [
+        (b, q)
+        for b in (0, 1)
+        for q in range(max(s[b], floors[b]), e[str(b)])
+    ]
+    assert sorted((row["bucket"], row["seq"]) for row in got["simple"]) == want
 
 
 def test_partitioned_read_yields_sorted_arrow_batches(spark, planner_store):
@@ -2295,7 +2393,8 @@ def test_evolved_column_missing_from_first_file_reads_as_typed_nulls(
     same version, by the batch reader and the stream."""
     import pyarrow.parquet as pq
 
-    from ripple_server_spark.sources.datasource import _bucket_files
+    from ripple_server_spark.sources import manifest
+    from ripple_server_spark.sources.datasource import _SEQ_END
 
     spark.dataSource.register(RippleTopicDataSource)
     st = TopicStore(spark, str(tmp_path / "evo_topics"))
@@ -2313,8 +2412,11 @@ def test_evolved_column_missing_from_first_file_reads_as_typed_nulls(
         .save()
     )
     st.produce(_wave(ev, 50, 100).withColumn("lang", F.lit("en")), "evo")
-    for _b, files in _bucket_files(st.root, "evo"):
-        assert "lang" not in pq.read_schema(files[0]).names
+    m = st.latest_manifest("evo")[1]
+    planned = manifest.plan(m, {b: (0, _SEQ_END) for b in range(int(m["n_buckets"]))})
+    for _b, rels in planned.items():
+        first = os.path.join(st.data_dir("evo"), rels[0])
+        assert "lang" not in pq.read_schema(first).names
     version = st.latest_manifest("evo")[0]
     want = st.read_topic("evo", version=version)
     batch = (

@@ -664,3 +664,183 @@ def test_concurrent_produces_and_sink_write_keep_seqs_contiguous(
         assert r["nd"] == r["n"], "overlapping seqs"
         assert (r["lo"], r["hi"]) == (0, r["n"] - 1), "non-contiguous seqs"
         assert maxima[r["bucket"]] == r["hi"]
+
+
+def test_latest_version_lists_a_log_only_when_its_last_seen_version_is_gone(
+    tmp_path, monkeypatch
+):
+    """latest_version probes v+1 upward from the newest version this
+    process saw for a log: after one first listing per log, ~50 commits
+    and reads of the data manifest and of the consumer-state log list
+    no directory. A re-created topic and a vacuumed hint are each
+    resolved right (one listing where the hinted version is gone), and a
+    re-created topic that grew past the old hint is probed, not listed."""
+    root = str(tmp_path / "store")
+    st = TopicStore(None, root)
+    manifest.create(root, "lv", 2)
+    listings: list[str] = []
+    real = os.listdir
+
+    def counting(p="."):
+        listings.append(str(p))
+        return real(p)
+
+    monkeypatch.setattr(manifest.os, "listdir", counting)
+
+    def same(m: dict) -> dict:
+        return m
+
+    def traffic(i: int) -> None:
+        manifest.commit(root, "lv", manifest.latest_version(root, "lv"), same)
+        manifest.latest(root, "lv")
+        st.commit("c", "lv", i % 2, i)
+        st.committed_offsets("c", "lv")
+
+    traffic(1)  # first contact with each log
+    listings.clear()
+    for i in range(2, 14):
+        traffic(i)
+    assert listings == []
+    seen = manifest.latest_version(root, "lv")
+    assert seen == 14 and st.committed_offsets("c", "lv") == {0: 12, 1: 13}
+
+    # re-created and grown past the old hint with no read in between:
+    # the hinted version is live again, and the probe finds the top
+    st.delete_topic("lv")
+    manifest.create(root, "lv", 2)
+    v = 1
+    while v < seen + 2:
+        v = manifest.commit(root, "lv", v, same)["version"]
+    listings.clear()
+    assert manifest.latest_version(root, "lv") == seen + 2
+    assert listings == []
+
+    # re-created under the same name: the hinted version is gone, so
+    # one listing finds the new log's version 1
+    st.delete_topic("lv")
+    manifest.create(root, "lv", 2)
+    listings.clear()
+    assert manifest.latest_version(root, "lv") == 1
+    assert len(listings) == 1
+    assert st.committed_offsets("c", "lv") == {}
+
+    # the hinted version vacuumed away (as another process's vacuum
+    # would): one listing
+    v = 1
+    for _ in range(3):
+        v = manifest.commit(root, "lv", v, same)["version"]
+    log = manifest.log_dir(root, "lv")
+    for n in real(log):
+        if n.endswith(".json") and int(n[:-5]) < v:
+            os.remove(os.path.join(log, n))
+    listings.clear()
+    assert manifest.latest_version(root, "lv") == v
+    assert len(listings) == 1
+
+
+def test_vacuum_reclaims_crashed_claim_temp_files_past_grace(tmp_path):
+    """A claim that loses, or crashes between writing its temp file and
+    unlinking it, leaves ``<version>.json.tmp-<hex>`` in the log
+    directory. vacuum removes such files in both logs once they are
+    older than its grace window, and leaves younger ones alone. A temp
+    file of a version past the newest may be an in-flight claim about to
+    link, so it stays whatever its age."""
+    import time
+
+    root = str(tmp_path / "store")
+    st = TopicStore(None, root)
+    manifest.create(root, "tv", 2)
+    st.commit("c", "tv", 0, 1)  # creates the consumer-state log
+    made = {}
+    for log in (manifest.LOG, manifest.CONSUMER_LOG):
+        for age, tag, slot in ((3600, "0ld0ld00", 1), (0, "fresh000", 1), (3600, "next0000", 2)):
+            p = os.path.join(manifest.log_dir(root, "tv", log), f"{slot:020d}.json.tmp-{tag}")
+            with open(p, "w") as f:
+                f.write("{")
+            t = time.time() - age
+            os.utime(p, (t, t))
+            made[p] = tag != "0ld0ld00"
+    st.vacuum("tv", grace_s=60)
+    for p, kept in made.items():
+        assert os.path.exists(p) == kept, p
+    assert manifest.latest_version(root, "tv") == 1
+    assert st.committed_offsets("c", "tv") == {0: 1}
+
+
+def test_claim_whose_temp_file_is_swept_before_its_link_is_lost(tmp_path, monkeypatch):
+    """A vacuum may sweep a losing claim's temp file between its write
+    and its link. The claim then reports a loss: it publishes no empty
+    version (which would leave the log unreadable) and raises nothing,
+    and a commit through it lands intact on its retry."""
+    root = str(tmp_path / "store")
+    manifest.create(root, "sw", 2)
+    real = os.link
+    swept = []
+
+    def sweep_then_link(src, dst):
+        if not swept:
+            swept.append(src)
+            os.remove(src)
+        return real(src, dst)
+
+    monkeypatch.setattr(manifest.os, "link", sweep_then_link)
+    slot = manifest.path(root, "sw", 2)
+    assert manifest.claim(slot, {"version": 2}) is False
+    assert not os.path.exists(slot)
+    assert os.listdir(manifest.log_dir(root, "sw")) == [f"{1:020d}.json"]
+
+    swept.clear()
+    m = manifest.commit(root, "sw", 1, lambda m: {**m, "config": {"k": 1}})
+    assert len(swept) == 1 and m["version"] == 2
+    assert manifest.latest(root, "sw")[1]["config"] == {"k": 1}
+
+
+def test_vacuum_keeps_live_versions_a_contiguous_run(tmp_path, monkeypatch):
+    """latest_version probes upward from the newest version this process
+    saw, which finds the newest only while the live versions are a
+    contiguous run ending at it. vacuum keeps them so: it removes
+    superseded versions oldest first, stops at the first one inside its
+    grace window, and a vacuum that dies partway leaves a run too — a
+    hint on any live version still resolves to the newest."""
+    import time
+
+    root = str(tmp_path / "store")
+    st = TopicStore(None, root)
+    manifest.create(root, "cv", 2)
+    v = 1
+    for _ in range(7):
+        v = manifest.commit(root, "cv", v, lambda m: m)["version"]
+    log = manifest.log_dir(root, "cv")
+
+    def live() -> list[int]:
+        return sorted(int(n[:-5]) for n in os.listdir(log) if n.endswith(".json"))
+
+    # versions 1-8, all old except 4: 1-3 go, 4 stops the sweep, 5-7 stay
+    old = time.time() - 3600
+    for ver in range(1, v + 1):
+        if ver != 4:
+            os.utime(manifest.path(root, "cv", ver), (old, old))
+    st.vacuum("cv", grace_s=60)
+    assert live() == [4, 5, 6, 7, 8]
+
+    # a vacuum killed after two removals: oldest first, so no gap
+    removed = []
+    real = os.remove
+
+    def dies_on_third(p):
+        if len(removed) == 2:
+            raise RuntimeError("killed")
+        removed.append(os.path.basename(p))
+        real(p)
+
+    monkeypatch.setattr(os, "remove", dies_on_third)
+    with pytest.raises(RuntimeError, match="killed"):
+        st.vacuum("cv", grace_s=0)
+    monkeypatch.setattr(os, "remove", real)
+    assert removed == [f"{4:020d}.json", f"{5:020d}.json"]
+    assert live() == [6, 7, 8]
+
+    # a stale hint on the oldest live version probes up to the newest
+    manifest._seen[log] = 6
+    assert manifest.latest_version(root, "cv") == 8
+    assert manifest.commit(root, "cv", 8, lambda m: m)["version"] == 9

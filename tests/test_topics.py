@@ -1575,8 +1575,8 @@ def test_consume_materializes_in_one_job_in_seq_order(polled):
 def test_read_increment_plans_only_the_tail_files(polled):
     """Building an increment over a 300+ file log runs no Spark job
     (no listing job over the whole snapshot; the caller's job group is
-    left as it was) and opens exactly the files manifest.files_for
-    plans past each bucket's base maximum."""
+    left as it was) and opens exactly the files manifest.plan plans
+    past each bucket's base maximum."""
     import os
     from urllib.parse import urlparse
 
@@ -1597,11 +1597,8 @@ def test_read_increment_plans_only_the_tail_files(polled):
         for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(k, None)
     base_max = {int(b): x for b, x in base["maxima"].items()}
-    want = {
-        rel
-        for b in range(int(m["n_buckets"]))
-        for rel in manifest.files_for(m, b, base_max.get(b, -1) + 1, 2**63 - 1)
-    }
+    spans = {b: (base_max.get(b, -1) + 1, 2**63 - 1) for b in range(int(m["n_buckets"]))}
+    want = {rel for rels in manifest.plan(m, spans).values() for rel in rels}
     got = {
         os.path.relpath(urlparse(f).path, st.data_dir("pp")) for f in inc.inputFiles()
     }
@@ -1791,7 +1788,7 @@ def test_poll_consume_and_read_topic_return_one_range(one_range, case):
         assert st.committed_offsets(consumer, topic).get(b, 0) < offset
     if case == "lagging_poll_over_many_files":
         m = st.latest_manifest(topic)[1]
-        assert len(manifest.files_for(m, b, offset, nxt)) > 32
+        assert len(manifest.plan(m, {b: (offset, nxt)})[b]) > 32
 
 
 def test_type_clash_fails_every_read_with_the_column_named(spark, tmp_path):
