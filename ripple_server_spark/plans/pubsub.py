@@ -10,7 +10,10 @@ these batch forms share the window logic and carry the oracles.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -18,6 +21,18 @@ from pyspark.sql import functions as F
 from ripple_server_spark.catalog import load_table
 from ripple_server_spark.functions.scalar import xor_fingerprint48
 from ripple_server_spark.plans.registry import query
+
+
+def _scratch_root(name: str, sf_dir: str) -> str:
+    """An emptied scratch directory for one query's topics,
+    ``<tmp>/ripple_<name>_<md5(sf_dir)[:12]>``: stable per (query, scale
+    factor), so a rerun replaces its own files."""
+    root = os.path.join(
+        tempfile.gettempdir(),
+        f"ripple_{name}_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
+    )
+    shutil.rmtree(root, ignore_errors=True)
+    return root
 
 
 @query(
@@ -219,10 +234,6 @@ def q_payload_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket); the consume is a bucket-pruned, seq-range row-group read —
     identical plan shape to q_consume_offset_range but over binary
     values."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
@@ -231,11 +242,7 @@ def q_payload_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).alias("payload")
     batch_df = ev.select("event_id", "user_id", "ts", payload)
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_payload_roundtrip_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("payload_roundtrip", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("payloads", n_buckets=8)
     store.produce(batch_df, "payloads", key_col="user_id")
@@ -275,20 +282,12 @@ def q_fanout_replicas(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, N DistCp-style jobs or storage-level replication); the
     parity check is one union + partial-aggregated groupBy per replica.
     """
-    import hashlib
-    import shutil
-    import tempfile
-
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") < 1500)
         .select("event_id", "user_id", "event_type", "value", "ts")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_fanout_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("fanout", sf_dir)
     for i in range(3):
         ev.write.mode("overwrite").parquet(f"{root}/rep{i}/batch=0")
     # replayed delivery of the same batch id: overwrite, not append
@@ -339,18 +338,10 @@ def q_topic_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a version read lists the pinned manifest's files — O(files
     in snapshot), no log replay; compaction cost is amortized
     maintenance (sources/maintenance.py)."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_time_travel_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("time_travel", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("tt", n_buckets=4)
     store.produce(
@@ -406,18 +397,10 @@ def q_consumer_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: depth is a partial-agg count per bucket; committed offsets
     are O(consumers x buckets) metadata — the report is a broadcast
     join of metadata against the depth aggregate."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_consumer_lag_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("consumer_lag", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("lagtest", n_buckets=4)
     store.produce(
@@ -473,18 +456,10 @@ def q_topic_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: evolution costs one manifest flag; the merged-footer read is
     O(files in snapshot) and compaction resets it."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_schema_evo_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("schema_evo", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("evo", n_buckets=4)
     store.produce(
@@ -718,19 +693,11 @@ def q_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     past each bucket's HWM are planned) x affected hours, never a full
     log rescan; the rewrite touches only the partitions whose hours appear
     in the tail (dynamic partition overwrite)."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.rollup import HourlyRollup
     from ripple_server_spark.sources.topics import TopicStore
 
     ev = load_table(spark, sf_dir, "events")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_rollup_inc_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("rollup_inc", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("ri", n_buckets=4)
     roll = HourlyRollup(spark, store, "ri", os.path.join(root, "rollup"))
@@ -783,18 +750,10 @@ def q_topic_increment_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the consumer cursor resume
     (consumer/server/core.go:46-63) done as a table-format contract
     instead of a ZK offset."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_increment_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("increment", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("ci", n_buckets=4)
     store.produce(ev.filter(F.col("event_id") % 2 == 0), "ci", key_col="user_id")
@@ -846,10 +805,6 @@ def q_native_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     own parquet into the bucket dirs and the only serialized work is
     the O(KB) manifest commit, the same single-leader-log bound the
     reference's broker has."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.datasource import RippleTopicDataSource
     from ripple_server_spark.sources.topics import TopicStore
 
@@ -859,11 +814,7 @@ def q_native_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") < 2500)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_native_sink_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("native_sink", sf_dir)
     TopicStore(spark, root).create_topic("ns", n_buckets=8)
     (
         ev.repartition(4)
@@ -924,10 +875,6 @@ def q_rollup_refresh_single(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partial aggregation map-side); the write is hour-partitioned
     parquet. Refresh cost ~ new data, the property the incremental
     scenario then exercises across two deltas."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.rollup import HourlyRollup
     from ripple_server_spark.sources.topics import TopicStore
 
@@ -938,11 +885,7 @@ def q_rollup_refresh_single(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts") < F.lit("2024-01-10").cast("timestamp")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_rollup_one_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("rollup_one", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("r1", n_buckets=4)
     roll = HourlyRollup(spark, store, "r1", os.path.join(root, "rollup"))
@@ -986,10 +929,6 @@ def q_subscribe_pattern_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the read itself is the same per-bucket partition-parallel scan as a
     fixed-list subscription — no extra shuffle for the attribution
     column (it is a partition-constant)."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.datasource import RippleTopicDataSource
     from ripple_server_spark.sources.topics import TopicStore
 
@@ -997,11 +936,7 @@ def q_subscribe_pattern_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_subpattern_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("subpattern", sf_dir)
     store = TopicStore(spark, root)
     slices = {
         "logs_a": ev.filter(F.col("event_id") < 700),
@@ -1060,10 +995,6 @@ def q_stream_handover_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the handover itself is O(buckets) JSON IO — one offset-WAL
     read + one consumer-offset write; no data moves."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.datasource import RippleTopicDataSource
     from ripple_server_spark.sources.topics import TopicStore
     from ripple_server_spark.streaming.api import commit_stream_position
@@ -1072,11 +1003,7 @@ def q_stream_handover_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_handover_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("handover", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("h", n_buckets=4)
     store.produce(ev.filter(F.col("event_id") < 1200), "h", key_col="user_id")
@@ -1150,20 +1077,12 @@ def q_bucket_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the expansion itself is O(KB) metadata — the operational
     cost of raising a topic's parallelism at 100 TB."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_expand_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("expand", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("bx", n_buckets=2)
     store.produce(ev.filter(F.col("event_id") < 900), "bx", key_col="user_id")
@@ -1221,10 +1140,6 @@ def q_consumer_group_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     fenced commits (group_id + generation), which store the offsets in
     that entry, per (group, bucket); an ungated commit by a member is
     refused."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     ev = (
@@ -1232,11 +1147,7 @@ def q_consumer_group_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") < 2000)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_group_drain_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("group_drain", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("gd", n_buckets=8)
     store.produce(ev, "gd", key_col="user_id")
@@ -1288,10 +1199,6 @@ def q_topic_sql_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the view is a plan wrapper — filters/projections written in
     SQL still push into the DataSource scan exactly as through the
     DataFrame reader."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.catalog import register_topic_view
     from ripple_server_spark.sources.topics import TopicStore
 
@@ -1302,11 +1209,7 @@ def q_topic_sql_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") < 1500)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_sql_view_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("sql_view", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("sv", n_buckets=8)
     store.produce(ev, "sv")
@@ -1359,10 +1262,6 @@ def q_seek_to_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     per bucket with the ts predicate pushed in (row-group pruning below
     T) and min(seq) folded over its batches; the replay read is
     bucket-pruned with the seq floor in row-group stats."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     T_MS = 1705276800000  # 2024-01-15T00:00:00Z
@@ -1371,11 +1270,7 @@ def q_seek_to_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") < 3000)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_seek_ts_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("seek_ts", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("tt", n_buckets=8)
     store.produce(ev, "tt", key_col="user_id")
@@ -1442,10 +1337,6 @@ def q_retention_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver scan of [ts, seq] (no Spark job) + manifest seq-range file
     drops — no data is rewritten; vacuum does physical deletion
     later."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     T_MS = 1705276800000  # 2024-01-15T00:00:00Z
@@ -1454,11 +1345,7 @@ def q_retention_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") < 3000)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_ret_time_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("ret_time", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("rt", n_buckets=8)
     t_lit = F.timestamp_millis(F.lit(T_MS))
@@ -1532,10 +1419,6 @@ def q_topic_key_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned readers keep the old snapshot until vacuum. A count/hash
     mismatch here means a superseded row survived or a latest row was
     dropped."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     ev = (
@@ -1543,11 +1426,7 @@ def q_topic_key_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") < 3000)
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_key_compact_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("key_compact", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("kc", n_buckets=8)
     for w in range(3):
@@ -1610,10 +1489,6 @@ def q_topic_tombstone_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same single map-side-combined max_by shuffle as
     q_topic_key_compaction plus a survivors filter — tombstone cost is
     O(live keys), never a second pass."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     ev = (
@@ -1639,11 +1514,7 @@ def q_topic_tombstone_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("double").alias("value2"),
         )
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_tombstone_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("tombstone", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("tk", n_buckets=8)
     store.produce(ev, "tk")
@@ -1751,10 +1622,6 @@ def q_topic_tombstone_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_by shuffle as q_topic_key_compaction — the retention filter is
     a codegen predicate on the survivor set, never a second pass over
     the log."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ripple_server_spark.sources.topics import TopicStore
 
     ev = (
@@ -1783,11 +1650,7 @@ def q_topic_tombstone_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("double").alias("value2"),
         )
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "ripple_tombret_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("tombret", sf_dir)
     store = TopicStore(spark, root)
     store.create_topic("tr", n_buckets=8)
     store.produce(ev, "tr")

@@ -327,12 +327,12 @@ def offsets_for_times(root: str, topic: str, epoch_ms: int) -> dict[int, int]:
     if ts_type is None:
         # a ts-less topic (native sink with a custom schema) cannot be
         # time-positioned: a named contract error, the message a
-        # retain_ms cycle or a start_at=timestamp stream surfaces
+        # retention.ms cycle or a start_at=timestamp stream surfaces
         raise ValueError(
             f"topic {topic!r} has no 'ts' column (recorded schema: "
             f"{list(recorded)}); time-based positioning "
             "(offsets_for_times / seek_to_timestamp / start_at=timestamp "
-            "/ retain_ms) requires a timestamp column named 'ts'"
+            "/ retention.ms) requires a timestamp column named 'ts'"
         )
     t_us = max(int(epoch_ms) * 1000, -(2**63))
     if t_us > _SEQ_END:

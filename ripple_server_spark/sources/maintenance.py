@@ -11,10 +11,20 @@ reclaim unreferenced files — all through the same manifest commit
 protocol the writers use, so a cycle can run concurrently with
 produces without breaking snapshot isolation.
 
+What a cycle cleans is the topic's cleanup policy, topic-level config
+as in Kafka (``cleanup.policy``, ``retention.ms``, ... — described on
+``TopicStore.topic_config`` and parsed by ``topics.cleanup_policy``):
+each cycle reads it from the manifest it loads first, so
+``alter_topic_config`` reaches a running loop at its next cycle. The
+loop itself holds only the cleaner's schedule, the analogs of Kafka's
+broker-level ``log.retention.check.interval.ms`` and
+``log.cleaner.backoff.ms``.
+
 Two trigger forms, mirroring Structured Streaming's triggers:
 
 - :meth:`TopicMaintenance.run_once` — the ``Trigger.AvailableNow``
-  shape: one compact -> truncate -> vacuum cycle, returns its stats.
+  shape: one retention -> key compaction -> compaction -> vacuum
+  cycle, returns its stats.
 - :meth:`TopicMaintenance.start` / :meth:`stop` — the
   ``Trigger(processingTime=...)`` shape: a daemon thread fires a cycle
   every ``interval_s`` until stopped. Cycle errors are recorded in
@@ -36,7 +46,7 @@ import threading
 import time
 from dataclasses import dataclass, field
 
-from ripple_server_spark.sources.topics import TopicStore
+from ripple_server_spark.sources.topics import TopicStore, cleanup_policy
 
 DEFAULT_VACUUM_GRACE_S = 60.0
 
@@ -54,75 +64,33 @@ class CycleStats:
 
 @dataclass
 class TopicMaintenance:
-    """Periodic compact + retention + vacuum for one topic.
+    """Periodic retention + key compaction + compaction + vacuum for one
+    topic. The loop holds only the cleaner's schedule; what to clean is
+    the topic's cleanup policy, read from its config at the start of
+    every cycle (:meth:`TopicStore.topic_config` describes the keys), so
+    an ``alter_topic_config`` takes effect at the next cycle.
 
-    ``retain_seqs``: per-bucket retention depth — a cycle truncates
-    files wholly below ``min_bucket_max - retain_seqs + 1`` (file
-    granularity, so the retained floor is conservative). ``None``
-    disables retention (compact + vacuum only).
-
-    ``retain_ms``: TIME-based retention (Kafka ``retention.ms``) — a
-    cycle ages out files wholly older than ``now - retain_ms`` via
-    ``TopicStore.truncate_before_timestamp``. Composes with
-    ``retain_seqs`` (both None disables retention; both set drops the
-    UNION of what each bound ages out, so whichever bound retains
-    LESS determines what survives — Kafka's either-limit-violating
-    deletion). The time pass scans the retained log's ``ts`` on the
-    driver (row-group-pruned on round-9+ files, which carry micros ts
-    statistics; pre-round-9 INT96 files scan), so it is rate-limited by
-    ``retention_check_interval_s`` (Kafka's
-    ``log.retention.check.interval.ms``, default 5 min) rather than
-    run every cycle.
+    A cycle runs, in order: retention (``retention.seqs``, then the
+    ``retention.ms`` pass at most every ``retention_check_interval_s``,
+    Kafka's ``log.retention.check.interval.ms``), key compaction (under
+    a ``compact`` policy, at most every ``key_compaction_interval_s``,
+    the ``log.cleaner.backoff.ms`` analog, and only past the
+    ``min.cleanable.dirty.ratio`` gate), compaction, and vacuum with
+    ``vacuum_grace_s``. Both rate-limit windows are stamped only after
+    their pass succeeds, so a failed pass is retried the next cycle.
 
     ``compact_when_files_over``: compact only when the live file count
     exceeds this; defaults to ``n_buckets`` (the post-compact state is
     exactly one file per non-empty bucket, so more files than buckets
     means produce segments have accumulated).
-
-    ``cleanup_policy`` (Kafka ``cleanup.policy``): ``"delete"`` (the
-    default — retention only), ``"compact"`` (periodic
-    ``compact_by_key`` on ``key_col``: retain-latest-per-key, the
-    Kafka log-cleaner thread), or ``"compact,delete"`` (both, Kafka's
-    combined mode — retention ages out whole old segments AND the
-    cleaner collapses superseded keys in what survives). Key
-    compaction costs a full live-log scan + rewrite, so it is gated
-    TWICE, exactly like Kafka's cleaner: rate-limited by
-    ``key_compaction_interval_s`` (the ``log.cleaner.backoff.ms``
-    analog, stamped only after a successful pass — same
-    retry-on-failure contract as time retention) AND by
-    ``min_dirty_ratio`` (Kafka ``min.cleanable.dirty.ratio``, default
-    0.5): the cleaner runs only when dirty bytes — live bytes not
-    covered by the manifest's cleaner checkpoint — are at least that
-    fraction of the log. The ratio is O(manifest) filesystem stats
-    (``TopicStore.key_compaction_dirty_ratio``), so a quiet compacted
-    topic burns ZERO Spark jobs per cycle instead of a full live-log
-    scan every interval (VERDICT r10 item 2; the reference's cron
-    analog never wired its jobs at all, broker.go:51,79).
-    ``min_dirty_ratio=0.0`` restores the unconditional pre-r11 cleaner.
-
-    ``tombstone_retention_ms`` (Kafka ``delete.retention.ms``): passed
-    through to ``compact_by_key`` — a key's latest-tombstone row
-    survives the cleaner while its event time is inside the window, so
-    lagging consumers still observe deletes; the pass after the window
-    removes it. The cleaner declines to checkpoint files holding
-    retained tombstones as clean, so the dirty-ratio gate cannot starve
-    that second pass.
     """
 
     store: TopicStore
     topic: str
     interval_s: float = 30.0
-    retain_seqs: int | None = None
-    retain_ms: int | None = None
     retention_check_interval_s: float = 300.0
-    compact_when_files_over: int | None = None
-    cleanup_policy: str = "delete"
-    key_col: str = "user_id"
-    tombstone_col: str | None = None
-    tombstone_retention_ms: int = 0
-    compaction_order_by: str | None = None
     key_compaction_interval_s: float = 300.0
-    min_dirty_ratio: float = 0.5
+    compact_when_files_over: int | None = None
     vacuum_grace_s: float = DEFAULT_VACUUM_GRACE_S
     history: list[CycleStats] = field(default_factory=list)
 
@@ -131,37 +99,29 @@ class TopicMaintenance:
         self._thread: threading.Thread | None = None
         self._last_time_check: float = float("-inf")
         self._last_key_compaction: float = float("-inf")
-        policies = {p.strip() for p in self.cleanup_policy.split(",") if p.strip()}
-        if not policies <= {"delete", "compact"}:
-            raise ValueError(
-                f"cleanup_policy must be 'delete', 'compact' or "
-                f"'compact,delete', got {self.cleanup_policy!r}"
-            )
-        self._compact_keys = "compact" in policies
 
     # -- one cycle (Trigger.AvailableNow analog) ---------------------------
     def run_once(self) -> CycleStats:
         st = CycleStats()
         try:
             v, m = self.store.latest_manifest(self.topic)
+            policy = cleanup_policy(m.get("config", {}))
             st.files_before = len(m["files"])
             # Retention BEFORE compaction: aging out drops whole files,
             # so it must see the previous cycle's compacted segments —
             # compacting first would merge expired rows into fresh
             # files and retention would never fire.
-            if self.retain_seqs is not None:
-                maxima = self.store._bucket_maxima(self.topic)
-                if maxima:
-                    before = min(maxima.values()) - self.retain_seqs + 1
-                    if before > 0:
-                        st.truncated_files = self.store.truncate(self.topic, before)
-                        v, m = self.store.latest_manifest(self.topic)
+            if policy.retain_seqs is not None and m["maxima"]:
+                before = min(m["maxima"].values()) - policy.retain_seqs + 1
+                if before > 0:
+                    st.truncated_files = self.store.truncate(self.topic, before)
+                    v, m = self.store.latest_manifest(self.topic)
             now = time.time()
             if (
-                self.retain_ms is not None
+                policy.retain_ms is not None
                 and now - self._last_time_check >= self.retention_check_interval_s
             ):
-                cutoff_ms = int(now * 1000) - int(self.retain_ms)
+                cutoff_ms = int(now * 1000) - policy.retain_ms
                 st.truncated_files += self.store.truncate_before_timestamp(
                     self.topic, cutoff_ms
                 )
@@ -178,7 +138,7 @@ class TopicMaintenance:
             # one file per bucket, so a cleaner pass usually makes the
             # OPTIMIZE below a no-op). Same stamp-after-success rule.
             if (
-                self._compact_keys
+                policy.compact
                 and now - self._last_key_compaction
                 >= self.key_compaction_interval_s
             ):
@@ -189,14 +149,14 @@ class TopicMaintenance:
                 # the window unconsumed for a retry next cycle.
                 if (
                     self.store.key_compaction_dirty_ratio(self.topic)
-                    >= self.min_dirty_ratio
+                    >= policy.min_dirty_ratio
                 ):
                     st.key_dropped = self.store.compact_by_key(
                         self.topic,
-                        key_col=self.key_col,
-                        tombstone_col=self.tombstone_col,
-                        tombstone_retention_ms=self.tombstone_retention_ms,
-                        order_by=self.compaction_order_by,
+                        key_col=policy.key_col,
+                        tombstone_col=policy.tombstone_col,
+                        tombstone_retention_ms=policy.tombstone_retention_ms,
+                        order_by=policy.compaction_order_by,
                     )
                 self._last_key_compaction = now
                 v, m = self.store.latest_manifest(self.topic)
@@ -250,38 +210,3 @@ class TopicMaintenance:
     def __exit__(self, *exc) -> None:
         self.stop()
 
-
-def maintenance_from_config(
-    store: TopicStore, topic: str, **overrides
-) -> TopicMaintenance:
-    """Build a :class:`TopicMaintenance` from the TOPIC's own config
-    map (Kafka model: retention/cleanup policy is topic-level config,
-    read by the broker's cleaner, not something every operator
-    hand-wires). Recognized keys — ``cleanup.policy``,
-    ``retention.ms``, ``retention.seqs``, ``key.column``,
-    ``tombstone.column``, ``delete.retention.ms``,
-    ``min.cleanable.dirty.ratio``, ``compaction.order.by`` — map onto
-    the corresponding constructor fields; explicit ``overrides`` win. The config is SNAPSHOT at
-    construction: re-run the factory after ``alter_topic_config`` to
-    pick up a policy change (documented difference from Kafka's
-    dynamic re-read — a loop restart is one stop()/start())."""
-    cfg = store.topic_config(topic)
-    kw: dict = {}
-    if "cleanup.policy" in cfg:
-        kw["cleanup_policy"] = str(cfg["cleanup.policy"])
-    if "retention.ms" in cfg:
-        kw["retain_ms"] = int(cfg["retention.ms"])
-    if "retention.seqs" in cfg:
-        kw["retain_seqs"] = int(cfg["retention.seqs"])
-    if "key.column" in cfg:
-        kw["key_col"] = str(cfg["key.column"])
-    if "tombstone.column" in cfg:
-        kw["tombstone_col"] = str(cfg["tombstone.column"])
-    if "delete.retention.ms" in cfg:
-        kw["tombstone_retention_ms"] = int(cfg["delete.retention.ms"])
-    if "min.cleanable.dirty.ratio" in cfg:
-        kw["min_dirty_ratio"] = float(cfg["min.cleanable.dirty.ratio"])
-    if "compaction.order.by" in cfg:
-        kw["compaction_order_by"] = str(cfg["compaction.order.by"])
-    kw.update(overrides)
-    return TopicMaintenance(store, topic, **kw)

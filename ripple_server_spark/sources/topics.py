@@ -42,6 +42,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -243,6 +244,69 @@ def committed_offsets_in(state: dict, consumer_id: str) -> dict[int, int]:
     return out
 
 
+class CleanupPolicy(NamedTuple):
+    """A topic's cleanup policy, typed: :func:`cleanup_policy`'s result
+    (the keys and defaults are described on
+    :meth:`TopicStore.topic_config`)."""
+
+    compact: bool
+    retain_ms: int | None
+    retain_seqs: int | None
+    key_col: str
+    tombstone_col: str | None
+    tombstone_retention_ms: int
+    min_dirty_ratio: float
+    compaction_order_by: str | None
+
+
+def cleanup_policy(config: dict) -> CleanupPolicy:
+    """Parse the eight cleanup-policy keys of a topic config map; other
+    keys are ignored. Raises ``ValueError`` naming the first bad key.
+    The one parser: ``create_topic`` and ``alter_topic_config`` run it
+    before a config is stored, and every maintenance cycle runs it on
+    the config of the manifest it loads."""
+
+    def typed(key: str, cast, default, what: str):
+        if key not in config:
+            return default
+        try:
+            return cast(config[key])
+        except (TypeError, ValueError):
+            raise ValueError(
+                f"topic config {key!r}: cannot read {config[key]!r} as {what}"
+            ) from None
+
+    def count(v) -> int:
+        # int() reads True as 1, truncates 0.5 to 0 and keeps -1, and a
+        # negative retention bound would age the whole log out.
+        if isinstance(v, bool) or isinstance(v, float) and not v.is_integer():
+            raise ValueError(v)
+        if (n := int(v)) < 0:
+            raise ValueError(v)
+        return n
+
+    whole = "a non-negative integer"
+
+    policies = {
+        p.strip() for p in typed("cleanup.policy", str, "delete", "str").split(",")
+    } - {""}
+    if not policies <= {"delete", "compact"}:
+        raise ValueError(
+            "topic config 'cleanup.policy' must be 'delete', 'compact' or "
+            f"'compact,delete', got {config['cleanup.policy']!r}"
+        )
+    return CleanupPolicy(
+        compact="compact" in policies,
+        retain_ms=typed("retention.ms", count, None, whole),
+        retain_seqs=typed("retention.seqs", count, None, whole),
+        key_col=typed("key.column", str, "user_id", "str"),
+        tombstone_col=typed("tombstone.column", str, None, "str"),
+        tombstone_retention_ms=typed("delete.retention.ms", count, 0, whole),
+        min_dirty_ratio=typed("min.cleanable.dirty.ratio", float, 0.5, "float"),
+        compaction_order_by=typed("compaction.order.by", str, None, "str"),
+    )
+
+
 class TopicStore:
     """Filesystem-backed topic registry (the ZooKeeper analog) with a
     MANIFEST LOG as the commit protocol.
@@ -316,9 +380,6 @@ class TopicStore:
         """(version, manifest) of the newest committed manifest."""
         return manifest.latest(self.root, topic)
 
-    def _live_files(self, topic: str) -> list[str]:
-        return self.latest_manifest(topic)[1]["files"]
-
     def vacuum(self, topic: str, grace_s: float = 0.0) -> int:
         """Delete data files no manifest-latest references (compacted-
         away segments, truncated segments, crashed-produce orphans) and
@@ -387,24 +448,81 @@ class TopicStore:
         n_buckets: int = N_BUCKETS,
         config: dict | None = None,
     ) -> None:
+        """Create the topic with ``n_buckets`` buckets and its config
+        map (see :meth:`topic_config`); a bad cleanup policy raises
+        ``ValueError`` before anything is written."""
+        cleanup_policy(config or {})
         manifest.create(self.root, topic, n_buckets, config)
 
     def topic_config(self, topic: str) -> dict:
         """The topic's config map (Kafka ``describe --topic`` configs);
         {} for topics created before configs existed.
 
-        Keys the engine understands (the map is stored verbatim, so
-        unknown keys pass through for forward compatibility, like
-        Kafka's config map)::
+        The map is stored verbatim, so unknown keys pass through for
+        forward compatibility, like Kafka's config map. The engine reads
+        eight of them, the topic's cleanup policy: the maintenance loop
+        (:class:`~ripple_server_spark.sources.maintenance.TopicMaintenance`)
+        parses them with :func:`cleanup_policy` at the start of every
+        cycle, so a change takes effect at the next cycle. Values may be
+        strings, as Kafka's are; a value that does not read as its type
+        is refused when it is written. The int keys take a whole number
+        >= 0 (a string of one, or an integral float); a bool, a
+        fraction or a negative value (Kafka's ``-1`` for "no limit"
+        included: leave the key unset instead) is refused.
 
-            cleanup.policy             "delete" | "compact" | "compact,delete"
-            retention.ms               time retention horizon
-            retention.seqs             depth retention horizon (extension)
-            key.column                 compaction key (default user_id)
-            tombstone.column           null-means-delete value column
-            delete.retention.ms        tombstone retention window (Kafka parity)
-            min.cleanable.dirty.ratio  cleaner gate (Kafka parity, default 0.5)
-            compaction.order.by        event-time column for order_by compaction
+        ``cleanup.policy`` (str, ``"delete"``): ``"delete"`` (retention
+        only), ``"compact"`` (periodic :meth:`compact_by_key` on
+        ``key.column``: retain-latest-per-key, the Kafka log-cleaner
+        thread) or ``"compact,delete"`` (both, Kafka's combined mode:
+        retention ages out whole old segments AND the cleaner collapses
+        superseded keys in what survives). Retention runs whenever a
+        retention key is set, under any policy. Key compaction costs a
+        full live-log scan + rewrite, so it is gated twice, like Kafka's
+        cleaner: rate-limited by the loop's ``key_compaction_interval_s``
+        and gated by ``min.cleanable.dirty.ratio``.
+
+        ``retention.ms`` (int >= 0, unset): time retention (Kafka
+        ``retention.ms``). A cycle ages out files wholly older than
+        ``now - retention.ms`` via :meth:`truncate_before_timestamp`.
+        The pass scans the retained log's ``ts`` on the driver
+        (row-group-pruned on files that carry micros ts statistics), so
+        it is rate-limited by the loop's ``retention_check_interval_s``
+        rather than run every cycle.
+
+        ``retention.seqs`` (int >= 0, unset): per-bucket retention depth
+        (an extension). A cycle truncates files wholly below
+        ``min_bucket_max - retention.seqs + 1`` (file granularity, so the
+        retained floor is conservative). It composes with
+        ``retention.ms``: with both set, a cycle drops the UNION of what
+        each bound ages out, so whichever bound retains LESS determines
+        what survives (Kafka's either-limit-violating deletion). Neither
+        set disables retention.
+
+        ``key.column`` (str, ``"user_id"``): the compaction key.
+
+        ``tombstone.column`` (str, unset): a record whose value in this
+        column is NULL marks its key deleted (see :meth:`compact_by_key`).
+
+        ``delete.retention.ms`` (int >= 0, ``0``): the tombstone retention
+        window (Kafka ``delete.retention.ms``), passed to
+        :meth:`compact_by_key`. A key's latest-tombstone row survives the
+        cleaner while its event time is inside the window, so lagging
+        consumers still observe deletes; the pass after the window
+        removes it. The cleaner declines to checkpoint files holding
+        retained tombstones as clean, so the dirty-ratio gate cannot
+        starve that second pass.
+
+        ``min.cleanable.dirty.ratio`` (float, ``0.5``): the cleaner runs
+        only when dirty bytes (live bytes not covered by the manifest's
+        cleaner checkpoint, :meth:`key_compaction_dirty_ratio`) are at
+        least this fraction of the log. The ratio is O(manifest)
+        filesystem stats, so a quiet compacted topic burns zero Spark
+        jobs per cycle instead of a full live-log scan every interval.
+        ``0.0`` runs the cleaner unconditionally.
+
+        ``compaction.order.by`` (str, unset): the event-time column
+        passed to :meth:`compact_by_key` as ``order_by`` (latest wins by
+        event time across buckets instead of by seq within one).
         """
         return dict(self.latest_manifest(topic)[1].get("config", {}))
 
@@ -412,9 +530,16 @@ class TopicStore:
         """Merge config ``updates`` into the topic (Kafka
         ``kafka-configs --alter``): a None value DELETES the key,
         anything else overwrites. The change is one manifest commit,
-        so concurrent writers rebase around it and a maintenance loop
-        sees the new policy at its next cycle. Returns the merged
-        config."""
+        so concurrent writers rebase around it, and a maintenance loop
+        reads the new policy at its next cycle. A merged map whose
+        cleanup policy does not parse raises ``ValueError`` and commits
+        nothing. A config stored before the write-time check (or under a
+        looser parser) may already hold such a policy: then every
+        maintenance cycle fails before any work (vacuum and OPTIMIZE
+        included; the error is in ``CycleStats.error``), and so does any
+        alter that leaves the bad key in place, and :meth:`rekey_topic`.
+        The fix is one alter that sets or deletes (``None``) that key.
+        Returns the merged config."""
         merged: dict = {}
 
         def apply(m: dict) -> dict:
@@ -424,6 +549,7 @@ class TopicStore:
                     cfg.pop(k, None)
                 else:
                     cfg[k] = v
+            cleanup_policy(cfg)
             m["config"] = cfg
             merged.clear()
             merged.update(cfg)

@@ -16,6 +16,7 @@ from ripple_server_spark.sources.topics import (
     StaleGenerationError,
     StaleProducerEpochError,
     TopicStore,
+    cleanup_policy,
     consumer_state,
 )
 from tests.conftest import in_form
@@ -62,14 +63,16 @@ def test_cleaner_gate_skips_clean_topic_with_zero_spark_jobs(
     """N maintenance cycles on a clean compacted topic must launch ZERO
     Spark jobs: the gate decides from manifest + file stats alone."""
     st = TopicStore(spark, str(tmp_path / "gate"))
-    st.create_topic("t", n_buckets=2)
+    st.create_topic(
+        "t",
+        n_buckets=2,
+        config={"cleanup.policy": "compact", "key.column": "user_id"},
+    )
     for w in range(2):
         st.produce(_wave(spark, w), "t")
     maint = TopicMaintenance(
         st,
         "t",
-        cleanup_policy="compact",
-        key_col="user_id",
         key_compaction_interval_s=0.0,  # isolate the ratio gate
         vacuum_grace_s=3600.0,  # keep vacuum off the job count too
     )
@@ -101,15 +104,10 @@ def test_cleaner_gate_skips_clean_topic_with_zero_spark_jobs(
     assert s.error is None and s.key_dropped > 0
     assert calls["n"] == 1
 
-    # min_dirty_ratio=0.0 restores the unconditional pre-r11 cleaner
+    # min.cleanable.dirty.ratio=0.0 restores the unconditional pre-r11 cleaner
+    st.alter_topic_config("t", {"min.cleanable.dirty.ratio": 0.0})
     eager = TopicMaintenance(
-        st,
-        "t",
-        cleanup_policy="compact",
-        key_col="user_id",
-        key_compaction_interval_s=0.0,
-        min_dirty_ratio=0.0,
-        vacuum_grace_s=3600.0,
+        st, "t", key_compaction_interval_s=0.0, vacuum_grace_s=3600.0
     )
     assert eager.run_once().error is None
     assert calls["n"] == 2  # ran despite ratio 0.0
@@ -132,8 +130,6 @@ def test_no_drop_pass_advances_cleaner_checkpoint_once(spark, tmp_path):
 
 
 def test_dirty_ratio_config_reaches_maintenance(spark, tmp_path):
-    from ripple_server_spark.sources.maintenance import maintenance_from_config
-
     st = TopicStore(spark, str(tmp_path / "cfg"))
     st.create_topic(
         "t",
@@ -145,10 +141,10 @@ def test_dirty_ratio_config_reaches_maintenance(spark, tmp_path):
             "tombstone.column": "value",
         },
     )
-    m = maintenance_from_config(st, "t")
-    assert m.min_dirty_ratio == 0.25
-    assert m.tombstone_retention_ms == 86_400_000
-    assert m.tombstone_col == "value"
+    p = cleanup_policy(st.topic_config("t"))
+    assert p.min_dirty_ratio == 0.25
+    assert p.tombstone_retention_ms == 86_400_000
+    assert p.tombstone_col == "value"
 
 
 # -- delete.retention.ms (VERDICT r10 item 4) --------------------------------
@@ -989,18 +985,16 @@ def test_sticky_split_properties_randomized():
 
 
 def test_compaction_order_by_flows_from_topic_config(spark, tmp_path):
-    from ripple_server_spark.sources.maintenance import maintenance_from_config
-
     st = TopicStore(spark, str(tmp_path / "obcfg"))
     st.create_topic(
         "t",
         n_buckets=2,
         config={"cleanup.policy": "compact", "compaction.order.by": "ts"},
     )
-    m = maintenance_from_config(
+    m = TopicMaintenance(
         st, "t", key_compaction_interval_s=0.0, vacuum_grace_s=3600.0
     )
-    assert m.compaction_order_by == "ts"
+    assert cleanup_policy(st.topic_config("t")).compaction_order_by == "ts"
     # the configured cleaner collapses the expand_buckets cross-bucket
     # pair that per-(bucket, key) compaction cannot
     w0 = spark.range(1).select(

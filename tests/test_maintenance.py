@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ripple_server_spark.catalog import load_table
 from ripple_server_spark.sources.maintenance import TopicMaintenance
-from ripple_server_spark.sources.topics import TopicStore
+from ripple_server_spark.sources.topics import TopicStore, cleanup_policy
 
 N_BUCKETS = 4
 
@@ -125,7 +125,8 @@ def test_retention_truncates_and_consumers_resume_at_floor(spark, sf_dir, fresh_
         "m1",
     )
     maxima_before = dict(st._bucket_maxima("m1"))
-    maint = TopicMaintenance(st, "m1", retain_seqs=40, vacuum_grace_s=0.0)
+    st.alter_topic_config("m1", {"retention.seqs": 40})
+    maint = TopicMaintenance(st, "m1", vacuum_grace_s=0.0)
     stats = maint.run_once()
     assert stats.error is None
     assert stats.truncated_files > 0, "retention dropped nothing"
@@ -160,10 +161,10 @@ def test_retention_truncates_and_consumers_resume_at_floor(spark, sf_dir, fresh_
 
 
 def test_maintenance_time_based_retention(spark, sf_dir, tmp_path):
-    """retain_ms (Kafka retention.ms): a maintenance cycle ages out
-    files wholly older than now - retain_ms and keeps the fresh tail.
-    Fixture events are all from 2024, so any sane retain_ms from 'now'
-    ages out EVERYTHING; a huge retain_ms ages out nothing."""
+    """retention.ms (Kafka parity): a maintenance cycle ages out files
+    wholly older than now - retention.ms and keeps the fresh tail.
+    Fixture events are all from 2024, so any sane retention.ms from
+    'now' ages out EVERYTHING; a huge retention.ms ages out nothing."""
     from pyspark.sql import functions as F
 
     from ripple_server_spark.catalog import load_table
@@ -177,16 +178,14 @@ def test_maintenance_time_based_retention(spark, sf_dir, tmp_path):
     )
     st.produce(ev.limit(100), "rm")
     # enormous window: nothing is older than ~100 years
-    keep_all = TopicMaintenance(
-        st, "rm", retain_ms=100 * 365 * 24 * 3600 * 1000, vacuum_grace_s=0.0
-    )
+    st.alter_topic_config("rm", {"retention.ms": 100 * 365 * 24 * 3600 * 1000})
+    keep_all = TopicMaintenance(st, "rm", vacuum_grace_s=0.0)
     s1 = keep_all.run_once()
     assert s1.error is None and s1.truncated_files == 0
     assert st.read_topic("rm").count() == 100
     # 1-day window from now: the 2024 fixture rows all age out
-    drop_all = TopicMaintenance(
-        st, "rm", retain_ms=24 * 3600 * 1000, vacuum_grace_s=0.0
-    )
+    st.alter_topic_config("rm", {"retention.ms": 24 * 3600 * 1000})
+    drop_all = TopicMaintenance(st, "rm", vacuum_grace_s=0.0)
     s2 = drop_all.run_once()
     assert s2.error is None and s2.truncated_files >= 1
     assert st.read_topic("rm").count() == 0
@@ -203,7 +202,7 @@ def test_maintenance_time_based_retention(spark, sf_dir, tmp_path):
 
 def test_time_retention_on_never_produced_topic_is_noop(spark, tmp_path):
     """Review r09: create topic -> start maintenance -> producers
-    arrive later is a normal deployment order; the retain_ms pass must
+    arrive later is a normal deployment order; the retention.ms pass must
     no-op on the schemaless empty topic, not error every cycle (and
     offsets_for_times returns {} instead of raising on the missing ts
     column)."""
@@ -211,16 +210,16 @@ def test_time_retention_on_never_produced_topic_is_noop(spark, tmp_path):
     from ripple_server_spark.sources.topics import TopicStore
 
     st = TopicStore(spark, str(tmp_path / "fresh_ret"))
-    st.create_topic("f", n_buckets=2)
+    st.create_topic("f", n_buckets=2, config={"retention.ms": 1000})
     assert st.offsets_for_times("f", 0) == {}
     assert st.truncate_before_timestamp("f", 10**13) == 0
-    m = TopicMaintenance(st, "f", retain_ms=1000, vacuum_grace_s=0.0)
+    m = TopicMaintenance(st, "f", vacuum_grace_s=0.0)
     s = m.run_once()
     assert s.error is None and s.truncated_files == 0
 
 
 def test_time_retention_pass_is_rate_limited(spark, sf_dir, tmp_path):
-    """The retain_ms pass scans the log's ts column (no ts stats to
+    """The retention.ms pass scans the log's ts column (no ts stats to
     prune with on INT96 files), so it runs at most every
     retention_check_interval_s (Kafka log.retention.check.interval.ms),
     not every cycle."""
@@ -229,12 +228,13 @@ def test_time_retention_pass_is_rate_limited(spark, sf_dir, tmp_path):
     from ripple_server_spark.sources.topics import TopicStore
 
     st = TopicStore(spark, str(tmp_path / "rl_ret"))
-    st.create_topic("rl", n_buckets=2)
+    st.create_topic(
+        "rl", n_buckets=2, config={"retention.ms": 100 * 365 * 24 * 3600 * 1000}
+    )
     st.produce(load_table(spark, sf_dir, "events").limit(40).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"), "rl")
     m = TopicMaintenance(
-        st, "rl", retain_ms=100 * 365 * 24 * 3600 * 1000,
-        retention_check_interval_s=3600.0, vacuum_grace_s=0.0,
+        st, "rl", retention_check_interval_s=3600.0, vacuum_grace_s=0.0
     )
     calls = []
     orig = st.truncate_before_timestamp
@@ -254,13 +254,11 @@ def test_failed_time_retention_does_not_consume_rate_limit(
     CycleStats.error and the next cycle retries immediately instead of
     silently extending retention lag by retention_check_interval_s."""
     st = TopicStore(spark, str(tmp_path / "tr_topics"))
-    st.create_topic("tr", n_buckets=2)
+    st.create_topic("tr", n_buckets=2, config={"retention.ms": 10**12})
     ev = load_table(spark, sf_dir, "events").limit(100)
     st.produce(ev, "tr")
 
-    maint = TopicMaintenance(
-        st, "tr", retain_ms=10**12, retention_check_interval_s=3600.0
-    )
+    maint = TopicMaintenance(st, "tr", retention_check_interval_s=3600.0)
     calls = {"n": 0}
     orig = st.truncate_before_timestamp
 
@@ -286,7 +284,11 @@ def test_cleanup_policy_compact_runs_key_compaction(spark, tmp_path):
     key_compaction_interval_s with the stamp-after-success rule, and a
     no-op pass burns no manifest version."""
     st = TopicStore(spark, str(tmp_path / "kcm_topics"))
-    st.create_topic("kcm", n_buckets=2)
+    st.create_topic(
+        "kcm",
+        n_buckets=2,
+        config={"cleanup.policy": "compact", "key.column": "user_id"},
+    )
 
     def wave(w):
         return spark.range(20).select(
@@ -303,12 +305,7 @@ def test_cleanup_policy_compact_runs_key_compaction(spark, tmp_path):
         st.produce(wave(w), "kcm")
 
     maint = TopicMaintenance(
-        st,
-        "kcm",
-        cleanup_policy="compact",
-        key_col="user_id",
-        key_compaction_interval_s=3600.0,
-        vacuum_grace_s=0.0,
+        st, "kcm", key_compaction_interval_s=3600.0, vacuum_grace_s=0.0
     )
     s1 = maint.run_once()
     assert s1.error is None
@@ -320,27 +317,22 @@ def test_cleanup_policy_compact_runs_key_compaction(spark, tmp_path):
     s2 = maint.run_once()
     assert s2.key_dropped == 0 and s2.error is None
 
-    # combined mode parses; bad policies are loud
-    TopicMaintenance(st, "kcm", cleanup_policy="compact,delete")
-    with pytest.raises(ValueError, match="cleanup_policy"):
-        TopicMaintenance(st, "kcm", cleanup_policy="zap")
+    # combined mode parses (bad policies are refused at write:
+    # test_bad_cleanup_policy_is_refused_at_write)
+    assert cleanup_policy({"cleanup.policy": "compact,delete"}).compact
 
     # an empty compacted topic under the policy is a quiet no-op
-    st.create_topic("kcm_empty", n_buckets=2)
-    m2 = TopicMaintenance(
-        st, "kcm_empty", cleanup_policy="compact", vacuum_grace_s=0.0
-    )
+    st.create_topic("kcm_empty", n_buckets=2, config={"cleanup.policy": "compact"})
+    m2 = TopicMaintenance(st, "kcm_empty", vacuum_grace_s=0.0)
     s3 = m2.run_once()
     assert s3.error is None and s3.key_dropped == 0
 
 
 def test_topic_config_drives_maintenance(spark, tmp_path):
     """Kafka topic-level configs: cleanup.policy/key.column/
-    tombstone.column live in the topic manifest, maintenance_from_config
-    builds the cleaner from them, and alter_topic_config changes policy
-    with one manifest commit (picked up by re-running the factory)."""
-    from ripple_server_spark.sources.maintenance import maintenance_from_config
-
+    tombstone.column live in the topic manifest, the maintenance cycle
+    cleans by them, and alter_topic_config changes policy with one
+    manifest commit."""
     st = TopicStore(spark, str(tmp_path / "cfg_topics"))
     st.create_topic(
         "cfg",
@@ -366,21 +358,111 @@ def test_topic_config_drives_maintenance(spark, tmp_path):
     )
     st.produce(df, "cfg", key_col="k")
 
-    maint = maintenance_from_config(st, "cfg", vacuum_grace_s=0.0)
-    assert maint.cleanup_policy == "compact"
-    assert maint.key_col == "k" and maint.tombstone_col == "v"
+    policy = cleanup_policy(st.topic_config("cfg"))
+    assert policy.compact
+    assert policy.key_col == "k" and policy.tombstone_col == "v"
+    maint = TopicMaintenance(st, "cfg", vacuum_grace_s=0.0)
     s1 = maint.run_once()
     assert s1.error is None
     # 13 rows, 4 keys; key 0's latest is the tombstone -> 3 survive
     assert st.read_topic("cfg").count() == 3
     assert s1.key_dropped == 10
 
-    # alter: drop the compact policy; new factory instance sees it
+    # alter: drop the compact policy
     st.alter_topic_config("cfg", {"cleanup.policy": "delete", "x.custom": None})
     cfg2 = st.topic_config("cfg")
     assert cfg2["cleanup.policy"] == "delete" and "x.custom" not in cfg2
-    m2 = maintenance_from_config(st, "cfg", vacuum_grace_s=0.0)
-    assert m2.cleanup_policy == "delete" and not m2._compact_keys
-    # overrides win over config
-    m3 = maintenance_from_config(st, "cfg", cleanup_policy="compact,delete")
-    assert m3._compact_keys
+    assert not cleanup_policy(cfg2).compact
+
+
+def test_running_loop_follows_topic_config(spark, tmp_path, monkeypatch):
+    """One loop, built while the topic's policy is delete, follows every
+    alter_topic_config at its next cycle: it key-compacts once the policy
+    is compact, ages files out once retention.ms is set, and stops
+    calling the cleaner once the policy is delete again."""
+    st = TopicStore(spark, str(tmp_path / "live_cfg"))
+    st.create_topic("t", n_buckets=2, config={"cleanup.policy": "delete"})
+
+    def wave(w):  # 20 rows over 5 keys, event time in 2024
+        return spark.range(20).select(
+            (F.col("id") + w * 100).alias("event_id"),
+            (
+                F.lit("2024-01-01 00:00:00").cast("timestamp")
+                + F.make_interval(secs=F.col("id") + w * 50)
+            ).alias("ts"),
+            (F.col("id") % 5).alias("user_id"),
+            F.lit(w).alias("wave"),
+        )
+
+    calls = {"n": 0}
+    orig = st.compact_by_key
+
+    def counting(*a, **kw):
+        calls["n"] += 1
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(st, "compact_by_key", counting)
+    maint = TopicMaintenance(
+        st, "t", key_compaction_interval_s=0.0, vacuum_grace_s=0.0
+    )
+    for w in range(2):
+        st.produce(wave(w), "t")
+    s0 = maint.run_once()
+    assert s0.error is None and s0.key_dropped == 0 and calls["n"] == 0
+
+    st.alter_topic_config("t", {"cleanup.policy": "compact", "key.column": "user_id"})
+    s1 = maint.run_once()
+    assert s1.error is None and s1.key_dropped > 0 and calls["n"] == 1
+    assert st.read_topic("t").count() == 5
+
+    st.alter_topic_config("t", {"retention.ms": 24 * 3600 * 1000})
+    s2 = maint.run_once()
+    assert s2.error is None and s2.truncated_files >= 1
+    assert st.read_topic("t").count() == 0
+
+    st.alter_topic_config("t", {"cleanup.policy": "delete", "retention.ms": None})
+    for w in range(2, 4):
+        st.produce(wave(w), "t")
+    assert st.key_compaction_dirty_ratio("t") == 1.0
+    s3 = maint.run_once()
+    assert s3.error is None and s3.key_dropped == 0 and s3.truncated_files == 0
+    assert calls["n"] == 1
+    assert st.read_topic("t").count() == 40
+    assert all(c.error is None for c in maint.history)
+
+
+@pytest.mark.parametrize(
+    "key,value",
+    [
+        ("cleanup.policy", "zap"),
+        ("retention.ms", "soon"),
+        ("min.cleanable.dirty.ratio", "x"),
+        # int() would read these as -1, 1, 0 and -5: a negative bound
+        # ages the whole log out on the next cycle
+        ("retention.ms", -1),
+        ("retention.ms", True),
+        ("delete.retention.ms", 0.5),
+        ("retention.seqs", "-5"),
+    ],
+)
+def test_bad_cleanup_policy_is_refused_at_write(tmp_path, key, value):
+    """A cleanup policy that does not parse is refused when it is
+    written, naming its key: alter_topic_config commits nothing and
+    create_topic leaves no topic directory. Keys outside the policy
+    are still stored verbatim. No Spark needed."""
+    st = TopicStore(None, str(tmp_path / "bad_cfg"))
+    st.create_topic("t", n_buckets=2, config={"retention.seqs": "100"})
+    v = st.latest_manifest("t")[0]
+    with pytest.raises(ValueError, match=key.replace(".", r"\.")):
+        st.alter_topic_config("t", {key: value})
+    assert st.latest_manifest("t")[0] == v
+    assert st.topic_config("t") == {"retention.seqs": "100"}
+
+    with pytest.raises(ValueError, match=key.replace(".", r"\.")):
+        st.create_topic("u", n_buckets=2, config={key: value})
+    assert not os.path.exists(st.topic_dir("u"))
+
+    merged = st.alter_topic_config("t", {"x.custom": "anything"})
+    assert merged == {"retention.seqs": "100", "x.custom": "anything"}
+    assert st.topic_config("t") == {"retention.seqs": "100", "x.custom": "anything"}
+    assert cleanup_policy(st.topic_config("t")).retain_seqs == 100

@@ -457,7 +457,7 @@ def test_restore_past_vacuum_horizon_fails(spark, sf_dir, tmp_path):
     # (simulates a vacuum that ran between the two versions)
     with open(manifest.path(st.root, "v", v_target)) as f:
         target_files = set(json.load(f)["files"])
-    live = set(st._live_files("v"))
+    live = set(st.latest_manifest("v")[1]["files"])
     for rel in target_files - live:
         os.remove(os.path.join(st.data_dir("v"), rel))
     with pytest.raises(FileNotFoundError):
